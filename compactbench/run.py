@@ -101,8 +101,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--cores", type=int, default=min(4, os.cpu_count() or 1),
-                    help="N in local[N]; at most the machine's cores")
     args = ap.parse_args()
     start = time.time()
     if not os.path.isdir(ENGINE_SRC):
@@ -119,7 +117,7 @@ def main():
            + ["-cp", classpath, "graftbench.Main",
               "--workload", args.workload, "--seed", str(args.seed),
               "--seconds", str(args.seconds), "--trace", str(args.trace),
-              "--cores", str(args.cores), "--work", work]
+              "--work", work]
            + (["--spans", spans] if args.trace else []))
     log = os.path.join(HERE, "out", f"jvm-{args.workload}-{args.seed}.log")
     os.makedirs(os.path.dirname(log), exist_ok=True)

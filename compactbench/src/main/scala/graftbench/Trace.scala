@@ -111,16 +111,18 @@ final class TracedExecutor(inner: CompactionExecutor, tr: Tracer) extends Compac
 
 /** `graft.compaction` boundary: the phase boundaries of one `compact()`
   * call, taken from its progress ticks ("planned", one "rewriting" per
-  * finished plan, "committed"). Ticks arrive from the rewrite threads. */
+  * finished plan, "committed"). Ticks arrive from the rewrite threads.
+  * The "committed" tick is also kept on the wall clock, the clock of
+  * Spark's job events, which time what runs after it. */
 final class PhaseClock extends (CompactionProgress => Unit) {
-  var planned, lastRewrite, committed = 0L
+  var planned, lastRewrite, committed, committedWallMs = 0L
   var plans = 0
   def apply(p: CompactionProgress): Unit = synchronized {
     val now = System.nanoTime()
     p.phase match {
       case "planned" => planned = now; plans = p.plansTotal
       case "rewriting" => lastRewrite = math.max(lastRewrite, now)
-      case "committed" => committed = now
+      case "committed" => committed = now; committedWallMs = System.currentTimeMillis()
       case _ =>
     }
   }
@@ -138,6 +140,13 @@ final class OpStats {
     val clipped = jobIntervals.toSeq.map { case (s, e) => (math.max(s, t0), math.min(e, t1)) }
       .filter(i => i._2 > i._1)
     (t1 - t0) - Intervals.unionLength(clipped)
+  }
+
+  /** From the start of the first job that started in [t0, t1] (epoch ms)
+    * to the end of the last one, or 0 when none did. */
+  def jobSpanMs(t0: Long, t1: Long): Long = {
+    val in = jobIntervals.toSeq.filter { case (s, e) => s >= t0 && e <= t1 }
+    if (in.isEmpty) 0L else in.map(_._2).max - in.map(_._1).min
   }
 }
 

@@ -1,6 +1,5 @@
 package graftbench
 
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,7 +8,7 @@ import graft.meta._
 import graft.selection._
 
 /** Seeded synthetic tables with the column names and types of the sf0.1
-  * `lineitem`, `events` and `orders` tables. Every column is a hash of the
+  * `lineitem` and `events` tables. Every column is a hash of the
   * row id, the seed and a salt, so one seed always gives the same rows and
   * a fixture is built in a handful of Spark jobs. A salt other than 0
   * changes the value columns of a row but never its key. */
@@ -43,15 +42,6 @@ final class Gen(seed: Long) {
     (pick(h(salt, 4), 100000) / 100.0).as("value"),
     concat(lit("{\"k\": "), pick(h(salt, 5), 100).cast("string"), lit("}")).as("props"))
 
-  def orders(ids: DataFrame, salt: Int): DataFrame = ids.select(
-    col("id").as("o_orderkey"),
-    pick(h(salt, 1), 15000).as("o_custkey"),
-    oneOf(h(salt, 2), "O", "F", "P").as("o_orderstatus"),
-    (pick(h(salt, 3), 50000000) / 100.0).as("o_totalprice"),
-    timestamp_seconds(lit(day0) + pick(h(0, 4), 2405) * 86400L).as("o_orderdate"),
-    oneOf(h(salt, 5), "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-      .as("o_orderpriority"))
-
   /** `n` distinct ids below `bound`, drawn from the seed and `stream`. */
   def sampleIds(stream: Long, n: Int, bound: Long): Seq[Long] = {
     val r = new scala.util.Random(seed * 1000003L + stream)
@@ -76,15 +66,9 @@ trait Workload {
   def keys: Seq[String]
   def config: PlanningConfig
   def targetFileSizeBytes: Long = Defaults.TargetFileSize
-  def upsertsPerCycle: Int
-  /** Untimed cycles before timing starts, so the JIT has settled. */
-  def warmupCycles: Int
   def build(spark: SparkSession, catalog: Catalog): Unit
-  /** The `j`-th upsert of every cycle; the same rows in every cycle. */
-  def upsertBatch(spark: SparkSession, j: Int): DataFrame
-  /** The rows the table holds after a cycle, computed without the engine,
-    * or None when this workload has no such expectation. */
-  def expected(spark: SparkSession): Option[DataFrame] = None
+  /** The upsert of every cycle; the same rows in every cycle. */
+  def upsertBatch(spark: SparkSession): DataFrame
   /** Sizes for the record: rows, data files, bytes after the fixture build. */
   def describe(catalog: Catalog): Map[String, Long] = {
     val snap = catalog.loadTable(table).currentSnapshot.get
@@ -98,13 +82,10 @@ trait Workload {
 }
 
 object Workloads {
-  val names: Seq[String] = Seq("mor_rewrite", "small_files")
-
   def apply(name: String, seed: Long): Workload = name match {
-    case "mor_rewrite"  => new MorRewrite(new Gen(seed))
-    case "small_files"  => new SmallFiles(new Gen(seed))
-    case other => throw new IllegalArgumentException(
-      s"unknown workload $other (expected one of ${names.mkString(", ")})")
+    case "mor_rewrite" => new MorRewrite(new Gen(seed))
+    case "small_files" => new SmallFiles(new Gen(seed))
+    case other => throw new IllegalArgumentException(s"unknown workload $other")
   }
 
   /** Rows per upsert batch. */
@@ -123,8 +104,6 @@ final class MorRewrite(gen: Gen) extends Workload {
   override val targetFileSizeBytes: Long = 512L << 20
   val config: PlanningConfig =
     FullCompactionConfig(PlanningParams(targetFileSizeBytes = targetFileSizeBytes))
-  val upsertsPerCycle = 1
-  val warmupCycles = 2
 
   def build(spark: SparkSession, catalog: Catalog): Unit = {
     IceWrite.create(spark, catalog, table,
@@ -146,8 +125,8 @@ final class MorRewrite(gen: Gen) extends Workload {
       Seq("l_orderkey"))
   }
 
-  def upsertBatch(spark: SparkSession, j: Int): DataFrame =
-    gen.lineitem(gen.idFrame(spark, gen.sampleIds(j, Workloads.BatchRows, rows)), orders, 1 + j)
+  def upsertBatch(spark: SparkSession): DataFrame =
+    gen.lineitem(gen.idFrame(spark, gen.sampleIds(0, Workloads.BatchRows, rows)), orders, 1)
 }
 
 /** Per-file and per-plan work: a bucketed event table ingested as many
@@ -161,8 +140,6 @@ final class SmallFiles(gen: Gen) extends Workload {
   val appends = 2
   val tasksPerAppend = 16
   val config: PlanningConfig = SmallFilesConfig()
-  val upsertsPerCycle = 1
-  val warmupCycles = 2
 
   def build(spark: SparkSession, catalog: Catalog): Unit = {
     val per = rows / appends
@@ -174,16 +151,17 @@ final class SmallFiles(gen: Gen) extends Workload {
     }
   }
 
-  def upsertBatch(spark: SparkSession, j: Int): DataFrame =
-    gen.events(gen.idFrame(spark, gen.sampleIds(j, Workloads.BatchRows, rows)), 1 + j)
+  def upsertBatch(spark: SparkSession): DataFrame =
+    gen.events(gen.idFrame(spark, gen.sampleIds(0, Workloads.BatchRows, rows)), 1)
 
-  /** The generated rows with every upsert batch applied, in order, by
-    * plain DataFrame operations. */
-  override def expected(spark: SparkSession): Option[DataFrame] =
-    Some((0 until upsertsPerCycle).map(upsertBatch(spark, _))
-      .foldLeft(gen.events(spark.range(0, rows).toDF("id"), 0)) { (table, batch) =>
-        table.join(batch.select(keys.map(col): _*), keys, "left_anti").unionByName(batch)
-      })
+  /** The rows the table holds after a cycle, computed without the engine:
+    * the generated rows with the upsert batch applied by plain DataFrame
+    * operations. */
+  def expected(spark: SparkSession): DataFrame = {
+    val batch = upsertBatch(spark)
+    gen.events(spark.range(0, rows).toDF("id"), 0)
+      .join(batch.select(keys.map(col): _*), keys, "left_anti").unionByName(batch)
+  }
 }
 
 object Restore {
