@@ -39,12 +39,6 @@ final case class CompactionResult(
     table: Option[TableMetadata]
 )
 
-final case class CommitRetryConfig(
-    maxRetries: Int = 3,
-    initialDelayMs: Long = 1000L,
-    maxDelayMs: Long = 10000L
-)
-
 /** Exponentially-smoothed OUTPUT bytes/record, shared across a run's
   * rewrite plans (the reference's dynamic size estimation,
   * config/mod.rs:37-38, smoothing factor 0.3): the first plan sizes files
@@ -345,11 +339,13 @@ final class Compaction(
   }
 }
 
-/** Commit with optimistic retry + exponential backoff (mod.rs:763-782,
-  * 950-1061): reloads the table on every attempt, checks rewritten files
-  * still exist, stamps added files with the starting snapshot's sequence
-  * number so they don't outrank concurrent deletes, preserves custom
-  * snapshot summary properties.
+/** The compaction commit (mod.rs:950-1061), one [[Catalog.transact]]:
+  * each attempt checks the rewritten files are still in the branch head,
+  * stamps added files with the starting snapshot's sequence number (so
+  * they don't outrank concurrent deletes) and carries custom snapshot
+  * summary properties forward. A missing starting snapshot or rewritten
+  * file fails on the first attempt — a reload cannot bring it back. Every
+  * failed attempt counts in `commitFailed`.
   */
 final class CommitManager(
     catalog: Catalog,
@@ -365,87 +361,41 @@ final class CommitManager(
       startingSnapshotId: Long,
       useStartingSequenceNumber: Boolean,
       operation: String = "replace"
-  ): TableMetadata = retryLoop { () =>
-    val table = catalog.loadTable(tableName) // reload every attempt
-    val starting = table.snapshotById(startingSnapshotId).getOrElse(
-      throw new IllegalStateException(s"No snapshot found with id $startingSnapshotId"))
-    val current = table.snapshotForRef(toBranch).orElse(table.currentSnapshot).getOrElse(starting)
+  ): TableMetadata = {
+    var attempts = 0L
+    val committed =
+      try catalog.transact(tableName, retry) { table =>
+        attempts += 1
+        val starting = table.snapshotById(startingSnapshotId).getOrElse(
+          throw new IllegalStateException(s"No snapshot found with id $startingSnapshotId"))
+        val current = table.snapshotForRef(toBranch).orElse(table.currentSnapshot).getOrElse(starting)
 
-    // file-existence check (set_check_file_existence(true))
-    val currentPaths = current.manifest.map(_.path).toSet
-    val missing = rewrittenPaths.filterNot(currentPaths.contains)
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"rewritten files no longer in snapshot: ${missing.take(3).mkString(",")}...")
+        // file-existence check (set_check_file_existence(true))
+        val currentPaths = current.manifest.map(_.path).toSet
+        val missing = rewrittenPaths.filterNot(currentPaths.contains)
+        if (missing.nonEmpty)
+          throw new IllegalStateException(
+            s"rewritten files no longer in snapshot: ${missing.take(3).mkString(",")}...")
 
-    val newSeq = table.lastSequenceNumber + 1
-    val fileSeq = if (useStartingSequenceNumber) starting.sequenceNumber else newSeq
-    // v3 row lineage: rewritten files materialize `_row_id`, so their
-    // inherited range is never consulted for surviving rows — but the
-    // range is still claimed (fresh cursor in the same CAS), keeping the
-    // invariant that every v3 data file owns disjoint ids
-    var rowCursor = table.nextRowId
-    val stamped = added.map { f =>
-      val s = f.copy(sequenceNumber = fileSeq, content = FileContent.Data)
-      if (table.formatVersion < 3) s
-      else { val assigned = s.copy(firstRowId = Some(rowCursor))
-             rowCursor += s.recordCount; assigned }
-    }
-
-    val removed = rewrittenPaths.toSet
-    val newManifest = current.manifest.filterNot(f => removed.contains(f.path)) ++ stamped
-    val snapshotId = table.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-    val snap = Snapshot(
-      snapshotId = snapshotId,
-      parentId = Some(current.snapshotId),
-      sequenceNumber = newSeq,
-      timestampMs = System.currentTimeMillis(),
-      manifest = newManifest,
-      // custom (non-auto-computed) summary properties carry forward;
-      // auto stats recomputed per commit (mod.rs:1187-1224).
-      // "rewrite" -> "compaction" marks this snapshot as a PHYSICAL
-      // rewrite regardless of the operation string — the overwrite
-      // variant shares operation="overwrite" with logical upserts, and
-      // changelog consumers must not replay a compaction as change.
-      // (Reserved key: never carried forward to later snapshots.)
-      summary = TableMetadata.preservedProperties(current.summary) ++
-        TableMetadata.computedSummary(current.manifest, newManifest) +
-        ("operation" -> operation) + ("rewrite" -> "compaction")
-    )
-    val updated = table.copy(
-      currentSnapshotId = Some(snapshotId),
-      refs = table.refs + (toBranch -> snapshotId),
-      snapshots = table.snapshots :+ snap,
-      lastSequenceNumber = newSeq,
-      nextRowId = rowCursor
-    )
-    val committed = catalog.commit(table, updated)
+        val newSeq = table.lastSequenceNumber + 1
+        val fileSeq = if (useStartingSequenceNumber) starting.sequenceNumber else newSeq
+        val removed = rewrittenPaths.toSet
+        // v3: rewritten files materialize `_row_id`, so their claimed
+        // range is never consulted for surviving rows — but it is still
+        // claimed, keeping every v3 data file's ids disjoint.
+        // "rewrite" -> "compaction" marks a PHYSICAL rewrite whatever the
+        // operation string — the overwrite variant shares "overwrite"
+        // with logical upserts, and changelog consumers must not replay a
+        // compaction as change (reserved: never carried forward)
+        table.withSnapshot(Some(current),
+          current.manifest.filterNot(f => removed.contains(f.path)) ++
+            added.map(_.copy(sequenceNumber = fileSeq, content = FileContent.Data)),
+          operation, newSeq, toBranch, summary = Map("rewrite" -> "compaction"))
+      } catch {
+        case NonFatal(e) => metrics.commitFailed.addAndGet(attempts); throw e
+      }
+    metrics.commitFailed.addAndGet(attempts - 1)
     metrics.commitSucceeded.incrementAndGet()
     committed
-  }
-
-  private def retryLoop(op: () => TableMetadata): TableMetadata = {
-    var attempt = 0
-    var delay = retry.initialDelayMs
-    while (true) {
-      try return op()
-      catch {
-        case NonFatal(e) if attempt < retry.maxRetries && isRetriable(e) =>
-          metrics.commitFailed.incrementAndGet()
-          attempt += 1
-          Thread.sleep(delay)
-          delay = math.min(delay * 2, retry.maxDelayMs)
-        case NonFatal(e) =>
-          metrics.commitFailed.incrementAndGet()
-          throw e
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private def isRetriable(e: Throwable): Boolean = e match {
-    case _: CommitConflictException => true
-    case _: IllegalStateException   => true // DataInvalid / Unexpected analogue
-    case _                          => false
   }
 }

@@ -18,24 +18,15 @@ object Maintenance {
 
   /** Keeps the `keepLast` newest snapshots (plus every snapshot a branch
     * ref or tag points at); commits the trimmed metadata via CAS retry. */
-  def expireSnapshots(catalog: Catalog, tableName: String, keepLast: Int,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
+  def expireSnapshots(catalog: Catalog, tableName: String, keepLast: Int): TableMetadata = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
+    catalog.transact(tableName) { meta =>
       val byAge = meta.snapshots.sortBy(-_.snapshotId)
       val pinned = meta.refs.values.toSet ++ meta.tags.values.toSet ++ meta.currentSnapshotId.toSet
       val keep = (byAge.take(keepLast).map(_.snapshotId).toSet ++ pinned)
-      val trimmed = meta.copy(snapshots = meta.snapshots.filter(s => keep.contains(s.snapshotId)))
+      meta.copy(snapshots = meta.snapshots.filter(s => keep.contains(s.snapshotId)))
         .pruneUnreferencedHistoricalSpecs
-      try return catalog.commit(meta, trimmed)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
-        case e: Throwable => throw e
-      }
     }
-    sys.error("unreachable")
   }
 
   /** One sweep row: what happened to one table. */
@@ -89,24 +80,16 @@ object Maintenance {
     * ref-pinned snapshot, the current one, and at least `retainLast`
     * newest. */
   def expireSnapshotsOlderThan(catalog: Catalog, tableName: String,
-      olderThanMs: Long, retainLast: Int = 1,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
+      olderThanMs: Long, retainLast: Int = 1): TableMetadata = {
     require(retainLast >= 1, "retainLast must be >= 1")
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
+    catalog.transact(tableName) { meta =>
       val pinned = meta.refs.values.toSet ++ meta.tags.values.toSet ++ meta.currentSnapshotId.toSet
       val newest = meta.snapshots.sortBy(-_.snapshotId).take(retainLast).map(_.snapshotId).toSet
       val keep = meta.snapshots.filter(s =>
         s.timestampMs >= olderThanMs || pinned.contains(s.snapshotId) ||
           newest.contains(s.snapshotId))
-      val trimmed = meta.copy(snapshots = keep).pruneUnreferencedHistoricalSpecs
-      try return catalog.commit(meta, trimmed)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
-      }
+      meta.copy(snapshots = keep).pruneUnreferencedHistoricalSpecs
     }
-    sys.error("unreachable")
   }
 
   /** Default orphan grace period: 3 days, same as Iceberg's
@@ -158,8 +141,11 @@ object Maintenance {
     * still exist as live data files (that requires reading the tombstone
     * parquet — driver-cheap, it is a maintenance path). */
   def danglingDeleteFiles(spark: org.apache.spark.sql.SparkSession,
-      catalog: Catalog, tableName: String): Seq[FileEntry] = {
-    val meta = catalog.loadTable(tableName)
+      catalog: Catalog, tableName: String): Seq[FileEntry] =
+    danglingDeleteFiles(spark, catalog.loadTable(tableName))
+
+  private def danglingDeleteFiles(spark: org.apache.spark.sql.SparkSession,
+      meta: TableMetadata): Seq[FileEntry] = {
     val snap = meta.currentSnapshot.getOrElse(return Nil)
     val attached = meta.scanTasks(snap).flatMap(_.deletes).toSet
     val dataPaths = snap.manifest.filter(_.content == FileContent.Data).map(_.path).toSet
@@ -184,37 +170,34 @@ object Maintenance {
     * the grace period. */
   def removeDanglingDeletes(spark: org.apache.spark.sql.SparkSession,
       catalog: Catalog, tableName: String,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
-    var attempt = 0
-    while (true) {
+      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata =
+    catalog.transact(tableName, retry) { meta =>
       // resolutionKey, not path: DV entries share their container's path,
       // and only the dangling blobs' entries must drop
-      val dangling = danglingDeleteFiles(spark, catalog, tableName).map(_.resolutionKey).toSet
-      val meta = catalog.loadTable(tableName)
-      val snap = meta.currentSnapshot.getOrElse(return meta)
-      if (dangling.isEmpty) return meta
-      val newManifest = snap.manifest.filterNot(f => dangling.contains(f.resolutionKey))
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val next = Snapshot(
-        snapshotId = snapshotId,
-        parentId = Some(snap.snapshotId),
-        sequenceNumber = meta.lastSequenceNumber, // metadata cleanup: no new data
-        timestampMs = System.currentTimeMillis(),
-        manifest = newManifest,
-        summary = TableMetadata.preservedProperties(snap.summary) ++
-          TableMetadata.computedSummary(snap.manifest, newManifest) +
-          ("operation" -> "maintenance"))
-      val updated = meta.copy(
-        currentSnapshotId = Some(snapshotId),
-        refs = meta.refs + ("main" -> snapshotId),
-        snapshots = meta.snapshots :+ next)
-      try return catalog.commit(meta, updated)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
-      }
+      val dangling = danglingDeleteFiles(spark, meta).map(_.resolutionKey).toSet
+      if (dangling.isEmpty) meta
+      else maintenanceSnapshot(meta)(
+        _.manifest.filterNot(f => dangling.contains(f.resolutionKey)))
     }
-    sys.error("unreachable")
-  }
+
+  /** A metadata-only maintenance snapshot on main: `rewrite` maps the head
+    * to the new manifest, and the sequence number stays (no new data). A
+    * table without a snapshot comes back unchanged (nothing to commit). */
+  private def maintenanceSnapshot(meta: TableMetadata)(
+      rewrite: Snapshot => Seq[FileEntry]): TableMetadata =
+    meta.currentSnapshot.fold(meta)(head => meta.withSnapshot(Some(head),
+      rewrite(head), "maintenance", sequenceNumber = meta.lastSequenceNumber))
+
+  /** Commits `written` position-delete files (stamped `seq`) in place of
+    * the delete entries `consumed` (resolution keys) — only those: delete
+    * files committed since the caller read the head stay live. */
+  private def swapInPositionDeletes(catalog: Catalog, tableName: String,
+      consumed: Set[String], written: Seq[FileEntry], seq: Long): TableMetadata =
+    catalog.transact(tableName) { meta =>
+      maintenanceSnapshot(meta)(head =>
+        head.manifest.filterNot(f => consumed.contains(f.resolutionKey)) ++
+          written.map(_.copy(content = FileContent.PositionDeletes, sequenceNumber = seq)))
+    }
 
   /** Position-delete file compaction (Iceberg's
     * rewrite_position_delete_files): merges the branch head's pos-delete
@@ -225,8 +208,7 @@ object Maintenance {
     * (file_path, pos) and data paths are unique, so raising the sequence
     * cannot make it match anything new. */
   def rewritePositionDeletes(spark: org.apache.spark.sql.SparkSession,
-      catalog: Catalog, tableName: String,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
+      catalog: Catalog, tableName: String): TableMetadata = {
     import org.apache.spark.sql.functions.col
     val meta0 = catalog.loadTable(tableName)
     val snap0 = meta0.currentSnapshot.getOrElse(return meta0)
@@ -250,31 +232,8 @@ object Maintenance {
         MetaIO.join(meta0.location, "data"),
         partitionSpec = Nil, sortOrder = Nil, maxRecordsPerFile = Long.MaxValue,
         repartitionTo = 1)
-    val mergedSeq = posFiles.map(_.sequenceNumber).max
-
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
-      val snap = meta.currentSnapshot.getOrElse(return meta)
-      val oldPaths = posFiles.map(_.path).toSet
-      // another writer may have added pos deletes since; only swap the
-      // ones this rewrite actually read
-      val newManifest = snap.manifest.filterNot(f => oldPaths.contains(f.path)) ++
-        written.map(_.copy(content = FileContent.PositionDeletes, sequenceNumber = mergedSeq))
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val next = Snapshot(snapshotId, Some(snap.snapshotId), meta.lastSequenceNumber,
-        System.currentTimeMillis(), newManifest,
-        TableMetadata.preservedProperties(snap.summary) ++
-          TableMetadata.computedSummary(snap.manifest, newManifest) +
-          ("operation" -> "maintenance"))
-      val updated = meta.copy(currentSnapshotId = Some(snapshotId),
-        refs = meta.refs + ("main" -> snapshotId), snapshots = meta.snapshots :+ next)
-      try return catalog.commit(meta, updated)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
-      }
-    }
-    sys.error("unreachable")
+    swapInPositionDeletes(catalog, tableName, posFiles.map(_.resolutionKey).toSet,
+      written, posFiles.map(_.sequenceNumber).max)
   }
 
   /** Converts EQUALITY deletes to POSITION deletes — Iceberg's
@@ -298,8 +257,7 @@ object Maintenance {
     * compaction's scan — but writes only tombstones). Returns unchanged
     * metadata when the table carries no equality deletes. */
   def convertEqualityDeletes(spark: org.apache.spark.sql.SparkSession,
-      catalog: Catalog, tableName: String,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
+      catalog: Catalog, tableName: String): TableMetadata = {
     import org.apache.spark.sql.functions.col
     import graft.exec.Mor
     val meta0 = catalog.loadTable(tableName)
@@ -339,31 +297,8 @@ object Maintenance {
     // the tombstones replace the eq files' effect; stamp their max seq
     // (same safety argument as rewritePositionDeletes: pos application
     // is path-addressed and rewrites always mint fresh paths)
-    val stampSeq = eqFiles.map(_.sequenceNumber).max
-
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
-      val snap = meta.currentSnapshot.getOrElse(return meta)
-      val oldPaths = eqFiles.map(_.path).toSet
-      // only swap the eq files this conversion actually read; eq deletes
-      // committed since stay live
-      val newManifest = snap.manifest.filterNot(f => oldPaths.contains(f.path)) ++
-        written.map(_.copy(content = FileContent.PositionDeletes, sequenceNumber = stampSeq))
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val next = Snapshot(snapshotId, Some(snap.snapshotId), meta.lastSequenceNumber,
-        System.currentTimeMillis(), newManifest,
-        TableMetadata.preservedProperties(snap.summary) ++
-          TableMetadata.computedSummary(snap.manifest, newManifest) +
-          ("operation" -> "maintenance"))
-      val updated = meta.copy(currentSnapshotId = Some(snapshotId),
-        refs = meta.refs + ("main" -> snapshotId), snapshots = meta.snapshots :+ next)
-      try return catalog.commit(meta, updated)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
-      }
-    }
-    sys.error("unreachable")
+    swapInPositionDeletes(catalog, tableName, eqFiles.map(_.resolutionKey).toSet,
+      written, eqFiles.map(_.sequenceNumber).max)
   }
 
   /** Converts plain (parquet) position-delete files into Iceberg v3
@@ -389,8 +324,7 @@ object Maintenance {
     * consumes parquet pos deletes only, datafusion_processor.rs:489-522);
     * this is the published-spec layout on top. */
   def convertPositionDeletesToDVs(spark: org.apache.spark.sql.SparkSession,
-      catalog: Catalog, tableName: String,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
+      catalog: Catalog, tableName: String): TableMetadata = {
     import org.apache.spark.sql.functions.{broadcast, col}
     import graft.exec.Mor
     val meta0 = catalog.loadTable(tableName)
@@ -434,39 +368,24 @@ object Maintenance {
     val stampSeq =
       (posFiles.map(_.sequenceNumber) ++ replacedDvs.map(_.sequenceNumber)).max
 
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
-      val snap = meta.currentSnapshot.getOrElse(return meta)
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val dvEntries =
-        if (smallPath)
-          DeletionVectors.writeEntries(meta.location, merged,
-            snapshotId, stampSeq, f => partitionOf.getOrElse(f, Map.empty))
-        else
-          DeletionVectors.writeEntriesStreamed(spark, rows.get,
-            existingDv.collect { case (f, e) if affected.contains(f) =>
-              f -> (e.path, e.contentOffset.getOrElse(0L), e.contentSizeInBytes.get) },
-            meta.location, snapshotId, stampSeq,
-            f => partitionOf.getOrElse(f, Map.empty))
-      // only swap the tombstones this conversion actually read; pos deletes
-      // (or DVs) committed since stay live
-      val consumed = posPaths ++ replacedDvKeys
-      val newManifest =
-        snap.manifest.filterNot(f => consumed.contains(f.resolutionKey)) ++ dvEntries
-      val next = Snapshot(snapshotId, Some(snap.snapshotId), meta.lastSequenceNumber,
-        System.currentTimeMillis(), newManifest,
-        TableMetadata.preservedProperties(snap.summary) ++
-          TableMetadata.computedSummary(snap.manifest, newManifest) +
-          ("operation" -> "maintenance"))
-      val updated = meta.copy(currentSnapshotId = Some(snapshotId),
-        refs = meta.refs + ("main" -> snapshotId), snapshots = meta.snapshots :+ next)
-      try return catalog.commit(meta, updated)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
+    // only swap the tombstones this conversion actually read; pos deletes
+    // (or DVs) committed since stay live
+    val consumed = posPaths ++ replacedDvKeys
+    catalog.transact(tableName) { meta =>
+      maintenanceSnapshot(meta) { head =>
+        val dvEntries =
+          if (smallPath)
+            DeletionVectors.writeEntries(meta.location, merged,
+              meta.nextSnapshotId, stampSeq, f => partitionOf.getOrElse(f, Map.empty))
+          else
+            DeletionVectors.writeEntriesStreamed(spark, rows.get,
+              existingDv.collect { case (f, e) if affected.contains(f) =>
+                f -> (e.path, e.contentOffset.getOrElse(0L), e.contentSizeInBytes.get) },
+              meta.location, meta.nextSnapshotId, stampSeq,
+              f => partitionOf.getOrElse(f, Map.empty))
+        head.manifest.filterNot(f => consumed.contains(f.resolutionKey)) ++ dvEntries
       }
     }
-    sys.error("unreachable")
   }
 
   /** The REVERSE conversion — v3 deletion vectors back into plain parquet
@@ -485,8 +404,7 @@ object Maintenance {
     * containers become orphans for [[deleteOrphans]]. */
   def convertDeletionVectorsToPositionDeletes(
       spark: org.apache.spark.sql.SparkSession,
-      catalog: Catalog, tableName: String,
-      retry: CommitRetryConfig = CommitRetryConfig()): TableMetadata = {
+      catalog: Catalog, tableName: String): TableMetadata = {
     val meta0 = catalog.loadTable(tableName)
     val snap0 = meta0.currentSnapshot.getOrElse(return meta0)
     val dvEntries = snap0.manifest.filter(_.isDeletionVector)
@@ -506,31 +424,8 @@ object Maintenance {
       graft.meta.IceWrite.withPosDeleteFieldIds(positions),
       MetaIO.join(meta0.location, "data"),
       partitionSpec = Nil, sortOrder = Nil, maxRecordsPerFile = Long.MaxValue)
-    val stampSeq = dvEntries.map(_.sequenceNumber).max
-    val consumed = dvEntries.map(_.resolutionKey).toSet
-
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
-      val snap = meta.currentSnapshot.getOrElse(return meta)
-      // swap only the DV entries this conversion actually decoded; DVs
-      // committed since stay live
-      val newManifest = snap.manifest.filterNot(f => consumed.contains(f.resolutionKey)) ++
-        written.map(_.copy(content = FileContent.PositionDeletes, sequenceNumber = stampSeq))
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val next = Snapshot(snapshotId, Some(snap.snapshotId), meta.lastSequenceNumber,
-        System.currentTimeMillis(), newManifest,
-        TableMetadata.preservedProperties(snap.summary) ++
-          TableMetadata.computedSummary(snap.manifest, newManifest) +
-          ("operation" -> "maintenance"))
-      val updated = meta.copy(currentSnapshotId = Some(snapshotId),
-        refs = meta.refs + ("main" -> snapshotId), snapshots = meta.snapshots :+ next)
-      try return catalog.commit(meta, updated)
-      catch {
-        case _: CommitConflictException if attempt < retry.maxRetries => attempt += 1
-      }
-    }
-    sys.error("unreachable")
+    swapInPositionDeletes(catalog, tableName, dvEntries.map(_.resolutionKey).toSet,
+      written, dvEntries.map(_.sequenceNumber).max)
   }
 
   /** One-call v3 -> Iceberg-v2 interop exit: folds the current snapshot's

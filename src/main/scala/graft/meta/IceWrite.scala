@@ -359,55 +359,18 @@ object IceWrite {
         * snapshot commits into the snapshot list with `wap.id` in its
         * summary but NO ref moves — readers see nothing until
         * [[cherrypickSnapshot]] publishes it. */
-      stageWapId: Option[String] = None): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+      stageWapId: Option[String] = None): TableMetadata =
+    catalog.transact(name) { meta =>
       val base = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
       val newSeq = meta.lastSequenceNumber + 1
-      val stamped0 = sets.flatMap(s => s.files.map(_.copy(
+      val stamped = sets.flatMap(s => s.files.map(_.copy(
         content = s.content, sequenceNumber = newSeq,
         equalityIds = s.equalityIds, equalityFieldIds = s.equalityFieldIds)))
-      // v3 row lineage: every data file claims [cursor, cursor + rows);
-      // assigned INSIDE the retry loop against the fresh head, so
-      // concurrent appends get disjoint ranges through the CAS
-      var rowCursor = meta.nextRowId
-      val stamped =
-        if (meta.formatVersion < 3) stamped0
-        else stamped0.map { f =>
-          if (f.content != FileContent.Data || f.isDeletionVector) f
-          else { val assigned = f.copy(firstRowId = Some(rowCursor))
-                 rowCursor += f.recordCount; assigned }
-        }
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val parentManifest = base.map(_.manifest).getOrElse(Nil)
-      val newManifest = pruneParent(parentManifest) ++ stamped
-      val snap = Snapshot(
-        snapshotId = snapshotId,
-        parentId = base.map(_.snapshotId),
-        sequenceNumber = newSeq,
-        timestampMs = System.currentTimeMillis(),
-        manifest = newManifest,
-        summary = base.map(s => TableMetadata.preservedProperties(s.summary))
-          .getOrElse(Map.empty) ++
-          TableMetadata.computedSummary(parentManifest, newManifest) +
-          ("operation" -> operation) ++
-          stageWapId.map("wap.id" -> _))
-      val updated = meta.copy(
-        currentSnapshotId =
-          if (branch == "main" && stageWapId.isEmpty) Some(snapshotId)
-          else meta.currentSnapshotId,
-        refs =
-          if (stageWapId.isEmpty) meta.refs + (branch -> snapshotId) else meta.refs,
-        snapshots = meta.snapshots :+ snap,
-        lastSequenceNumber = newSeq,
-        nextRowId = rowCursor,
-        properties = meta.properties ++ extraProperties)
-      try return catalog.commit(meta, updated)
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.withSnapshot(base, pruneParent(base.map(_.manifest).getOrElse(Nil)) ++ stamped,
+        operation, newSeq, branch, publish = stageWapId.isEmpty,
+        summary = stageWapId.map("wap.id" -> _).toMap)
+        .copy(properties = meta.properties ++ extraProperties)
     }
-    sys.error("unreachable")
-  }
 
   private def typedOf(meta: TableMetadata): Boolean =
     meta.schema.nonEmpty && meta.schema.forall(_.isTyped)
@@ -917,9 +880,7 @@ object IceWrite {
     // lost race re-commits the same files against the new head
     val dataEntries = newDataFiles()
 
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+    catalog.transact(name) { meta =>
       val base = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
         .getOrElse(throw new IllegalStateException(s"table $name lost its snapshot"))
       // merge against the CURRENT head's DVs (a concurrent DV delete may
@@ -931,7 +892,7 @@ object IceWrite {
       val partitionOf = base.manifest.filter(_.content == FileContent.Data)
         .map(f => f.path -> f.partitionValues).toMap
       val newSeq = meta.lastSequenceNumber + 1
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
+      val snapshotId = meta.nextSnapshotId
       val dvEntries =
         if (smallPath)
           DeletionVectors.writeEntries(meta.location,
@@ -944,82 +905,42 @@ object IceWrite {
             meta.location, snapshotId, newSeq,
             f => partitionOf.getOrElse(f, Map.empty))
       // new data files (the UPDATE shape) share the snapshot and its
-      // sequence; v3 row lineage is assigned inside the retry loop so a
-      // lost CAS race re-claims disjoint ranges against the fresh head
-      var rowCursor = meta.nextRowId
-      val stampedData = dataEntries.map { f =>
-        val withSeq = f.copy(content = FileContent.Data, sequenceNumber = newSeq)
-        if (meta.formatVersion < 3) withSeq
-        else { val a = withSeq.copy(firstRowId = Some(rowCursor))
-               rowCursor += f.recordCount; a }
-      }
-      val parentManifest = base.manifest
-      val newManifest = parentManifest.filterNot(f =>
-        replacedKeys.contains(f.resolutionKey)) ++ dvEntries ++ stampedData
-      val snap = Snapshot(
-        snapshotId = snapshotId,
-        parentId = Some(base.snapshotId),
-        sequenceNumber = newSeq,
-        timestampMs = System.currentTimeMillis(),
-        manifest = newManifest,
-        summary = TableMetadata.preservedProperties(base.summary) ++
-          TableMetadata.computedSummary(parentManifest, newManifest) +
-          ("operation" -> operation))
-      val updated = meta.copy(
-        currentSnapshotId =
-          if (branch == "main") Some(snapshotId) else meta.currentSnapshotId,
-        refs = meta.refs + (branch -> snapshotId),
-        snapshots = meta.snapshots :+ snap,
-        lastSequenceNumber = newSeq,
-        nextRowId = rowCursor)
-      try return catalog.commit(meta, updated)
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      // sequence (and, on v3, claim their row ids against this head)
+      meta.withSnapshot(Some(base),
+        base.manifest.filterNot(f => replacedKeys.contains(f.resolutionKey)) ++ dvEntries ++
+          dataEntries.map(_.copy(content = FileContent.Data, sequenceNumber = newSeq)),
+        operation, newSeq, branch)
     }
-    sys.error("unreachable")
   }
 
   /** Creates (or resets) a branch ref at `fromBranch`'s head — the
     * write-audit-publish staging point. */
   def createBranch(catalog: Catalog, name: String, branch: String,
-      fromBranch: String = "main"): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+      fromBranch: String = "main"): TableMetadata =
+    catalog.transact(name) { meta =>
       val head = meta.refs.get(fromBranch).orElse(meta.currentSnapshotId)
         .getOrElse(throw new IllegalStateException(s"branch $fromBranch has no snapshot"))
-      try return catalog.commit(meta, meta.copy(refs = meta.refs + (branch -> head)))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(refs = meta.refs + (branch -> head))
     }
-    sys.error("unreachable")
-  }
 
   /** Creates (or resets) a branch ref at an EXPLICIT snapshot (SQL's
     * `CREATE BRANCH b AS OF VERSION v`). */
   def createBranchAt(catalog: Catalog, name: String, branch: String,
-      snapshotId: Long): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+      snapshotId: Long): TableMetadata =
+    catalog.transact(name) { meta =>
       require(meta.snapshotById(snapshotId).nonEmpty,
         s"table $name has no snapshot $snapshotId")
-      try return catalog.commit(meta, meta.copy(refs = meta.refs + (branch -> snapshotId)))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(refs = meta.refs + (branch -> snapshotId))
     }
-    sys.error("unreachable")
-  }
 
   /** Drops a branch ref. The snapshots it pointed at stay time-travelable
     * until expiry; `main` is the table identity and cannot drop. */
   def dropBranch(catalog: Catalog, name: String, branch: String): TableMetadata = {
     require(branch != "main", "cannot drop the main branch")
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+    catalog.transact(name) { meta =>
       require(meta.refs.contains(branch), s"no such branch: $branch")
-      try return catalog.commit(meta, meta.copy(refs = meta.refs - branch))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(refs = meta.refs - branch)
     }
-    sys.error("unreachable")
   }
 
   /** Rolls a branch back to an ANCESTOR snapshot (Iceberg's
@@ -1029,10 +950,8 @@ object IceWrite {
     * ancestors: rolling "back" to a divergent snapshot is a branch
     * reassignment, not a rollback — use [[createBranch]] for that. */
   def rollbackTo(catalog: Catalog, name: String, snapshotId: Long,
-      branch: String = "main"): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+      branch: String = "main"): TableMetadata =
+    catalog.transact(name) { meta =>
       val head = meta.snapshotForRef(branch)
         .orElse(if (branch == "main") meta.currentSnapshot else None)
         .getOrElse(throw new IllegalStateException(s"branch $branch has no snapshot"))
@@ -1041,61 +960,41 @@ object IceWrite {
         cur = cur.get.parentId.flatMap(meta.snapshotById)
       require(cur.nonEmpty,
         s"snapshot $snapshotId is not an ancestor of $branch's head ${head.snapshotId}")
-      val updated = meta.copy(
+      meta.copy(
         refs = meta.refs + (branch -> snapshotId),
         currentSnapshotId =
           if (branch == "main") Some(snapshotId) else meta.currentSnapshotId)
-      try return catalog.commit(meta, updated)
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
     }
-    sys.error("unreachable")
-  }
 
   /** Creates an IMMUTABLE tag at a snapshot (Iceberg tags): a named
     * time-travel point that pins its snapshot against expiry. Tags never
     * move; re-tagging an existing name is an error (drop it first). */
   def createTag(catalog: Catalog, name: String, tag: String,
-      snapshotId: Long): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+      snapshotId: Long): TableMetadata =
+    catalog.transact(name) { meta =>
       require(meta.snapshotById(snapshotId).nonEmpty,
         s"table $name has no snapshot $snapshotId")
       require(!meta.tags.contains(tag),
         s"tag $tag already exists (tags are immutable; dropTag first)")
-      try return catalog.commit(meta, meta.copy(tags = meta.tags + (tag -> snapshotId)))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(tags = meta.tags + (tag -> snapshotId))
     }
-    sys.error("unreachable")
-  }
 
-  def dropTag(catalog: Catalog, name: String, tag: String): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+  def dropTag(catalog: Catalog, name: String, tag: String): TableMetadata =
+    catalog.transact(name) { meta =>
       require(meta.tags.contains(tag), s"no such tag: $tag")
-      try return catalog.commit(meta, meta.copy(tags = meta.tags - tag))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(tags = meta.tags - tag)
     }
-    sys.error("unreachable")
-  }
 
   /** Publishes a staged branch: fast-forwards main (and the current
     * snapshot pointer) to the branch head. Audit the branch with
     * [[IceRead.table]](branch) first; until publish, main readers see
     * nothing of the staged commits. */
-  def publishBranch(catalog: Catalog, name: String, branch: String): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+  def publishBranch(catalog: Catalog, name: String, branch: String): TableMetadata =
+    catalog.transact(name) { meta =>
       val head = meta.refs.getOrElse(branch,
         throw new IllegalArgumentException(s"no such branch: $branch"))
-      try return catalog.commit(meta, meta.copy(
-        refs = meta.refs + ("main" -> head), currentSnapshotId = Some(head)))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(refs = meta.refs + ("main" -> head), currentSnapshotId = Some(head))
     }
-    sys.error("unreachable")
-  }
 
   /** Iceberg's `fast_forward` procedure: moves `branch` to `to`'s head,
     * refusing unless that is a true fast-forward (`branch`'s head, when
@@ -1104,12 +1003,11 @@ object IceWrite {
     * Returns (previous head if any, new head). */
   def fastForward(catalog: Catalog, name: String, branch: String,
       to: String): (Option[Long], Long) = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+    var prev: Option[Long] = None
+    val committed = catalog.transact(name) { meta =>
       val toHead = meta.refs.getOrElse(to,
         throw new IllegalArgumentException(s"no such branch: $to"))
-      val prev = meta.refs.get(branch)
+      prev = meta.refs.get(branch)
       prev.foreach { bh =>
         var cur = meta.snapshotById(toHead)
         while (cur.nonEmpty && cur.get.snapshotId != bh)
@@ -1117,15 +1015,12 @@ object IceWrite {
         require(cur.nonEmpty,
           s"$branch (head $bh) is not an ancestor of $to (head $toHead): not a fast-forward")
       }
-      try {
-        catalog.commit(meta, meta.copy(
-          refs = meta.refs + (branch -> toHead),
-          currentSnapshotId =
-            if (branch == "main") Some(toHead) else meta.currentSnapshotId))
-        return (prev, toHead)
-      } catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.copy(
+        refs = meta.refs + (branch -> toHead),
+        currentSnapshotId =
+          if (branch == "main") Some(toHead) else meta.currentSnapshotId)
     }
-    sys.error("unreachable")
+    (prev, committed.refs(branch))
   }
 
   /** Iceberg's `set_current_snapshot` procedure: points main at ANY
@@ -1133,20 +1028,14 @@ object IceWrite {
     * (the recover-from-a-bad-publish hammer). Returns (previous, new). */
   def setCurrentSnapshot(catalog: Catalog, name: String,
       snapshotId: Long): (Option[Long], Long) = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+    var prev: Option[Long] = None
+    catalog.transact(name) { meta =>
       require(meta.snapshotById(snapshotId).nonEmpty,
         s"table $name has no snapshot $snapshotId")
-      val prev = meta.currentSnapshotId
-      try {
-        catalog.commit(meta, meta.copy(
-          refs = meta.refs + ("main" -> snapshotId),
-          currentSnapshotId = Some(snapshotId)))
-        return (prev, snapshotId)
-      } catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      prev = meta.currentSnapshotId
+      meta.copy(refs = meta.refs + ("main" -> snapshotId), currentSnapshotId = Some(snapshotId))
     }
-    sys.error("unreachable")
+    (prev, snapshotId)
   }
 
   /** Iceberg's `cherrypick_snapshot`: publishes one APPEND-SHAPED
@@ -1158,10 +1047,8 @@ object IceWrite {
     * files (overwrites, deletes, compactions) refuse — their conflict
     * semantics cannot be replayed blindly. */
   def cherrypickSnapshot(catalog: Catalog, name: String,
-      snapshotId: Long): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+      snapshotId: Long): TableMetadata =
+    catalog.transact(name) { meta =>
       val snap = meta.snapshotById(snapshotId).getOrElse(
         throw new IllegalArgumentException(s"table $name has no snapshot $snapshotId"))
       val parent = snap.parentId.flatMap(meta.snapshotById)
@@ -1179,41 +1066,24 @@ object IceWrite {
       require(added.forall(_.content == FileContent.Data),
         s"snapshot $snapshotId added delete files — only plain appends cherry-pick")
       val head = meta.currentSnapshot
-      val updated =
-        if (head.map(_.snapshotId) == snap.parentId)
-          // fast-forward arm: the staged snapshot becomes current as-is
-          meta.copy(refs = meta.refs + ("main" -> snap.snapshotId),
-            currentSnapshotId = Some(snap.snapshotId))
-        else {
-          // re-apply arm: main moved since staging — add the staged data
-          // files on top of the CURRENT head, fresh sequence (row-lineage
-          // ids keep their staged assignment; the ranges were already
-          // claimed through the cursor at staging)
-          val headManifest = head.map(_.manifest).getOrElse(Nil)
-          val headKeys = headManifest.map(_.resolutionKey).toSet
-          require(!added.exists(f => headKeys.contains(f.resolutionKey)),
-            s"snapshot $snapshotId's files are already in the current state " +
-              "(cherry-picked twice?)")
-          val newSeq = meta.lastSequenceNumber + 1
-          val restamped = added.map(_.copy(sequenceNumber = newSeq))
-          val newId = meta.snapshots.map(_.snapshotId).max + 1
-          val manifest = headManifest ++ restamped
-          val pub = Snapshot(newId, head.map(_.snapshotId), newSeq,
-            System.currentTimeMillis(), manifest,
-            head.map(s => TableMetadata.preservedProperties(s.summary))
-              .getOrElse(Map.empty) ++
-              TableMetadata.computedSummary(headManifest, manifest) +
-              ("operation" -> "append") ++
-              snap.summary.get("wap.id").map("published-wap-id" -> _))
-          meta.copy(
-            refs = meta.refs + ("main" -> newId),
-            currentSnapshotId = Some(newId),
-            snapshots = meta.snapshots :+ pub,
-            lastSequenceNumber = newSeq)
-        }
-      try return catalog.commit(meta, updated)
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      if (head.map(_.snapshotId) == snap.parentId)
+        // fast-forward arm: the staged snapshot becomes current as-is
+        meta.copy(refs = meta.refs + ("main" -> snap.snapshotId),
+          currentSnapshotId = Some(snap.snapshotId))
+      else {
+        // re-apply arm: main moved since staging — add the staged data
+        // files on top of the CURRENT head, fresh sequence (row-lineage
+        // ids keep their staged assignment; the ranges were already
+        // claimed through the cursor at staging)
+        val headManifest = head.map(_.manifest).getOrElse(Nil)
+        val headKeys = headManifest.map(_.resolutionKey).toSet
+        require(!added.exists(f => headKeys.contains(f.resolutionKey)),
+          s"snapshot $snapshotId's files are already in the current state " +
+            "(cherry-picked twice?)")
+        val newSeq = meta.lastSequenceNumber + 1
+        meta.withSnapshot(head, headManifest ++ added.map(_.copy(sequenceNumber = newSeq)),
+          "append", newSeq,
+          summary = snap.summary.get("wap.id").map("published-wap-id" -> _).toMap)
+      }
     }
-    sys.error("unreachable")
-  }
 }

@@ -238,64 +238,71 @@ object IcebergRestImport {
     * such that the local head no longer exists there also refuses. */
   def refreshTable(catalog: Catalog, name: String,
       authToken: Option[String] = None): RefreshResult = {
-    val meta = catalog.loadTable(name)
-    val uri = meta.properties.getOrElse("attach.rest.uri",
-      throw new IllegalArgumentException(
-        s"refresh_iceberg_rest: $name was not attached from a REST catalog " +
-          "(no attach.rest.uri property)"))
-    val namespace = meta.properties("attach.rest.namespace").split('\u001f').toSeq
-    val table = meta.properties("attach.rest.table")
-    val prefix = meta.properties.get("attach.rest.prefix")
-    val attachedAt = meta.properties.get("attach.snapshot-id").map(_.toLong).filter(_ >= 0)
-    require(meta.currentSnapshotId == attachedAt,
-      s"refresh_iceberg_rest: $name has LOCAL commits past the attach point " +
-        s"(head ${meta.currentSnapshotId.getOrElse(-1L)}, attached at " +
-        s"${attachedAt.getOrElse(-1L)}) — local writes cannot be rebased onto the " +
-        "foreign history. Re-attach under a new name, or write through the " +
-        "source catalog (IcebergRestCommit).")
-    // metadata-only local changes (schema evolution, spec/sort edits,
-    // branch/tag moves) would be silently DISCARDED by a re-import —
-    // refuse those too (properties excluded: ANALYZE etc. is fine)
-    meta.properties.get("attach.fingerprint").foreach(fp =>
-      require(fp == localFingerprint(meta),
-        s"refresh_iceberg_rest: $name has local metadata changes since the " +
-          "attach (schema/spec/sort/refs) that a refresh would discard — " +
-          "re-attach under a new name to follow the source."))
+    // one attempt per head: the guards and the staleness probe re-run
+    // against the freshly loaded table if the commit loses a race
+    var result = RefreshResult(refreshed = false, None, 0)
+    catalog.transact(name) { meta =>
+      val uri = meta.properties.getOrElse("attach.rest.uri",
+        throw new IllegalArgumentException(
+          s"refresh_iceberg_rest: $name was not attached from a REST catalog " +
+            "(no attach.rest.uri property)"))
+      val namespace = meta.properties("attach.rest.namespace").split('\u001f').toSeq
+      val table = meta.properties("attach.rest.table")
+      val prefix = meta.properties.get("attach.rest.prefix")
+      val attachedAt = meta.properties.get("attach.snapshot-id").map(_.toLong).filter(_ >= 0)
+      require(meta.currentSnapshotId == attachedAt,
+        s"refresh_iceberg_rest: $name has LOCAL commits past the attach point " +
+          s"(head ${meta.currentSnapshotId.getOrElse(-1L)}, attached at " +
+          s"${attachedAt.getOrElse(-1L)}) — local writes cannot be rebased onto the " +
+          "foreign history. Re-attach under a new name, or write through the " +
+          "source catalog (IcebergRestCommit).")
+      // metadata-only local changes (schema evolution, spec/sort edits,
+      // branch/tag moves) would be silently DISCARDED by a re-import —
+      // refuse those too (properties excluded: ANALYZE etc. is fine)
+      meta.properties.get("attach.fingerprint").foreach(fp =>
+        require(fp == localFingerprint(meta),
+          s"refresh_iceberg_rest: $name has local metadata changes since the " +
+            "attach (schema/spec/sort/refs) that a refresh would discard — " +
+            "re-attach under a new name to follow the source."))
 
-    val (metadata, loc, pfx) = loadResult(uri, namespace, table, authToken, prefix)
-    val foreignCur = (metadata \ "current-snapshot-id") match {
-      case JNothing | JNull => None
-      case JInt(v) => Some(v.toLong).filter(_ != -1L)
-      case v => Some(v.values.toString.toLong).filter(_ != -1L)
+      val (metadata, loc, pfx) = loadResult(uri, namespace, table, authToken, prefix)
+      val foreignCur = (metadata \ "current-snapshot-id") match {
+        case JNothing | JNull => None
+        case JInt(v) => Some(v.toLong).filter(_ != -1L)
+        case v => Some(v.values.toString.toLong).filter(_ != -1L)
+      }
+      val sameLoc = loc.nonEmpty &&
+        loc == meta.properties.get("attach.metadata-location")
+      if (sameLoc || (loc.isEmpty && foreignCur == attachedAt)) {
+        result = RefreshResult(refreshed = false, attachedAt, 0)
+        meta
+      } else {
+        val parsed = IcebergImport.parseIcebergMetadataJson(name, metadata)
+        // identity guard: table-uuid is immutable for a table's life (spec),
+        // so a changed uuid means the source was DROPPED AND RECREATED under
+        // the same name — its snapshot ids may collide with the attached
+        // history (sequential engines restart at 1), which the continuity
+        // check below cannot see. Refuse instead of replacing the follower
+        // with an unrelated table's history.
+        for (local <- meta.properties.get(TableMetadata.UuidKey);
+             foreign <- parsed.properties.get(TableMetadata.UuidKey))
+          require(local == foreign,
+            s"refresh_iceberg_rest: the source's table-uuid changed " +
+              s"($local -> $foreign) — the table was dropped and recreated. Re-attach.")
+        // continuity guard: the local head must still exist in the source's
+        // history, or a changelog across the refresh would be meaningless
+        require(attachedAt.forall(id => parsed.snapshots.exists(_.snapshotId == id)),
+          s"refresh_iceberg_rest: the source rewrote history — local head " +
+            s"${attachedAt.getOrElse(-1L)} no longer exists there. Re-attach.")
+        val merged = parsed.copy(
+          location = meta.location,
+          properties = parsed.properties ++
+            provenance(uri, namespace, table, pfx, loc, parsed))
+        result = RefreshResult(refreshed = true, merged.currentSnapshotId,
+          parsed.snapshots.size - meta.snapshots.size)
+        merged
+      }
     }
-    val sameLoc = loc.nonEmpty &&
-      loc == meta.properties.get("attach.metadata-location")
-    if (sameLoc || (loc.isEmpty && foreignCur == attachedAt))
-      return RefreshResult(refreshed = false, attachedAt, 0)
-
-    val parsed = IcebergImport.parseIcebergMetadataJson(name, metadata)
-    // identity guard: table-uuid is immutable for a table's life (spec),
-    // so a changed uuid means the source was DROPPED AND RECREATED under
-    // the same name — its snapshot ids may collide with the attached
-    // history (sequential engines restart at 1), which the continuity
-    // check below cannot see. Refuse instead of replacing the follower
-    // with an unrelated table's history.
-    for (local <- meta.properties.get(TableMetadata.UuidKey);
-         foreign <- parsed.properties.get(TableMetadata.UuidKey))
-      require(local == foreign,
-        s"refresh_iceberg_rest: the source's table-uuid changed " +
-          s"($local -> $foreign) — the table was dropped and recreated. Re-attach.")
-    // continuity guard: the local head must still exist in the source's
-    // history, or a changelog across the refresh would be meaningless
-    require(attachedAt.forall(id => parsed.snapshots.exists(_.snapshotId == id)),
-      s"refresh_iceberg_rest: the source rewrote history — local head " +
-        s"${attachedAt.getOrElse(-1L)} no longer exists there. Re-attach.")
-    val merged = parsed.copy(
-      location = meta.location,
-      properties = parsed.properties ++
-        provenance(uri, namespace, table, pfx, loc, parsed))
-    catalog.commit(meta, merged)
-    RefreshResult(refreshed = true, merged.currentSnapshotId,
-      parsed.snapshots.size - meta.snapshots.size)
+    result
   }
 }

@@ -7,6 +7,15 @@ import java.nio.charset.StandardCharsets
   * reference (core/src/compaction/mod.rs:763-782): retriable. */
 final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
+/** The one commit-retry policy ([[Catalog.transact]]): the reference's
+  * 3 retries with exponential backoff 1 s -> 10 s
+  * (CommitManagerRetryConfig, core/src/compaction/mod.rs:774-782). */
+final case class CommitRetryConfig(
+    maxRetries: Int = 3,
+    initialDelayMs: Long = 1000L,
+    maxDelayMs: Long = 10000L
+)
+
 /** File-system catalog with compare-and-swap commits.
   *
   * Layout per table: `<warehouse>/<table>/metadata/v{N}.metadata.json` +
@@ -28,6 +37,32 @@ trait Catalog {
   /** CAS: persists `updated` as version `base.version + 1`; throws
     * [[CommitConflictException]] if that version already exists. */
   def commit(base: TableMetadata, updated: TableMetadata): TableMetadata
+
+  /** The one optimistic transaction every metadata mutation goes through:
+    * each attempt loads the table once, runs `build` against that fresh
+    * head and makes one [[commit]]. Only a lost CAS race
+    * ([[CommitConflictException]]) retries, after the `retry` backoff;
+    * anything `build` throws propagates on the attempt that threw it. A
+    * `build` that returns its input unchanged commits nothing. */
+  def transact(name: String, retry: CommitRetryConfig = CommitRetryConfig())(
+      build: TableMetadata => TableMetadata): TableMetadata = {
+    var attempt = 0
+    var delay = retry.initialDelayMs
+    while (true) {
+      val meta = loadTable(name)
+      val updated = build(meta)
+      if (updated eq meta) return meta
+      try return commit(meta, updated)
+      catch {
+        case _: CommitConflictException if attempt < retry.maxRetries =>
+          attempt += 1
+          Thread.sleep(delay)
+          delay = math.min(delay * 2, retry.maxDelayMs)
+      }
+    }
+    sys.error("unreachable")
+  }
+
   def dropTable(name: String): Unit
   /** Renames the catalog ENTRY only: the table keeps its uuid, history,
     * and LOCATION — data files stay in place (manifests hold absolute

@@ -139,9 +139,7 @@ object MaterializedView {
     val eqFieldIds = keys.map(k => table0.fieldByName(k).getOrElse(
       throw new IllegalArgumentException(s"key column $k not in view schema")).id)
 
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(name)
+    catalog.transact(name) { meta =>
       if (meta.properties.get(WatermarkProp).map(_.toLong).getOrElse(-1L) != expectedWatermark)
         throw new ConcurrentRefreshException(
           s"view $name was refreshed concurrently (watermark moved past $expectedWatermark)")
@@ -152,22 +150,8 @@ object MaterializedView {
         delFiles.map(_.copy(content = FileContent.EqualityDeletes, sequenceNumber = newSeq,
           equalityIds = keys, equalityFieldIds = eqFieldIds)) ++
           dataFiles.map(_.copy(content = FileContent.Data, sequenceNumber = newSeq))
-      val snapshotId = meta.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val newManifest = base.manifest ++ stamped
-      val snap = Snapshot(snapshotId, Some(base.snapshotId), newSeq,
-        System.currentTimeMillis(), newManifest,
-        TableMetadata.preservedProperties(base.summary) ++
-          TableMetadata.computedSummary(base.manifest, newManifest) +
-          ("operation" -> "overwrite"))
-      val updated = meta.copy(
-        currentSnapshotId = Some(snapshotId),
-        refs = meta.refs + ("main" -> snapshotId),
-        snapshots = meta.snapshots :+ snap,
-        lastSequenceNumber = newSeq,
-        properties = meta.properties + (WatermarkProp -> newWatermark.toString))
-      try return catalog.commit(meta, updated)
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
+      meta.withSnapshot(Some(base), base.manifest ++ stamped, "overwrite", newSeq)
+        .copy(properties = meta.properties + (WatermarkProp -> newWatermark.toString))
     }
-    sys.error("unreachable")
   }
 }

@@ -389,6 +389,62 @@ final case class TableMetadata(
     refs.get(branch).flatMap(snapshotById)
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.flatMap(snapshotById)
 
+  /** The id [[withSnapshot]] gives the next snapshot: max existing + 1.
+    * Writers that must name the snapshot before building it (deletion
+    * vector blobs record it) read it here. */
+  def nextSnapshotId: Long = snapshots.iterator.map(_.snapshotId).foldLeft(0L)(math.max) + 1
+
+  /** The one snapshot builder: appends a snapshot of `manifest` on top of
+    * `parent` and moves the metadata with it.
+    *
+    *  - the id is [[nextSnapshotId]];
+    *  - on v3 tables, data files new to `parent` that carry no row-lineage
+    *    range claim [nextRowId, nextRowId + rows) in manifest order, and
+    *    the cursor advances in the same commit;
+    *  - the summary is the parent's custom properties, the computed
+    *    added/removed/total figures, `operation`, then `summary`;
+    *  - when `publish`, `branch`'s ref moves to the snapshot (and the
+    *    current pointer, for main); an unpublished snapshot (write-audit-
+    *    publish staging) only joins the snapshot list.
+    *
+    * File sequence numbers are the caller's: `sequenceNumber` is the
+    * snapshot's own (metadata-only maintenance reuses the current one). */
+  def withSnapshot(
+      parent: Option[Snapshot],
+      manifest: Seq[FileEntry],
+      operation: String,
+      sequenceNumber: Long = lastSequenceNumber + 1,
+      branch: String = "main",
+      publish: Boolean = true,
+      summary: Map[String, String] = Map.empty): TableMetadata = {
+    val id = nextSnapshotId
+    val parentManifest = parent.map(_.manifest).getOrElse(Nil)
+    var rowCursor = nextRowId
+    val stamped =
+      if (formatVersion < 3) manifest
+      else {
+        val inherited = parentManifest.iterator.map(_.resolutionKey).toSet
+        manifest.map { f =>
+          if (f.content != FileContent.Data || f.firstRowId.nonEmpty ||
+              inherited.contains(f.resolutionKey)) f
+          else { val assigned = f.copy(firstRowId = Some(rowCursor))
+                 rowCursor += f.recordCount; assigned }
+        }
+      }
+    val snap = Snapshot(id, parent.map(_.snapshotId), sequenceNumber,
+      System.currentTimeMillis(), stamped,
+      parent.map(p => TableMetadata.preservedProperties(p.summary)).getOrElse(Map.empty) ++
+        TableMetadata.computedSummary(parentManifest, stamped) +
+        ("operation" -> operation) ++ summary)
+    copy(
+      snapshots = snapshots :+ snap,
+      refs = if (publish) refs + (branch -> id) else refs,
+      currentSnapshotId =
+        if (publish && branch == "main") Some(id) else currentSnapshotId,
+      lastSequenceNumber = math.max(lastSequenceNumber, sequenceNumber),
+      nextRowId = rowCursor)
+  }
+
   /** Data files of a snapshot with their delete files resolved, mirroring
     * `get_all_files_from_snapshot` + task.deletes attachment
     * (core/src/compaction/mod.rs:734-761). A delete file applies to a data

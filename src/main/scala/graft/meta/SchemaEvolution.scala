@@ -22,7 +22,7 @@ object SchemaEvolution {
     * the spec would corrupt partition pruning (real Iceberg solves this
     * with id-addressed partition specs; out of scope here). */
   def renameColumn(catalog: Catalog, tableName: String, from: String, to: String): TableMetadata =
-    commitRetry(catalog, tableName) { meta =>
+    catalog.transact(tableName) { meta =>
       val field = meta.fieldByName(from).getOrElse(
         throw new IllegalArgumentException(s"no such column: $from"))
       require(meta.fieldByName(to).isEmpty, s"column $to already exists")
@@ -55,7 +55,7 @@ object SchemaEvolution {
     * files that already have the column keep their explicit nulls. */
   def addColumn(catalog: Catalog, tableName: String, name: String, ddlType: String,
       default: Option[String] = None): TableMetadata =
-    commitRetry(catalog, tableName) { meta =>
+    catalog.transact(tableName) { meta =>
       require(meta.fieldByName(name).isEmpty, s"column $name already exists")
       // validate the type and default eagerly — a bad DDL/literal string,
       // or a default that does not CAST to the column type, must fail the
@@ -91,7 +91,7 @@ object SchemaEvolution {
     * type families would corrupt existing data. */
   def widenColumnType(catalog: Catalog, tableName: String, name: String,
       newDdlType: String): TableMetadata =
-    commitRetry(catalog, tableName) { meta =>
+    catalog.transact(tableName) { meta =>
       val field = meta.fieldByName(name).getOrElse(
         throw new IllegalArgumentException(s"no such column: $name"))
       val from = field.dataType.toUpperCase
@@ -106,7 +106,7 @@ object SchemaEvolution {
     * longer projected. Partition / sort-order / equality-delete key columns
     * are load-bearing and cannot be dropped. */
   def dropColumn(catalog: Catalog, tableName: String, name: String): TableMetadata =
-    commitRetry(catalog, tableName) { meta =>
+    catalog.transact(tableName) { meta =>
       val field = meta.fieldByName(name).getOrElse(
         throw new IllegalArgumentException(s"no such column: $name"))
       require(meta.schema.size > 1, "cannot drop the last column")
@@ -240,7 +240,7 @@ object SchemaEvolution {
     * first. */
   def updatePartitionSpec(catalog: Catalog, tableName: String,
       newSpec: Seq[PartitionField]): TableMetadata =
-    commitRetry(catalog, tableName)(applyPartitionSpec(_, newSpec))
+    catalog.transact(tableName)(applyPartitionSpec(_, newSpec))
 
   /** The pure rulebook behind [[updatePartitionSpec]] — ONE set of
     * evolution rules shared by the native/SQL door (which wraps it in a
@@ -282,18 +282,9 @@ object SchemaEvolution {
           if (f.specId == 0 && f.partitionValues.keys.exists(changedCols))
             f.copy(specId = fresh)
           else f)
-        val newSeq = meta.lastSequenceNumber + 1
-        val newId = meta.snapshots.map(_.snapshotId).max + 1
-        val evolved = Snapshot(newId, Some(snap.snapshotId), newSeq,
-          System.currentTimeMillis(), marked,
-          Map("operation" -> "replace",
-            "spec-evolution" -> changedCols.toSeq.sorted.mkString(",")))
-        meta.copy(
+        meta.withSnapshot(Some(snap), marked, "replace",
+          summary = Map("spec-evolution" -> changedCols.toSeq.sorted.mkString(","))).copy(
           partitionSpec = newSpec,
-          snapshots = meta.snapshots :+ evolved,
-          currentSnapshotId = Some(newId),
-          refs = meta.refs + ("main" -> newId),
-          lastSequenceNumber = newSeq,
           // record the superseded spec under the marker: reads never need
           // it (conservative handling), but IcebergExport uses it to emit
           // spec-faithful multi-spec metadata instead of dropping history
@@ -307,7 +298,7 @@ object SchemaEvolution {
     * to recluster for multi-column zone-map pruning). */
   def updateSortOrder(catalog: Catalog, tableName: String,
       newOrder: Seq[SortField]): TableMetadata =
-    commitRetry(catalog, tableName)(applySortOrder(_, newOrder))
+    catalog.transact(tableName)(applySortOrder(_, newOrder))
 
   /** The pure rulebook behind [[updateSortOrder]], shared with the REST
     * commit endpoint's `add-sort-order` + `set-default-sort-order-id`
@@ -333,7 +324,7 @@ object SchemaEvolution {
     * [[requireUnreservedProps]] first. */
   def updateProperties(catalog: Catalog, tableName: String,
       upserts: Map[String, String], removes: Set[String] = Set.empty): TableMetadata =
-    commitRetry(catalog, tableName) { meta =>
+    catalog.transact(tableName) { meta =>
       meta.copy(properties = meta.properties -- removes ++ upserts)
     }
 
@@ -361,15 +352,4 @@ object SchemaEvolution {
         throw new IllegalArgumentException(s"table property $k is reserved " +
           "engine state and cannot be set or removed through the property " +
           "surface"))
-
-  private def commitRetry(catalog: Catalog, tableName: String)(
-      f: TableMetadata => TableMetadata): TableMetadata = {
-    var attempt = 0
-    while (true) {
-      val meta = catalog.loadTable(tableName)
-      try return catalog.commit(meta, f(meta))
-      catch { case _: CommitConflictException if attempt < 5 => attempt += 1 }
-    }
-    sys.error("unreachable")
-  }
 }

@@ -60,21 +60,22 @@ object Views {
     val fields = SchemaField.fromStruct(schema)
     val now = System.currentTimeMillis()
     if (catalog.tableExists(name)) {
-      val old = catalog.loadTable(name)
-      require(isView(old), s"$name exists and is a TABLE — CREATE OR REPLACE " +
-        "VIEW cannot overwrite a table")
-      require(orReplace, s"view $name already exists (use CREATE OR REPLACE VIEW)")
-      // past the HIGHEST stored id, not current+1 — imported views keep
-      // their source's (possibly sparse) version ids
-      val nextV = versions(old).map(_._1).max + 1
-      catalog.commit(old, old.copy(
-        schema = fields,
-        // DialectKey resets too: the replacement SQL just analyzed as
-        // SPARK, whatever dialect an imported predecessor carried
-        properties = old.properties ++ properties ++ Map(
-          SqlKey -> sql, DialectKey -> "spark", CurrentVersionKey -> nextV.toString,
-          versionSqlKey(nextV) -> sql, versionTsKey(nextV) -> now.toString,
-          versionDialectKey(nextV) -> "spark")))
+      catalog.transact(name) { old =>
+        require(isView(old), s"$name exists and is a TABLE — CREATE OR REPLACE " +
+          "VIEW cannot overwrite a table")
+        require(orReplace, s"view $name already exists (use CREATE OR REPLACE VIEW)")
+        // past the HIGHEST stored id, not current+1 — imported views keep
+        // their source's (possibly sparse) version ids
+        val nextV = versions(old).map(_._1).max + 1
+        old.copy(
+          schema = fields,
+          // DialectKey resets too: the replacement SQL just analyzed as
+          // SPARK, whatever dialect an imported predecessor carried
+          properties = old.properties ++ properties ++ Map(
+            SqlKey -> sql, DialectKey -> "spark", CurrentVersionKey -> nextV.toString,
+            versionSqlKey(nextV) -> sql, versionTsKey(nextV) -> now.toString,
+            versionDialectKey(nextV) -> "spark"))
+      }
     } else {
       catalog.createTable(TableMetadata(name, location = "",
         schema = fields,

@@ -212,20 +212,7 @@ class CompactionE2ESpec extends AnyFunSuite {
 
     // interpose a catalog whose first commit loses the race: a concurrent
     // writer steals the version between load and commit
-    val racing = new Catalog {
-      var raced = false
-      override def createTable(m: TableMetadata) = catalog.createTable(m)
-      override def loadTable(n: String) = catalog.loadTable(n)
-      override def tableExists(n: String) = catalog.tableExists(n)
-      override def dropTable(n: String) = catalog.dropTable(n)
-      override def commit(base: TableMetadata, updated: TableMetadata) = {
-        if (!raced) { raced = true; catalog.commit(base, base) } // steal version
-        catalog.commit(base, updated)
-      }
-      override def tableLocation(n: String) = catalog.tableLocation(n)
-      override def dataDir(n: String) = catalog.dataDir(n)
-      override def listTables = catalog.listTables
-    }
+    val racing = new RacingCatalog(catalog)(base => catalog.commit(base, base))
     val c = new Compaction(racing, "t_retry", spark,
       config = FullCompactionConfig(PlanningParams(maxOutputParallelism = 1)),
       retry = CommitRetryConfig(maxRetries = 3, initialDelayMs = 10, maxDelayMs = 50))
@@ -234,6 +221,22 @@ class CompactionE2ESpec extends AnyFunSuite {
     val committed = c.commitRewriteResults(outcomes)
     assert(committed.currentSnapshot.get.manifest.nonEmpty)
     assert(c.metrics.commitFailed.get >= 1 && c.metrics.commitSucceeded.get == 1)
+  }
+
+  test("a commit whose inputs a concurrent compaction removed fails on the first attempt") {
+    val catalog = newCatalog()
+    val src = spark.read.parquet(s"$sf/region.parquet")
+    FileGenerator.writeTable(spark, catalog, "t_gone", src,
+      FileGenerator.Config(dataFileCount = 2, orderCol = "r_regionkey"))
+    val config = FullCompactionConfig(PlanningParams(maxOutputParallelism = 1))
+    val c = new Compaction(catalog, "t_gone", spark, config = config)
+    val outcomes = c.concurrentRewritePlans(c.planCompaction())
+    // a concurrent compaction lands first and removes every planned input:
+    // reloading cannot bring them back, so no retry may be spent on it
+    new Compaction(catalog, "t_gone", spark, config = config).compact()
+    val e = intercept[IllegalStateException](c.commitRewriteResults(outcomes))
+    assert(e.getMessage.contains("no longer in snapshot"))
+    assert(c.metrics.commitFailed.get == 1 && c.metrics.commitSucceeded.get == 0)
   }
 
   test("plan-driven three-method API composes") {

@@ -88,23 +88,7 @@ class PartitionOpsSpec extends AnyFunSuite {
     // append INTO THE REPLACED PARTITION: the retry must see the freshly
     // appended b-file and replace it too, or the overwrite half-applies
     val sneak = (5L to 6L).map(i => (i * 1000, "b", i)).toDF("id", "grp", "v")
-    val racing: Catalog = new Catalog {
-      var raced = false
-      override def createTable(m: TableMetadata) = inner.createTable(m)
-      override def loadTable(n: String) = inner.loadTable(n)
-      override def tableExists(n: String) = inner.tableExists(n)
-      override def dropTable(n: String) = inner.dropTable(n)
-      override def commit(base: TableMetadata, updated: TableMetadata) = {
-        if (!raced) {
-          raced = true
-          IceWrite.append(spark, inner, "tr", sneak) // steals the version
-        }
-        inner.commit(base, updated)
-      }
-      override def tableLocation(n: String) = inner.tableLocation(n)
-      override def dataDir(n: String) = inner.dataDir(n)
-      override def listTables = inner.listTables
-    }
+    val racing = new RacingCatalog(inner)(_ => IceWrite.append(spark, inner, "tr", sneak))
 
     val incoming = Seq((777L, "b", 1L)).toDF("id", "grp", "v")
     IceWrite.overwritePartitions(spark, racing, "tr", incoming)

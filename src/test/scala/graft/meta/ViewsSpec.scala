@@ -23,6 +23,23 @@ class ViewsSpec extends AnyFunSuite {
     c
   }
 
+  test("CREATE OR REPLACE VIEW retries a commit that lost the race") {
+    val cat = freshCatalog("vrace")
+    IceWrite.create(spark, cat, "t", (1L to 4L).map(i => (i, s"n$i")).toDF("id", "name"))
+    spark.sql("CREATE VIEW vrace.v AS SELECT id FROM vrace.t")
+    // a concurrent property edit on the view takes the version the
+    // replace loaded; the replace must land on top of it, once
+    val racing = new RacingCatalog(cat)(_ =>
+      SchemaEvolution.updateProperties(cat, "v", Map("owner" -> "ops")))
+    Views.create(spark, racing, "v", "SELECT id, name FROM vrace.t", orReplace = true)
+    val v = cat.loadTable("v")
+    assert(v.properties(Views.CurrentVersionKey) == "2")
+    assert(Views.versions(v).map(_._1) == Seq(1, 2))
+    assert(v.properties.get("owner").contains("ops"))
+    assert(v.schema.map(_.name) == Seq("id", "name"))
+    assert(racing.commits.get == 2)
+  }
+
   test("create, read, replace versions, late binding, drop") {
     val cat = freshCatalog("vw")
     IceWrite.create(spark, cat, "t",
