@@ -1,9 +1,6 @@
 package graft.compaction
 
 import java.nio.file.Paths
-import java.util.concurrent.{Executors, TimeUnit}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
@@ -11,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import graft.meta._
 import graft.selection._
 import graft.exec._
+import graft.util.JobScope
 
 /** A planned unit of work: one file group against one snapshot of one
   * branch (core/src/compaction/mod.rs:1227-1235). */
@@ -22,8 +20,12 @@ final case class CompactionPlan(
 
 final case class RewriteOutcome(plan: CompactionPlan, result: RewriteResult)
 
+/** One plan's outcome and, with validation on, its two row counts. */
+private final case class PlanRun(outcome: RewriteOutcome, counts: Option[Validator.RowCounts])
+
 /** One progress tick of a managed compaction run — phase is "planned",
-  * "rewriting" (per completed group), or "committed". Byte figures are
+  * "rewriting" (per completed group: rewritten and, with validation on,
+  * counted), or "committed". Byte figures are
   * planned INPUT bytes, known at planning time, so a display can show a
   * meaningful fraction before the first rewrite finishes. */
 final case class CompactionProgress(
@@ -61,6 +63,11 @@ final class SizeEstimator(val smoothing: Double = Defaults.SizeEstimationSmoothi
 /** The managed compaction workflow over the local table format, keeping the
   * reference's composable 3-method public API (plan / rewrite / commit) plus
   * the one-shot `compact()` (core/src/compaction/mod.rs:193-303).
+  *
+  * With `enableValidate`, each plan's worker counts the plan's MOR input and
+  * its written output alongside the rewrite; after the single commit the
+  * counts are compared, and a mismatch throws
+  * [[Validator.ValidationFailure]] with the commit landed.
   */
 final class Compaction(
     val catalog: Catalog,
@@ -95,8 +102,8 @@ final class Compaction(
     val parquetWrite: graft.exec.ParquetWriteConfig = graft.exec.ParquetWriteConfig(),
     /** live progress callback (reference roadmap "Job progress display",
       * README.md:66): fired once after planning, per completed group
-      * rewrite (from the worker thread that finished it), and after the
-      * commit. No-op by default. */
+      * (from the worker thread that finished it, after the group's
+      * validation counts), and after the commit. No-op by default. */
     val onProgress: CompactionProgress => Unit = _ => ()
 ) {
 
@@ -133,8 +140,10 @@ final class Compaction(
   }
 
   /** Stage 2 — execute one plan as a single Spark job. */
-  def rewritePlan(plan: CompactionPlan): RewriteOutcome = {
-    val table = catalog.loadTable(tableName)
+  def rewritePlan(plan: CompactionPlan): RewriteOutcome =
+    rewritePlan(catalog.loadTable(tableName), plan)
+
+  private def rewritePlan(table: TableMetadata, plan: CompactionPlan): RewriteOutcome = {
     val req = RewriteRequest(
       group = plan.fileGroup,
       schemaColumns = table.schemaColumns,
@@ -181,18 +190,56 @@ final class Compaction(
     * journaling point for [[compactResumable]] (a crash mid-batch keeps
     * every hooked completion). */
   def concurrentRewritePlans(plans: Seq[CompactionPlan],
-      onComplete: RewriteOutcome => Unit): Seq[RewriteOutcome] = {
-    if (plans.isEmpty) return Nil
-    val pool = Executors.newFixedThreadPool(math.max(1, math.min(maxConcurrentPlans, plans.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futs = plans.map(p => Future { val o = rewritePlan(p); onComplete(o); o })
-      Await.result(Future.sequence(futs), Duration.Inf)
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(10, TimeUnit.SECONDS)
+      onComplete: RewriteOutcome => Unit): Seq[RewriteOutcome] =
+    runPlans(plans, validate = false, onRewritten = onComplete).map(_.outcome)
+
+  /** The plan pipeline of every entry point: one worker per plan on a pool
+    * of `min(maxConcurrentPlans, plans)` threads. With `validate`, each
+    * worker starts its plan's input MOR count on a second pool of that
+    * size beside the rewrite, and counts the written outputs as soon as
+    * the rewrite returns. Input and output files are immutable, so these
+    * are the numbers a re-read after the commit would give; the caller
+    * compares them once it has committed.
+    *
+    * `journaled` yields the outputs a crashed run already wrote: such a
+    * plan is counted, not rewritten. `onRewritten` fires as soon as a
+    * rewrite returns (the journaling point); `onDone` once the plan's
+    * counts are in too.
+    *
+    * A failing plan cancels this call's other Spark jobs, skips the plans
+    * not yet started and waits for the running ones before its exception
+    * propagates, with theirs attached as suppressed ([[JobScope]]). */
+  private def runPlans(
+      plans: Seq[CompactionPlan],
+      validate: Boolean,
+      journaled: CompactionPlan => Option[RewriteResult] = _ => None,
+      onRewritten: RewriteOutcome => Unit = _ => (),
+      onDone: RewriteOutcome => Unit = _ => ()): Seq[PlanRun] =
+    if (plans.isEmpty) Nil
+    else JobScope.run(spark.sparkContext) { scope =>
+      val threads = math.min(maxConcurrentPlans, plans.size)
+      val workers = scope.pool(threads)
+      val counters = scope.pool(threads)
+      plans.map { plan =>
+        scope.fork(workers) {
+          val table = catalog.loadTable(tableName)
+          val inputRows = Option.when(validate)(scope.fork(counters)(
+            Validator.inputRows(spark, plan.fileGroup, table.schemaColumns,
+              table.formatVersion, table.schema)))
+          val outcome = journaled(plan).fold {
+            val o = rewritePlan(table, plan)
+            onRewritten(o)
+            o
+          }(RewriteOutcome(plan, _))
+          val counts = inputRows.map { input =>
+            val outputRows = Validator.outputRows(spark, outcome.result.addedFiles)
+            Validator.RowCounts(input.join(), outputRows)
+          }
+          onDone(outcome)
+          PlanRun(outcome, counts)
+        }
+      }.map(_.join())
     }
-  }
 
   /** Stage 3 — one transaction for all results (mod.rs:472-516). */
   def commitRewriteResults(outcomes: Seq[RewriteOutcome]): TableMetadata =
@@ -250,38 +297,38 @@ final class Compaction(
     * and commit it on its own — the incremental-compaction entry point for
     * callers that plan once, then spread execution over time/budgets.
     * Empty plan -> None, like the reference. */
-  def compactWithPlan(plan: CompactionPlan): Option[CompactionResult] = {
-    if (plan.fileGroup.isEmpty) return None
-    val t0 = System.nanoTime()
-    val outcome = rewritePlan(plan)
-    val committed = commitRewriteResults(Seq(outcome))
-    metrics.recordCompaction((System.nanoTime() - t0) / 1000000L)
-    if (enableValidate)
-      Validator.validate(spark, plan.fileGroup, outcome.result.addedFiles,
-        committed.schemaColumns, committed.formatVersion, committed.schema)
-    Some(CompactionResult(outcome.result.addedFiles, Seq(outcome.result.stats), Some(committed)))
-  }
+  def compactWithPlan(plan: CompactionPlan): Option[CompactionResult] =
+    if (plan.fileGroup.isEmpty) None
+    else Some(commitAndCheck(System.nanoTime(), runPlans(Seq(plan), enableValidate),
+      afterCommit = () => (), cleanup = false))
 
-  /** Managed workflow: plan -> concurrent rewrite -> commit -> validate
-    * (mod.rs:259-303). Empty plans -> no-op result. */
+  /** Managed workflow: plan -> concurrent rewrite (each plan's validation
+    * counts beside it) -> commit -> compare the counts (mod.rs:259-303).
+    * Empty plans -> no-op result. */
   def compact(): CompactionResult = {
     val t0 = System.nanoTime()
     val plans = planCompaction()
     if (plans.isEmpty) return CompactionResult(Nil, Nil, None)
     val progress = new ProgressTracker(plans)
-    val outcomes = concurrentRewritePlans(plans, progress.completed)
+    val runs = runPlans(plans, enableValidate, onDone = progress.completed)
+    commitAndCheck(t0, runs, afterCommit = progress.committed, cleanup = cleanupDanglingDeletes)
+  }
+
+  /** The tail every entry point shares: one commit of all runs, then
+    * `afterCommit`, the optional dangling-delete cleanup, and the count
+    * comparison. A mismatch throws [[Validator.ValidationFailure]] for the
+    * first mismatching plan, with the commit already landed — the
+    * reference's post-commit contract. No Spark job runs here unless
+    * `cleanup` reads delete files. */
+  private def commitAndCheck(t0: Long, runs: Seq[PlanRun], afterCommit: () => Unit,
+      cleanup: Boolean): CompactionResult = {
+    val outcomes = runs.map(_.outcome)
     var committed = commitRewriteResults(outcomes)
-    progress.committed()
-    if (cleanupDanglingDeletes)
+    afterCommit()
+    if (cleanup)
       committed = Maintenance.removeDanglingDeletes(spark, catalog, tableName, retry)
     metrics.recordCompaction((System.nanoTime() - t0) / 1000000L)
-    if (enableValidate) {
-      val table = committed
-      outcomes.foreach { o =>
-        Validator.validate(spark, o.plan.fileGroup, o.result.addedFiles,
-          table.schemaColumns, table.formatVersion, table.schema)
-      }
-    }
+    runs.foreach(_.counts.foreach(_.check()))
     CompactionResult(outcomes.flatMap(_.result.addedFiles), outcomes.map(_.result.stats), Some(committed))
   }
 
@@ -302,40 +349,24 @@ final class Compaction(
     val progress = new ProgressTracker(plans)
     val recovered = journal.load(plans.head.snapshotId)
     // reuse only fully intact journal entries (every output still on disk)
-    val (done, todo) = plans.partition { p =>
-      recovered.get(RewriteJournal.groupKey(p.fileGroup))
-        .exists(fs => fs.nonEmpty && fs.forall(f => graft.meta.MetaIO.exists(f.path)))
-    }
-    val reused = done.map { p =>
-      val added = recovered(RewriteJournal.groupKey(p.fileGroup))
-      RewriteOutcome(p, graft.exec.RewriteResult(added, graft.exec.RewriteStats(
-        inputFiles = p.fileGroup.inputFilesCount,
-        inputBytes = p.fileGroup.inputTotalBytes,
-        outputFiles = added.size,
-        outputBytes = added.map(_.length).sum,
-        outputRecords = added.map(_.recordCount).sum,
-        durationMs = 0L)))
-    }
-    reused.foreach(progress.completed)
-    val fresh = concurrentRewritePlans(todo, { o =>
-      journal.append(RewriteJournal.groupKey(o.plan.fileGroup), o.result.addedFiles)
-      progress.completed(o)
-    })
-    val outcomes = reused ++ fresh
-    var committed = commitRewriteResults(outcomes)
-    progress.committed()
-    journal.delete()
-    if (cleanupDanglingDeletes)
-      committed = Maintenance.removeDanglingDeletes(spark, catalog, tableName, retry)
-    metrics.recordCompaction((System.nanoTime() - t0) / 1000000L)
-    if (enableValidate) {
-      val table = committed
-      outcomes.foreach { o =>
-        Validator.validate(spark, o.plan.fileGroup, o.result.addedFiles,
-          table.schemaColumns, table.formatVersion, table.schema)
-      }
-    }
-    CompactionResult(outcomes.flatMap(_.result.addedFiles), outcomes.map(_.result.stats), Some(committed))
+    val intact = recovered.filter { case (_, fs) =>
+      fs.nonEmpty && fs.forall(f => graft.meta.MetaIO.exists(f.path)) }
+    def journaled(p: CompactionPlan): Option[RewriteResult] =
+      intact.get(RewriteJournal.groupKey(p.fileGroup)).map(added => RewriteResult(added,
+        RewriteStats(
+          inputFiles = p.fileGroup.inputFilesCount,
+          inputBytes = p.fileGroup.inputTotalBytes,
+          outputFiles = added.size,
+          outputBytes = added.map(_.length).sum,
+          outputRecords = added.map(_.recordCount).sum,
+          durationMs = 0L)))
+    // journaled plans first: they commit ahead of the fresh ones
+    val (done, todo) = plans.partition(p => intact.contains(RewriteJournal.groupKey(p.fileGroup)))
+    val runs = runPlans(done ++ todo, enableValidate, journaled = journaled,
+      onRewritten = o => journal.append(RewriteJournal.groupKey(o.plan.fileGroup), o.result.addedFiles),
+      onDone = progress.completed)
+    commitAndCheck(t0, runs, afterCommit = () => { progress.committed(); journal.delete() },
+      cleanup = cleanupDanglingDeletes)
   }
 }
 

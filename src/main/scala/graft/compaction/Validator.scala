@@ -1,19 +1,28 @@
 package graft.compaction
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 import graft.meta.{FileEntry, SchemaField}
 import graft.selection.FileGroup
-import graft.exec.Mor
+import graft.exec.{GraftScan, Mor}
 
-/** Post-commit validation: re-run the MOR query over the inputs and compare
-  * its row count with a plain scan of the outputs
+/** Compaction validation: the row count of the MOR query over a plan's
+  * inputs must equal the row count of a plain scan of its outputs
   * (core/src/compaction/validator.rs:37-177). Counts, not hashes — same
-  * contract as the reference. */
+  * contract as the reference. [[Compaction]] takes both counts while it
+  * rewrites (each plan's worker counts its own input and output) and
+  * compares them after the commit; [[validate]] is the same check as one
+  * call. */
 object Validator {
   final case class ValidationFailure(inputRows: Long, outputRows: Long)
       extends RuntimeException(
         s"compaction validation failed: input MOR rows $inputRows != output rows $outputRows")
+
+  /** One plan's two counts; [[check]] throws on a mismatch. */
+  final case class RowCounts(inputRows: Long, outputRows: Long) {
+    def check(): Unit = if (inputRows != outputRows) throw ValidationFailure(inputRows, outputRows)
+  }
 
   def validate(
       spark: SparkSession,
@@ -22,19 +31,33 @@ object Validator {
       schemaColumns: Seq[String],
       formatVersion: Int,
       tableSchema: Seq[SchemaField] = Nil
-  ): Unit = {
-    // metadataAggregates=false: the input count must come from an actual
-    // scan — answering it from manifest recordCounts would compare
-    // recorded statistics against output counts instead of independently
-    // re-reading the data, which is the invariant this validator exists
-    // to enforce
-    val inputRows = Mor.dataFrame(spark, inputGroup, schemaColumns, formatVersion, tableSchema,
+  ): Unit =
+    RowCounts(inputRows(spark, inputGroup, schemaColumns, formatVersion, tableSchema),
+      outputRows(spark, outputFiles)).check()
+
+  /** Rows the MOR query over `inputGroup` yields. metadataAggregates=false:
+    * the count must come from an actual scan — answering it from manifest
+    * recordCounts would compare recorded statistics against output counts
+    * instead of independently re-reading the data, which is the invariant
+    * this validator exists to enforce. */
+  def inputRows(
+      spark: SparkSession,
+      inputGroup: FileGroup,
+      schemaColumns: Seq[String],
+      formatVersion: Int,
+      tableSchema: Seq[SchemaField] = Nil
+  ): Long =
+    Mor.dataFrame(spark, inputGroup, schemaColumns, formatVersion, tableSchema,
       metadataAggregates = false).count()
-    val outputRows =
-      if (outputFiles.isEmpty) 0L
-      else spark.read.parquet(outputFiles.map(_.path): _*).count()
-    if (inputRows != outputRows) throw ValidationFailure(inputRows, outputRows)
-  }
+
+  /** Rows in `outputFiles`, from a scan of the files themselves (never
+    * their manifest record counts). A count reads no column, so the scan
+    * is declared with an empty schema: no footer-inference job runs
+    * first, and the file list comes from the entries, not a listing. */
+  def outputRows(spark: SparkSession, outputFiles: Seq[FileEntry]): Long =
+    if (outputFiles.isEmpty) 0L
+    else GraftScan.relation(spark, outputFiles, new StructType(),
+      metadataAggregates = false).count()
 
   final case class ContentValidationFailure(missingFromOutput: Long, extraInOutput: Long)
       extends RuntimeException(

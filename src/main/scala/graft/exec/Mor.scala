@@ -2,7 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.meta.{FileEntry, SchemaField}
 import graft.selection.FileGroup
 
@@ -68,6 +68,20 @@ object Mor {
     * relation — near the edge of what a driver/executor should hold; past
     * it, a shuffled join is the safe plan. */
   val BroadcastDeleteBytesMax: Long = 64L * 1024 * 1024
+
+  /** The position-delete file schema (Iceberg spec: `file_path` and
+    * `pos`, both required). Delete files are read with it, never with a
+    * schema inferred from one file's footer. */
+  private val PositionDeleteSchema: StructType =
+    StructType(Seq(StructField("file_path", StringType), StructField("pos", LongType)))
+
+  /** `c` of a position-delete row, failing the query when it is null: a
+    * delete file without the column (or with a null in it) must not
+    * silently match nothing and resurrect the rows it deletes. */
+  private def requiredDeleteCol(c: String): Column =
+    when(col(c).isNull, raise_error(concat(
+      lit(s"position-delete file has no `$c` value: "), col("_metadata.file_path"))))
+      .otherwise(col(c))
 
   /** `_metadata.file_path` is a URI (file:///x); manifest paths are plain
     * absolute paths. Normalize URIs to paths for joining. */
@@ -407,8 +421,10 @@ object Mor {
     if (posDeletes.nonEmpty) {
       // position-delete files always carry plain (file_path, pos) — not
       // table-schema columns, so never id-matched
-      val pos = canonicalizeFilePathValues(readParquet(posDeletes, None)
-        .select(col("file_path").as(FilePathCol), col("pos").as(PosCol)),
+      val pos = canonicalizeFilePathValues(
+        spark.read.schema(PositionDeleteSchema).parquet(posDeletes.map(_.path): _*)
+          .select(requiredDeleteCol("file_path").as(FilePathCol),
+            requiredDeleteCol("pos").as(PosCol)),
         group.dataFiles)
       df = df.join(gated(pos, posDeletes.map(_.length).sum, broadcastDeleteBytesMax),
         Seq(FilePathCol, PosCol), "left_anti")
