@@ -305,7 +305,7 @@ object Maintenance {
     * deletion vectors: one [[Puffin]] bitmap blob per referenced data
     * file, all blobs in a single Puffin container, committed in place of
     * the parquet tombstones. Reads apply the result as a codegen'd bitmap
-    * probe instead of an anti join ([[graft.exec.Mor.applyDeletionVectors]]).
+    * probe instead of an anti join ([[graft.exec.Mor.dataFrame]]).
     *
     * Exactness: a tombstone row is folded into a DV only when its delete
     * FILE is attached to the row's target data file by [[TableMetadata.scanTasks]]
@@ -355,7 +355,7 @@ object Maintenance {
     val smallPath = rows.forall(r =>
       DeletionVectors.underDriverGate(r, DeletionVectors.MaxDriverBlobBytes))
     val newBlobs: Seq[DeletionVectors.DvBlob] =
-      if (smallPath) rows.map(DeletionVectors.buildBlobs(spark, _)).getOrElse(Nil)
+      if (smallPath) rows.map(DeletionVectors.buildBlobs).getOrElse(Nil)
       else Nil
     val affected: Set[String] =
       if (smallPath) newBlobs.map(_.referencedDataFile).toSet

@@ -3,7 +3,8 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.meta.{FileEntry, SchemaField}
+import graft.functions.{DvExpressions, FileLookup}
+import graft.meta.{FileEntry, Puffin, SchemaField}
 import graft.selection.FileGroup
 
 /** Merge-on-read DataFrame construction.
@@ -19,15 +20,22 @@ import graft.selection.FileGroup
   *    parquet metadata columns: `_metadata.file_path` and
   *    `_metadata.row_index` give the exact per-file row position without
   *    any window/shuffle, split-safe and fully distributed;
-  *  - the per-file `sys_hidden_seq_num` constant is attached via a
-  *    broadcast join against the (tiny) file->sequence-number manifest map;
-  *  - delete sides are broadcast ONLY while their manifest byte sum stays
-  *    under [[Mor.BroadcastDeleteBytesMax]] — delete files are small
-  *    relative to data by construction, so the anti joins normally stay
-  *    BroadcastHashJoins with zero shuffle of the data side (the plan you
-  *    want at 100 TB); but a delete-heavy table (the FilesWithDeletes
-  *    strategy exists precisely for those) must not OOM the driver, so
-  *    above the gate Catalyst picks a shuffled join instead;
+  *  - per-file constants (the data sequence number, the v3 first row id)
+  *    come from a [[graft.functions.FileLookup]] probed with the raw
+  *    `_metadata.file_path` inside the scan's generated code: the path is
+  *    resolved once per file, and no row joins on a path string;
+  *  - while a delete side's manifest byte sum stays under
+  *    [[Mor.BroadcastDeleteBytesMax]] (delete files are small relative to
+  *    data by construction), position deletes and deletion vectors are
+  *    read once when the frame is built and folded into one position
+  *    bitmap per data file, which the same lookup probes as a
+  *    `dv_contains` filter, and equality deletes are a broadcast anti join
+  *    on their key: the data side never shuffles (the plan you want at
+  *    100 TB);
+  *  - above the gate (a delete-heavy table: the FilesWithDeletes strategy
+  *    exists precisely for those) nothing large is held on the driver:
+  *    position deletes and deletion vectors become `(path, pos)` anti
+  *    joins and Catalyst picks shuffled joins;
   *  - with a typed field-id schema ([[SchemaField]]), files are read by
   *    parquet field id instead of name, making the read correct across
   *    renames (the reference's `field_by_id` addressing,
@@ -83,23 +91,26 @@ object Mor {
       lit(s"position-delete file has no `$c` value: "), col("_metadata.file_path"))))
       .otherwise(col(c))
 
+  private val FileSchemePrefix = "^file:/+"
+
   /** `_metadata.file_path` is a URI (file:///x); manifest paths are plain
     * absolute paths. Normalize URIs to paths for joining. */
-  def normalizePath(c: Column): Column = regexp_replace(c, "^file:/+", "/")
+  def normalizePath(c: Column): Column = regexp_replace(c, FileSchemePrefix, "/")
+
+  /** [[normalizePath]] of one path value. */
+  def normalizePath(p: String): String = p.replaceFirst(FileSchemePrefix, "/")
 
   /** A MANIFEST path in the exact form Spark renders
     * `_metadata.file_path` (Hadoop-canonical: empty URI authorities
     * collapse, `file:` stripped like [[normalizePath]]). Foreign clients
     * legally commit non-canonical spellings (`slowfs:///x` for
-    * `slowfs:/x`); keying the per-file broadcast maps by the canonical
-    * form keeps the seq-number and row-lineage joins from silently
-    * missing — a miss would DROP equality deletes (null sequence never
-    * wins the strict `<`), resurrecting rows. */
-  def canonicalManifestPath(p: String): String = {
-    val s = try new org.apache.hadoop.fs.Path(p).toString
-            catch { case _: IllegalArgumentException => p }
-    if (s.startsWith("file:")) s.replaceFirst("^file:/+", "/") else s
-  }
+    * `slowfs:/x`); keying the per-file lookup by the canonical form keeps
+    * the seq-number and row-lineage probes from silently missing — a miss
+    * would DROP equality deletes (null sequence never wins the strict
+    * `<`), resurrecting rows. */
+  def canonicalManifestPath(p: String): String =
+    normalizePath(try new org.apache.hadoop.fs.Path(p).toString
+                  catch { case _: IllegalArgumentException => p })
 
   /** Reader with parquet field-id resolution enabled, SCOPED to the
     * relations it builds: the parquet source consults the session conf of
@@ -166,11 +177,14 @@ object Mor {
     frames.map(f).reduce(_ unionByName _)
   }
 
-  private def seqMap(spark: SparkSession, files: Seq[FileEntry]): DataFrame = {
-    import spark.implicits._
-    files.map(f => (canonicalManifestPath(f.path), f.sequenceNumber))
-      .toDF(FilePathCol, SeqNumCol)
-  }
+  /** The per-file lookup over `files`, keyed by canonical path;
+    * `bitmaps` are keyed the same way. */
+  private def fileLookup(files: Seq[FileEntry],
+      bitmaps: Map[String, Puffin.PositionBitmap] = Map.empty): FileLookup =
+    new FileLookup(files.map { f =>
+      val p = canonicalManifestPath(f.path)
+      FileLookup.Entry(p, f.sequenceNumber, f.firstRowId, bitmaps.get(p))
+    })
 
   /** Broadcast when the manifest says the delete side is small; otherwise
     * leave the join strategy to Catalyst (SMJ/SHJ — shuffles the data side,
@@ -182,39 +196,73 @@ object Mor {
     * file; the scan side carries the Hadoop-canonical rendering, and
     * legal URI spellings vary BOTH ways (`scheme:///x` in a manifest for
     * a canonical `scheme:/x` value, or the inverse — a foreign writer's
-    * own path type re-renders). For every scheme'd data file the remap
-    * holds each plausible spelling (manifest form, canonical form's
-    * empty-authority variant) -> canonical, applied as a BROADCAST left
-    * join (per-row map-probe of a literal CreateMap would be a linear
-    * scan over #files per delete row — quadratic at manifest scale, and
-    * a codegen-breaking expression tree). Scheme-less local paths have
-    * one spelling: the common case stays a driver-side no-op. */
-  private def canonicalizeFilePathValues(pos: DataFrame,
-      dataFiles: Seq[FileEntry]): DataFrame = {
-    val remap: Seq[(String, String)] = dataFiles.flatMap { f =>
+    * own path type re-renders). For every scheme'd data file this holds
+    * each plausible spelling (manifest form, canonical form's
+    * empty-authority variant) -> canonical. Scheme-less local paths have
+    * one spelling, so the common case is empty. */
+  private def pathSpellings(dataFiles: Seq[FileEntry]): Map[String, String] =
+    dataFiles.flatMap { f =>
       val canon = canonicalManifestPath(f.path)
       // scheme:/p <-> scheme:///p (empty authority renders both ways)
       val variants = Seq(f.path, canon) ++
         "^([a-zA-Z][a-zA-Z0-9+.-]*):/(?!/)".r.findFirstMatchIn(canon)
           .map(m => m.group(1) + ":///" + canon.drop(m.group(1).length + 2))
       variants.distinct.filter(_ != canon).map(_ -> canon)
-    }.distinct
+    }.toMap
+
+  /** The rows of position-delete `files` as [[FilePathCol]]/[[PosCol]],
+    * read with the spec schema and failing on a null value. */
+  private def readPositionDeletes(spark: SparkSession, files: Seq[FileEntry]): DataFrame =
+    spark.read.schema(PositionDeleteSchema).parquet(files.map(_.path): _*)
+      .select(requiredDeleteCol("file_path").as(FilePathCol),
+        requiredDeleteCol("pos").as(PosCol))
+
+  /** The rows of position-delete `files` with each `file_path` naming one
+    * of `dataFiles` in canonical form, for joins against a scan's
+    * [[normalizePath]]ed [[FilePathCol]]. The spellings are remapped by a
+    * BROADCAST left join (a per-row probe of a literal map would be a
+    * linear scan over #files per delete row). */
+  private[graft] def positionDeletes(spark: SparkSession, files: Seq[FileEntry],
+      dataFiles: Seq[FileEntry]): DataFrame = {
+    val pos = readPositionDeletes(spark, files)
+    val remap = pathSpellings(dataFiles)
     if (remap.isEmpty) pos
     else {
-      val spark = pos.sparkSession
-      import scala.jdk.CollectionConverters._
-      val remapDf = spark.createDataFrame(
-        remap.map { case (k, v) => org.apache.spark.sql.Row(k, v) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__variant",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__canon",
-            org.apache.spark.sql.types.StringType))))
+      import spark.implicits._
+      val remapDf = remap.toSeq.toDF("__variant", "__canon")
       pos.join(broadcast(remapDf), pos(FilePathCol) === col("__variant"), "left")
-        .select(coalesce(col("__canon"), pos(FilePathCol)).as(FilePathCol),
-          pos(PosCol))
+        .select(coalesce(col("__canon"), pos(FilePathCol)).as(FilePathCol), pos(PosCol))
     }
   }
+
+  /** Position deletes of `files` folded into one bitmap per data file of
+    * `dataFiles` (canonical path -> bitmap) in one Spark job
+    * ([[graft.meta.DeletionVectors.bitmapsByFile]]); the driver maps the
+    * spellings. Rows naming other files are dropped; a negative `pos`
+    * names no row and is skipped. */
+  private def positionBitmaps(spark: SparkSession, files: Seq[FileEntry],
+      dataFiles: Seq[FileEntry]): Map[String, Puffin.PositionBitmap] = {
+    val remap = pathSpellings(dataFiles)
+    val canon = dataFiles.map(f => canonicalManifestPath(f.path)).toSet
+    val out = scala.collection.mutable.HashMap.empty[String, Puffin.PositionBitmap]
+    for ((file, b) <- graft.meta.DeletionVectors.bitmapsByFile(readPositionDeletes(spark, files)
+        .filter(col(PosCol) >= 0).select(col(FilePathCol).as("file_path"), col(PosCol).as("pos")))) {
+      val c = remap.getOrElse(file, file)
+      if (canon.contains(c)) out.get(c).fold(out(c) = b)(_.addAll(b))
+    }
+    out.toMap
+  }
+
+  /** Deletion vectors decoded on the driver, keyed by the canonical path
+    * of the data file each references. */
+  private def dvBitmaps(dvEntries: Seq[FileEntry]): Map[String, Puffin.PositionBitmap] =
+    dvEntries.groupBy(e => canonicalManifestPath(e.referencedDataFile.get)).map {
+      case (file, es) =>
+        val b = Puffin.PositionBitmap.empty
+        es.foreach(e => b.addAll(Puffin.decodeDvBlob(Puffin.readBlob(
+          e.path, e.contentOffset.getOrElse(0L), e.contentSizeInBytes.get))))
+        file -> b
+    }
 
   /** Groups equality-delete files into runs of consecutive identical
     * `equalityIds`, each run becoming one anti-join (the reference's
@@ -267,47 +315,6 @@ object Mor {
     data.join(broadcast(del), cond, "left_anti")
   }
 
-  /** Applies Iceberg v3 deletion vectors ([[graft.meta.Puffin]] blobs) to a
-    * frame carrying [[FilePathCol]]/[[PosCol]].
-    *
-    * Two plans behind the same byte gate as the anti joins:
-    *  - blobs under the gate (the normal case — DVs are compressed bitmaps,
-    *    orders of magnitude smaller than the rows they tombstone): the
-    *    driver reads them once and the shade becomes a codegen'd scalar
-    *    `!dv_contains(file, pos)` FILTER — no join, no exchange, the data
-    *    side never leaves whole-stage codegen. Strictly better than the v2
-    *    anti join, and the reason DVs exist;
-    *  - past the gate: blob coordinates (a tiny driver-side list) are
-    *    parallelized and EXECUTORS decode the bitmaps into (file, pos) rows,
-    *    which feed the existing gated anti join — nothing large ever
-    *    materializes on the driver. */
-  def applyDeletionVectors(
-      spark: SparkSession, data: DataFrame, dvEntries: Seq[FileEntry],
-      broadcastDeleteBytesMax: Long = BroadcastDeleteBytesMax): DataFrame = {
-    require(dvEntries.forall(e => e.isDeletionVector && e.contentSizeInBytes.isDefined),
-      "applyDeletionVectors requires DV entries with content-size set")
-    // referenced-data-file spellings compare against the CANONICAL
-    // rendered scan path (see canonicalManifestPath) — a miss would
-    // silently resurrect the DV's rows
-    val dvCanon = dvEntries.map(e =>
-      e.copy(referencedDataFile = e.referencedDataFile.map(canonicalManifestPath)))
-    val totalBytes = dvCanon.map(_.contentSizeInBytes.get).sum
-    if (dvCanon.nonEmpty && totalBytes <= broadcastDeleteBytesMax) {
-      val blobs = dvCanon.map { e =>
-        e.referencedDataFile.get -> graft.meta.Puffin.readBlob(
-          e.path, e.contentOffset.getOrElse(0L), e.contentSizeInBytes.get)
-      }.toMap
-      data.filter(!graft.functions.DvExpressions.dvContains(
-        col(FilePathCol), col(PosCol), blobs))
-    } else {
-      val pos = graft.meta.DeletionVectors.positionsFrame(spark, dvCanon)
-        .select(col("file_path").as(FilePathCol), col("pos").as(PosCol))
-      // blob bytes exceeded the gate, so the expanded relation is large:
-      // leave the join strategy to Catalyst (shuffled, driver-safe)
-      data.join(pos, Seq(FilePathCol, PosCol), "left_anti")
-    }
-  }
-
   /** Builds the MOR DataFrame for a file group.
     *
     * @param projectCols the table schema columns to produce (hidden columns
@@ -321,8 +328,10 @@ object Mor {
     *                    equality-delete files are read BY FIELD ID (rename-
     *                    safe) and equality keys resolve through
     *                    `equalityFieldIds` to their current names.
-    * @param broadcastDeleteBytesMax per-join manifest-bytes gate for
-    *                    broadcasting delete sides.
+    * @param broadcastDeleteBytesMax manifest-bytes gate per delete side:
+    *                    under it, position deletes and deletion vectors
+    *                    are bitmaps probed in the scan and equality
+    *                    deletes broadcast; past it, Catalyst's joins.
     * @param keepHidden  keep [[FilePathCol]]/[[PosCol]] in the output —
     *                    row lineage for consumers that must address
     *                    surviving rows physically (changelog delete
@@ -373,9 +382,6 @@ object Mor {
       val r = schema.fold(spark.read)(fieldIdReader(spark, _))
       r.parquet(files.map(_.path): _*)
     }
-    def readDataSelect(files: Seq[FileEntry], cols: Seq[Column]): DataFrame =
-      readDataWith(spark, files, dataTyped, pruneSpec, statsRetired,
-        metadataAggregates)(_.select(cols: _*))
     // with a typed schema, the authoritative eq key is the field-id list;
     // resolve to CURRENT names so the join condition survives renames
     def resolveEq(f: FileEntry): FileEntry =
@@ -393,45 +399,73 @@ object Mor {
     // silently resurrects rows (caught by the v3 REST fuzz)
     val eqDeletes = group.equalityDeleteFiles.map(resolveEq)
     // v3 deletion vectors ride the position-delete content type but carry a
-    // Puffin bitmap blob, not a parquet file — split them out of the
-    // parquet-backed anti-join path
+    // Puffin bitmap blob, not a parquet file
     val (dvEntries, posDeletes) = group.positionDeleteFiles.partition(_.isDeletionVector)
+    require(dvEntries.forall(_.contentSizeInBytes.isDefined),
+      "deletion-vector entries require content-size")
+    // under the gate each kind becomes per-file bitmaps, all probed by one
+    // `dv_contains` filter in the scan; above it, a (path, pos) anti join
+    val posUnderGate = posDeletes.map(_.length).sum <= broadcastDeleteBytesMax
+    val dvUnderGate = dvEntries.map(_.contentSizeInBytes.get).sum <= broadcastDeleteBytesMax
+    val bitmaps = {
+      type Bitmaps = Map[String, Puffin.PositionBitmap]
+      val pos: Bitmaps =
+        if (posDeletes.nonEmpty && posUnderGate) positionBitmaps(spark, posDeletes, group.dataFiles)
+        else Map.empty
+      val dv: Bitmaps = if (dvEntries.nonEmpty && dvUnderGate) dvBitmaps(dvEntries) else Map.empty
+      dv.foreach { case (f, b) => pos.get(f).foreach(_.addAll(b)) }
+      dv ++ pos
+    }
+    val posJoin = posDeletes.nonEmpty && !posUnderGate
+    val dvJoin = dvEntries.nonEmpty && !dvUnderGate
     val needSeq = eqDeletes.nonEmpty
-    val needFilePos = posDeletes.nonEmpty || dvEntries.nonEmpty
+    val needFilePos = posJoin || dvJoin || keepHidden
 
     val projected = projectCols.map(col)
     val hidden = if (keepHidden) Seq(col(FilePathCol), col(PosCol)) else Nil
+    val lineage = if (keepRowIds) Seq(col(RowIdCol), col(LastUpdatedSeqCol)) else Nil
 
     // no deletes: plain projected scan (datafusion_processor.rs:447-458)
-    if (!needSeq && !needFilePos && !keepHidden && !keepRowIds)
-      return readDataSelect(group.dataFiles, projected)
+    if (!needSeq && bitmaps.isEmpty && !needFilePos && !keepRowIds)
+      return readDataWith(spark, group.dataFiles, dataTyped, pruneSpec, statsRetired,
+        metadataAggregates)(_.select(projected: _*))
 
-    var df = readDataSelect(group.dataFiles,
-      projected ++ Seq(normalizePath(col("_metadata.file_path")).as(FilePathCol)) ++
-        (if (needFilePos || keepHidden || keepRowIds)
-          Seq(col("_metadata.row_index").as(PosCol)) else Nil) ++
-        (if (keepRowIds) Seq(col(RowIdCol).as("__mat_row_id"),
-          col(LastUpdatedSeqCol).as("__mat_upd_seq")) else Nil))
-
-    if (needSeq) {
-      // per-file sequence number: broadcast join on the manifest map
-      df = df.join(broadcast(seqMap(spark, group.dataFiles)), Seq(FilePathCol), "left")
+    val lookup = fileLookup(group.dataFiles, bitmaps)
+    val file = col("_metadata.file_path")
+    val rowIndex = col("_metadata.row_index")
+    def dataSeq = DvExpressions.fileConstant(file, lookup, FileLookup.DataSeq)
+    var df = readDataWith(spark, group.dataFiles, dataTyped, pruneSpec, statsRetired,
+        metadataAggregates) { rel =>
+      val live =
+        if (bitmaps.isEmpty) rel
+        else rel.filter(!DvExpressions.dvContains(file, rowIndex, lookup))
+      live.select(projected ++
+        (if (needFilePos) Seq(normalizePath(file).as(FilePathCol), rowIndex.as(PosCol))
+         else Nil) ++
+        (if (needSeq) Seq(dataSeq.as(SeqNumCol)) else Nil) ++
+        // v3 row lineage: the materialized value when the file carries one
+        // (rewrites), else inherited from the manifest; files without an
+        // assigned range (pre-v3 history) yield NULL ids rather than lies
+        (if (keepRowIds) Seq(
+          coalesce(col(RowIdCol), DvExpressions.fileConstant(
+            file, lookup, FileLookup.FirstRowId) + rowIndex).as(RowIdCol),
+          coalesce(col(LastUpdatedSeqCol), dataSeq).as(LastUpdatedSeqCol))
+         else Nil): _*)
     }
 
-    if (posDeletes.nonEmpty) {
-      // position-delete files always carry plain (file_path, pos) — not
-      // table-schema columns, so never id-matched
-      val pos = canonicalizeFilePathValues(
-        spark.read.schema(PositionDeleteSchema).parquet(posDeletes.map(_.path): _*)
-          .select(requiredDeleteCol("file_path").as(FilePathCol),
-            requiredDeleteCol("pos").as(PosCol)),
-        group.dataFiles)
-      df = df.join(gated(pos, posDeletes.map(_.length).sum, broadcastDeleteBytesMax),
+    // past the gate, nothing large materializes on the driver: the
+    // position-delete rows and the DV positions (decoded on executors)
+    // feed anti joins whose strategy Catalyst picks
+    if (posJoin)
+      df = df.join(positionDeletes(spark, posDeletes, group.dataFiles),
+        Seq(FilePathCol, PosCol), "left_anti")
+    if (dvJoin) {
+      val dvCanon = dvEntries.map(e =>
+        e.copy(referencedDataFile = e.referencedDataFile.map(canonicalManifestPath)))
+      df = df.join(graft.meta.DeletionVectors.positionsFrame(spark, dvCanon)
+        .select(col("file_path").as(FilePathCol), col("pos").as(PosCol)),
         Seq(FilePathCol, PosCol), "left_anti")
     }
-
-    if (dvEntries.nonEmpty)
-      df = applyDeletionVectors(spark, df, dvEntries, broadcastDeleteBytesMax)
 
     // one anti join per equality-ids run, in manifest order
     // (datafusion_processor.rs:524-571)
@@ -439,11 +473,10 @@ object Mor {
       val delSchema = typed.map(_ => StructType(eqIds.map(n =>
         tableSchema.find(_.name == n).getOrElse(sys.error(
           s"equality-delete column $n not in table schema")).toStructField)))
-      val delRaw = readParquet(files, delSchema)
-        .select(eqIds.map(col) :+ normalizePath(col("_metadata.file_path")).as(FilePathCol): _*)
-        .join(broadcast(seqMap(spark, files)), Seq(FilePathCol), "left")
-      val del = delRaw.select(
-        eqIds.map(c => col(c).as(s"__del_$c")) :+ col(SeqNumCol).as("__del_seq__"): _*)
+      val del = readParquet(files, delSchema).select(
+        eqIds.map(c => col(c).as(s"__del_$c")) :+
+          DvExpressions.fileConstant(col("_metadata.file_path"),
+            fileLookup(files), FileLookup.DataSeq).as("__del_seq__"): _*)
       val eqCond = eqIds.map(c => df(c) === col(s"__del_$c")).reduceOption(_ && _)
       val seqCond = df(SeqNumCol) < col("__del_seq__")
       val cond = eqCond.map(_ && seqCond).getOrElse(seqCond)
@@ -456,29 +489,6 @@ object Mor {
       df = df.join(gatedDel, cond, "left_anti")
     }
 
-    if (!keepRowIds) df.select(projected ++ hidden: _*)
-    else {
-      // inherited half: the per-file firstRowId range from the manifest
-      // (tiny broadcast map, like the sequence numbers); files without an
-      // assigned range (pre-v3 history) yield NULL ids rather than lies
-      import scala.jdk.CollectionConverters._
-      val rowMap = spark.createDataFrame(
-        group.dataFiles.map(f => org.apache.spark.sql.Row(
-          canonicalManifestPath(f.path), f.firstRowId.map(Long.box).orNull,
-          Long.box(f.sequenceNumber))).asJava,
-        StructType(Seq(
-          org.apache.spark.sql.types.StructField(FilePathCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__first_row_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__file_seq",
-            org.apache.spark.sql.types.LongType))))
-      val withIds = df.join(broadcast(rowMap), Seq(FilePathCol), "left")
-      withIds.select(projected ++ hidden :+
-        coalesce(col("__mat_row_id"), col("__first_row_id") + col(PosCol))
-          .as(RowIdCol) :+
-        coalesce(col("__mat_upd_seq"), col("__file_seq"))
-          .as(LastUpdatedSeqCol): _*)
-    }
+    df.select(projected ++ hidden ++ lineage: _*)
   }
 }

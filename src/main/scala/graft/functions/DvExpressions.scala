@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
@@ -9,34 +9,91 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.meta.Puffin
 
-/** Deletion-vector probe: the v3 read path's replacement for the
-  * position-delete anti join (reference anti-join SQL at
-  * core/src/executor/datafusion/datafusion_processor.rs:489-522).
+/** Per-data-file facts of one merge-on-read scan, probed with the scan's
+  * raw `_metadata.file_path`: the data sequence number, the v3
+  * `first_row_id`, and the position bitmap of the rows deleted in that
+  * file (parquet position deletes and deletion vectors, already unioned).
+  * It replaces the file-path joins of the reference's MOR SQL
+  * (core/src/executor/datafusion/datafusion_processor.rs:489-571).
   *
-  * The lookup holds the SERIALIZED blob bytes (small, compressed roaring
-  * bitmaps) so the expression ships compactly in the task binary; each
-  * executor decodes once per task via the transient lazy map. The probe
-  * itself is O(1) bitmap containment inside whole-stage codegen — no join,
-  * no shuffle, no broadcast exchange. Callers gate on total blob bytes
-  * before choosing this plan ([[graft.exec.Mor]]).
+  * Rows of one file arrive together, so the probe resolves a path once per
+  * file change: it keeps the last raw path and its entry, and only on a new
+  * path applies [[graft.exec.Mor.normalizePath]]'s rule and the hash lookup.
+  * Bitmaps travel as their portable serialization and are decoded once per
+  * deserialized copy. Spark deserializes a fresh copy for each task, so the
+  * cache is never shared between threads; a cached hit is immutable, so
+  * even a shared copy would read a consistent entry.
   */
-final class DvLookup(val blobs: Map[String, Array[Byte]]) extends Serializable {
-  @transient private lazy val bitmaps: java.util.HashMap[String, Puffin.PositionBitmap] = {
-    val m = new java.util.HashMap[String, Puffin.PositionBitmap](blobs.size * 2)
-    blobs.foreach { case (file, bytes) => m.put(file, Puffin.decodeDvBlob(bytes)) }
+final class FileLookup(entries: Seq[FileLookup.Entry]) extends Serializable {
+  private val paths: Array[String] = entries.map(_.path).toArray
+  private val seqs: Array[Long] = entries.map(_.seq).toArray
+  private val firstRowIds: Array[Long] =
+    entries.map(_.firstRowId.getOrElse(FileLookup.Absent)).toArray
+  private val bitmapBytes: Array[Array[Byte]] =
+    entries.map(_.bitmap.map(_.serializePortable).orNull).toArray
+
+  @transient private lazy val indexOf: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](paths.length * 2)
+    paths.indices.foreach(i => m.put(paths(i), i))
     m
   }
+  @transient private var last: FileLookup.Hit = _
+
+  private def hit(file: UTF8String): FileLookup.Hit = {
+    val h = last
+    if (h != null && h.raw == file) h
+    else {
+      val i = indexOf.get(graft.exec.Mor.normalizePath(file.toString))
+      val next =
+        if (i == null) new FileLookup.Hit(file.copy(), -1, null)
+        else new FileLookup.Hit(file.copy(), i,
+          Option(bitmapBytes(i)).map(Puffin.PositionBitmap.deserializePortable).orNull)
+      last = next
+      next
+    }
+  }
+
+  /** true iff `pos` of `file` is deleted; false for files without deletes. */
   def contains(file: UTF8String, pos: Long): Boolean = {
-    val b = bitmaps.get(file.toString)
+    val b = hit(file).bitmap
     b != null && b.contains(pos)
+  }
+  /** The file's data sequence number, [[FileLookup.Absent]] when unknown. */
+  def seq(file: UTF8String): Long = {
+    val i = hit(file).index
+    if (i < 0) FileLookup.Absent else seqs(i)
+  }
+  /** The file's v3 first row id, [[FileLookup.Absent]] when unassigned. */
+  def firstRowId(file: UTF8String): Long = {
+    val i = hit(file).index
+    if (i < 0) FileLookup.Absent else firstRowIds(i)
   }
 }
 
-/** true iff the deletion vector for `file` marks `pos` deleted; false for
-  * files without a DV. Null inputs yield null (cannot happen on the MOR
+object FileLookup {
+  /** One data file: its path in canonical rendered form
+    * ([[graft.exec.Mor.canonicalManifestPath]]). */
+  final case class Entry(path: String, seq: Long, firstRowId: Option[Long],
+      bitmap: Option[Puffin.PositionBitmap])
+
+  /** The null marker of [[FileLookup.seq]] and [[FileLookup.firstRowId]]:
+    * both are non-negative when present. */
+  val Absent: Long = Long.MinValue
+
+  private final class Hit(val raw: UTF8String, val index: Int,
+      val bitmap: Puffin.PositionBitmap)
+
+  /** The per-file long a [[FileConstant]] reads: the name of its method. */
+  sealed abstract class Field(val method: String)
+  case object DataSeq extends Field("seq")
+  case object FirstRowId extends Field("firstRowId")
+}
+
+/** true iff the position bitmap for `file` marks `pos` deleted; false for
+  * files without one. Null inputs yield null (cannot happen on the MOR
   * path — `_metadata` columns are non-null — but keeps the expression
   * honest standalone). */
-case class DvContains(left: Expression, right: Expression, lookup: DvLookup)
+case class DvContains(left: Expression, right: Expression, lookup: FileLookup)
     extends BinaryExpression {
 
   override def dataType: DataType = BooleanType
@@ -51,7 +108,7 @@ case class DvContains(left: Expression, right: Expression, lookup: DvLookup)
     lookup.contains(file.asInstanceOf[UTF8String], pos.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dvLookup", lookup, classOf[DvLookup].getName)
+    val ref = ctx.addReferenceObj("fileLookup", lookup, classOf[FileLookup].getName)
     nullSafeCodeGen(ctx, ev, (file, pos) => s"${ev.value} = $ref.contains($file, $pos);")
   }
 
@@ -60,10 +117,47 @@ case class DvContains(left: Expression, right: Expression, lookup: DvLookup)
     copy(left = newLeft, right = newRight)
 }
 
+/** A per-file constant of the file named by `child`; null when the lookup
+  * does not hold it. */
+case class FileConstant(child: Expression, lookup: FileLookup, field: FileLookup.Field)
+    extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"file_constant expects a string path, got ${child.dataType}")
+
+  override def nullSafeEval(file: Any): Any = {
+    val f = file.asInstanceOf[UTF8String]
+    val v = field match {
+      case FileLookup.DataSeq => lookup.seq(f)
+      case FileLookup.FirstRowId => lookup.firstRowId(f)
+    }
+    if (v == FileLookup.Absent) null else v
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("fileLookup", lookup, classOf[FileLookup].getName)
+    nullSafeCodeGen(ctx, ev, file =>
+      s"""${ev.value} = $ref.${field.method}($file);
+         |${ev.isNull} = ${ev.value} == java.lang.Long.MIN_VALUE;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): FileConstant =
+    copy(child = newChild)
+}
+
 object DvExpressions {
-  /** Column form: `dv_contains(file, pos)` against the given blob map
-    * (data-file path -> deletion-vector-v1 blob bytes). */
-  def dvContains(file: Column, pos: Column, blobs: Map[String, Array[Byte]]): Column =
+  /** Column form: `dv_contains(file, pos)` against `lookup`'s bitmaps. */
+  def dvContains(file: Column, pos: Column, lookup: FileLookup): Column =
     ColumnBridge.column(DvContains(
-      ColumnBridge.expression(file), ColumnBridge.expression(pos), new DvLookup(blobs)))
+      ColumnBridge.expression(file), ColumnBridge.expression(pos), lookup))
+
+  /** Column form of [[FileConstant]]: `field` of the file `file` names. */
+  def fileConstant(file: Column, lookup: FileLookup, field: FileLookup.Field): Column =
+    ColumnBridge.column(FileConstant(ColumnBridge.expression(file), lookup, field))
 }

@@ -29,7 +29,7 @@ import graft.selection.FileGroup
   * subscribers.
   *
   * Scale shape: inserts are plain scans of exactly the added files; deletes
-  * are the parent MOR view (scan + broadcast anti joins — [[Mor.dataFrame]])
+  * are the parent MOR view (scan, bitmap probe, broadcast anti joins — [[Mor.dataFrame]])
   * semi-joined against the (small) new tombstone/key sets, restricted to
   * the data files the tombstones actually target where that is knowable
   * from the manifest. No shuffle of the data side anywhere.
@@ -183,8 +183,8 @@ object Changelog {
         val byPos: Option[DataFrame] =
           if (addedPos.isEmpty) None
           else Some {
-            val tomb = spark.read.parquet(addedPos.map(_.path): _*)
-              .select(col("file_path").as(Mor.FilePathCol), col("pos").as(Mor.PosCol))
+            val tomb = Mor.positionDeletes(spark, addedPos,
+              p.manifest.filter(_.content == FileContent.Data))
             live.join(broadcast(tomb), Seq(Mor.FilePathCol, Mor.PosCol), "left_semi")
           }
 
@@ -224,7 +224,8 @@ object Changelog {
 
         val byRemoval: Option[DataFrame] =
           if (removedData.isEmpty) None
-          else Some(live.filter(col(Mor.FilePathCol).isin(removedData.map(_.path): _*)))
+          else Some(live.filter(col(Mor.FilePathCol).isin(
+            removedData.map(f => Mor.canonicalManifestPath(f.path)): _*)))
 
         val all = byPos.toSeq ++ byDv.toSeq ++ byEq ++ byRemoval.toSeq
         // one event per physical row even when several delete files hit it

@@ -10,8 +10,9 @@ import graft.selection.FileGroup
   * `spark.read.format("icelite").table(name)`.
   *
   * Builds one [[FileGroup]] from the branch snapshot's scan tasks and
-  * returns [[Mor.dataFrame]] over it: data parquet scan, broadcast anti
-  * joins against live position/equality deletes, hidden columns dropped.
+  * returns [[Mor.dataFrame]] over it: data parquet scan, live position
+  * deletes probed as per-file bitmaps inside it, broadcast anti joins
+  * against live equality deletes, hidden columns dropped.
   * The plan is the same shape the compaction rewrite executes, so reads
   * scale identically (no shuffle on the data path).
   */

@@ -826,7 +826,7 @@ object IceWrite {
     * the matching (file_path, pos) set becomes one Puffin bitmap blob per
     * affected data file — no parquet tombstone intermediate, so reads pay
     * the codegen'd bitmap probe immediately instead of an anti join
-    * ([[graft.exec.Mor.applyDeletionVectors]]). A data file that already
+    * ([[graft.exec.Mor.dataFrame]]). A data file that already
     * carries a DV gets the union (at most one DV per file, per spec);
     * plain parquet tombstones from earlier v2-style deletes stay live
     * beside the DVs and compose at read. Re-deleting an already-deleted
@@ -868,7 +868,7 @@ object IceWrite {
     // manifest coordinates return (DeletionVectors.writeEntriesStreamed)
     val smallPath = DeletionVectors.underDriverGate(positions, maxDriverBlobBytes)
     val blobs =
-      if (smallPath) DeletionVectors.buildBlobs(spark, positions) else Nil
+      if (smallPath) DeletionVectors.buildBlobs(positions) else Nil
     val affected: Set[String] =
       if (smallPath) blobs.map(_.referencedDataFile).toSet
       else {

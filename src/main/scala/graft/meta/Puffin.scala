@@ -57,6 +57,13 @@ object Puffin {
       b.add(lo)
     }
 
+    /** Adds every position of `other`. */
+    def addAll(other: PositionBitmap): Unit =
+      other.buckets.forEach { (hi, rb) =>
+        val b = buckets.get(hi)
+        if (b == null) buckets.put(hi, rb.clone()) else b.or(rb)
+      }
+
     def contains(pos: Long): Boolean = {
       if (pos < 0) return false
       val b = buckets.get((pos >>> 32).toInt)

@@ -167,10 +167,10 @@ class ValidationPipelineSpec extends AnyFunSuite {
     assert(IceRead.table(spark, catalog, "t").count() == rows)
   }
 
-  /** Per plan: 6 jobs each for the rewrite and for the input MOR count
-    * (four broadcast sides — two sequence-number maps, the position and
-    * the equality deletes — one shuffle-map stage and the result job), and
-    * 2 for the output count. No schema-inference job, none after the
-    * commit. */
-  private val ExpectedJobs = 28
+  /** Per plan: 4 jobs each for the rewrite and for the input MOR count
+    * (the position-delete read that builds the per-file bitmaps, the
+    * equality-delete broadcast, one shuffle-map stage and the result job),
+    * and 2 for the output count. No sequence-number join, no
+    * schema-inference job, none after the commit. */
+  private val ExpectedJobs = 20
 }

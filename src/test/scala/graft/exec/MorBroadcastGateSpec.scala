@@ -1,6 +1,9 @@
 package graft.exec
 
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -8,13 +11,14 @@ import graft.meta._
 import graft.selection.FileGroup
 import graft.testkit.FileGenerator
 
-/** The delete-side broadcast is size-gated on manifest bytes: under the
-  * gate the anti joins are BroadcastHashJoins (zero data-side shuffle —
-  * the 100 TB plan); above it Catalyst falls back to a shuffled join so a
-  * delete-heavy table (FilesWithDeletes exists for exactly those) cannot
-  * OOM the driver. Results must be identical either way.
+/** The delete sides are size-gated on manifest bytes: under the gate
+  * position deletes are a per-file bitmap probe inside the scan and
+  * equality deletes a BroadcastHashJoin on their key (zero data-side
+  * shuffle — the 100 TB plan); above it Catalyst falls back to shuffled
+  * joins so a delete-heavy table (FilesWithDeletes exists for exactly
+  * those) cannot OOM the driver. Results must be identical either way.
   */
-class MorBroadcastGateSpec extends AnyFunSuite {
+class MorBroadcastGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
@@ -35,11 +39,7 @@ class MorBroadcastGateSpec extends AnyFunSuite {
 
     val below = Mor.dataFrame(spark, group, meta.schemaColumns, 2,
       broadcastDeleteBytesMax = Long.MaxValue)
-    val belowPlan = below.queryExecution.executedPlan.toString
-    assert(belowPlan.contains("BroadcastHashJoin") && belowPlan.contains("LeftAnti"),
-      s"expected broadcast anti joins below the gate:\n$belowPlan")
-    assert(!belowPlan.contains("SortMergeJoin"),
-      s"data side must not shuffle below the gate:\n$belowPlan")
+    assertUnderGatePlan(below)
 
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -86,9 +86,23 @@ class MorBroadcastGateSpec extends AnyFunSuite {
 
   test("default gate keeps small delete sides on the broadcast path") {
     val (meta, group) = morGroup()
-    val df = Mor.dataFrame(spark, group, meta.schemaColumns, 2)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"))
-    assert(!plan.contains("SortMergeJoin"))
+    assertUnderGatePlan(Mor.dataFrame(spark, group, meta.schemaColumns, 2))
+  }
+
+  /** Under the gate: no join keyed on the file path, position deletes
+    * probed by `dv_contains` in the scan, and the equality side the one
+    * broadcast anti join. */
+  private def assertUnderGatePlan(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    val text = plan.toString
+    assert(!joins.exists(j => (j.leftKeys ++ j.rightKeys).exists(
+      _.references.exists(_.name == Mor.FilePathCol))),
+      s"no join may key on ${Mor.FilePathCol} under the gate:\n$text")
+    assert(text.contains("dvcontains"), s"expected the bitmap probe:\n$text")
+    assert(joins.size == 1 && joins.forall(j => j.nodeName == "BroadcastHashJoin" &&
+      j.joinType == LeftAnti),
+      s"expected one broadcast anti join (the equality side):\n$text")
+    assert(!text.contains("SortMergeJoin"), s"data side must not shuffle below the gate:\n$text")
   }
 }

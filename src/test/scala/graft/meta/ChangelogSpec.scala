@@ -178,4 +178,61 @@ class ChangelogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Changelog.changesOfLatest(spark, catalog, "t_rid_v2", withRowIds = true))
   }
+
+  /** Commits one snapshot: the head's manifest without `remove`, plus
+    * `added` stamped with the next sequence number. */
+  private def commitEntries(catalog: Catalog, name: String, operation: String,
+      added: Seq[FileEntry] = Nil, remove: FileEntry => Boolean = _ => false): Unit =
+    catalog.transact(name) { meta =>
+      val seq = meta.lastSequenceNumber + 1
+      val parent = meta.currentSnapshot
+      meta.withSnapshot(parent, parent.get.manifest.filterNot(remove) ++
+        added.map(_.copy(sequenceNumber = seq)), operation, seq)
+    }
+
+  test("a second position-delete file without `pos` fails the changelog read") {
+    val s = spark
+    import s.implicits._
+    val catalog = newCatalog()
+    IceWrite.create(spark, catalog, "t_nopos", spark.range(0, 100, 1, 2).toDF("id"))
+    val data = catalog.loadTable("t_nopos").currentSnapshot.get.manifest
+    assert(data.size == 2)
+    // as a foreign writer may leave them: a nullable `pos` in the first
+    // file, none in the second. A schema inferred from the first footer
+    // reads the second's `pos` as null, and its delete events vanish.
+    def deleteFile(rows: org.apache.spark.sql.DataFrame, file: String): FileEntry = {
+      val (path, size, n, _) = graft.testkit.FileGenerator.writeSingleParquet(spark, rows,
+        java.nio.file.Paths.get(catalog.dataDir("t_nopos"), file))
+      FileEntry(path, size, FileContent.PositionDeletes, n, sequenceNumber = 0L)
+    }
+    commitEntries(catalog, "t_nopos", "delete", added = Seq(
+      deleteFile(Seq((data.head.path, Option(0L))).toDF("file_path", "pos"), "pos-delete-a.parquet"),
+      deleteFile(Seq(data(1).path).toDF("file_path"), "pos-delete-b.parquet")))
+    val e = intercept[Exception](Changelog.changesOfLatest(spark, catalog, "t_nopos").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("position-delete file has no `pos` value")),
+      e.toString)
+  }
+
+  test("removing a data file committed under a non-canonical spelling emits its rows") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.slowfs.impl", classOf[graft.testkit.SlowLocalFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.slowfs.impl", classOf[graft.testkit.SlowLocalAfs].getName)
+    val catalog = newCatalog()
+    IceWrite.create(spark, catalog, "t_slow", df(Seq((1L, "a", 10L))))
+    IceWrite.append(spark, catalog, "t_slow", df(Seq((2L, "b", 20L))))
+    // a foreign client's spelling: slowfs:///x, which Hadoop renders slowfs:/x
+    commitEntries(catalog, "t_slow", "replace",
+      added = catalog.loadTable("t_slow").currentSnapshot.get.manifest
+        .map(f => f.copy(path = s"slowfs://${f.path}")),
+      remove = _ => true)
+    val first = catalog.loadTable("t_slow").currentSnapshot.get.manifest.head
+    commitEntries(catalog, "t_slow", "delete", remove = _.path == first.path)
+    val head = catalog.loadTable("t_slow").currentSnapshotId.get
+    val removedRow = spark.read.parquet(first.path.stripPrefix("slowfs://"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).head
+    val out = Changelog.changesOfLatest(spark, catalog, "t_slow").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3), r.getLong(4))).toSet
+    assert(out == Set((removedRow._1, removedRow._2, removedRow._3, "delete", head)))
+  }
 }
