@@ -345,9 +345,9 @@ object Maintenance {
       if (pairs.isEmpty) None
       else {
         val applicable = pairs.toDF("__del_file", "file_path")
-        Some(spark.read.parquet(posFiles.map(_.path): _*)
-          .select(Mor.normalizePath(col("_metadata.file_path")).as("__del_file"),
-            col("file_path"), col("pos"))
+        Some(Mor.readPositionDeletes(spark, posFiles,
+            Mor.normalizePath(col("_metadata.file_path")).as("__del_file"))
+          .select(col("__del_file"), col(Mor.FilePathCol).as("file_path"), col(Mor.PosCol).as("pos"))
           .join(broadcast(applicable), Seq("__del_file", "file_path"), "left_semi"))
       }
     // same driver gate as IceWrite.deleteWhereDv: a tombstone-heavy table
@@ -355,7 +355,7 @@ object Maintenance {
     val smallPath = rows.forall(r =>
       DeletionVectors.underDriverGate(r, DeletionVectors.MaxDriverBlobBytes))
     val newBlobs: Seq[DeletionVectors.DvBlob] =
-      if (smallPath) rows.map(DeletionVectors.buildBlobs).getOrElse(Nil)
+      if (smallPath) rows.map(DeletionVectors.buildBlobs(spark, _)).getOrElse(Nil)
       else Nil
     val affected: Set[String] =
       if (smallPath) newBlobs.map(_.referencedDataFile).toSet

@@ -210,12 +210,14 @@ object Mor {
       variants.distinct.filter(_ != canon).map(_ -> canon)
     }.toMap
 
-  /** The rows of position-delete `files` as [[FilePathCol]]/[[PosCol]],
-    * read with the spec schema and failing on a null value. */
-  private def readPositionDeletes(spark: SparkSession, files: Seq[FileEntry]): DataFrame =
+  /** The rows of position-delete `files` as [[FilePathCol]]/[[PosCol]]
+    * (then `extra`, which may read `_metadata`), read with the spec schema
+    * and failing on a null value. */
+  private[graft] def readPositionDeletes(spark: SparkSession, files: Seq[FileEntry],
+      extra: Column*): DataFrame =
     spark.read.schema(PositionDeleteSchema).parquet(files.map(_.path): _*)
-      .select(requiredDeleteCol("file_path").as(FilePathCol),
-        requiredDeleteCol("pos").as(PosCol))
+      .select(Seq(requiredDeleteCol("file_path").as(FilePathCol),
+        requiredDeleteCol("pos").as(PosCol)) ++ extra: _*)
 
   /** The rows of position-delete `files` with each `file_path` naming one
     * of `dataFiles` in canonical form, for joins against a scan's
@@ -236,19 +238,46 @@ object Mor {
   }
 
   /** Position deletes of `files` folded into one bitmap per data file of
-    * `dataFiles` (canonical path -> bitmap) in one Spark job
-    * ([[graft.meta.DeletionVectors.bitmapsByFile]]); the driver maps the
-    * spellings. Rows naming other files are dropped; a negative `pos`
-    * names no row and is skipped. */
+    * `dataFiles` (canonical path -> bitmap) in one Spark job, without a
+    * shuffle: each scan task folds its own rows, and the driver unions the
+    * serialized partial bitmaps and maps the spellings. Rows naming other
+    * files are dropped; a negative `pos` names no row and is skipped.
+    *
+    * The input is the delete files' own scan, so there is at most one
+    * partial per (task, named file) and never more than one per delete
+    * row; each costs about what that row cost in the broadcast relation
+    * the byte gate already admits. */
   private def positionBitmaps(spark: SparkSession, files: Seq[FileEntry],
       dataFiles: Seq[FileEntry]): Map[String, Puffin.PositionBitmap] = {
+    val rows = readPositionDeletes(spark, files).filter(col(PosCol) >= 0)
+    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
+      val byFile = new java.util.HashMap[String, Puffin.PositionBitmap]()
+      var lastFile: org.apache.spark.unsafe.types.UTF8String = null
+      var bitmap: Puffin.PositionBitmap = null
+      it.foreach { r =>
+        // readPositionDeletes already fails on a null; a second guard here
+        // keeps an UnsafeRow's null long (read back as 0) out of the bitmap
+        if (r.isNullAt(0) || r.isNullAt(1))
+          throw new IllegalStateException("position-delete row with a null file_path or pos")
+        val file = r.getUTF8String(0)
+        if (lastFile == null || lastFile != file) {
+          lastFile = file.copy()
+          bitmap = byFile.computeIfAbsent(file.toString, _ => Puffin.PositionBitmap.empty)
+        }
+        bitmap.add(r.getLong(1))
+      }
+      import scala.jdk.CollectionConverters._
+      byFile.asScala.iterator.map { case (f, b) => (f, b.serializePortable) }
+    }.collect()
     val remap = pathSpellings(dataFiles)
     val canon = dataFiles.map(f => canonicalManifestPath(f.path)).toSet
     val out = scala.collection.mutable.HashMap.empty[String, Puffin.PositionBitmap]
-    for ((file, b) <- graft.meta.DeletionVectors.bitmapsByFile(readPositionDeletes(spark, files)
-        .filter(col(PosCol) >= 0).select(col(FilePathCol).as("file_path"), col(PosCol).as("pos")))) {
+    for ((file, bytes) <- parts) {
       val c = remap.getOrElse(file, file)
-      if (canon.contains(c)) out.get(c).fold(out(c) = b)(_.addAll(b))
+      if (canon.contains(c)) {
+        val b = Puffin.PositionBitmap.deserializePortable(bytes)
+        out.get(c).fold(out(c) = b)(_.addAll(b))
+      }
     }
     out.toMap
   }

@@ -41,44 +41,25 @@ object DeletionVectors {
   def underDriverGate(positions: DataFrame, maxDriverBlobBytes: Long): Boolean =
     estimateBlobBytes(positions) <= maxDriverBlobBytes
 
-  /** Folds a (file_path, pos) frame into one bitmap per file, in one job
-    * and without a shuffle: each task folds its own rows, and only the
-    * serialized partial bitmaps return for the driver to union. This
-    * collect is unbounded in the number of tombstoned positions, so
-    * callers gate it ([[underDriverGate]], [[graft.exec.Mor]]'s byte
-    * gate). */
-  def bitmapsByFile(positions: DataFrame): Map[String, Puffin.PositionBitmap] = {
-    val parts = positions.select("file_path", "pos").queryExecution.toRdd.mapPartitions { rows =>
-      val byFile = new java.util.HashMap[String, Puffin.PositionBitmap]()
-      var lastFile: org.apache.spark.unsafe.types.UTF8String = null
-      var bitmap: Puffin.PositionBitmap = null
-      rows.foreach { r =>
-        val file = r.getUTF8String(0)
-        if (lastFile == null || lastFile != file) {
-          lastFile = file.copy()
-          bitmap = byFile.computeIfAbsent(file.toString, _ => Puffin.PositionBitmap.empty)
-        }
-        bitmap.add(r.getLong(1))
-      }
-      import scala.jdk.CollectionConverters._
-      byFile.asScala.iterator.map { case (f, b) => (f, b.serializePortable) }
-    }.collect()
-    val out = scala.collection.mutable.HashMap.empty[String, Puffin.PositionBitmap]
-    for ((file, bytes) <- parts) {
-      val b = Puffin.PositionBitmap.deserializePortable(bytes)
-      out.get(file).fold(out(file) = b)(_.addAll(b))
-    }
-    out.toMap
-  }
-
   /** Builds one encoded blob per referenced data file from a (file_path,
-    * pos) frame ([[bitmapsByFile]]). For delete passes whose
-    * [[estimateBlobBytes]] exceeds [[MaxDriverBlobBytes]], use
-    * [[writeEntriesStreamed]] instead. */
-  def buildBlobs(positions: DataFrame): Seq[DvBlob] =
-    bitmapsByFile(positions).toSeq
-      .map { case (f, bm) => DvBlob(f, Puffin.encodeDvBlob(bm), bm.cardinality) }
+    * pos) frame. Bitmaps are assembled EXECUTOR-side — one aggregate keyed
+    * by data file — and only the compressed blobs return to the driver.
+    * For delete passes whose [[estimateBlobBytes]] exceeds
+    * [[MaxDriverBlobBytes]], use [[writeEntriesStreamed]] instead: this
+    * collect is unbounded in the number of tombstoned positions. */
+  def buildBlobs(spark: SparkSession, positions: DataFrame): Seq[DvBlob] = {
+    import spark.implicits._
+    positions.select("file_path", "pos").as[(String, Long)]
+      .groupByKey(_._1)
+      .mapGroups { (file, it) =>
+        val bm = Puffin.PositionBitmap.empty
+        it.foreach(t => bm.add(t._2))
+        (file, Puffin.encodeDvBlob(bm), bm.cardinality)
+      }
+      .collect().toSeq
+      .map { case (f, b, c) => DvBlob(f, b, c) }
       .sortBy(_.referencedDataFile)
+  }
 
   /** The scale path past the driver gate: builds, merges, and WRITES the
     * deletion vectors entirely executor-side — one grouped aggregate keyed

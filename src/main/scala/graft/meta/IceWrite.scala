@@ -868,7 +868,7 @@ object IceWrite {
     // manifest coordinates return (DeletionVectors.writeEntriesStreamed)
     val smallPath = DeletionVectors.underDriverGate(positions, maxDriverBlobBytes)
     val blobs =
-      if (smallPath) DeletionVectors.buildBlobs(positions) else Nil
+      if (smallPath) DeletionVectors.buildBlobs(spark, positions) else Nil
     val affected: Set[String] =
       if (smallPath) blobs.map(_.referencedDataFile).toSet
       else {

@@ -286,4 +286,36 @@ class DeletionVectorSpec extends AnyFunSuite {
     val viaDriver = IceRead.table(spark, catalog2, "t_dvs").orderBy("o_orderkey").collect().toSeq
     assert(got == viaDriver)
   }
+
+  test("a second position-delete file without `pos` fails the conversion, deleting nothing") {
+    val s = spark
+    import s.implicits._
+    val catalog = LocalCatalog(Files.createTempDirectory("graft-dv-nopos").toString)
+    IceWrite.create(spark, catalog, "t_nopos", spark.range(0, 100, 1, 2).toDF("id"))
+    val data = catalog.loadTable("t_nopos").currentSnapshot.get.manifest
+    assert(data.size == 2)
+    // a nullable `pos` in the first file, none in the second: a schema
+    // inferred from the first footer reads the second's `pos` as null
+    def deleteFile(rows: org.apache.spark.sql.DataFrame, file: String): FileEntry = {
+      val (path, size, n, _) = graft.testkit.FileGenerator.writeSingleParquet(spark, rows,
+        java.nio.file.Paths.get(catalog.dataDir("t_nopos"), file))
+      FileEntry(path, size, FileContent.PositionDeletes, n, sequenceNumber = 0L)
+    }
+    val deletes = Seq(
+      deleteFile(Seq((data.head.path, Option(5L))).toDF("file_path", "pos"), "pos-delete-a.parquet"),
+      deleteFile(Seq(data(1).path).toDF("file_path"), "pos-delete-b.parquet"))
+    catalog.transact("t_nopos") { meta =>
+      val seq = meta.lastSequenceNumber + 1
+      val parent = meta.currentSnapshot
+      meta.withSnapshot(parent, parent.get.manifest ++ deletes.map(_.copy(sequenceNumber = seq)),
+        "delete", seq)
+    }
+    val head = catalog.loadTable("t_nopos").currentSnapshotId
+    val e = intercept[Exception](Maintenance.convertPositionDeletesToDVs(spark, catalog, "t_nopos"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("position-delete file has no `pos` value")),
+      e.toString)
+    // no deletion vector committed: row 0 of the second file is not tombstoned
+    assert(catalog.loadTable("t_nopos").currentSnapshotId == head)
+  }
 }
