@@ -1,5 +1,6 @@
 package graft.examples
 
+import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -68,10 +69,9 @@ object SkewProfile {
       rows.clear(); actions.clear()
       val t0 = System.nanoTime()
       f
-      // the listener bus is async: give QueryExecutionListener events a
-      // beat to drain before reading them
-      Thread.sleep(300)
       val secs = (System.nanoTime() - t0) / 1e9
+      // the listener bus is async: drain it before reading the events
+      ListenerBusBridge.drain(spark.sparkContext)
       println(f"[prof] PHASE $name%-12s ${secs}%6.2f s")
       import scala.jdk.CollectionConverters._
       val acts = actions.asScala.toSeq

@@ -1,6 +1,10 @@
 package graft.meta
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.JobScope
 
 /** A CDC subscriber over [[Changelog]]: follows a table's commit chain and
   * hands each new snapshot's changelog frame to a handler, in commit
@@ -92,25 +96,28 @@ final class ChangeFeed(
     * serializing with it (guide §2.6). Delivery contract unchanged:
     * handlers run in commit order, the checkpoint still advances only
     * after the handler returns, and `prepare` has no side effects to
-    * un-do when a crash re-delivers a snapshot. A prepare failure for
-    * snapshot k+1 surfaces when k+1 is processed — exactly where the
-    * sequential form would have thrown it. */
+    * un-do when a crash re-delivers a snapshot.
+    *
+    * A prepare failure for snapshot k+1 is thrown when k+1 is processed,
+    * after handler k has returned and its checkpoint is saved — exactly
+    * where the sequential form would have thrown it. If handler k throws
+    * instead, its exception propagates alone: the prefetch's Spark jobs
+    * are cancelled and pollPrepared waits for it to end before throwing. */
   def pollPrepared(prepare: (DataFrame, Snapshot) => DataFrame)(
       handler: (DataFrame, Snapshot) => Unit): Int = {
     val todo = pending(checkpoint())
     if (todo.isEmpty) return 0
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
     def prepared(snap: Snapshot): DataFrame = prepare(Changelog.changesBetween(
       spark, catalog, name, snap.parentId.getOrElse(0L), snap.snapshotId), snap)
-    var next: Future[DataFrame] = Future(prepared(todo.head))
-    todo.zipWithIndex.foreach { case (snap, i) =>
-      val frame = Await.result(next, Duration.Inf)
-      if (i + 1 < todo.size) { val upNext = todo(i + 1); next = Future(prepared(upNext)) }
-      handler(frame, snap)
-      saveCheckpoint(snap.snapshotId)
+    JobScope.run(spark.sparkContext) { scope =>
+      val pool = scope.pool(1)
+      var next = scope.fork(pool)(Try(prepared(todo.head)))
+      todo.zipWithIndex.foreach { case (snap, i) =>
+        val frame = next.join().get
+        if (i + 1 < todo.size) next = scope.fork(pool)(Try(prepared(todo(i + 1))))
+        handler(frame, snap)
+        saveCheckpoint(snap.snapshotId)
+      }
     }
     todo.size
   }

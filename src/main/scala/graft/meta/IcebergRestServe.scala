@@ -83,19 +83,6 @@ object IcebergRestServe {
     * pin ~10 GB of FileEntry lists for paging. Oldest plans evict until
     * the sum fits; a reader that polls an evicted plan re-submits. */
   val MaxRetainedPlanTasks: Long = 2000000L
-
-  /** DAEMON threads for the dispatch/plan pools: a caller that forgets
-    * stop() must not pin the JVM against exit (the pre-pool dispatch ran
-    * on the server's own thread and had no such pin). stop() remains the
-    * clean-shutdown path. */
-  private[meta] def daemonFactory(prefix: String): java.util.concurrent.ThreadFactory =
-    new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger()
-      def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"$prefix-${n.incrementAndGet()}")
-        t.setDaemon(true); t
-      }
-    }
 }
 
 final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
@@ -206,7 +193,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     * validation, DV bitmap compares — real I/O) no longer head-of-line-
     * blocks the reader fleet the preplan sharding fans out. */
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(16,
-    IcebergRestServe.daemonFactory("graft-rest-dispatch"))
+    graft.util.DaemonThreads("graft-rest-dispatch"))
   server.setExecutor(pool)
   server.start()
 
@@ -1399,7 +1386,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
   /** Plan computations run off the dispatch pool, so polls/reads stay
     * responsive while a million-file prune grinds. */
   private val planPool = java.util.concurrent.Executors.newFixedThreadPool(2,
-    IcebergRestServe.daemonFactory("graft-rest-plan"))
+    graft.util.DaemonThreads("graft-rest-plan"))
 
   /** Bounds the registry BOTH ways: plan count AND total retained kept
     * tasks (the real memory bound — 64 plans each keeping a 10^6-file

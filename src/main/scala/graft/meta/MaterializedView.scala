@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.exec.SparkExecutor
+import graft.util.JobScope
 
 /** Incrementally-maintained aggregate tables (materialized views) driven
   * by the table-format changelog.
@@ -126,16 +127,11 @@ object MaterializedView {
     // paths — two independent pure writes, so they run concurrently
     // (guide §2.6) instead of serializing two commands per refresh; the
     // CAS commit below still sees both complete or neither
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val delFut = scala.concurrent.Future(SparkExecutor.writeDataFiles(spark,
-      IceWrite.withFieldIds(touchedKeys, table0.schema), dataDir, Nil, Nil, Long.MaxValue))
-    val dataFut = scala.concurrent.Future(SparkExecutor.writeDataFiles(spark,
-      IceWrite.withFieldIds(survivors, table0.schema), dataDir, Nil, Nil, Long.MaxValue))
-    val delFiles = scala.concurrent.Await.result(
-      delFut, scala.concurrent.duration.Duration.Inf)
-    val dataFiles = scala.concurrent.Await.result(
-      dataFut, scala.concurrent.duration.Duration.Inf)
+    val (delFiles, dataFiles) = JobScope.both(spark.sparkContext)(
+      SparkExecutor.writeDataFiles(spark,
+        IceWrite.withFieldIds(touchedKeys, table0.schema), dataDir, Nil, Nil, Long.MaxValue),
+      SparkExecutor.writeDataFiles(spark,
+        IceWrite.withFieldIds(survivors, table0.schema), dataDir, Nil, Nil, Long.MaxValue))
     val eqFieldIds = keys.map(k => table0.fieldByName(k).getOrElse(
       throw new IllegalArgumentException(s"key column $k not in view schema")).id)
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.{Catalog, IceRead, IceWrite, SchemaEvolution}
+import graft.util.JobScope
 
 /** Persisted IVF+PQ approximate-nearest-neighbor index over catalog
   * tables — build once, serve many: the full-width embedding corpus is
@@ -94,13 +95,12 @@ object AnnIndex {
     // CHECKPOINTED cents frame and nothing of each other — the write's
     // commit I/O overlaps the assign+encode stages (guide §2.6). The
     // failure window is the sequential form's: a crash can leave the
-    // centroids table without codes either way.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val centsWrite = scala.concurrent.Future(
-      IceWrite.create(spark, catalog, centroidsTable(name), cents))
-    val codes = assignAndEncode(corpus, idCol, vecCol, cents, m).localCheckpoint(true)
-    scala.concurrent.Await.result(centsWrite, scala.concurrent.duration.Duration.Inf): Unit
+    // centroids table without codes either way. A failing encode cancels
+    // the write's jobs and waits for it, so when build throws the
+    // centroids table is either created or not, and stays that way.
+    val (_, codes) = JobScope.both(spark.sparkContext)(
+      IceWrite.create(spark, catalog, centroidsTable(name), cents),
+      assignAndEncode(corpus, idCol, vecCol, cents, m).localCheckpoint(true))
     IceWrite.create(spark, catalog, codesTable(name), codes)
     val dim = cents.select(size(col("vec"))).take(1)
       .headOption.map(_.getInt(0))

@@ -1,7 +1,11 @@
 package graft.ops
 
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.util.JobScope
 
 /** Deduplication operators for training-data pipelines, exact through
   * approximate, each designed around its 100 TB shuffle profile:
@@ -171,25 +175,112 @@ object Dedup {
     // cannot diverge between what was committed and what is emitted
     val b = batch.localCheckpoint(true)
     // the cross-run arm's hot-bucket histogram reads ONLY the index table
-    // — nothing the within-batch pipeline below produces — so its collect
+    // — nothing the within-batch pipeline produces — so its collect
     // runs concurrently with that pipeline (guide §2.6: independent jobs
     // back-fill the executor slots each in-flight stage's tail frees).
     // Single-writer contract: nothing commits to the index between here
     // and the sequential point, so the prefetch sees the same snapshot
-    // the sequential form would.
+    // the sequential form would. Its outcome is a value, thrown where the
+    // histogram is used; a within-batch failure cancels its jobs instead.
     val exists = catalog.tableExists(indexTable)
-    val idxHotPrefetch =
-      if (!exists) None
-      else Some {
-        val idx = graft.meta.IceRead.table(spark, catalog, indexTable)
-          .filter(col("batch_id") =!= batchId)
-        val idxBandRows = idx.select(col("id").as("old_id"),
+    val survivors = JobScope.run(spark.sparkContext) { scope =>
+      val idxHotPrefetch =
+        if (!exists) None
+        else Some {
+          val idx = graft.meta.IceRead.table(spark, catalog, indexTable)
+            .filter(col("batch_id") =!= batchId)
+          val idxBandRows = idx.select(col("id").as("old_id"),
+            posexplode(col("bands")).as(Seq("band", "bh")))
+          (idx, idxBandRows, scope.fork(scope.pool(1))(
+            Try(hotBucketKeyRows(idxBandRows, Seq("band", "bh"), maxBucketSize))))
+        }
+      val keepers0 = withinBatchKeepers(spark, b, idCol, textCol, n, k, rowsPerBand,
+        threshold, maxBucketSize, maxBroadcastCandidates)
+      // cross-run: keeper bands vs the index's bands (REPLAY guard: this
+      // batch's own prior commit must not match itself)
+      if (!exists) keepers0
+      else {
+        // keepers feed THREE joins in the cross-run arm (band candidates,
+        // the gset verify, the final anti join): materialize once —
+        // DataFrame subtrees get no common-subexpression reuse, so the
+        // lazy form recomputes the dedup anti-join per consumer. The
+        // first-batch path keeps the lazy form (single consumer).
+        val keepers = keepers0.localCheckpoint(true)
+        // the index side gets the SAME hot-bucket cap as the within-batch
+        // bucket join: one boilerplate band hash can accumulate O(index)
+        // rows across batches, and an uncapped join would pay O(index)
+        // candidates per keeper in that bucket — per batch, forever,
+        // growing with the index. Over-cap buckets are dropped whole
+        // (the lshCandidatePairs recall trade, same knob + skew-immune
+        // [[dropHotBuckets]] form). The histogram collect was prefetched
+        // above, concurrent with the whole within-batch pipeline; a
+        // failure surfaces here exactly as the sequential form's would.
+        val (idx, idxBandRows, idxHot) = idxHotPrefetch.get
+        val (idxHotRows, idxHotHist) = idxHot.join().get
+        val idxBands = dropHotKeyRows(idxBandRows, Seq("band", "bh"),
+          idxHotRows, idxHotHist)
+        val keeperBands = keepers.select(col("id"),
           posexplode(col("bands")).as(Seq("band", "bh")))
-        val fut = scala.concurrent.Future(
-          hotBucketKeyRows(idxBandRows, Seq("band", "bh"), maxBucketSize))(
-          scala.concurrent.ExecutionContext.global)
-        (idxBandRows, fut)
+        val cand = keeperBands.join(idxBands, Seq("band", "bh"))
+          .select(col("id"), col("old_id")).distinct()
+        val matched = cand
+          .join(keepers.select(col("id"), col("gset").as("__g1")), Seq("id"))
+          .join(idx.select(col("id").as("old_id"), col("gset").as("__g2")), Seq("old_id"))
+          .filter(graft.functions.SetFunctions.jaccard_ge(col("__g1"), col("__g2"), threshold))
+          .select(col("id"))
+        keepers.join(matched, Seq("id"), "left_anti")
       }
+    }
+    val fresh0 = survivors
+      .select(col("id"), lit(batchId).as("batch_id"), col("bands"), col("gset"))
+    if (!exists) {
+      // REBALANCE the commit payload: fresh carries the batch's survivor
+      // rows across however many partitions the dedup pipeline ran on —
+      // written as-is that is one tiny file PER PARTITION per batch
+      // (every later index read opens all of them; every commit pays the
+      // per-file protocol round trips). AQE sizes the output instead.
+      graft.meta.IceWrite.create(spark, catalog, indexTable,
+        fresh0.localCheckpoint(true).hint("rebalance")): Unit
+    } else {
+      // survivors are first-seen ids in the common case — a plain APPEND
+      // commits them without the upsert's equality-delete sidecar, which
+      // every later read of the index would anti-join against, per batch,
+      // forever. The id-collision flag (a replayed or id-reusing batch
+      // falls back to the idempotent MOR upsert exactly as before) rides
+      // the checkpoint materialization as a left-join marker, and ONE
+      // aggregate over the checkpointed blocks then answers BOTH commit
+      // gates — the r11 form paid a separate `fresh.isEmpty` job plus a
+      // semi-join probe with its own index scan, per micro-batch,
+      // forever. The index side dedups its id column first: the index is
+      // id-keyed by contract, but a duplicate id must degrade to the
+      // same upsert the semi-join chose, never to duplicated fresh rows.
+      val idxIds = graft.meta.IceRead.table(spark, catalog, indexTable)
+        .select(col("id")).distinct().withColumn("__dup", lit(1))
+      val fresh = fresh0.join(idxIds, Seq("id"), "left").localCheckpoint(true)
+      val st = fresh.agg(count(lit(1)).as("__n"),
+        sum(when(col("__dup").isNotNull, 1L).otherwise(0L)).as("__ndup")).head
+      val (nFresh, nDup) = (st.getLong(0),
+        if (st.isNullAt(1)) 0L else st.getLong(1))
+      if (nFresh > 0) {
+        val freshOut = fresh.drop("__dup").hint("rebalance")
+        if (nDup > 0)
+          graft.meta.IceWrite.upsert(spark, catalog, indexTable, freshOut, keys = Seq("id"))
+        else
+          graft.meta.IceWrite.append(spark, catalog, indexTable, freshOut)
+      }
+    }
+    val mine = graft.meta.IceRead.table(spark, catalog, indexTable)
+      .filter(col("batch_id") === batchId)
+      .select(col("id").as(idCol))
+    b.join(mine, Seq(idCol), "left_semi")
+  }
+
+  /** The within-batch arm of [[incrementalMinHash]] over the materialized
+    * batch `b`: the (id, bands, gset) rows that are not dominated by a
+    * smaller id in their verified near-dup component. */
+  private def withinBatchKeepers(spark: org.apache.spark.sql.SparkSession, b: DataFrame,
+      idCol: String, textCol: String, n: Int, k: Int, rowsPerBand: Int,
+      threshold: Double, maxBucketSize: Int, maxBroadcastCandidates: Long): DataFrame = {
     val sigSets = minHashSignatureSets(b, idCol, textCol, n, k)
     // (id, bands, gset), materialized once: feeds the bucket join, both
     // verify stages, and the commit payload. Band hashes share
@@ -272,89 +363,7 @@ object Dedup {
         broadcast(driverDominatedIds(spark, dupPairs, docs.schema("id")))
       else clusterPairsStar(dupPairs)
         .filter(col("cluster_id") =!= col("id")).select(col("id"))
-    val keepers0 = docs.join(dominated, Seq("id"), "left_anti")
-
-    // cross-run: keeper bands vs the index's bands (REPLAY guard: this
-    // batch's own prior commit must not match itself)
-    val survivors = {
-      if (!exists) keepers0
-      else {
-        // keepers feed THREE joins in the cross-run arm (band candidates,
-        // the gset verify, the final anti join): materialize once —
-        // DataFrame subtrees get no common-subexpression reuse, so the
-        // lazy form recomputes the dedup anti-join per consumer. The
-        // first-batch path keeps the lazy form (single consumer).
-        val keepers = keepers0.localCheckpoint(true)
-        val idx = graft.meta.IceRead.table(spark, catalog, indexTable)
-          .filter(col("batch_id") =!= batchId)
-        // the index side gets the SAME hot-bucket cap as the within-batch
-        // bucket join: one boilerplate band hash can accumulate O(index)
-        // rows across batches, and an uncapped join would pay O(index)
-        // candidates per keeper in that bucket — per batch, forever,
-        // growing with the index. Over-cap buckets are dropped whole
-        // (the lshCandidatePairs recall trade, same knob + skew-immune
-        // [[dropHotBuckets]] form). The histogram collect was prefetched
-        // above, concurrent with the whole within-batch pipeline; a
-        // failure surfaces here exactly as the sequential form's would.
-        val (idxBandRows, idxHotFut) = idxHotPrefetch.get
-        val (idxHotRows, idxHotHist) = scala.concurrent.Await.result(
-          idxHotFut, scala.concurrent.duration.Duration.Inf)
-        val idxBands = dropHotKeyRows(idxBandRows, Seq("band", "bh"),
-          idxHotRows, idxHotHist)
-        val keeperBands = keepers.select(col("id"),
-          posexplode(col("bands")).as(Seq("band", "bh")))
-        val cand = keeperBands.join(idxBands, Seq("band", "bh"))
-          .select(col("id"), col("old_id")).distinct()
-        val matched = cand
-          .join(keepers.select(col("id"), col("gset").as("__g1")), Seq("id"))
-          .join(idx.select(col("id").as("old_id"), col("gset").as("__g2")), Seq("old_id"))
-          .filter(graft.functions.SetFunctions.jaccard_ge(col("__g1"), col("__g2"), threshold))
-          .select(col("id"))
-        keepers.join(matched, Seq("id"), "left_anti")
-      }
-    }
-    val fresh0 = survivors
-      .select(col("id"), lit(batchId).as("batch_id"), col("bands"), col("gset"))
-    if (!exists) {
-      // REBALANCE the commit payload: fresh carries the batch's survivor
-      // rows across however many partitions the dedup pipeline ran on —
-      // written as-is that is one tiny file PER PARTITION per batch
-      // (every later index read opens all of them; every commit pays the
-      // per-file protocol round trips). AQE sizes the output instead.
-      graft.meta.IceWrite.create(spark, catalog, indexTable,
-        fresh0.localCheckpoint(true).hint("rebalance")): Unit
-    } else {
-      // survivors are first-seen ids in the common case — a plain APPEND
-      // commits them without the upsert's equality-delete sidecar, which
-      // every later read of the index would anti-join against, per batch,
-      // forever. The id-collision flag (a replayed or id-reusing batch
-      // falls back to the idempotent MOR upsert exactly as before) rides
-      // the checkpoint materialization as a left-join marker, and ONE
-      // aggregate over the checkpointed blocks then answers BOTH commit
-      // gates — the r11 form paid a separate `fresh.isEmpty` job plus a
-      // semi-join probe with its own index scan, per micro-batch,
-      // forever. The index side dedups its id column first: the index is
-      // id-keyed by contract, but a duplicate id must degrade to the
-      // same upsert the semi-join chose, never to duplicated fresh rows.
-      val idxIds = graft.meta.IceRead.table(spark, catalog, indexTable)
-        .select(col("id")).distinct().withColumn("__dup", lit(1))
-      val fresh = fresh0.join(idxIds, Seq("id"), "left").localCheckpoint(true)
-      val st = fresh.agg(count(lit(1)).as("__n"),
-        sum(when(col("__dup").isNotNull, 1L).otherwise(0L)).as("__ndup")).head
-      val (nFresh, nDup) = (st.getLong(0),
-        if (st.isNullAt(1)) 0L else st.getLong(1))
-      if (nFresh > 0) {
-        val freshOut = fresh.drop("__dup").hint("rebalance")
-        if (nDup > 0)
-          graft.meta.IceWrite.upsert(spark, catalog, indexTable, freshOut, keys = Seq("id"))
-        else
-          graft.meta.IceWrite.append(spark, catalog, indexTable, freshOut)
-      }
-    }
-    val mine = graft.meta.IceRead.table(spark, catalog, indexTable)
-      .filter(col("batch_id") === batchId)
-      .select(col("id").as(idCol))
-    b.join(mine, Seq(idCol), "left_semi")
+    docs.join(dominated, Seq("id"), "left_anti")
   }
 
   /** Driver-side dominated-id computation for a BROADCAST-GATED verified

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.{Catalog, IceRead, IceWrite}
+import graft.util.JobScope
 
 /** Sparse (lexical) retrieval over document corpora: BM25 scoring and a
   * persisted inverted index — the text-side dual of [[AnnIndex]]'s dense
@@ -161,14 +162,12 @@ object TextIndex {
     // Crash recovery is unchanged in kind: a failed build can leave
     // either table behind, and rebuild requires dropping whatever
     // exists — exactly the sequential form's wedge-and-drop contract.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val docsF = scala.concurrent.Future(IceWrite.create(spark, catalog,
-      docsTable(name), docRows(c, idCol, textCol).hint("rebalance")))
-    val postF = scala.concurrent.Future(IceWrite.create(spark, catalog,
-      postingsTable(name), postingRows(c, idCol, textCol)))
-    scala.concurrent.Await.result(docsF, scala.concurrent.duration.Duration.Inf): Unit
-    scala.concurrent.Await.result(postF, scala.concurrent.duration.Duration.Inf): Unit
+    // A failing side cancels the other's jobs, and build throws only
+    // after both have ended.
+    JobScope.both(spark.sparkContext)(
+      IceWrite.create(spark, catalog, docsTable(name),
+        docRows(c, idCol, textCol).hint("rebalance")),
+      IceWrite.create(spark, catalog, postingsTable(name), postingRows(c, idCol, textCol))): Unit
   }
 
   /** Add documents to the index: postings upsert keyed (term, doc_id),
@@ -177,23 +176,26 @@ object TextIndex {
     * crash between the two commits leaves a state the NEXT append
     * completes rather than a wedge. Meant for NEW doc ids; re-indexing a
     * CHANGED document must delete its old rows first (an upsert cannot
-    * retract postings for terms the new text no longer contains). */
+    * retract postings for terms the new text no longer contains).
+    *
+    * The two upserts run side by side. If one fails, the other's Spark
+    * jobs are cancelled and append throws only after it has ended: the
+    * first failure propagates, a later one rides along as suppressed.
+    * Partial-commit window: the postings upsert can land while the docs
+    * upsert fails, which leaves postings whose doc_id has no docs row
+    * (N and avgdl then undercount those documents). Replaying the batch
+    * repairs it. */
   def append(spark: SparkSession, catalog: Catalog, name: String,
       corpus: DataFrame, idCol: String, textCol: String): Unit = {
     val c = Spread(corpus)
     val docs = docRows(c, idCol, textCol).localCheckpoint(true)
     if (!docs.isEmpty) {
       // different tables, independent CAS chains: the docs upsert's
-      // commit I/O overlaps the postings tokenize+upsert (guide §2.6) —
-      // the doc-comment's crash contract already covers either commit
-      // landing without the other (the next append completes it)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val docsF = scala.concurrent.Future(createOrUpsert(spark, catalog,
-        docsTable(name), docs.hint("rebalance"), Seq("doc_id")))
-      createOrUpsert(spark, catalog, postingsTable(name),
-        postingRows(c, idCol, textCol), Seq("term", "doc_id"))
-      scala.concurrent.Await.result(docsF, scala.concurrent.duration.Duration.Inf): Unit
+      // commit I/O overlaps the postings tokenize+upsert (guide §2.6)
+      JobScope.both(spark.sparkContext)(
+        createOrUpsert(spark, catalog, docsTable(name), docs.hint("rebalance"), Seq("doc_id")),
+        createOrUpsert(spark, catalog, postingsTable(name),
+          postingRows(c, idCol, textCol), Seq("term", "doc_id")))
       // per-append upserts accumulate small postings files + eq-delete
       // files, and b2-style serve performance rides on term-range file
       // skipping over FEW, well-sorted files — fold the fragments back

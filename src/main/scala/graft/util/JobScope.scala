@@ -2,8 +2,7 @@ package graft.util
 
 import java.util.UUID
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException,
-  ExecutorService, Executors, Future, ThreadFactory, TimeUnit, TimeoutException}
-import java.util.concurrent.atomic.AtomicInteger
+  ExecutorService, Executors, Future, TimeUnit, TimeoutException}
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
@@ -28,14 +27,7 @@ final class JobScope private (sc: SparkContext) {
 
   /** A fixed pool of `threads` daemon threads, shut down with the scope. */
   def pool(threads: Int): ExecutorService = {
-    val n = new AtomicInteger
-    val p = Executors.newFixedThreadPool(math.max(1, threads), new ThreadFactory {
-      def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"$tag-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    })
+    val p = Executors.newFixedThreadPool(math.max(1, threads), DaemonThreads(tag))
     pools.add(p)
     p
   }
@@ -52,7 +44,7 @@ final class JobScope private (sc: SparkContext) {
       }
     })
     forks.add(f)
-    new JobScope.Fork(f)
+    new JobScope.Fork(this, f)
   }
 
   private def failed: Boolean = failures.synchronized(failures.nonEmpty)
@@ -67,19 +59,22 @@ final class JobScope private (sc: SparkContext) {
     if (first) sc.cancelJobsWithTag(tag, "a sibling task of this call failed")
   }
 
-  /** Waits for every task, then shuts the pools down. A job a sibling
-    * starts after the first cancel is cancelled on the next poll. */
-  private def close(): Unit = {
-    forks.forEach { f =>
-      var done = false
-      while (!done) {
-        try { f.get(100, TimeUnit.MILLISECONDS); done = true }
-        catch {
-          case _: TimeoutException => if (failed) sc.cancelJobsWithTag(tag)
-          case _: ExecutionException => done = true
-        }
+  /** Waits for `f` to end. A job a task starts after the first cancel is
+    * cancelled on the next poll. */
+  private def await(f: Future[_]): Unit = {
+    var done = false
+    while (!done) {
+      try { f.get(100, TimeUnit.MILLISECONDS); done = true }
+      catch {
+        case _: TimeoutException => if (failed) sc.cancelJobsWithTag(tag)
+        case _: ExecutionException => done = true
       }
     }
+  }
+
+  /** Waits for every task, then shuts the pools down. */
+  private def close(): Unit = {
+    forks.forEach(await(_))
     pools.forEach(_.shutdown())
   }
 }
@@ -90,13 +85,28 @@ object JobScope {
   private object Skipped
       extends RuntimeException("skipped: a sibling task failed", null, false, false)
 
-  /** A forked task. [[join]] waits for it and returns its value or
-    * rethrows its own exception. */
-  final class Fork[A] private[JobScope] (f: Future[A]) {
-    def join(): A =
+  /** A forked task. [[join]] waits for it (cancelling, while it runs, any
+    * job a task starts after the scope has failed) and returns its value or
+    * rethrows its own exception. A joined task is dropped from the scope,
+    * so a long-lived scope does not keep every result reachable. */
+  final class Fork[A] private[JobScope] (scope: JobScope, f: Future[A]) {
+    def join(): A = {
+      scope.await(f)
+      scope.forks.remove(f)
       try f.get()
       catch { case e: ExecutionException => throw e.getCause }
+    }
   }
+
+  /** Runs `a` and `b` side by side in one scope and returns both results;
+    * see [[run]] for the failure contract. */
+  def both[A, B](sc: SparkContext)(a: => A, b: => B): (A, B) =
+    run(sc) { scope =>
+      val pool = scope.pool(2)
+      val fa = scope.fork(pool)(a)
+      val fb = scope.fork(pool)(b)
+      (fa.join(), fb.join())
+    }
 
   /** Runs `body` with a fresh scope on the calling thread; see [[JobScope]]. */
   def run[A](sc: SparkContext)(body: JobScope => A): A = {
