@@ -11,8 +11,37 @@ import graft.testkit.FileGenerator
   * plus the compaction workload mirroring the reference's bench harness
   * (integration-tests/src/bin/bench.rs:87-92): fragment lineitem into small
   * data files + pos/eq delete files, run the full MOR compaction, report
-  * wall-clock. Prints ONE JSON line. */
+  * wall-clock. Prints ONE JSON line ([[record]]); the per-query times go
+  * to `bench_out.json`. */
 object Bench {
+  /** A bench line's family, for the record's per-family totals. */
+  private[graft] def family(line: String): String =
+    if (line.startsWith("compaction")) "compaction"
+    else if (line.startsWith("skew_")) "skew"
+    else line.head match {
+      case 'q' => "q"; case 'd' | 'i' => "d_i"; case 's' => "s"
+      case 't' | 'b' => "t_b"; case 'm' => "m"; case 'p' => "p"; case 'g' => "g"
+      case _ => "other"
+    }
+
+  /** The final stdout record: `value` is the sum of the first runs (the
+    * figure every earlier round reported), `value_best` the sum of the
+    * best-of-2 runs, then per-family totals of each, the five slowest
+    * best-of lines and `detail` (`,"key":{...}` objects). Its length does
+    * not grow with the query count. */
+  private[graft] def record(first: collection.Map[String, Double],
+      best: collection.Map[String, Double], detail: String, sf: String): String = {
+    def num(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def obj(kv: Seq[(String, Double)]) =
+      kv.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
+    def families(m: collection.Map[String, Double]) =
+      obj(m.toSeq.groupMapReduce(e => family(e._1))(_._2)(_ + _).toSeq.sorted)
+    s"""{"metric":"total","value":${first.values.sum},"unit":"sec",""" +
+      s""""value_best":${best.values.sum},"n_queries":${first.size},""" +
+      s""""families":${families(first)},"families_best":${families(best)},""" +
+      s""""slowest_best":${obj(best.toSeq.sortBy(-_._2).take(5))}$detail,"sf":"$sf"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -196,32 +225,20 @@ object Bench {
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qb = bestRun.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // value stays the sum of FIRST runs — comparable with r1-r4 files;
-    // value_best is the noise-immune line future rounds adjudicate on
-    val total = results.values.sum
-    val totalBest = bestRun.values.sum
     val load = s""""load":{"start":$loadStart,"end":${loadavg()},""" +
       s""""test_sweep_min_ago":$sweepAge}"""
     val detail = compactionDetail.map("," + _).getOrElse("") +
       skewDetail.map("," + _).getOrElse("") + "," + load
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_best":$totalBest,"queries":$qs,"queries_best":$qb$detail,"sf":"$sfDir"}"""
-    // Short summary first (headline totals + slowest lines survive even a
-    // few-hundred-char tail capture) ...
-    val slowest = bestRun.toSeq.sortBy(-_._2).take(5)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    println(s"""{"metric":"summary","value":$total,"unit":"sec","value_best":$totalBest,"n_queries":${results.size},"slowest_best":$slowest$detail,"sf":"$sfDir"}""")
-    // ... then the COMPLETE machine-readable record as the LAST stdout
-    // line (rounds 10-11 printed it second-to-last and the driver's
-    // bounded stdout tail truncated it mid-map -> "parsed": null, an
-    // empty PERF file, and an unadjudicable round). Belt and braces: the
-    // same line is mirrored to bench_out.json next to the build, so even
-    // a truncated stdout capture has a complete copy on disk.
+    // the complete per-query record goes to bench_out.json next to the
+    // build; stdout's LAST line is the bounded record (a capture that
+    // keeps only the tail of stdout still gets it whole)
     scala.util.Try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-        (fullLine + "\n").getBytes("UTF-8"))
+        (s"""{"metric":"total","value":${results.values.sum},"unit":"sec",""" +
+          s""""value_best":${bestRun.values.sum},"queries":$qs,""" +
+          s""""queries_best":$qb$detail,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
     }
-    println(fullLine)
+    println(record(results, bestRun, detail, sfDir))
     spark.stop()
   }
 }

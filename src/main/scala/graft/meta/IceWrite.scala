@@ -44,24 +44,14 @@ object IceWrite {
       partitionSpec, sortOrder, maxRecordsPerFile = rowsEstimate,
       parquet = graft.exec.ParquetWriteConfig.fromProperties(extraProperties))
     require(written.nonEmpty || df.isEmpty, s"create of $name wrote no files")
-    var rowCursor = 0L
-    val stamped = written.map { f =>
-      val withSeq = f.copy(content = FileContent.Data, sequenceNumber = 1L)
-      if (formatVersion < 3) withSeq
-      else { val assigned = withSeq.copy(firstRowId = Some(rowCursor))
-             rowCursor += f.recordCount; assigned }
-    }
-    val snap = Snapshot(
-      snapshotId = 1L, parentId = None, sequenceNumber = 1L,
-      timestampMs = System.currentTimeMillis(), manifest = stamped,
-      summary = TableMetadata.computedSummary(Nil, stamped) + ("operation" -> "append"))
     catalog.createTable(TableMetadata(
       name = name, location = "", formatVersion = formatVersion,
       schema = schema, lastColumnId = schema.map(_.id).foldLeft(0)(math.max),
       partitionSpec = partitionSpec, sortOrder = sortOrder,
-      currentSnapshotId = Some(1L), refs = Map("main" -> 1L),
-      snapshots = Seq(snap), lastSequenceNumber = 1L, nextRowId = rowCursor,
-      properties = extraProperties))
+      properties = extraProperties)
+      .withSnapshot(None,
+        written.map(_.copy(content = FileContent.Data, sequenceNumber = 1L)),
+        "append", 1L))
   }
 
   /** Appends rows as new data files (new snapshot, fresh sequence number).

@@ -192,6 +192,240 @@ object IcebergRestCommit {
     }
   }
 
+  /** The manifests and manifest list one commit attempt wrote. */
+  private[meta] final case class Staged(newSnapId: Long, newSeq: Long,
+      listPath: String, paths: Seq[String], tag: String)
+
+  /** Writes the manifests and the manifest list of one commit on top of
+    * snapshot `headId` of the loaded spec metadata `m`: the head's
+    * manifests carried plus the change (append/delta), or the head
+    * rewritten without `removedPaths` plus the change (replace). */
+  private[meta] def stageManifestList(m: JValue, headId: Option[Long],
+      stagingDir: String, dataFiles: Seq[AddedFile],
+      deleteFiles: Seq[AddedDeleteFile], removedPaths: Set[String],
+      useStartingSequenceNumber: Boolean): Staged = {
+    val fv = lng(m \ "format-version").toInt
+    val lastSeq = lng(m \ "last-sequence-number")
+    val snapIds = arr(m \ "snapshots").map(s => lng(s \ "snapshot-id"))
+    val newSnapId = (snapIds :+ 0L).max + 1
+    val newSeq = lastSeq + 1
+    val headSeq = headId.flatMap(id => arr(m \ "snapshots")
+      .find(s => lng(s \ "snapshot-id") == id).map(s => lng(s \ "sequence-number")))
+      .getOrElse(0L)
+    // the sequence stamped on added DATA files: a replace under the
+    // starting-sequence rule pins them to the head it rewrote
+    val addedDataSeq =
+      if (removedPaths.nonEmpty && useStartingSequenceNumber) headSeq else newSeq
+
+    // ---- the table's schema + default spec, in manifest layout
+    val schemaJ = arr(m \ "schemas").find(s =>
+      lng(s \ "schema-id") == lng(m \ "current-schema-id")).getOrElse(
+      sys.error("no current schema in loaded metadata"))
+    val schemaFields = arr(schemaJ \ "fields").map { f =>
+      SchemaField(lng(f \ "id").toInt, str(f \ "name"),
+        IcebergImport.ddlOf(f \ "type"), nullable = (f \ "required") != JBool(true))
+    }
+    val byId = schemaFields.map(f => f.id -> f).toMap
+    val defaultSpecId = lng(m \ "default-spec-id").toInt
+    val specJ = arr(m \ "partition-specs").find(s =>
+      lng(s \ "spec-id") == defaultSpecId).getOrElse(
+      sys.error("no default partition spec in loaded metadata"))
+    val specFields = arr(specJ \ "fields").map { f =>
+      val src = byId(lng(f \ "source-id").toInt)
+      (PartitionField(src.name, str(f \ "transform")), lng(f \ "field-id").toInt)
+    }
+    val clientMeta = TableMetadata("rest-client", "", schema = schemaFields,
+      partitionSpec = specFields.map(_._1))
+    val mSchema = new Schema.Parser().parse(IcebergExport.manifestSchemaJsonFor(
+      clientMeta, specFields.map(_._1), specFields.toMap, fv))
+    val dfSchema = mSchema.getField("data_file").schema()
+
+    def partitionRecord(values: Map[String, String]): GenericData.Record = {
+      val part = new GenericData.Record(dfSchema.getField("partition").schema())
+      specFields.foreach { case (p, _) =>
+        part.put(IcebergExport.partFieldName(p),
+          IcebergExport.partitionValue(clientMeta, p, values.get(p.column)))
+      }
+      part
+    }
+    def entry(status: Int, seq: Long, df: GenericData.Record): GenericData.Record = {
+      val e = new GenericData.Record(mSchema)
+      e.put("status", Integer.valueOf(status))
+      e.put("snapshot_id", java.lang.Long.valueOf(newSnapId))
+      e.put("sequence_number", java.lang.Long.valueOf(seq))
+      e.put("file_sequence_number", java.lang.Long.valueOf(seq))
+      e.put("data_file", df)
+      e
+    }
+
+    // UUID-named like any Iceberg writer's metadata files: two clients
+    // racing the same head would otherwise write the SAME staging path
+    // (both compute the same next snapshot id) and tear each other's avro
+    val tag = java.util.UUID.randomUUID().toString.take(12)
+
+    // ---- 2a. added DATA entries (ADDED status, explicit sequences)
+    val addedDataRecords = dataFiles.map { f =>
+      val df = new GenericData.Record(dfSchema)
+      df.put("content", Integer.valueOf(0))
+      df.put("file_path", f.path)
+      df.put("file_format", "PARQUET")
+      df.put("partition", partitionRecord(f.partitionValues))
+      df.put("record_count", java.lang.Long.valueOf(f.recordCount))
+      df.put("file_size_in_bytes", java.lang.Long.valueOf(f.sizeInBytes))
+      if (fv >= 3 && f.firstRowId.nonEmpty)
+        df.put("first_row_id", java.lang.Long.valueOf(f.firstRowId.get))
+      entry(1, addedDataSeq, df)
+    }
+    // ---- 2b. added DELETE entries (row-delta shape)
+    val addedDeleteRecords = deleteFiles.map { d =>
+      val df = new GenericData.Record(dfSchema)
+      df.put("content", Integer.valueOf(if (d.content == "equality") 2 else 1))
+      df.put("file_path", d.path)
+      df.put("file_format", if (d.content == "dv") "PUFFIN" else "PARQUET")
+      df.put("partition", partitionRecord(d.partitionValues))
+      df.put("record_count", java.lang.Long.valueOf(d.recordCount))
+      df.put("file_size_in_bytes", java.lang.Long.valueOf(d.sizeInBytes))
+      if (d.equalityFieldIds.nonEmpty) {
+        val l = new java.util.ArrayList[Integer]()
+        d.equalityFieldIds.foreach(i => l.add(Integer.valueOf(i)))
+        df.put("equality_ids", l)
+      }
+      if (d.content == "dv") {
+        require(fv >= 3, "deletion vectors need a format-version 3 table")
+        df.put("referenced_data_file", d.referencedDataFile.get)
+        df.put("content_offset", java.lang.Long.valueOf(d.contentOffset.get))
+        df.put("content_size_in_bytes",
+          java.lang.Long.valueOf(d.contentSizeInBytes.get))
+      }
+      entry(1, newSeq, df)
+    }
+
+    // ---- 2c. survivors (replace shape): every head manifest's live
+    // entries minus the removed paths, converted field-by-field into
+    // OUR manifest schema as EXISTING entries with their own sequences
+    val headList: Option[String] = headId.map { id =>
+      arr(m \ "snapshots").find(s => lng(s \ "snapshot-id") == id)
+        .map(s => str(s \ "manifest-list")).getOrElse(
+          sys.error(s"head snapshot $id missing from loaded metadata"))
+    }
+    val (survivorData, survivorDeletes, removedSeen) =
+      if (removedPaths.isEmpty) (Nil, Nil, Set.empty[String])
+      else {
+        val seen = scala.collection.mutable.Set.empty[String]
+        val dataB = Seq.newBuilder[GenericData.Record]
+        val delB = Seq.newBuilder[GenericData.Record]
+        headList.toSeq.foreach { listPath =>
+          val (listEntries, _) = IcebergExport.readAvro(listPath)
+          listEntries.foreach { le =>
+            val mSpecId = le.get("partition_spec_id").asInstanceOf[Int]
+            require(mSpecId == 0 || mSpecId == defaultSpecId,
+              s"replaceFiles: head manifest under historical partition spec " +
+                s"$mSpecId — rewriting spec-evolved tables stays with the " +
+                "serving engine")
+            val listSeq = le.get("sequence_number").asInstanceOf[Long]
+            IcebergExport.readAvro(le.get("manifest_path").toString)._1.foreach { r =>
+              if (r.get("status").asInstanceOf[Int] != 2) {
+                val df = r.get("data_file").asInstanceOf[GenericRecord]
+                val path = df.get("file_path").toString
+                if (removedPaths.contains(path)) seen += path
+                else {
+                  val seq = Option(r.get("sequence_number"))
+                    .map(_.asInstanceOf[Long]).getOrElse(listSeq)
+                  val conv = entry(0, seq,
+                    convert(df, dfSchema).asInstanceOf[GenericData.Record])
+                  // EXISTING entries keep the snapshot that ADDED them
+                  Option(r.get("snapshot_id")).foreach(id => conv.put("snapshot_id", id))
+                  if (df.get("content").asInstanceOf[Int] == 0) dataB += conv
+                  else delB += conv
+                }
+              }
+            }
+          }
+        }
+        (dataB.result(), delB.result(), seen.toSet)
+      }
+    if (removedPaths.nonEmpty) {
+      val missing = removedPaths -- removedSeen
+      require(missing.isEmpty,
+        s"replaceFiles: not in the current snapshot: ${missing.take(3).mkString(", ")}")
+    }
+
+    // ---- 2d. the new manifests + manifest list
+    val listSchema = new Schema.Parser().parse(
+      IcebergExport.manifestListSchemaJsonV(fv))
+    def listEntry(mPath: String, mLen: Long, content: Int,
+        records: Seq[GenericData.Record]): GenericData.Record = {
+      val seqs = records.map(_.get("sequence_number").asInstanceOf[java.lang.Long].longValue)
+      val added = records.count(_.get("status").asInstanceOf[Integer].intValue == 1)
+      val rows = records.map(_.get("data_file").asInstanceOf[GenericRecord]
+        .get("record_count").asInstanceOf[java.lang.Long].longValue)
+      val addedRows = records.zip(rows).collect {
+        case (r, n) if r.get("status").asInstanceOf[Integer].intValue == 1 => n
+      }
+      val le = new GenericData.Record(listSchema)
+      le.put("manifest_path", mPath)
+      le.put("manifest_length", java.lang.Long.valueOf(mLen))
+      le.put("partition_spec_id", Integer.valueOf(defaultSpecId))
+      le.put("content", Integer.valueOf(content))
+      le.put("sequence_number", java.lang.Long.valueOf(newSeq))
+      le.put("min_sequence_number",
+        java.lang.Long.valueOf(seqs.foldLeft(newSeq)(math.min)))
+      le.put("added_snapshot_id", java.lang.Long.valueOf(newSnapId))
+      le.put("added_files_count", Integer.valueOf(added))
+      le.put("existing_files_count", Integer.valueOf(records.size - added))
+      le.put("deleted_files_count", Integer.valueOf(0))
+      le.put("added_rows_count", java.lang.Long.valueOf(addedRows.sum))
+      le.put("existing_rows_count", java.lang.Long.valueOf(rows.sum - addedRows.sum))
+      le.put("deleted_rows_count", java.lang.Long.valueOf(0L))
+      le
+    }
+    def writeManifest(name: String, content: Int,
+        records: Seq[GenericData.Record]): (String, GenericData.Record) = {
+      val mPath = MetaIO.join(stagingDir, s"client-$tag-$name.avro")
+      val mLen = IcebergExport.avroWrite(mPath, mSchema, Map(
+        "schema" -> JsonMethods.compact(JsonMethods.render(schemaJ)),
+        "partition-spec" -> JsonMethods.compact(JsonMethods.render(specJ \ "fields")),
+        "partition-spec-id" -> defaultSpecId.toString,
+        "format-version" -> fv.toString,
+        "content" -> (if (content == 0) "data" else "deletes")), records)
+      (mPath, listEntry(mPath, mLen, content, records))
+    }
+
+    val newManifests = Seq.newBuilder[(String, GenericData.Record)]
+    if (removedPaths.isEmpty) {
+      if (addedDataRecords.nonEmpty)
+        newManifests += writeManifest("m0", 0, addedDataRecords)
+      if (addedDeleteRecords.nonEmpty)
+        newManifests += writeManifest("d0", 1, addedDeleteRecords)
+    } else {
+      // with removals the list references ONLY the rewritten manifests:
+      // survivors + additions (a DV-replacing delta adds delete records
+      // here too — the superseded DV is simply not carried)
+      if ((survivorData ++ addedDataRecords).nonEmpty)
+        newManifests += writeManifest("m0", 0, survivorData ++ addedDataRecords)
+      if ((survivorDeletes ++ addedDeleteRecords).nonEmpty)
+        newManifests += writeManifest("d0", 1, survivorDeletes ++ addedDeleteRecords)
+    }
+    val written = newManifests.result()
+
+    // carried head list entries (append/delta only — a replace rewrote
+    // the head into the new manifests above)
+    val carried: Seq[GenericData.Record] =
+      if (removedPaths.nonEmpty) Nil
+      else headList.toSeq.flatMap { path =>
+        IcebergExport.readAvro(path)._1.map(old =>
+          convert(old, listSchema).asInstanceOf[GenericData.Record])
+      }
+    val listPath = MetaIO.join(stagingDir, s"client-snap-$tag.avro")
+    IcebergExport.avroWrite(listPath, listSchema, Map(
+      "format-version" -> fv.toString,
+      "snapshot-id" -> newSnapId.toString,
+      "sequence-number" -> newSeq.toString,
+      "parent-snapshot-id" -> headId.map(_.toString).getOrElse("null")),
+      carried ++ written.map(_._2))
+    Staged(newSnapId, newSeq, listPath, written.map(_._1) :+ listPath, tag)
+  }
+
   // one optimistic-concurrency commit loop for all three shapes
   private def commitLoop(uri: String, namespace: Seq[String], table: String,
       stagingDir: String, authToken: Option[String], prefix: Option[String],
@@ -213,231 +447,15 @@ object IcebergRestCommit {
           s"load $route failed: HTTP ${load.statusCode()} ${load.body().take(300)}")
         JsonMethods.parse(load.body()) \ "metadata"
       }
-      val fv = lng(m \ "format-version").toInt
       val uuid = str(m \ "table-uuid")
-      val lastSeq = lng(m \ "last-sequence-number")
       val curId = (m \ "current-snapshot-id") match {
         case JNothing | JNull => None
         case v => Some(lng(v)).filter(_ != -1L)
       }
-      val snapIds = arr(m \ "snapshots").map(s => lng(s \ "snapshot-id"))
-      val newSnapId = (snapIds :+ 0L).max + 1
-      val newSeq = lastSeq + 1
-      val headSeq = curId.flatMap(id => arr(m \ "snapshots")
-        .find(s => lng(s \ "snapshot-id") == id).map(s => lng(s \ "sequence-number")))
-        .getOrElse(0L)
-      // the sequence stamped on added DATA files: a replace under the
-      // starting-sequence rule pins them to the head it rewrote
-      val addedDataSeq =
-        if (removedPaths.nonEmpty && useStartingSequenceNumber) headSeq else newSeq
-
-      // ---- the table's schema + default spec, in manifest layout
-      val schemaJ = arr(m \ "schemas").find(s =>
-        lng(s \ "schema-id") == lng(m \ "current-schema-id")).getOrElse(
-        sys.error("no current schema in loaded metadata"))
-      val schemaFields = arr(schemaJ \ "fields").map { f =>
-        SchemaField(lng(f \ "id").toInt, str(f \ "name"),
-          IcebergImport.ddlOf(f \ "type"), nullable = (f \ "required") != JBool(true))
-      }
-      val byId = schemaFields.map(f => f.id -> f).toMap
-      val defaultSpecId = lng(m \ "default-spec-id").toInt
-      val specJ = arr(m \ "partition-specs").find(s =>
-        lng(s \ "spec-id") == defaultSpecId).getOrElse(
-        sys.error("no default partition spec in loaded metadata"))
-      val specFields = arr(specJ \ "fields").map { f =>
-        val src = byId(lng(f \ "source-id").toInt)
-        (PartitionField(src.name, str(f \ "transform")), lng(f \ "field-id").toInt)
-      }
-      val clientMeta = TableMetadata("rest-client", "", schema = schemaFields,
-        partitionSpec = specFields.map(_._1))
-      val mSchema = new Schema.Parser().parse(IcebergExport.manifestSchemaJsonFor(
-        clientMeta, specFields.map(_._1), specFields.toMap, fv))
-      val dfSchema = mSchema.getField("data_file").schema()
-
-      def partitionRecord(values: Map[String, String]): GenericData.Record = {
-        val part = new GenericData.Record(dfSchema.getField("partition").schema())
-        specFields.foreach { case (p, _) =>
-          part.put(IcebergExport.partFieldName(p),
-            IcebergExport.partitionValue(clientMeta, p, values.get(p.column)))
-        }
-        part
-      }
-      def entry(status: Int, seq: Long, df: GenericData.Record): GenericData.Record = {
-        val e = new GenericData.Record(mSchema)
-        e.put("status", Integer.valueOf(status))
-        e.put("snapshot_id", java.lang.Long.valueOf(newSnapId))
-        e.put("sequence_number", java.lang.Long.valueOf(seq))
-        e.put("file_sequence_number", java.lang.Long.valueOf(seq))
-        e.put("data_file", df)
-        e
-      }
-
-      // UUID-named like any Iceberg writer's metadata files: two clients
-      // racing the same head would otherwise write the SAME staging path
-      // (both compute the same next snapshot id) and tear each other's avro
-      val tag = java.util.UUID.randomUUID().toString.take(12)
-
-      // ---- 2a. added DATA entries (ADDED status, explicit sequences)
-      val addedDataRecords = dataFiles.map { f =>
-        val df = new GenericData.Record(dfSchema)
-        df.put("content", Integer.valueOf(0))
-        df.put("file_path", f.path)
-        df.put("file_format", "PARQUET")
-        df.put("partition", partitionRecord(f.partitionValues))
-        df.put("record_count", java.lang.Long.valueOf(f.recordCount))
-        df.put("file_size_in_bytes", java.lang.Long.valueOf(f.sizeInBytes))
-        if (fv >= 3 && f.firstRowId.nonEmpty)
-          df.put("first_row_id", java.lang.Long.valueOf(f.firstRowId.get))
-        entry(1, addedDataSeq, df)
-      }
-      // ---- 2b. added DELETE entries (row-delta shape)
-      val addedDeleteRecords = deleteFiles.map { d =>
-        val df = new GenericData.Record(dfSchema)
-        df.put("content", Integer.valueOf(if (d.content == "equality") 2 else 1))
-        df.put("file_path", d.path)
-        df.put("file_format", if (d.content == "dv") "PUFFIN" else "PARQUET")
-        df.put("partition", partitionRecord(d.partitionValues))
-        df.put("record_count", java.lang.Long.valueOf(d.recordCount))
-        df.put("file_size_in_bytes", java.lang.Long.valueOf(d.sizeInBytes))
-        if (d.equalityFieldIds.nonEmpty) {
-          val l = new java.util.ArrayList[Integer]()
-          d.equalityFieldIds.foreach(i => l.add(Integer.valueOf(i)))
-          df.put("equality_ids", l)
-        }
-        if (d.content == "dv") {
-          require(fv >= 3, "deletion vectors need a format-version 3 table")
-          df.put("referenced_data_file", d.referencedDataFile.get)
-          df.put("content_offset", java.lang.Long.valueOf(d.contentOffset.get))
-          df.put("content_size_in_bytes",
-            java.lang.Long.valueOf(d.contentSizeInBytes.get))
-        }
-        entry(1, newSeq, df)
-      }
-
-      // ---- 2c. survivors (replace shape): every head manifest's live
-      // entries minus the removed paths, converted field-by-field into
-      // OUR manifest schema as EXISTING entries with their own sequences
-      val headList: Option[String] = curId.map { id =>
-        arr(m \ "snapshots").find(s => lng(s \ "snapshot-id") == id)
-          .map(s => str(s \ "manifest-list")).getOrElse(
-            sys.error(s"current snapshot $id missing from loaded metadata"))
-      }
-      val (survivorData, survivorDeletes, removedSeen) =
-        if (removedPaths.isEmpty) (Nil, Nil, Set.empty[String])
-        else {
-          val seen = scala.collection.mutable.Set.empty[String]
-          val dataB = Seq.newBuilder[GenericData.Record]
-          val delB = Seq.newBuilder[GenericData.Record]
-          headList.toSeq.foreach { listPath =>
-            val (listEntries, _) = IcebergExport.readAvro(listPath)
-            listEntries.foreach { le =>
-              val mSpecId = le.get("partition_spec_id").asInstanceOf[Int]
-              require(mSpecId == 0 || mSpecId == defaultSpecId,
-                s"replaceFiles: head manifest under historical partition spec " +
-                  s"$mSpecId — rewriting spec-evolved tables stays with the " +
-                  "serving engine")
-              val listSeq = le.get("sequence_number").asInstanceOf[Long]
-              IcebergExport.readAvro(le.get("manifest_path").toString)._1.foreach { r =>
-                if (r.get("status").asInstanceOf[Int] != 2) {
-                  val df = r.get("data_file").asInstanceOf[GenericRecord]
-                  val path = df.get("file_path").toString
-                  if (removedPaths.contains(path)) seen += path
-                  else {
-                    val seq = Option(r.get("sequence_number"))
-                      .map(_.asInstanceOf[Long]).getOrElse(listSeq)
-                    val conv = entry(0, seq,
-                      convert(df, dfSchema).asInstanceOf[GenericData.Record])
-                    // EXISTING entries keep the snapshot that ADDED them
-                    Option(r.get("snapshot_id")).foreach(id => conv.put("snapshot_id", id))
-                    if (df.get("content").asInstanceOf[Int] == 0) dataB += conv
-                    else delB += conv
-                  }
-                }
-              }
-            }
-          }
-          (dataB.result(), delB.result(), seen.toSet)
-        }
-      if (removedPaths.nonEmpty) {
-        val missing = removedPaths -- removedSeen
-        require(missing.isEmpty,
-          s"replaceFiles: not in the current snapshot: ${missing.take(3).mkString(", ")}")
-      }
-
-      // ---- 2d. the new manifests + manifest list
-      val listSchema = new Schema.Parser().parse(
-        IcebergExport.manifestListSchemaJsonV(fv))
-      def listEntry(mPath: String, mLen: Long, content: Int,
-          records: Seq[GenericData.Record]): GenericData.Record = {
-        val seqs = records.map(_.get("sequence_number").asInstanceOf[java.lang.Long].longValue)
-        val added = records.count(_.get("status").asInstanceOf[Integer].intValue == 1)
-        val rows = records.map(_.get("data_file").asInstanceOf[GenericRecord]
-          .get("record_count").asInstanceOf[java.lang.Long].longValue)
-        val addedRows = records.zip(rows).collect {
-          case (r, n) if r.get("status").asInstanceOf[Integer].intValue == 1 => n
-        }
-        val le = new GenericData.Record(listSchema)
-        le.put("manifest_path", mPath)
-        le.put("manifest_length", java.lang.Long.valueOf(mLen))
-        le.put("partition_spec_id", Integer.valueOf(defaultSpecId))
-        le.put("content", Integer.valueOf(content))
-        le.put("sequence_number", java.lang.Long.valueOf(newSeq))
-        le.put("min_sequence_number",
-          java.lang.Long.valueOf(seqs.foldLeft(newSeq)(math.min)))
-        le.put("added_snapshot_id", java.lang.Long.valueOf(newSnapId))
-        le.put("added_files_count", Integer.valueOf(added))
-        le.put("existing_files_count", Integer.valueOf(records.size - added))
-        le.put("deleted_files_count", Integer.valueOf(0))
-        le.put("added_rows_count", java.lang.Long.valueOf(addedRows.sum))
-        le.put("existing_rows_count", java.lang.Long.valueOf(rows.sum - addedRows.sum))
-        le.put("deleted_rows_count", java.lang.Long.valueOf(0L))
-        le
-      }
-      def writeManifest(name: String, content: Int,
-          records: Seq[GenericData.Record]): (String, GenericData.Record) = {
-        val mPath = MetaIO.join(stagingDir, s"client-$tag-$name.avro")
-        val mLen = IcebergExport.avroWrite(mPath, mSchema, Map(
-          "schema" -> JsonMethods.compact(JsonMethods.render(schemaJ)),
-          "partition-spec" -> JsonMethods.compact(JsonMethods.render(specJ \ "fields")),
-          "partition-spec-id" -> defaultSpecId.toString,
-          "format-version" -> fv.toString,
-          "content" -> (if (content == 0) "data" else "deletes")), records)
-        (mPath, listEntry(mPath, mLen, content, records))
-      }
-
-      val newManifests = Seq.newBuilder[(String, GenericData.Record)]
-      if (removedPaths.isEmpty) {
-        if (addedDataRecords.nonEmpty)
-          newManifests += writeManifest("m0", 0, addedDataRecords)
-        if (addedDeleteRecords.nonEmpty)
-          newManifests += writeManifest("d0", 1, addedDeleteRecords)
-      } else {
-        // with removals the list references ONLY the rewritten manifests:
-        // survivors + additions (a DV-replacing delta adds delete records
-        // here too — the superseded DV is simply not carried)
-        if ((survivorData ++ addedDataRecords).nonEmpty)
-          newManifests += writeManifest("m0", 0, survivorData ++ addedDataRecords)
-        if ((survivorDeletes ++ addedDeleteRecords).nonEmpty)
-          newManifests += writeManifest("d0", 1, survivorDeletes ++ addedDeleteRecords)
-      }
-      val written = newManifests.result()
-
-      // carried head list entries (append/delta only — a replace rewrote
-      // the head into the new manifests above)
-      val carried: Seq[GenericData.Record] =
-        if (removedPaths.nonEmpty) Nil
-        else headList.toSeq.flatMap { path =>
-          IcebergExport.readAvro(path)._1.map(old =>
-            convert(old, listSchema).asInstanceOf[GenericData.Record])
-        }
-      val listPath = MetaIO.join(stagingDir, s"client-snap-$tag.avro")
-      IcebergExport.avroWrite(listPath, listSchema, Map(
-        "format-version" -> fv.toString,
-        "snapshot-id" -> newSnapId.toString,
-        "sequence-number" -> newSeq.toString,
-        "parent-snapshot-id" -> curId.map(_.toString).getOrElse("null")),
-        carried ++ written.map(_._2))
-      val stagedPaths = written.map(_._1) :+ listPath
+      // ---- 2. the manifests + manifest list on shared storage
+      val Staged(newSnapId, newSeq, listPath, stagedPaths, tag) =
+        stageManifestList(m, curId, stagingDir, dataFiles, deleteFiles,
+          removedPaths, useStartingSequenceNumber)
 
       // ---- 3. commit. The summary carries a per-attempt marker: servers
       // that re-render metadata (graft re-exports its own manifest lists)

@@ -61,6 +61,22 @@ import org.json4s.jackson.JsonMethods
   * [[IcebergRestCommit]] are the in-repo clients, and the round trip
   * through real sockets is the contract test. */
 object IcebergRestServe {
+  /** One CommitTableRequest's updates, parsed but not yet applied. */
+  private final case class CommitUpdates(
+      properties: Map[String, String],
+      addSnap: Option[(Long, String, Map[String, String])] = None, // id, list, summary
+      setRefs: Seq[(String, String, Long)] = Nil, // name, branch|tag, snapshot id
+      removeRefs: Seq[String] = Nil,
+      addSchema: Option[(JValue, Option[Int])] = None, // schema, last-column-id
+      setSchemaId: Option[Long] = None,
+      addSpec: Option[JValue] = None,
+      setSpecId: Option[Long] = None,
+      removeSnaps: Seq[Long] = Nil,
+      setStats: Option[(Long, String)] = None, // snapshot id, statistics path
+      removeStats: Seq[Long] = Nil,
+      addSortOrder: Option[JValue] = None,
+      setSortOrderId: Option[Long] = None)
+
   /** Target data files per preplan shard: bounds every `plan` response
     * (rendered tasks AND server work per request) however large the
     * manifest — at 10^6 tracked files preplan answers ~1000 tasks a
@@ -718,6 +734,8 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
   }
 
   import IcebergImport.{lng, str}
+  private def optLng(j: JValue): Option[Long] =
+    j match { case JNothing | JNull => None; case v => Some(lng(v)) }
 
   /** `POST .../namespaces/{ns}/tables`: the spec CreateTableRequest. The
     * request's schema / partition-spec / write-order / properties are
@@ -1044,9 +1062,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
         val (sql, dialect) = reps.find(_._2.equalsIgnoreCase("spark"))
           .getOrElse(reps.head)
         val nextV = Views.versions(meta).map(_._1).max + 1
-        val proposedId = (vv \ "version-id") match {
-          case JNothing | JNull => None; case v => Some(lng(v))
-        }
+        val proposedId = optLng(vv \ "version-id")
         setCurrent.foreach(id =>
           if (id != -1L && !proposedId.contains(id) && id != nextV.toLong)
             return err(s"set-current-view-version $id does not name the " +
@@ -1226,12 +1242,11 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     * call prunes + renders only its slice. */
   private def preplanTableScan(table: String, body: String): (Int, String) = {
     val meta = catalog.loadTable(table)
-    val snapId = ((if (body.trim.isEmpty) JNothing
-                   else JsonMethods.parse(body) \ "snapshot-id") match {
-      case JNothing | JNull => meta.currentSnapshotId
-      case v => Some(lng(v))
-    }).getOrElse(return 200 -> JsonMethods.compact(JsonMethods.render(
-      ("plan-status" -> "completed") ~ ("plan-tasks" -> JArray(Nil)))))
+    val snapId = optLng(if (body.trim.isEmpty) JNothing
+                        else JsonMethods.parse(body) \ "snapshot-id")
+      .orElse(meta.currentSnapshotId)
+      .getOrElse(return 200 -> JsonMethods.compact(JsonMethods.render(
+        ("plan-status" -> "completed") ~ ("plan-tasks" -> JArray(Nil)))))
     val snap = meta.snapshotById(snapId).getOrElse(
       return err(s"no snapshot $snapId", 404))
     val dataFiles = snap.manifest.count(_.content == FileContent.Data)
@@ -1270,10 +1285,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
           case _ => return err(s"malformed plan-task $s", 400)
         }
       case JString(other) => return err(s"unknown plan-task $other", 400)
-      case _ => (req \ "snapshot-id") match {
-        case JNothing | JNull => meta.currentSnapshotId
-        case v => Some(lng(v))
-      }
+      case _ => optLng(req \ "snapshot-id").orElse(meta.currentSnapshotId)
     }
     val snap = snapIdOpt match {
       case None =>
@@ -1793,36 +1805,43 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     }
   }
 
+  /** A refusal in the wire shape the endpoints answer. */
+  private def refuse(msg: String, code: Int) = Left(err(msg, code))
+
   /** Validates one CommitTableRequest against the LIVE table state and
     * builds `(base, updated)` WITHOUT committing — shared by the
     * single-table commit endpoint and [[commitTransaction]], so a
-    * transaction applies exactly the semantics of N single commits. */
+    * transaction applies exactly the semantics of N single commits.
+    * Three steps: the requirements, the update parse, the apply. */
   private def buildCommit(table: String, req: JValue,
       stagedBase: Option[TableMetadata] = None)
       : Either[(Int, String), (TableMetadata, TableMetadata)] = {
-    // shadows the class-level err: inside the builder every refusal is a
-    // Left of the same wire shape the endpoints answer
-    def err(msg: String, code: Int) = Left(IcebergRestServe.this.err(msg, code))
     // a STAGED first commit validates against the staged metadata — the
     // table has no catalog entry yet ([[commitStagedTable]])
     val meta = stagedBase.getOrElse(catalog.loadTable(table))
+    for {
+      _ <- checkRequirements(meta, req)
+      updates <- parseUpdates(meta, req)
+      updated <- applyUpdates(meta, updates)
+    } yield (meta, updated)
+  }
 
-    // ---- requirements: each validates against the LIVE state; failures
-    // answer 409, the spec's "reload and retry" signal
+  /** Requirements: each validates against the LIVE state; failures
+    * answer 409, the spec's "reload and retry" signal. */
+  private def checkRequirements(meta: TableMetadata, req: JValue)
+      : Either[(Int, String), Unit] = {
     val reqList = (req \ "requirements") match {
       case JArray(xs) => xs; case JNothing | JNull => Nil
-      case o => return err(s"bad requirements: $o", 400)
+      case o => return refuse(s"bad requirements: $o", 400)
     }
     reqList.foreach { r =>
       (r \ "type") match {
         case JString("assert-ref-snapshot-id") =>
           val ref = str(r \ "ref")
-          val want = (r \ "snapshot-id") match {
-            case JNothing | JNull => None; case v => Some(lng(v))
-          }
+          val want = optLng(r \ "snapshot-id")
           val have = meta.refs.get(ref).orElse(meta.tags.get(ref))
           if (want != have)
-            return err(s"requirement failed: ref $ref is at " +
+            return refuse(s"requirement failed: ref $ref is at " +
               s"${have.getOrElse("absent")}, client expected ${want.getOrElse("absent")}", 409)
         case JString("assert-create") =>
           // the CTAS first commit asserts it is creating the table: by
@@ -1830,7 +1849,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
           // materialized, so the check is that the entry is still the
           // PRISTINE materialization (no snapshot snuck in)
           if (meta.snapshots.nonEmpty || meta.currentSnapshotId.nonEmpty)
-            return err("requirement failed: assert-create against a table " +
+            return refuse("requirement failed: assert-create against a table " +
               "that already has snapshots", 409)
         case JString("assert-table-uuid") =>
           // the STABLE identity every export of this table serves — uuid
@@ -1838,20 +1857,20 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
           // treats table-uuid as immutable, so this is not retryable for
           // conforming clients; answer 409 per the spec's error mapping)
           if (str(r \ "uuid") != meta.stableUuid)
-            return err(s"requirement failed: table uuid is " +
+            return refuse(s"requirement failed: table uuid is " +
               s"${meta.stableUuid}, client expected ${str(r \ "uuid")}", 409)
         // conforming clients attach these with schema/spec/sort changes;
         // this server serves schema-id 0 / spec-id 0 and sort-order 0|1
         case JString("assert-current-schema-id") =>
           if (lng(r \ "current-schema-id") != 0L)
-            return err("requirement failed: current schema-id is 0", 409)
+            return refuse("requirement failed: current schema-id is 0", 409)
         case JString("assert-default-spec-id") =>
           if (lng(r \ "default-spec-id") != 0L)
-            return err("requirement failed: default spec-id is 0", 409)
+            return refuse("requirement failed: default spec-id is 0", 409)
         case JString("assert-default-sort-order-id") =>
           val served = if (meta.sortOrder.nonEmpty) 1L else 0L
           if (lng(r \ "default-sort-order-id") != served)
-            return err(s"requirement failed: default sort-order-id is $served", 409)
+            return refuse(s"requirement failed: default sort-order-id is $served", 409)
         case JString("assert-last-assigned-field-id") =>
           // stale iff the client's value predates ids already assigned
           // (the exported last-column-id can exceed the stored one by
@@ -1859,90 +1878,72 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
           val floor = math.max(meta.lastColumnId,
             meta.schema.map(_.id).foldLeft(0)(math.max)).toLong
           if (lng(r \ "last-assigned-field-id") < floor)
-            return err(s"requirement failed: last-assigned-field-id is at " +
+            return refuse(s"requirement failed: last-assigned-field-id is at " +
               s"least $floor", 409)
-        case JString(t) => return err(s"unsupported requirement: $t", 400)
-        case o => return err(s"bad requirement: $o", 400)
+        case JString(t) => return refuse(s"unsupported requirement: $t", 400)
+        case o => return refuse(s"bad requirement: $o", 400)
       }
     }
+    Right(())
+  }
 
-    // ---- updates
-    var properties = meta.properties
-    var addSnap: Option[(Long, String, Map[String, String])] = None
-    var setRefs: Seq[(String, String, Long)] = Nil
-    var removeRefs: Seq[String] = Nil
-    var addSchema: Option[(JValue, Option[Int])] = None
-    var setSchemaId: Option[Long] = None
-    var addSpec: Option[JValue] = None
-    var setSpecId: Option[Long] = None
-    var removeSnaps: Seq[Long] = Nil
-    var setStats: Option[(Long, String)] = None
-    var removeStats: Seq[Long] = Nil
-    var addSortOrder: Option[JValue] = None
-    var setSortOrderId: Option[Long] = None
+  private def parseUpdates(meta: TableMetadata, req: JValue)
+      : Either[(Int, String), IcebergRestServe.CommitUpdates] = {
     val updList = (req \ "updates") match {
       case JArray(xs) => xs; case JNothing | JNull => Nil
-      case o => return err(s"bad updates: $o", 400)
+      case o => return refuse(s"bad updates: $o", 400)
     }
-    updList.foreach { u =>
+    Right(updList.foldLeft(IcebergRestServe.CommitUpdates(meta.properties)) { (acc, u) =>
       (u \ "action") match {
         case JString("add-schema") =>
-          if (addSchema.nonEmpty) return err("multiple add-schema updates", 400)
-          addSchema = Some(((u \ "schema"),
-            (u \ "last-column-id") match {
-              case JNothing | JNull => None; case v => Some(lng(v).toInt)
-            }))
+          if (acc.addSchema.nonEmpty) return refuse("multiple add-schema updates", 400)
+          acc.copy(addSchema = Some(((u \ "schema"),
+            optLng(u \ "last-column-id").map(_.toInt))))
         case JString("set-current-schema-id") =>
-          setSchemaId = Some(lng(u \ "schema-id"))
+          acc.copy(setSchemaId = Some(lng(u \ "schema-id")))
         case JString("add-spec") =>
-          if (addSpec.nonEmpty) return err("multiple add-spec updates", 400)
-          addSpec = Some(u \ "spec")
+          if (acc.addSpec.nonEmpty) return refuse("multiple add-spec updates", 400)
+          acc.copy(addSpec = Some(u \ "spec"))
         case JString("set-default-spec-id") =>
-          setSpecId = Some(lng(u \ "spec-id"))
+          acc.copy(setSpecId = Some(lng(u \ "spec-id")))
         case JString("add-sort-order") =>
-          if (addSortOrder.nonEmpty)
-            return err("multiple add-sort-order updates", 400)
-          addSortOrder = Some(u \ "sort-order")
+          if (acc.addSortOrder.nonEmpty)
+            return refuse("multiple add-sort-order updates", 400)
+          acc.copy(addSortOrder = Some(u \ "sort-order"))
         case JString("set-default-sort-order-id") =>
-          setSortOrderId = Some(lng(u \ "sort-order-id"))
+          acc.copy(setSortOrderId = Some(lng(u \ "sort-order-id")))
         case JString("remove-snapshot-ref") =>
-          removeRefs :+= str(u \ "ref-name")
+          acc.copy(removeRefs = acc.removeRefs :+ str(u \ "ref-name"))
         case JString("remove-snapshots") =>
           (u \ "snapshot-ids") match {
-            case JArray(xs) => removeSnaps ++= xs.map(lng)
-            case o => return err(s"bad remove-snapshots: $o", 400)
+            case JArray(xs) => acc.copy(removeSnaps = acc.removeSnaps ++ xs.map(lng))
+            case o => return refuse(s"bad remove-snapshots: $o", 400)
           }
         case JString("set-statistics") =>
-          if (setStats.nonEmpty) return err("multiple set-statistics updates", 400)
+          if (acc.setStats.nonEmpty) return refuse("multiple set-statistics updates", 400)
           val s = u \ "statistics"
           // the statistics object's own snapshot-id is authoritative;
           // the update's top-level copy is the spec's deprecated form
-          val sid = (s \ "snapshot-id") match {
-            case JNothing | JNull => u \ "snapshot-id" match {
-              case JNothing | JNull =>
-                return err("set-statistics: no snapshot-id", 400)
-              case v => lng(v)
-            }
-            case v => lng(v)
-          }
+          val sid = optLng(s \ "snapshot-id").orElse(optLng(u \ "snapshot-id"))
+            .getOrElse(return refuse("set-statistics: no snapshot-id", 400))
           (s \ "statistics-path") match {
-            case JString(p) => setStats = Some((sid, p))
-            case o => return err(s"set-statistics: bad statistics-path $o", 400)
+            case JString(p) => acc.copy(setStats = Some((sid, p)))
+            case o => return refuse(s"set-statistics: bad statistics-path $o", 400)
           }
         case JString("remove-statistics") =>
-          removeStats :+= lng(u \ "snapshot-id")
+          acc.copy(removeStats = acc.removeStats :+ lng(u \ "snapshot-id"))
         case JString("add-snapshot") =>
           val s = u \ "snapshot"
-          if (addSnap.nonEmpty) return err("multiple add-snapshot updates", 400)
-          addSnap = Some((lng(s \ "snapshot-id"), str(s \ "manifest-list"),
+          if (acc.addSnap.nonEmpty) return refuse("multiple add-snapshot updates", 400)
+          acc.copy(addSnap = Some((lng(s \ "snapshot-id"), str(s \ "manifest-list"),
             (s \ "summary") match {
               case JObject(kv) => kv.collect { case (k, JString(v)) => k -> v }.toMap
               case _ => Map.empty[String, String]
-            }))
+            })))
         case JString("set-snapshot-ref") =>
-          setRefs :+= ((str(u \ "ref-name"),
+          acc.copy(setRefs = acc.setRefs :+ ((str(u \ "ref-name"),
             (u \ "type") match { case JString(t) => t; case _ => "branch" },
-            lng(u \ "snapshot-id")))
+            lng(u \ "snapshot-id"))))
         case JString("set-properties") =>
           (u \ "updates") match {
             case JObject(kv) =>
@@ -1954,9 +1955,9 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
               // graft.table-uuid is spec-immutable identity
               try SchemaEvolution.requireUnreservedProps(props.map(_._1))
               catch { case e: IllegalArgumentException =>
-                return err(e.getMessage, 400) }
-              properties ++= props
-            case o => return err(s"bad set-properties: $o", 400)
+                return refuse(e.getMessage, 400) }
+              acc.copy(properties = acc.properties ++ props)
+            case o => return refuse(s"bad set-properties: $o", 400)
           }
         case JString("remove-properties") =>
           (u \ "removals") match {
@@ -1964,82 +1965,81 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
               val keys = ks.collect { case JString(k) => k }
               try SchemaEvolution.requireUnreservedProps(keys)
               catch { case e: IllegalArgumentException =>
-                return err(e.getMessage, 400) }
-              properties --= keys
-            case o => return err(s"bad remove-properties: $o", 400)
+                return refuse(e.getMessage, 400) }
+              acc.copy(properties = acc.properties -- keys)
+            case o => return refuse(s"bad remove-properties: $o", 400)
           }
-        case JString(a) => return err(s"unsupported update: $a", 400)
-        case o => return err(s"bad update: $o", 400)
+        case JString(a) => return refuse(s"unsupported update: $a", 400)
+        case o => return refuse(s"bad update: $o", 400)
       }
-    }
+    })
+  }
 
-    // ---- build the new snapshot from the client-written manifest list
-    val (snapOpt, nextRowIdAfter): (Option[Snapshot], Long) = addSnap match {
-      case None => (None, meta.nextRowId)
+  /** Applies parsed updates in a fixed order: snapshot, schema, refs,
+    * partition spec, sort order, statistics, remove-snapshots. */
+  private def applyUpdates(meta: TableMetadata, u: IcebergRestServe.CommitUpdates)
+      : Either[(Int, String), TableMetadata] = {
+    // ---- build the new snapshot from the client-written manifest list,
+    // on top of the head of the branch the commit publishes it to (main
+    // when no set-snapshot-ref names it)
+    val withSnap = u.addSnap match {
+      case None => meta
       case Some((snapId, listPath, summary)) =>
         if (meta.snapshots.exists(_.snapshotId == snapId))
-          return err(s"snapshot id $snapId already exists", 409)
+          return refuse(s"snapshot id $snapId already exists", 409)
         val entries =
           try IcebergImport.decodeManifestListForTable(meta, listPath)
           catch { case e: Exception =>
-            return err(s"cannot decode manifest list $listPath: ${e.getMessage}", 400) }
-        val headManifest = meta.currentSnapshot.map(_.manifest).getOrElse(Nil)
+            return refuse(s"cannot decode manifest list $listPath: ${e.getMessage}", 400) }
+        val parent = u.setRefs
+          .collectFirst { case (name, typ, id) if typ != "tag" && id == snapId => name }
+          .filter(_ != "main").flatMap(meta.snapshotForRef)
+          .orElse(meta.currentSnapshot)
+        val headManifest = parent.map(_.manifest).getOrElse(Nil)
         val headKeys = headManifest.map(_.resolutionKey).toSet
         val newKeys = entries.map(_.resolutionKey).toSet
         val removed = headManifest.filterNot(f => newKeys.contains(f.resolutionKey))
         val added = entries.filterNot(f => headKeys.contains(f.resolutionKey))
         if (added.isEmpty && removed.isEmpty)
-          return err("add-snapshot carries no change against the current snapshot", 400)
+          return refuse("add-snapshot carries no change against the current snapshot", 400)
         val newSeq = meta.lastSequenceNumber + 1
-        val (stampedOpt, cursorAfter, defaultOp) =
+        val (manifest, defaultOp) =
           buildCommitShape(meta, headManifest, added, removed, newSeq) match {
             case Left(e) => return Left(e)
             case Right(x) => x
           }
-        val snap = Snapshot(snapId, meta.currentSnapshotId, newSeq,
-          System.currentTimeMillis(), stampedOpt,
-          meta.currentSnapshot.map(s => TableMetadata.preservedProperties(s.summary))
-            .getOrElse(Map.empty) ++
-            TableMetadata.computedSummary(headManifest, stampedOpt) ++
-            summary + ("operation" -> summary.getOrElse("operation", defaultOp)))
-        (Some(snap), cursorAfter)
+        meta.withSnapshot(parent, manifest,
+          summary.getOrElse("operation", defaultOp), newSeq,
+          publish = false, summary = summary, snapshotId = snapId)
     }
-    setRefs.find { case (_, _, id) =>
-      !meta.snapshots.exists(_.snapshotId == id) && !snapOpt.exists(_.snapshotId == id)
-    }.foreach { case (name, _, id) =>
-      return err(s"set-snapshot-ref $name: no snapshot $id", 400)
-    }
-    removeRefs.foreach { name =>
+    u.setRefs.find { case (_, _, id) => !withSnap.snapshots.exists(_.snapshotId == id) }
+      .foreach { case (name, _, id) =>
+        return refuse(s"set-snapshot-ref $name: no snapshot $id", 400)
+      }
+    u.removeRefs.foreach { name =>
       if (name == "main")
-        return err("remove-snapshot-ref: the main branch cannot be removed", 400)
+        return refuse("remove-snapshot-ref: the main branch cannot be removed", 400)
       if (!meta.refs.contains(name) && !meta.tags.contains(name))
-        return err(s"remove-snapshot-ref: no branch or tag named $name", 400)
+        return refuse(s"remove-snapshot-ref: no branch or tag named $name", 400)
     }
 
-    val updated0 = meta.copy(
-      snapshots = meta.snapshots ++ snapOpt.toSeq,
-      lastSequenceNumber = snapOpt.map(_.sequenceNumber)
-        .getOrElse(meta.lastSequenceNumber),
-      nextRowId = nextRowIdAfter,
-      properties = properties)
+    val updated0 = withSnap.copy(properties = u.properties)
     // ---- schema evolution (add-schema + set-current-schema-id): the
     // foreign engine's ALTER TABLE, validated by the SAME rulebook as
     // the SQL surface (SchemaEvolution.applyForeignSchema)
-    val withSchema = addSchema match {
+    val withSchema = u.addSchema match {
       case None =>
         // set-current-schema-id without add-schema: only the current
         // schema's id (a no-op) is honest to accept
-        if (setSchemaId.exists(id => id != -1L && id != 0L))
-          return err(s"set-current-schema-id ${setSchemaId.get} without " +
+        if (u.setSchemaId.exists(id => id != -1L && id != 0L))
+          return refuse(s"set-current-schema-id ${u.setSchemaId.get} without " +
             "add-schema — this server serves schema-id 0", 400)
         updated0
       case Some((sj, lastHint)) =>
-        val proposedId = (sj \ "schema-id") match {
-          case JNothing | JNull => None; case v => Some(lng(v))
-        }
+        val proposedId = optLng(sj \ "schema-id")
         // the spec's -1 means "the schema added in this commit"
-        setSchemaId.foreach(id => if (id != -1L && proposedId.exists(_ != id))
-          return err(s"set-current-schema-id $id does not name the added " +
+        u.setSchemaId.foreach(id => if (id != -1L && proposedId.exists(_ != id))
+          return refuse(s"set-current-schema-id $id does not name the added " +
             s"schema ${proposedId.get}", 400))
         val fields =
           try IcebergImport.arr(sj \ "fields").map { f =>
@@ -2048,18 +2048,18 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
               nullable = (f \ "required") != JBool(true),
               initialDefault = IcebergImport.defaultSqlOf(ddl, f \ "initial-default"))
           } catch { case e: Exception =>
-            return err(s"bad add-schema: ${e.getMessage}", 400) }
+            return refuse(s"bad add-schema: ${e.getMessage}", 400) }
         try SchemaEvolution.applyForeignSchema(updated0, fields, lastHint)
         catch { case e: IllegalArgumentException =>
-          return err(e.getMessage, 400) }
+          return refuse(e.getMessage, 400) }
     }
-    val afterSets = setRefs.foldLeft(withSchema) { case (m, (name, typ, id)) =>
+    val afterSets = u.setRefs.foldLeft(withSchema) { case (m, (name, typ, id)) =>
       if (typ == "tag") m.copy(tags = m.tags + (name -> id))
       else if (name == "main")
         m.copy(refs = m.refs + (name -> id), currentSnapshotId = Some(id))
       else m.copy(refs = m.refs + (name -> id))
     }
-    val afterRemoves = removeRefs.foldLeft(afterSets)((m, name) =>
+    val afterRemoves = u.removeRefs.foldLeft(afterSets)((m, name) =>
       m.copy(refs = m.refs - name, tags = m.tags - name))
     // ---- partition-spec evolution (add-spec + set-default-spec-id): the
     // foreign engine's ALTER TABLE ... ADD/DROP PARTITION FIELD,
@@ -2072,12 +2072,12 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     // the pre-commit head would orphan the marking snapshot mid-chain
     // and leave old-transform partition values live under the new
     // default spec (silently wrong pruning).
-    val withSpec = addSpec match {
+    val withSpec = u.addSpec match {
       case None =>
         // set-default-spec-id without add-spec: this server re-exports
         // the current spec as id 0, so only the no-op is honest
-        if (setSpecId.exists(id => id != -1L && id != 0L))
-          return err(s"set-default-spec-id ${setSpecId.get} without " +
+        if (u.setSpecId.exists(id => id != -1L && id != 0L))
+          return refuse(s"set-default-spec-id ${u.setSpecId.get} without " +
             "add-spec — this server serves spec-id 0", 400)
         afterRemoves
       case Some(sj) =>
@@ -2085,47 +2085,43 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
         // only add-spec (no set-default-spec-id) cannot be honored as
         // the spec intends (register now, activate later) — refuse
         // loudly instead of silently activating
-        if (setSpecId.isEmpty)
-          return err("add-spec without set-default-spec-id — this server " +
+        if (u.setSpecId.isEmpty)
+          return refuse("add-spec without set-default-spec-id — this server " +
             "materializes only the default spec; send set-default-spec-id " +
             "(-1 names the added spec)", 400)
-        val proposedId = (sj \ "spec-id") match {
-          case JNothing | JNull => None; case v => Some(lng(v))
-        }
+        val proposedId = optLng(sj \ "spec-id")
         // the spec's -1 means "the spec added in this commit"
-        setSpecId.foreach(id => if (id != -1L && proposedId.exists(_ != id))
-          return err(s"set-default-spec-id $id does not name the added " +
+        u.setSpecId.foreach(id => if (id != -1L && proposedId.exists(_ != id))
+          return refuse(s"set-default-spec-id $id does not name the added " +
             s"spec ${proposedId.get}", 400))
         val byId = afterRemoves.schema.map(f => f.id -> f).toMap
         val fields =
           try IcebergImport.arr(sj \ "fields")
             .map(f => IcebergImport.foreignSpecField(byId, f, "add-spec")._2)
           catch { case e: Exception =>
-            return err(s"bad add-spec: ${e.getMessage}", 400) }
+            return refuse(s"bad add-spec: ${e.getMessage}", 400) }
         try SchemaEvolution.applyPartitionSpec(afterRemoves, fields)
         catch { case e: IllegalArgumentException =>
-          return err(e.getMessage, 400) }
+          return refuse(e.getMessage, 400) }
     }
     // ---- sort-order evolution (add-sort-order + set-default-sort-order-
     // id): Iceberg's replaceSortOrder; empty fields clears to unsorted
-    val withSort = addSortOrder match {
+    val withSort = u.addSortOrder match {
       case None =>
         val served = if (withSpec.sortOrder.nonEmpty) 1L else 0L
-        if (setSortOrderId.exists(id => id != -1L && id != served))
-          return err(s"set-default-sort-order-id ${setSortOrderId.get} " +
+        if (u.setSortOrderId.exists(id => id != -1L && id != served))
+          return refuse(s"set-default-sort-order-id ${u.setSortOrderId.get} " +
             s"without add-sort-order — this server serves sort-order-id " +
             s"$served", 400)
         withSpec
       case Some(oj) =>
-        if (setSortOrderId.isEmpty)
-          return err("add-sort-order without set-default-sort-order-id — " +
+        if (u.setSortOrderId.isEmpty)
+          return refuse("add-sort-order without set-default-sort-order-id — " +
             "this server materializes only the default order; send " +
             "set-default-sort-order-id (-1 names the added order)", 400)
-        val proposedId = (oj \ "order-id") match {
-          case JNothing | JNull => None; case v => Some(lng(v))
-        }
-        setSortOrderId.foreach(id => if (id != -1L && proposedId.exists(_ != id))
-          return err(s"set-default-sort-order-id $id does not name the " +
+        val proposedId = optLng(oj \ "order-id")
+        u.setSortOrderId.foreach(id => if (id != -1L && proposedId.exists(_ != id))
+          return refuse(s"set-default-sort-order-id $id does not name the " +
             s"added order ${proposedId.get}", 400))
         val byId = withSpec.schema.map(f => f.id -> f).toMap
         val fields =
@@ -2143,10 +2139,10 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
               ascending = str(f \ "direction") == "asc",
               nullsFirst = str(f \ "null-order") == "nulls-first")
           } catch { case e: Exception =>
-            return err(s"bad add-sort-order: ${e.getMessage}", 400) }
+            return refuse(s"bad add-sort-order: ${e.getMessage}", 400) }
         try SchemaEvolution.applySortOrder(withSpec, fields)
         catch { case e: IllegalArgumentException =>
-          return err(e.getMessage, 400) }
+          return refuse(e.getMessage, 400) }
     }
 
     // ---- statistics (the spec's set-statistics / remove-statistics):
@@ -2154,13 +2150,13 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     // graft's own ANALYZE / SHOW / export serve; applied after ref
     // updates so an add-snapshot + set-statistics commit binds to the
     // snapshot it just made current. Removal is idempotent.
-    val withStats0 = setStats match {
+    val withStats0 = u.setStats match {
       case None => withSort
       case Some((sid, path)) =>
         try NdvStats.registerForeign(withSort, sid, path)
-        catch { case e: IllegalArgumentException => return err(e.getMessage, 400) }
+        catch { case e: IllegalArgumentException => return refuse(e.getMessage, 400) }
     }
-    val updated = removeStats.foldLeft(withStats0)(
+    val updated = u.removeStats.foldLeft(withStats0)(
       (m, sid) => NdvStats.removeForSnapshot(m, sid))
     // ---- remove-snapshots (the spec's snapshot expiry): metadata-only
     // trim under Maintenance.expireSnapshots' rules — ref-pinned and
@@ -2175,28 +2171,27 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     // range fails LOUDLY ("not an ancestor" / "no snapshot") rather
     // than answering silently wrong — the same contract as expired
     // prefixes, pinned by the serve spec's expiry test.
-    val expired =
-      if (removeSnaps.isEmpty) updated
-      else {
-        val ids = removeSnaps.toSet
-        ids.find(id => !updated.snapshots.exists(_.snapshotId == id))
-          .foreach(id => return err(s"remove-snapshots: no snapshot $id", 400))
-        val pinned = updated.refs.values.toSet ++ updated.tags.values.toSet ++
-          updated.currentSnapshotId.toSet
-        ids.find(pinned).foreach(id =>
-          return err(s"remove-snapshots: snapshot $id is pinned by a " +
-            "branch, tag, or is current — remove the ref first", 400))
-        updated.copy(snapshots =
-          updated.snapshots.filterNot(s => ids.contains(s.snapshotId)))
-          .pruneUnreferencedHistoricalSpecs
-      }
-    Right((meta, expired))
+    if (u.removeSnaps.isEmpty) Right(updated)
+    else {
+      val ids = u.removeSnaps.toSet
+      ids.find(id => !updated.snapshots.exists(_.snapshotId == id))
+        .foreach(id => return refuse(s"remove-snapshots: no snapshot $id", 400))
+      val pinned = updated.refs.values.toSet ++ updated.tags.values.toSet ++
+        updated.currentSnapshotId.toSet
+      ids.find(pinned).foreach(id =>
+        return refuse(s"remove-snapshots: snapshot $id is pinned by a " +
+          "branch, tag, or is current — remove the ref first", 400))
+      Right(updated.copy(snapshots =
+        updated.snapshots.filterNot(s => ids.contains(s.snapshotId)))
+        .pruneUnreferencedHistoricalSpecs)
+    }
   }
 
   /** Classifies and validates ONE add-snapshot's manifest delta against
-    * the live head, returning the stamped new manifest, the v3 row-id
-    * cursor after the commit, and the default summary operation. Three
-    * accepted shapes, mirroring the spec's commit kinds:
+    * the parent head, returning the new manifest (added files carry their
+    * sequence numbers; v3 row ids are left to the snapshot builder) and
+    * the default summary operation. Three accepted shapes, mirroring the
+    * spec's commit kinds:
     *
     *  - **append**: nothing removed, additions all data files;
     *  - **row-delta** (DELETE/UPDATE/MERGE emitted by a foreign engine):
@@ -2220,58 +2215,54 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     * leave a surviving DV pointing at a removed data file. */
   private def buildCommitShape(meta: TableMetadata, headManifest: Seq[FileEntry],
       added: Seq[FileEntry], removed: Seq[FileEntry], newSeq: Long)
-      : Either[(Int, String), (Seq[FileEntry], Long, String)] = {
-    def err(msg: String, code: Int) = Left(IcebergRestServe.this.err(msg, code))
+      : Either[(Int, String), (Seq[FileEntry], String)] = {
     added.find(f => !MetaIO.exists(f.path)).foreach(f =>
-      return err(s"added file does not exist: ${f.path}", 400))
+      return refuse(s"added file does not exist: ${f.path}", 400))
     val addedData = added.filter(_.content == FileContent.Data)
     val addedDeletes = added.filterNot(_.content == FileContent.Data)
     val removedKeys = removed.map(_.resolutionKey).toSet
     val surviving = headManifest.filterNot(f => removedKeys.contains(f.resolutionKey))
 
-    // v3 row lineage: ids come from THIS table's cursor for files that do
-    // not bring their own (a compaction preserving lineage ships explicit
-    // first_row_id per rewritten file — honored; appends/deltas get
-    // server-assigned ranges, whatever the client proposed)
-    var cursor = meta.nextRowId
-    def withLineage(f: FileEntry, keepClientIds: Boolean): FileEntry =
-      if (meta.formatVersion < 3 || f.content != FileContent.Data)
-        f.copy(firstRowId = None)
-      else if (keepClientIds && f.firstRowId.nonEmpty) f
-      else { val s = f.copy(firstRowId = Some(cursor)); cursor += f.recordCount; s }
+    // v3 row lineage: the snapshot builder gives every added data file
+    // without an id a fresh range from THIS table's cursor. A compaction
+    // preserving lineage ships explicit first_row_id per rewritten file —
+    // honored; appends/deltas get server-assigned ranges, whatever the
+    // client proposed. v<3 tables and delete files carry no ids.
+    def lineage(f: FileEntry, keepClientIds: Boolean): FileEntry =
+      if (keepClientIds && meta.formatVersion >= 3 && f.content == FileContent.Data) f
+      else f.copy(firstRowId = None)
 
     if (addedDeletes.isEmpty && removed.isEmpty) {
       // ---- APPEND
-      val stamped = addedData.map(f =>
-        withLineage(f.copy(sequenceNumber = newSeq), keepClientIds = false))
-      Right((headManifest ++ stamped, cursor, "append"))
+      Right((headManifest ++ addedData.map(f =>
+        lineage(f.copy(sequenceNumber = newSeq), keepClientIds = false)), "append"))
     } else if (addedDeletes.nonEmpty) {
       // ---- ROW-DELTA
       val addedDvFiles = addedDeletes.filter(_.isDeletionVector)
         .flatMap(_.referencedDataFile).toSet
       removed.find(r => !(r.isDeletionVector &&
           addedDvFiles.contains(r.referencedDataFile.get))).foreach(r =>
-        return err(s"a commit that adds delete files may remove only deletion " +
+        return refuse(s"a commit that adds delete files may remove only deletion " +
           s"vectors it supersedes — it removes ${r.resolutionKey}", 400))
       addedDeletes.foreach { d =>
         d.content match {
           case FileContent.PositionDeletes if d.isDeletionVector =>
             if (meta.formatVersion < 3)
-              return err("deletion vectors require a format-version 3 table", 400)
+              return refuse("deletion vectors require a format-version 3 table", 400)
           case FileContent.PositionDeletes =>
             if (meta.formatVersion >= 3)
-              return err("v3 tables take positional deletes as deletion vectors " +
+              return refuse("v3 tables take positional deletes as deletion vectors " +
                 "(content=1 Puffin entries), not pos-delete parquet", 400)
             // validate the footer BEFORE the commit: an unstamped
             // tombstone would poison every later export of this table
             // (spec readers project delete files by the reserved ids)
             if (!IcebergExport.posDeleteStamped(MetaIO.hadoopConf, d.path))
-              return err(s"position-delete file ${d.path} lacks the reserved " +
+              return refuse(s"position-delete file ${d.path} lacks the reserved " +
                 "Iceberg field ids (2147483546 file_path / 2147483545 pos) in " +
                 "its parquet footer — stamp them and re-commit", 400)
           case FileContent.EqualityDeletes =>
             if (d.equalityFieldIds.isEmpty && d.equalityIds.isEmpty)
-              return err(s"equality-delete file ${d.path} carries no equality_ids", 400)
+              return refuse(s"equality-delete file ${d.path} carries no equality_ids", 400)
             // same pre-commit footer check: the key columns must be
             // projectable (by id on typed tables, by name otherwise)
             val footer = IcebergExport.footerFieldIds(MetaIO.hadoopConf, d.path)
@@ -2279,13 +2270,13 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
               val footerIds = footer.values.flatten.toSet
               val missing = d.equalityFieldIds.filterNot(footerIds.contains)
               if (missing.nonEmpty)
-                return err(s"equality-delete file ${d.path} footer lacks field " +
+                return refuse(s"equality-delete file ${d.path} footer lacks field " +
                   s"ids ${missing.mkString(",")} for its key columns — spec " +
                   "readers project delete files by id", 400)
             } else {
               val missing = d.equalityIds.filterNot(footer.contains)
               if (missing.nonEmpty)
-                return err(s"equality-delete file ${d.path} footer lacks key " +
+                return refuse(s"equality-delete file ${d.path} footer lacks key " +
                   s"columns ${missing.mkString(",")}", 400)
             }
           case _ => ()
@@ -2296,7 +2287,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
       // and its position deletes apply to everything at or below — the
       // spec's RowDelta semantics
       val stamped = added.map(f =>
-        withLineage(f.copy(sequenceNumber = newSeq), keepClientIds = false))
+        lineage(f.copy(sequenceNumber = newSeq), keepClientIds = false))
       val result = surviving ++ stamped
       val liveDataPaths = result.filter(_.content == FileContent.Data).map(_.path).toSet
       val removedDvByFile = removed.filter(_.isDeletionVector)
@@ -2306,10 +2297,10 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
       stamped.filter(_.isDeletionVector).foreach { dv =>
         val target = dv.referencedDataFile.get
         if (!liveDataPaths.contains(target))
-          return err(s"deletion vector references a data file not live in the " +
+          return refuse(s"deletion vector references a data file not live in the " +
             s"resulting snapshot: $target", 400)
         if (survivingDvFiles.contains(target))
-          return err(s"data file $target already has a deletion vector — the " +
+          return refuse(s"data file $target already has a deletion vector — the " +
             "commit must remove the DV it supersedes (one DV per file)", 400)
         // a replacement DV must contain the superseded DV's positions: DVs
         // are cumulative per the v3 spec, and a shrinking one would
@@ -2318,39 +2309,42 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
           try Puffin.decodeDvBlob(Puffin.readBlob(
             dv.path, dv.contentOffset.get, dv.contentSizeInBytes.get))
           catch { case e: Exception =>
-            return err(s"cannot read deletion vector blob ${dv.resolutionKey}: " +
+            return refuse(s"cannot read deletion vector blob ${dv.resolutionKey}: " +
               s"${e.getMessage}", 400) }
         removedDvByFile.get(target).foreach { old =>
           val oldBm = Puffin.decodeDvBlob(Puffin.readBlob(
             old.path, old.contentOffset.get, old.contentSizeInBytes.get))
           if (!oldBm.positions.forall(newBm.contains))
-            return err(s"replacement deletion vector for $target drops positions " +
+            return refuse(s"replacement deletion vector for $target drops positions " +
               "of the DV it supersedes — DVs must grow monotonically", 400)
         }
       }
-      Right((result, cursor, "overwrite"))
+      Right((result, "overwrite"))
     } else {
       // ---- REPLACE (rewrite): removals present, additions all data
       addedData.find(f => f.sequenceNumber > newSeq || f.sequenceNumber < 0)
-        .foreach(f => return err(s"replace commit proposes sequence number " +
+        .foreach(f => return refuse(s"replace commit proposes sequence number " +
           s"${f.sequenceNumber} for ${f.path} beyond the commit's own $newSeq", 400))
-      // rewritten files that preserve lineage ship explicit first_row_id;
-      // files without get fresh server-assigned ranges
-      val stamped = addedData.map(f => withLineage(f, keepClientIds = true))
+      val stamped = addedData.map(f => lineage(f, keepClientIds = true))
       if (meta.formatVersion >= 3) {
         // client-claimed ranges may only re-use the REMOVED files' ids
         // (that is what preservation means) — overlap with a SURVIVING
-        // file's range, or among the added files themselves, would break
-        // the every-row-id-unique invariant for all future readers
+        // file's range, among the added files themselves, or with the
+        // block the builder assigns to the added files without ids,
+        // would break the every-row-id-unique invariant for all future
+        // readers
+        val assignedRows = stamped.filter(_.firstRowId.isEmpty).map(_.recordCount).sum
         val addedRanges = stamped.filter(_.firstRowId.nonEmpty)
-          .map(f => (f.path, f.firstRowId.get, f.firstRowId.get + f.recordCount))
+          .map(f => (f.path, f.firstRowId.get, f.firstRowId.get + f.recordCount)) ++
+          Seq(("the rows this commit assigns ids to", meta.nextRowId,
+            meta.nextRowId + assignedRows)).filter(_ => assignedRows > 0)
         val survivingRanges = surviving
           .filter(f => f.content == FileContent.Data && f.firstRowId.nonEmpty)
           .map(f => (f.path, f.firstRowId.get, f.firstRowId.get + f.recordCount))
         for ((p1, lo1, hi1) <- addedRanges;
              (p2, lo2, hi2) <- addedRanges ++ survivingRanges
              if p1 != p2 && lo1 < hi2 && lo2 < hi1)
-          return err(s"replace commit claims row-id range [$lo1,$hi1) for $p1 " +
+          return refuse(s"replace commit claims row-id range [$lo1,$hi1) for $p1 " +
             s"overlapping [$lo2,$hi2) of $p2 — preserved lineage may only " +
             "re-use the ids of the files being removed", 400)
       }
@@ -2358,9 +2352,9 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
       val liveDataPaths = result.filter(_.content == FileContent.Data).map(_.path).toSet
       result.find(f => f.isDeletionVector &&
           !liveDataPaths.contains(f.referencedDataFile.get)).foreach(f =>
-        return err(s"replace commit removes data file ${f.referencedDataFile.get} " +
+        return refuse(s"replace commit removes data file ${f.referencedDataFile.get} " +
           s"but leaves its deletion vector ${f.resolutionKey} live — remove both", 400))
-      Right((result, cursor, if (addedData.isEmpty) "delete" else "replace"))
+      Right((result, if (addedData.isEmpty) "delete" else "replace"))
     }
   }
 

@@ -397,7 +397,8 @@ final case class TableMetadata(
   /** The one snapshot builder: appends a snapshot of `manifest` on top of
     * `parent` and moves the metadata with it.
     *
-    *  - the id is [[nextSnapshotId]];
+    *  - the id is `snapshotId`: [[nextSnapshotId]] unless the caller
+    *    names it (REST clients choose their own);
     *  - on v3 tables, data files new to `parent` that carry no row-lineage
     *    range claim [nextRowId, nextRowId + rows) in manifest order, and
     *    the cursor advances in the same commit;
@@ -416,8 +417,8 @@ final case class TableMetadata(
       sequenceNumber: Long = lastSequenceNumber + 1,
       branch: String = "main",
       publish: Boolean = true,
-      summary: Map[String, String] = Map.empty): TableMetadata = {
-    val id = nextSnapshotId
+      summary: Map[String, String] = Map.empty,
+      snapshotId: Long = nextSnapshotId): TableMetadata = {
     val parentManifest = parent.map(_.manifest).getOrElse(Nil)
     var rowCursor = nextRowId
     val stamped =
@@ -431,16 +432,16 @@ final case class TableMetadata(
                  rowCursor += f.recordCount; assigned }
         }
       }
-    val snap = Snapshot(id, parent.map(_.snapshotId), sequenceNumber,
+    val snap = Snapshot(snapshotId, parent.map(_.snapshotId), sequenceNumber,
       System.currentTimeMillis(), stamped,
       parent.map(p => TableMetadata.preservedProperties(p.summary)).getOrElse(Map.empty) ++
         TableMetadata.computedSummary(parentManifest, stamped) +
         ("operation" -> operation) ++ summary)
     copy(
       snapshots = snapshots :+ snap,
-      refs = if (publish) refs + (branch -> id) else refs,
+      refs = if (publish) refs + (branch -> snapshotId) else refs,
       currentSnapshotId =
-        if (publish && branch == "main") Some(id) else currentSnapshotId,
+        if (publish && branch == "main") Some(snapshotId) else currentSnapshotId,
       lastSequenceNumber = math.max(lastSequenceNumber, sequenceNumber),
       nextRowId = rowCursor)
   }

@@ -153,10 +153,7 @@ object FileGenerator {
         sequenceNumber = 2L, equalityIds = cfg.equalityIds)
     }
 
-    val snapshot = Snapshot(
-      snapshotId = 1L, parentId = None, sequenceNumber = 2L,
-      timestampMs = System.currentTimeMillis(), manifest = entries)
-    val meta = TableMetadata(
+    catalog.createTable(TableMetadata(
       name = tableName,
       location = catalog.tableLocation(tableName).toString,
       formatVersion = cfg.formatVersion,
@@ -165,11 +162,7 @@ object FileGenerator {
       // name-matched; the typed path is exercised through IceWrite
       schema = SchemaField.fromNames(source.columns.toSeq),
       partitionSpec = cfg.partitionSpec,
-      sortOrder = cfg.sortOrder,
-      currentSnapshotId = Some(1L),
-      refs = Map("main" -> 1L),
-      snapshots = Seq(snapshot),
-      lastSequenceNumber = 2L)
-    catalog.createTable(meta)
+      sortOrder = cfg.sortOrder)
+      .withSnapshot(None, entries, "append", 2L))
   }
 }

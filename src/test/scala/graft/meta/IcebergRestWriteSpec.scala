@@ -323,4 +323,158 @@ class IcebergRestWriteSpec extends AnyFunSuite {
       assert(IceRead.table(spark, cat, "t").count() == 10L)
     } finally srv.stop()
   }
+
+  test("REST append to a branch builds on that branch's head, not main's") {
+    val cat = freshCatalog()
+    IceWrite.create(spark, cat, "t",
+      (1L to 10L).map(i => (i, s"n$i")).toDF("id", "name").repartition(1),
+      formatVersion = 3)
+    IceWrite.createBranch(cat, "t", "dev")
+    IceWrite.append(spark, cat, "t",
+      (11L to 15L).map(i => (i, s"d$i")).toDF("id", "name").repartition(1),
+      branch = "dev")
+    val before = cat.loadTable("t")
+    val devHead = before.snapshotForRef("dev").get
+    val mainPaths = before.currentSnapshot.get.manifest.map(_.path).toSet
+    val devOwn = devHead.manifest.filterNot(f => mainPaths.contains(f.path))
+    assert(devOwn.size == 1 && devOwn.head.firstRowId.nonEmpty)
+
+    val srv = new IcebergRestServe(cat, namespace = "wh", prefix = "p")
+    try {
+      val staging = Files.createTempDirectory("rest-wr-branch").toString
+      val (np, nSz, nN) = writeParquet(IceWrite.withFieldIds(
+        Seq((100L, "x")).toDF("id", "name"), before.schema), staging, "dev-add.parquet")
+      val route = s"${srv.uri}/v1/p/namespaces/wh/tables/t"
+      val loaded = org.json4s.jackson.JsonMethods.parse(http.send(
+        HttpRequest.newBuilder(URI.create(route)).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body()) \ "metadata"
+      // the manifest list a conforming client writes for an append to
+      // dev: dev's manifests carried, plus the new file
+      val staged = IcebergRestCommit.stageManifestList(loaded, Some(devHead.snapshotId),
+        staging, Seq(IcebergRestCommit.AddedFile(np, nSz, nN)), Nil, Set.empty,
+        useStartingSequenceNumber = false)
+      val body = s"""{"requirements":[{"type":"assert-ref-snapshot-id","ref":"dev",
+        "snapshot-id":${devHead.snapshotId}}],"updates":[
+        {"action":"add-snapshot","snapshot":{"snapshot-id":${staged.newSnapId},
+         "sequence-number":${staged.newSeq},"timestamp-ms":1,
+         "manifest-list":"${staged.listPath}","summary":{"operation":"append"}}},
+        {"action":"set-snapshot-ref","ref-name":"dev","type":"branch",
+         "snapshot-id":${staged.newSnapId}}]}"""
+      val resp = http.send(HttpRequest.newBuilder(URI.create(route))
+        .header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200, resp.body())
+
+      val after = cat.loadTable("t")
+      assert(after.currentSnapshotId == before.currentSnapshotId, "main must not move")
+      val snap = after.snapshotForRef("dev").get
+      assert(snap.snapshotId == staged.newSnapId)
+      assert(snap.parentId.contains(devHead.snapshotId),
+        s"parent must be dev's old head ${devHead.snapshotId}, got ${snap.parentId}")
+      assert(snap.summary("added-data-files") == "1", snap.summary)
+      val own = snap.manifest.find(_.path == devOwn.head.path).get
+      assert(own.sequenceNumber == devOwn.head.sequenceNumber,
+        "dev's own file must keep its sequence number")
+      assert(own.firstRowId == devOwn.head.firstRowId, "dev's own file must keep its row ids")
+      val added = snap.manifest.find(_.path == np).get
+      assert(added.sequenceNumber == before.lastSequenceNumber + 1)
+      assert(added.firstRowId.contains(before.nextRowId))
+      assert(after.nextRowId == before.nextRowId + nN)
+    } finally srv.stop()
+  }
+
+  /** One v3 REST commit shape: what it adds and removes, and whether the
+    * added data file keeps a client-claimed row-id range. */
+  private final case class Shape(name: String, operation: String,
+      addedDeletes: Int, removedData: Int, keepsClientIds: Boolean)
+
+  Seq(
+    Shape("append", "append", 0, 0, keepsClientIds = false),
+    Shape("row-delta with a DV", "overwrite", 1, 0, keepsClientIds = false),
+    Shape("replace keeping client ids", "replace", 0, 1, keepsClientIds = true),
+    Shape("replace with server-assigned ids", "replace", 0, 1, keepsClientIds = false)
+  ).foreach { shape =>
+    test(s"v3 REST ${shape.name}: operation, summary, sequences and row ids") {
+      val cat = freshCatalog()
+      IceWrite.create(spark, cat, "t",
+        (1L to 20L).map(i => (i, s"n$i")).toDF("id", "name").repartition(1),
+        formatVersion = 3)
+      IceWrite.append(spark, cat, "t",
+        (21L to 30L).map(i => (i, s"n$i")).toDF("id", "name").repartition(1))
+      // a custom property on the head's summary, which the commit carries
+      cat.transact("t")(m => m.copy(snapshots = m.snapshots.map(sn =>
+        if (m.currentSnapshotId.contains(sn.snapshotId))
+          sn.copy(summary = sn.summary + ("app.batch" -> "b7"))
+        else sn)))
+      val head = cat.loadTable("t")
+      val headSnap = head.currentSnapshot.get
+      val first = headSnap.manifest.find(_.recordCount == 20L).get
+      val newSeq = head.lastSequenceNumber + 1
+
+      val srv = new IcebergRestServe(cat, namespace = "wh", prefix = "p")
+      try {
+        val staging = Files.createTempDirectory("rest-wr-shape").toString
+        val replace = shape.removedData > 0
+        val rows = if (replace) (1L to 20L) else Seq(100L)
+        val (np, nSz, nN) = writeParquet(IceWrite.withFieldIds(
+          rows.map(i => (i, s"n$i")).toDF("id", "name"), head.schema), staging, "new.parquet")
+        // appends and deltas propose ids too: the server must ignore them
+        val claimed = if (replace && !shape.keepsClientIds) None else first.firstRowId
+        val file = IcebergRestCommit.AddedFile(np, nSz, nN, firstRowId = claimed)
+        if (replace)
+          IcebergRestCommit.replaceFiles(srv.uri, Seq("wh"), "t", Seq(first.path),
+            Seq(file), staging)
+        else if (shape.addedDeletes > 0) {
+          val pf = MetaIO.join(staging, "dv.puffin")
+          val metas = Puffin.write(pf, Seq(Puffin.Blob(Puffin.DvBlobType,
+            Puffin.encodeDvBlob(Puffin.PositionBitmap.of(Seq(0L, 1L))), 1L, 1L,
+            properties = Map("referenced-data-file" -> first.path, "cardinality" -> "2"))))
+          IcebergRestCommit.commitDelta(srv.uri, Seq("wh"), "t", Seq(file),
+            Seq(IcebergRestCommit.AddedDeleteFile(pf, MetaIO.size(pf), 2L, "dv",
+              referencedDataFile = Some(first.path),
+              contentOffset = Some(metas.head.offset),
+              contentSizeInBytes = Some(metas.head.length))), staging)
+        } else
+          IcebergRestCommit.appendFiles(srv.uri, Seq("wh"), "t", Seq(file), staging)
+
+        val after = cat.loadTable("t")
+        val snap = after.currentSnapshot.get
+        val data = snap.manifest.filter(_.content == FileContent.Data)
+        val deletes = snap.manifest.filterNot(_.content == FileContent.Data)
+        assert(snap.parentId.contains(headSnap.snapshotId))
+        assert(snap.sequenceNumber == newSeq && after.lastSequenceNumber == newSeq)
+        assert(snap.summary("operation") == shape.operation)
+        assert(snap.summary("app.batch") == "b7", "custom summary properties carry forward")
+        assert(snap.summary("added-data-files") == "1")
+        assert(snap.summary("added-records") == nN.toString)
+        assert(snap.summary("added-delete-files") == shape.addedDeletes.toString)
+        assert(snap.summary("deleted-data-files") == shape.removedData.toString)
+        assert(snap.summary("deleted-records") == (if (replace) "20" else "0"))
+        assert(snap.summary("total-data-files") == data.size.toString)
+        assert(snap.summary("total-delete-files") == deletes.size.toString)
+        assert(snap.summary("total-records") == data.map(_.recordCount).sum.toString)
+
+        val added = data.find(_.path == np).get
+        // a replace keeps the starting sequence number; the others take
+        // the commit's own
+        assert(added.sequenceNumber == (if (replace) headSnap.sequenceNumber else newSeq))
+        deletes.foreach { d =>
+          assert(d.sequenceNumber == newSeq && d.firstRowId.isEmpty)
+        }
+        if (shape.keepsClientIds) {
+          assert(added.firstRowId == first.firstRowId, "a replace keeps claimed ids")
+          assert(after.nextRowId == head.nextRowId)
+        } else {
+          assert(added.firstRowId.contains(head.nextRowId), "the server assigns ids")
+          assert(after.nextRowId == head.nextRowId + nN)
+        }
+        // files the commit did not touch keep their sequence and ids
+        data.filter(_.path != np).foreach { f =>
+          val was = headSnap.manifest.find(_.path == f.path).get
+          assert(f.sequenceNumber == was.sequenceNumber && f.firstRowId == was.firstRowId)
+        }
+      } finally srv.stop()
+    }
+  }
 }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Catalog`, `transact` included) and the REST server's handlers, which
   * answer a lost race with HTTP 409 rather than retrying — their client
   * retries. Every other mutation builds inside `transact`, so a
-  * hand-rolled load/commit/retry loop fails here. */
+  * hand-rolled load/commit/retry loop fails here. A second scan pins
+  * [[TableMetadata.withSnapshot]] as the only snapshot builder. */
 class SingleCommitSiteSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -48,5 +49,28 @@ class SingleCommitSiteSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "commit outside Catalog.transact — build the change inside " +
         s"catalog.transact(name) { meta => ... } instead:\n${offenders.mkString("\n")}")
+  }
+
+  test("snapshots are built only by TableMetadata.withSnapshot") {
+    // `Snapshot(` not preceded by an identifier character: a construction
+    // (or `graft.meta.Snapshot(`), not `withSnapshot(`/`currentSnapshot(`
+    val SnapshotCall = """(?<![\w$])Snapshot\(""".r
+    // the builder's file, plus the two decoders that read snapshots back
+    // from stored metadata
+    val mayConstruct = Set("Model.scala", "Json.scala", "IcebergImport.scala")
+    val offenders = sources.flatMap { p =>
+      val file = p.getFileName.toString
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      lines.indices.collect {
+        case i if !isComment(lines(i)) &&
+            ((SnapshotCall.findFirstIn(lines(i)).nonEmpty && !mayConstruct(file)) ||
+              (lines(i).contains("firstRowId = Some(") && file != "Model.scala")) =>
+          s"${root.relativize(p)}:${i + 1}: ${lines(i).trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      "snapshot or row-id range assembled outside TableMetadata.withSnapshot — " +
+        s"build it with meta.withSnapshot(parent, manifest, operation, ...):\n" +
+        offenders.mkString("\n"))
   }
 }
