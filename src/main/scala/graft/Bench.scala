@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.meta._
 import graft.selection._
 import graft.compaction._
+import graft.ops.Dedup
 import graft.testkit.FileGenerator
+import graft.util.{Profile, Sessions}
 
 /** Per-round benchmark: every SparkEntry query timed at SPARK_GRAFT_SF_DIR,
   * plus the compaction workload mirroring the reference's bench harness
@@ -26,11 +29,13 @@ object Bench {
 
   /** The final stdout record: `value` is the sum of the first runs (the
     * figure every earlier round reported), `value_best` the sum of the
-    * best-of-2 runs, then per-family totals of each, the five slowest
-    * best-of lines and `detail` (`,"key":{...}` objects). Its length does
-    * not grow with the query count. */
+    * best-of-2 runs, the count of lines that threw and the first five of
+    * them, then per-family totals of each sum, the five slowest best-of
+    * lines and `detail` (`,"key":{...}` objects). Its length does not grow
+    * with the query count. */
   private[graft] def record(first: collection.Map[String, Double],
-      best: collection.Map[String, Double], detail: String, sf: String): String = {
+      best: collection.Map[String, Double], detail: String, sf: String,
+      failed: Seq[String]): String = {
     def num(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def obj(kv: Seq[(String, Double)]) =
       kv.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
@@ -38,35 +43,74 @@ object Bench {
       obj(m.toSeq.groupMapReduce(e => family(e._1))(_._2)(_ + _).toSeq.sorted)
     s"""{"metric":"total","value":${first.values.sum},"unit":"sec",""" +
       s""""value_best":${best.values.sum},"n_queries":${first.size},""" +
+      s""""failed":${failed.size},"failed_lines":""" +
+      failed.take(5).map("\"" + _ + "\"").mkString("[", ",", "],") +
       s""""families":${families(first)},"families_best":${families(best)},""" +
       s""""slowest_best":${obj(best.toSeq.sortBy(-_._2).take(5))}$detail,"sf":"$sf"}"""
   }
 
+  /** The skew-stress lines, in bench order; see [[skewCorpus]]. */
+  private[graft] val SkewLines = Seq("skew_d2", "skew_d12", "skew_i2")
+
+  /** SKEW-STRESS: the HotBucketCapSpec invariant measured, not just
+    * plan-asserted. The corpus (5 000 docs at sf0.1) is exploded x10
+    * (fixture cost, untimed) and one third is replaced by a single shared
+    * boilerplate text — that plants a ~16.7k-doc LSH mega-bucket which
+    * uncapped would explode to ~1.4e8 candidate pairs per band. With the
+    * map-side cap the lines must stay within the same order as their
+    * organic twins (d2/d12/i2, which run the un-exploded corpus); the pair
+    * counts recorded alongside prove the bucket was dropped, not fed
+    * through. Returns the eagerly checkpointed corpus. */
+  private[graft] def skewCorpus(spark: SparkSession, sfDir: String, partitions: Int): DataFrame = {
+    val boiler = ("Licensed under the Apache License Version 2.0 you may not use " +
+      "this file except in compliance with the License you may obtain a copy " +
+      "of the License at http example com licenses and limitations ") * 3
+    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val nBase = base.count()
+    // x10 explode with disjoint doc_id ranges so the planted bucket is a
+    // genuine 10x-scale hot key, not 10 copies of the same 1/3 slice
+    val docs = base.crossJoin(spark.range(10).toDF("rep"))
+      .select((col("doc_id") + col("rep") * nBase).as("doc_id"), col("text"))
+    docs.withColumn("text",
+      when(col("doc_id") % 3 === 0, lit(boiler)).otherwise(col("text")))
+      .repartition(partitions)
+      .localCheckpoint(true)
+  }
+
+  /** Runs one of [[SkewLines]] over the planted corpus; returns its pair
+    * count (d2, d12) or output rows (i2). */
+  private[graft] def skewLine(spark: SparkSession, planted: DataFrame, line: String): Long =
+    line match {
+      case "skew_d2" => Dedup.minHashNearDupPairs(planted, "doc_id", "text",
+        n = 3, k = 16, rowsPerBand = 4, threshold = 0.5, maxBucketSize = 100).count()
+      case "skew_d12" => Dedup.minHashContainmentPairs(planted, "doc_id", "text",
+        n = 3, k = 16, rowsPerBand = 4, threshold = 0.9, maxBucketSize = 100).count()
+      case "skew_i2" =>
+        val catalog = new LocalCatalog(
+          java.nio.file.Files.createTempDirectory("bench-skew-wh").toString)
+        val b0 = planted.filter(col("doc_id") % 2 === 0)
+        val b1 = planted.filter(col("doc_id") % 2 =!= 0)
+        val out0 = Dedup.incrementalMinHash(spark, catalog, "skew_idx", b0, "doc_id", "text", 0L)
+        val out1 = Dedup.incrementalMinHash(spark, catalog, "skew_idx", b1, "doc_id", "text", 1L)
+        out0.count() + out1.count()
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // long-session hygiene: ContextCleaner reclaims shuffle files and
-      // broadcast blocks only when the driver GCs, and a 24g heap may
-      // not GC for most of a 183-query session — the default 30min
-      // periodic GC never fires inside one bench, so cleanup lands as
-      // one burst on whatever line is running late in the session
-      // (measured: the skew block). 2min spreads it; the setting exists
-      // in Spark precisely for long-running many-query drivers.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.SparkLogs.quietGlobalWindowWarning()
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
 
-    def time(f: => Unit): Double = {
+    // a line that throws keeps its elapsed seconds (so `value` means what
+    // it always has) but is named in the record's `failed` count: a
+    // crashed line must not read as a fast one
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def time(line: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()
-      try f catch { case e: Throwable => System.err.println(s"[bench] ${e.getMessage}") }
+      try f catch { case e: Throwable =>
+        failed += line
+        System.err.println(s"[bench] $line: ${e.getMessage}")
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -76,11 +120,6 @@ object Bench {
     // judge-idle 163s/i2 5.0s). Stamp /proc/loadavg at start+end and the
     // age of the newest test-report file, so a loaded capture identifies
     // itself instead of reading as a regression.
-    def loadavg(): String =
-      scala.util.Try {
-        val parts = scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")
-        s"[${parts(0)},${parts(1)},${parts(2)}]"
-      }.getOrElse("null")
     def testSweepMinutesAgo(): Long =
       scala.util.Try {
         val dir = new java.io.File(sys.props("user.dir"), "target/test-reports")
@@ -88,11 +127,12 @@ object Bench {
         if (newest == 0L) -1L
         else (System.currentTimeMillis() - newest) / 60000L
       }.getOrElse(-1L)
-    val loadStart = loadavg()
+    val loadStart = Profile.loadavg()
     val sweepAge = testSweepMinutesAgo()
 
     // untimed warmup so JVM/codegen startup isn't charged to the first query
-    time { SparkEntry.queries("q10_projection")(spark, sfDir).count(): Unit }
+    try SparkEntry.queries("q10_projection")(spark, sfDir).count()
+    catch { case e: Throwable => System.err.println(s"[bench] warmup: ${e.getMessage}") }
 
     // SELF-EVIDENCING timing: single-shot recordings on a loaded host swing
     // 3-8x per query between otherwise-identical runs (compare
@@ -107,7 +147,7 @@ object Bench {
     var compactionDetail: Option[String] = None
     SparkEntry.queries.foreach { case (name, fn) =>
       val samples = (1 to 2).map { _ =>
-        val t = time { fn(spark, sfDir).count(): Unit }
+        val t = time(name) { fn(spark, sfDir).count(): Unit }
         // real pipelines run queries as separate jobs: free the
         // localCheckpoint blocks the LSH/CC/index queries pin in the block
         // manager, or 150 queries of accumulated blocks squeeze execution
@@ -136,11 +176,11 @@ object Bench {
       // output file counts and bytes alongside the wall clock
       val before = catalog.loadTable("bench_li").currentSnapshot.get.manifest
       var added: Seq[graft.meta.FileEntry] = Nil
-      results("compaction_mor") = time {
+      results("compaction_mor") = time("compaction_mor") {
         val c = new Compaction(catalog, "bench_li", spark,
           config = FullCompactionConfig(PlanningParams(
             targetFileSizeBytes = 512L * 1024 * 1024,
-            maxInputParallelism = 4 * cpus.toInt, maxOutputParallelism = cpus.toInt)),
+            maxInputParallelism = 4 * cpus, maxOutputParallelism = cpus)),
           enableValidate = true)
         val res = c.compact()
         require(res.addedFiles.nonEmpty, "compaction produced no files")
@@ -153,79 +193,43 @@ object Bench {
           s""""output_files":${added.size},""" +
           s""""output_bytes":${added.map(_.length).sum}}""")
     } catch {
-      case e: Throwable => System.err.println(s"[bench] compaction fixture failed: ${e.getMessage}")
+      case e: Throwable =>
+        if (!results.contains("compaction_mor")) failed += "compaction_mor"
+        System.err.println(s"[bench] compaction fixture failed: ${e.getMessage}")
     }
 
-    // SKEW-STRESS: the HotBucketCapSpec invariant measured, not just
-    // plan-asserted. The sf0.1 corpus (5 000 docs) is exploded x10 to
-    // 50 000 docs (fixture cost, untimed) and one third is replaced by a
-    // single shared boilerplate text — that plants a ~16.7k-doc LSH
-    // mega-bucket which uncapped would explode to ~1.4e8 candidate pairs
-    // per band. With the map-side cap the lines must stay within the
-    // same order as their organic twins (d2/d12/i2 above, which run the
-    // un-exploded 5k corpus); the pair counts recorded alongside prove
-    // the bucket was dropped, not fed through.
     var skewDetail: Option[String] = None
     try {
-      import org.apache.spark.sql.functions._
-      val boiler = ("Licensed under the Apache License Version 2.0 you may not use " +
-        "this file except in compliance with the License you may obtain a copy " +
-        "of the License at http example com licenses and limitations ") * 3
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val nBase = base.count()
-      // x10 explode with disjoint doc_id ranges so the planted bucket is a
-      // genuine 10x-scale hot key, not 10 copies of the same 1/3 slice
-      val docs = base.crossJoin(spark.range(10).toDF("rep"))
-        .select((col("doc_id") + col("rep") * nBase).as("doc_id"), col("text"))
-      val planted = docs.withColumn("text",
-        when(col("doc_id") % 3 === 0, lit(boiler)).otherwise(col("text")))
-        .repartition(cpus.toInt * 2)
-        .localCheckpoint(true) // corpus generation is fixture cost, untimed
+      val planted = skewCorpus(spark, sfDir, cpus * 2)
       val nDocs = planted.count()
       // free each line's own checkpoint blocks WITHOUT dropping the
       // planted corpus the next line still reads
       val keepIds = spark.sparkContext.getPersistentRDDs.keySet
-      def releaseNew(): Unit = spark.sparkContext.getPersistentRDDs.foreach {
-        case (id, r) => if (!keepIds.contains(id)) r.unpersist(false)
-      }
-      var d2Pairs = 0L; var d12Pairs = 0L; var i2Rows = 0L
-      results("skew_d2") = time {
-        d2Pairs = graft.ops.Dedup.minHashNearDupPairs(planted, "doc_id", "text",
-          n = 3, k = 16, rowsPerBand = 4, threshold = 0.5, maxBucketSize = 100).count()
-      }
-      releaseNew()
-      results("skew_d12") = time {
-        d12Pairs = graft.ops.Dedup.minHashContainmentPairs(planted, "doc_id", "text",
-          n = 3, k = 16, rowsPerBand = 4, threshold = 0.9, maxBucketSize = 100).count()
-      }
-      releaseNew()
-      results("skew_i2") = time {
-        val catalog = new LocalCatalog(
-          java.nio.file.Files.createTempDirectory("bench-skew-wh").toString)
-        val b0 = planted.filter(col("doc_id") % 2 === 0)
-        val b1 = planted.filter(col("doc_id") % 2 =!= 0)
-        val out0 = graft.ops.Dedup.incrementalMinHash(spark, catalog, "skew_idx",
-          b0, "doc_id", "text", 0L)
-        val out1 = graft.ops.Dedup.incrementalMinHash(spark, catalog, "skew_idx",
-          b1, "doc_id", "text", 1L)
-        i2Rows = out0.count() + out1.count()
+      val counts = SkewLines.map { line =>
+        var n = 0L
+        results(line) = time(line) { n = skewLine(spark, planted, line) }
+        spark.sparkContext.getPersistentRDDs.foreach {
+          case (id, r) => if (!keepIds.contains(id)) r.unpersist(false)
+        }
+        n
       }
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       planted.unpersist()
       // single-sample lines: mirror into best so the two totals stay
       // structurally comparable
-      Seq("skew_d2", "skew_d12", "skew_i2").foreach(k => bestRun(k) = results(k))
+      SkewLines.foreach(k => bestRun(k) = results(k))
       skewDetail = Some(
         s""""skew":{"docs":$nDocs,"planted_bucket":${nDocs / 3},""" +
-          s""""d2_pairs":$d2Pairs,"d12_pairs":$d12Pairs,"i2_rows":$i2Rows}""")
+          s""""d2_pairs":${counts(0)},"d12_pairs":${counts(1)},"i2_rows":${counts(2)}}""")
     } catch {
-      case e: Throwable => System.err.println(s"[bench] skew fixture failed: ${e.getMessage}")
+      case e: Throwable =>
+        failed ++= SkewLines.filterNot(results.contains)
+        System.err.println(s"[bench] skew fixture failed: ${e.getMessage}")
     }
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qb = bestRun.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val load = s""""load":{"start":$loadStart,"end":${loadavg()},""" +
+    val load = s""""load":{"start":$loadStart,"end":${Profile.loadavg()},""" +
       s""""test_sweep_min_ago":$sweepAge}"""
     val detail = compactionDetail.map("," + _).getOrElse("") +
       skewDetail.map("," + _).getOrElse("") + "," + load
@@ -238,7 +242,7 @@ object Bench {
           s""""value_best":${bestRun.values.sum},"queries":$qs,""" +
           s""""queries_best":$qb$detail,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
     }
-    println(record(results, bestRun, detail, sfDir))
+    println(record(results, bestRun, detail, sfDir, failed.toSeq))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 import graft.meta._
 import graft.selection._
 import graft.compaction._
@@ -14,12 +12,7 @@ import graft.testkit.FileGenerator
   */
 object CompactionDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.local(4)
 
     val wh = java.nio.file.Files.createTempDirectory("demo-wh").toString
     val catalog = LocalCatalog(wh)

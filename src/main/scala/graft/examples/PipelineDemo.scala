@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.UnicodeFunctions
@@ -22,11 +21,7 @@ import graft.sources.Warc
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pipeline-demo").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.local()
     val sf = "/root/testdata/sf0.001"
     val catalog = LocalCatalog(
       java.nio.file.Files.createTempDirectory("pipeline-wh").toString)

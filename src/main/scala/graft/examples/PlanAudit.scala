@@ -6,12 +6,7 @@ package graft.examples
   * docs/PLANS.md per round. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.local(4)
     val sf = "/root/testdata/sf0.001"
     println("| query | exchanges | broadcast joins | sort-merge joins | pushed filters | codegen spans |")
     println("|---|---|---|---|---|---|")

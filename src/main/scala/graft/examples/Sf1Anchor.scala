@@ -1,12 +1,12 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.LocalCatalog
 import graft.selection.{FullCompactionConfig, PlanningParams}
 import graft.compaction.Compaction
 import graft.testkit.FileGenerator
+import graft.util.{Profile, Sessions}
 
 /** ONE measured sf1 datapoint for the heavy dedup/index/compaction lines
   * (the round-10 verdict's item 5): every scale claim above sf0.1 was
@@ -44,24 +44,9 @@ import graft.testkit.FileGenerator
 object Sf1Anchor {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.SparkLogs.quietGlobalWindowWarning()
-
-    def loadavg(): String =
-      scala.util.Try {
-        val parts = scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")
-        s"[${parts(0)},${parts(1)},${parts(2)}]"
-      }.getOrElse("null")
-    val loadStart = loadavg()
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
+    val loadStart = Profile.loadavg()
 
     // a swallowed failure must NOT read as a fast line: errors record
     // into the JSON (and fail the process) so adjudication can never
@@ -109,7 +94,7 @@ object Sf1Anchor {
       base.select((col("doc_id") + lit(r.toLong * nBase * 10)).as("doc_id"),
         translate(col("text"), alpha, rot).as("text"))
     }.reduce(_ unionAll _)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint(true)
     val nTagged = tagged.count()
     detail("docs") = nTagged
@@ -120,7 +105,7 @@ object Sf1Anchor {
           concat(col("text"), lit(" extra")).as("text")))
       .unionAll(tagged.filter(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint(true)
     detail("seeded_docs") = seeded.count()
     markFixtures()
@@ -178,7 +163,7 @@ object Sf1Anchor {
       "of the License at http example com licenses and limitations ") * 3
     val planted = tagged.withColumn("text",
       when(col("doc_id") % 3 === 0, lit(boiler)).otherwise(col("text")))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint(true)
     markFixtures()
     detail("planted_bucket") = planted.filter(col("doc_id") % 3 === 0).count()
@@ -199,7 +184,7 @@ object Sf1Anchor {
     // ---- b2: persisted inverted index build + append + BM25 serve ----
     val plain = base.crossJoin(spark.range(reps).toDF("rep"))
       .select((col("doc_id") + col("rep") * nBase * 10).as("doc_id"), col("text"))
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .localCheckpoint(true)
     markFixtures()
     timed("b2_sf1") {
@@ -237,8 +222,8 @@ object Sf1Anchor {
       val c = new Compaction(catalog, "sf1_li", spark,
         config = FullCompactionConfig(PlanningParams(
           targetFileSizeBytes = 512L * 1024 * 1024,
-          maxInputParallelism = 4 * cpus.toInt,
-          maxOutputParallelism = cpus.toInt)),
+          maxInputParallelism = 4 * cpus,
+          maxOutputParallelism = cpus)),
         enableValidate = true)
       val res = c.compact()
       require(res.addedFiles.nonEmpty, "compaction produced no files")
@@ -247,7 +232,7 @@ object Sf1Anchor {
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val ds = detail.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val load = s""""load":{"start":$loadStart,"end":${loadavg()}}"""
+    val load = s""""load":{"start":$loadStart,"end":${Profile.loadavg()}}"""
     val errJson =
       if (errors.isEmpty) ""
       else errors.map { case (k, v) =>

@@ -113,7 +113,7 @@ object AnnIndex {
   /** Cell assignment + PQ encode against one centroid frame, joined to
     * (vec_id, cell_id, code_0..code_{m-1}).
     *
-    * Deliberately NOT Spread: measured (QueryJobProfile, s8) — the
+    * Deliberately NOT Spread: measured (graft.util.Profile, s8) — the
     * single-task build stages here are not compute-bound (nCells cosines
     * over fixed-width vectors are microseconds per row), and because the
     * cells⋈codes join evaluates `vectors` in BOTH subtrees, a Spread

@@ -1,12 +1,10 @@
 package graft.compaction
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +13,7 @@ import graft.SparkTestBase
 import graft.exec.{CompactionExecutor, RewriteRequest, RewriteResult, SparkExecutor}
 import graft.meta._
 import graft.selection.{FullCompactionConfig, PlanningParams}
+import graft.util.Profile
 
 /** The validation contract at the `compact()` level, and the plan
   * pipeline that takes the counts: a mismatch throws after the commit has
@@ -143,24 +142,8 @@ class ValidationPipelineSpec extends AnyFunSuite {
     assert(plans.size == 2 && plans.forall(p =>
       p.fileGroup.positionDeleteFiles.nonEmpty && p.fileGroup.equalityDeleteFiles.nonEmpty))
 
-    // only this call's jobs: pool threads inherit the caller's properties
-    val sc = spark.sparkContext
-    val key = "graft.spec.call"
-    val starts = new ConcurrentLinkedQueue[Long]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == "budget")) starts.add(e.time)
-    }
-    ListenerBusBridge.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, "budget")
-    try c.compact()
-    finally {
-      sc.setLocalProperty(key, null)
-      ListenerBusBridge.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    val times = starts.asScala.toSeq
+    // only this call's jobs: pool threads inherit the caller's job tag
+    val times = Profile.record(spark)(c.compact())._2.jobStarts
     assert(committedMs.get > 0)
     assert(!times.exists(_ >= committedMs.get), "a Spark job started after the commit")
     assert(times.size == ExpectedJobs, s"jobs: ${times.size}")

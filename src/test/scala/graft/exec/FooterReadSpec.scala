@@ -1,13 +1,12 @@
 package graft.exec
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.util.Profile
 
 /** Footer collection after a write must never degrade to a per-file
   * serial driver loop: at the reference's 4096-files-per-plan envelope
@@ -18,21 +17,8 @@ class FooterReadSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
 
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener events are async: give the bus a beat to drain
-      val deadline = System.nanoTime() + 1_500_000_000L
-      while (jobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(100)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
+  private def countJobs(body: => Unit): Int =
+    Profile.record(spark)(body)._2.jobStarts.size
 
   test("many-file writes collect footers via one distributed job, small writes serially") {
     val dir = Files.createTempDirectory("footer-many").toString

@@ -1,14 +1,13 @@
 package graft.exec
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.meta.SortField
+import graft.util.Profile
 
 /** Op 19 (spillable sort runtime): the compaction write path's sort is
   * Spark's UnsafeExternalSorter, which spills to disk under memory
@@ -26,19 +25,10 @@ class SpillSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("compaction sort spills under a forced budget and output stays sorted") {
-    val sc = spark.sparkContext
     val env = org.apache.spark.SparkEnv.get
     val key = "spark.shuffle.spill.numElementsForceSpillThreshold"
     val prev = env.conf.getOption(key)
 
-    val spilledBytes = new AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) spilledBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    sc.addSparkListener(listener)
     try {
       // every 2500 sorted rows forces a spill — the 4 MiB-budget analogue
       env.conf.set(key, "2500")
@@ -46,19 +36,18 @@ class SpillSpec extends AnyFunSuite {
       val src = spark.read.parquet(s"$sf/lineitem.parquet")
         .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"))
       val outDir = Files.createTempDirectory("graft-spill").toString
-      val written = SparkExecutor.writeDataFiles(
-        spark, src, outDir,
-        partitionSpec = Nil,
-        sortOrder = Seq(SortField("l_extendedprice")),
-        maxRecordsPerFile = Long.MaxValue,
-        repartitionTo = 2)
+      val (written, report) = Profile.record(spark) {
+        SparkExecutor.writeDataFiles(
+          spark, src, outDir,
+          partitionSpec = Nil,
+          sortOrder = Seq(SortField("l_extendedprice")),
+          maxRecordsPerFile = Long.MaxValue,
+          repartitionTo = 2)
+      }
       assert(written.nonEmpty)
 
-      // listener delivery is async: poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (spilledBytes.get() == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(spilledBytes.get() > 0, "sort under the forced budget must spill")
+      val spilledBytes = report.stages.map(_.spillBytes).sum
+      assert(spilledBytes > 0, "sort under the forced budget must spill")
 
       // spilling must not corrupt the result: same multiset of rows...
       val out = spark.read.parquet(written.map(_.path): _*)
@@ -77,7 +66,6 @@ class SpillSpec extends AnyFunSuite {
         case Some(v) => env.conf.set(key, v)
         case None    => env.conf.remove(key)
       }
-      sc.removeSparkListener(listener)
     }
   }
 }

@@ -1,9 +1,8 @@
 package graft.meta
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SourceScan
 
 /** Pins [[Catalog.transact]] as the engine's only commit path: a source
   * scan of `src/main/scala` for catalog `.commit(` calls. Allowed are the
@@ -15,16 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[TableMetadata.withSnapshot]] as the only snapshot builder. */
 class SingleCommitSiteSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
   private val CommitCall = """\.commit\(""".r
-
-  private def sources: Seq[Path] =
-    Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-
-  private def isComment(line: String): Boolean = {
-    val t = line.trim
-    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-  }
 
   /** A REST handler's commit: the conflict is caught right after the call
     * and answered with 409. */
@@ -35,16 +25,11 @@ class SingleCommitSiteSpec extends AnyFunSuite {
   }
 
   test("catalog commits happen only inside Catalog.transact") {
-    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val offenders = sources.flatMap { p =>
-      val lines = Files.readAllLines(p).asScala.toIndexedSeq
-      val implementsCatalog = lines.exists(_.contains("extends Catalog"))
-      val restServer = p.getFileName.toString == "IcebergRestServe.scala"
-      lines.indices.collect {
-        case i if CommitCall.findFirstIn(lines(i)).nonEmpty && !isComment(lines(i)) &&
-            !implementsCatalog && !(restServer && mapsConflictTo409(lines, i)) =>
-          s"${root.relativize(p)}:${i + 1}: ${lines(i).trim}"
-      }
+    val offenders = SourceScan.offenders(SourceScan.Main) { (file, lines, i) =>
+      def implementsCatalog = lines.exists(_.contains("extends Catalog"))
+      def restServer = file.getFileName.toString == "IcebergRestServe.scala"
+      CommitCall.findFirstIn(lines(i)).nonEmpty && !implementsCatalog &&
+        !(restServer && mapsConflictTo409(lines, i))
     }
     assert(offenders.isEmpty,
       "commit outside Catalog.transact — build the change inside " +
@@ -58,15 +43,10 @@ class SingleCommitSiteSpec extends AnyFunSuite {
     // the builder's file, plus the two decoders that read snapshots back
     // from stored metadata
     val mayConstruct = Set("Model.scala", "Json.scala", "IcebergImport.scala")
-    val offenders = sources.flatMap { p =>
-      val file = p.getFileName.toString
-      val lines = Files.readAllLines(p).asScala.toIndexedSeq
-      lines.indices.collect {
-        case i if !isComment(lines(i)) &&
-            ((SnapshotCall.findFirstIn(lines(i)).nonEmpty && !mayConstruct(file)) ||
-              (lines(i).contains("firstRowId = Some(") && file != "Model.scala")) =>
-          s"${root.relativize(p)}:${i + 1}: ${lines(i).trim}"
-      }
+    val offenders = SourceScan.offenders(SourceScan.Main) { (path, lines, i) =>
+      val file = path.getFileName.toString
+      (SnapshotCall.findFirstIn(lines(i)).nonEmpty && !mayConstruct(file)) ||
+        (lines(i).contains("firstRowId = Some(") && file != "Model.scala")
     }
     assert(offenders.isEmpty,
       "snapshot or row-id range assembled outside TableMetadata.withSnapshot — " +

@@ -1,14 +1,11 @@
 package graft.util
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, FutureTask, TimeUnit,
-  TimeoutException}
+import java.util.concurrent.{CountDownLatch, FutureTask, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -173,13 +170,7 @@ class OverlapFailureSpec extends AnyFunSuite {
       Seq((1L, textA), (2L, textB)).toDF("doc_id", "text"), "doc_id", "text", 0L).collect()
     val batch = Seq((10L, textA + " again"), (11L, "a fresh document about spark"))
       .toDF("doc_id", "text")
-    val starts = new ConcurrentLinkedQueue[Long]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
-    }
-    ListenerBusBridge.drain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val (threwAt, report) = Profile.record(spark) {
       // k = 6 is not a multiple of 4: the signature stage throws right
       // after the index histogram prefetch has been launched
       val e = intercept[IllegalArgumentException](Dedup.incrementalMinHash(spark, catalog,
@@ -188,9 +179,10 @@ class OverlapFailureSpec extends AnyFunSuite {
       assert(e.getMessage.contains("k must be a multiple of 4"), e.toString)
       Thread.sleep(1000) // an abandoned prefetch submits its job in this window
       assertNothingRunning()
-      val late = starts.asScala.count(_ > threwAt)
-      assert(late == 0, s"$late job(s) of the failed call started after it threw")
-    } finally sc.removeSparkListener(listener)
+      threwAt
+    }
+    val late = report.jobStarts.count(_ > threwAt)
+    assert(late == 0, s"$late job(s) of the failed call started after it threw")
     val out = Dedup.incrementalMinHash(spark, catalog, "nidx", batch, "doc_id", "text", 1L)
       .collect().map(_.getLong(0)).toSet
     assert(out == Set(11L))
