@@ -1,6 +1,5 @@
 package graft.compaction
 
-import java.nio.file.Paths
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
@@ -146,32 +145,12 @@ final class Compaction(
   private def rewritePlan(table: TableMetadata, plan: CompactionPlan): RewriteOutcome = {
     val req = RewriteRequest(
       group = plan.fileGroup,
-      schemaColumns = table.schemaColumns,
-      outputDir = Paths.get(table.location, "data").toString,
+      table = table,
       targetFileSizeBytes = targetFileSizeBytes,
-      partitionSpec = table.partitionSpec,
-      statsRetired = table.statsRetiredNames,
-      sortOrder = table.sortOrder,
-      formatVersion = table.formatVersion,
-      tableSchema = table.schema,
-      // v3: surviving rows keep their identity — the rewrite reads row
-      // ids and materializes `_row_id` into the new files
-      preserveRowIds = table.formatVersion >= 3 &&
-        table.schema.nonEmpty && table.schema.forall(_.isTyped),
       bytesPerRecordHint =
         if (enableDynamicSizeEstimation) sizeEstimator.estimate.getOrElse(0.0) else 0.0,
-      // Iceberg's write.distribution-mode=range: sort-ordered tables opt
-      // into a range exchange so rewritten files carry globally ordered,
-      // non-overlapping zone maps (range reads then prune to the files
-      // that intersect — the clustering that makes tableRange useful)
-      rangeDistribute =
-        table.properties.get("write.distribution-mode").contains("range"),
-      // Iceberg `write.parquet.*` TABLE PROPERTIES take precedence (the
-      // table owns its layout, like write.distribution-mode above); the
-      // constructor config supplies every field no property names
-      parquet = graft.exec.ParquetWriteConfig.fromProperties(
-        table.properties, base = parquetWrite)
-    )
+      // the table's `write.parquet.*` properties override this per field
+      parquet = parquetWrite)
     val res = executor.rewriteFiles(execSpark, req)
     if (enableDynamicSizeEstimation)
       sizeEstimator.observe(res.stats.outputBytes, res.stats.outputRecords)

@@ -157,8 +157,8 @@ object Maintenance {
       else if (f.isDeletionVector) false
       else if (f.content == FileContent.PositionDeletes) {
         import spark.implicits._
-        val referenced = spark.read.parquet(f.path)
-          .select("file_path").distinct().as[String].collect()
+        val referenced = graft.exec.Mor.readPositionDeletes(spark, Seq(f))
+          .select(graft.exec.Mor.FilePathCol).distinct().as[String].collect()
         !referenced.exists(dataPaths.contains)
       } else false
     }
@@ -199,6 +199,22 @@ object Maintenance {
           written.map(_.copy(content = FileContent.PositionDeletes, sequenceNumber = seq)))
     }
 
+  /** `(file_path, pos)` rows of position-delete `files`, read with the
+    * spec schema and null check of [[graft.exec.Mor.readPositionDeletes]]. */
+  private def positionDeleteRows(spark: org.apache.spark.sql.SparkSession,
+      files: Seq[FileEntry]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import graft.exec.Mor
+    Mor.readPositionDeletes(spark, files)
+      .select(col(Mor.FilePathCol).as("file_path"), col(Mor.PosCol).as("pos"))
+  }
+
+  /** Writes `positions` as ONE position-delete file of `meta`. */
+  private def writeOneTombstoneFile(spark: org.apache.spark.sql.SparkSession,
+      meta: TableMetadata, positions: org.apache.spark.sql.DataFrame): Seq[FileEntry] =
+    graft.exec.SparkExecutor.writeTableFiles(spark, meta, positions,
+      FileContent.PositionDeletes, targetFileSizeBytes = Long.MaxValue, repartitionTo = 1)
+
   /** Position-delete file compaction (Iceberg's
     * rewrite_position_delete_files): merges the branch head's pos-delete
     * files into one and drops tombstone ROWS whose referenced data file is
@@ -209,7 +225,6 @@ object Maintenance {
     * cannot make it match anything new. */
   def rewritePositionDeletes(spark: org.apache.spark.sql.SparkSession,
       catalog: Catalog, tableName: String): TableMetadata = {
-    import org.apache.spark.sql.functions.col
     val meta0 = catalog.loadTable(tableName)
     val snap0 = meta0.currentSnapshot.getOrElse(return meta0)
     // DVs are excluded: they are already one compact blob per data file;
@@ -222,16 +237,11 @@ object Maintenance {
     // survivors: tombstones whose target data file is still live
     val live = spark.createDataset(dataPaths)(
       org.apache.spark.sql.Encoders.STRING).toDF("file_path")
-    val survivors = spark.read.parquet(posFiles.map(_.path): _*)
-      .select(col("file_path"), col("pos"))
+    val survivors = positionDeleteRows(spark, posFiles)
       .join(org.apache.spark.sql.functions.broadcast(live), Seq("file_path"), "left_semi")
     val written =
       if (survivors.isEmpty) Nil
-      else graft.exec.SparkExecutor.writeDataFiles(spark,
-        graft.meta.IceWrite.withPosDeleteFieldIds(survivors),
-        MetaIO.join(meta0.location, "data"),
-        partitionSpec = Nil, sortOrder = Nil, maxRecordsPerFile = Long.MaxValue,
-        repartitionTo = 1)
+      else writeOneTombstoneFile(spark, meta0, survivors)
     swapInPositionDeletes(catalog, tableName, posFiles.map(_.resolutionKey).toSet,
       written, posFiles.map(_.sequenceNumber).max)
   }
@@ -281,19 +291,13 @@ object Maintenance {
       val dead = raw.join(live, Seq("file_path", "pos"), "left_anti")
       // rows already pos-tombstoned must not duplicate into the new file
       if (g.positionDeleteFiles.isEmpty) dead
-      else dead.join(
-        spark.read.parquet(g.positionDeleteFiles.map(_.path): _*)
-          .select(col("file_path"), col("pos")),
+      else dead.join(positionDeleteRows(spark, g.positionDeleteFiles),
         Seq("file_path", "pos"), "left_anti")
     }.reduce(_ unionAll _)
 
     val written =
       if (killed.isEmpty) Nil
-      else graft.exec.SparkExecutor.writeDataFiles(spark,
-        graft.meta.IceWrite.withPosDeleteFieldIds(killed),
-        MetaIO.join(meta0.location, "data"),
-        partitionSpec = Nil, sortOrder = Nil, maxRecordsPerFile = Long.MaxValue,
-        repartitionTo = 1)
+      else writeOneTombstoneFile(spark, meta0, killed)
     // the tombstones replace the eq files' effect; stamp their max seq
     // (same safety argument as rewritePositionDeletes: pos application
     // is path-addressed and rewrites always mint fresh paths)
@@ -420,10 +424,8 @@ object Maintenance {
         MetaIO.installExecutorConf(shipped)
         Puffin.decodeDvBlob(Puffin.readBlob(p, off, len)).positions.map(pos => (file, pos))
       }.toDF("file_path", "pos")
-    val written = graft.exec.SparkExecutor.writeDataFiles(spark,
-      graft.meta.IceWrite.withPosDeleteFieldIds(positions),
-      MetaIO.join(meta0.location, "data"),
-      partitionSpec = Nil, sortOrder = Nil, maxRecordsPerFile = Long.MaxValue)
+    val written = graft.exec.SparkExecutor.writeTableFiles(spark, meta0, positions,
+      FileContent.PositionDeletes, targetFileSizeBytes = Long.MaxValue)
     swapInPositionDeletes(catalog, tableName, dvEntries.map(_.resolutionKey).toSet,
       written, dvEntries.map(_.sequenceNumber).max)
   }

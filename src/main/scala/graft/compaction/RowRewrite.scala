@@ -1,13 +1,11 @@
 package graft.compaction
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.exec.{Mor, RewriteRequest, SparkExecutor}
 import graft.meta.{Catalog, FileContent, TableMetadata}
-import graft.selection.{Defaults, FileGroup}
+import graft.selection.FileGroup
 
 /** Copy-on-write row-level operations: UPDATE ... WHERE and physical
   * row PURGE — the COW half of the row-level story whose MOR half is
@@ -107,7 +105,7 @@ object RowRewrite {
           .select(Mor.normalizePath(col("_metadata.file_path")).as("p")))
       .distinct().collect().map(_.getString(0)).toSet
     val affected = tasks.filter(t =>
-      affectedPaths.contains(t.path.replaceFirst("^file:/+", "/")))
+      affectedPaths.contains(Mor.normalizePath(t.path)))
     if (affected.isEmpty) return meta
 
     // one group per partition (scoped equality deletes refuse
@@ -118,23 +116,11 @@ object RowRewrite {
       .map { case (_, fs) => FileGroup.fromDataFiles(fs, byPath.get) }
 
     val outcomes = groups.map { g =>
-      val req = RewriteRequest(
-        group = g,
-        schemaColumns = meta.schemaColumns,
-        outputDir = Paths.get(meta.location, "data").toString,
-        targetFileSizeBytes = Defaults.TargetFileSize,
-        partitionSpec = meta.partitionSpec,
-        statsRetired = meta.statsRetiredNames,
-        sortOrder = meta.sortOrder,
-        formatVersion = meta.formatVersion,
-        tableSchema = meta.schema,
-        // v3: COW edits must not re-identify surviving rows — read them
-        // WITH their lineage and materialize it into the rewritten files
-        // (updateWhere's projection passes the lineage columns through;
-        // purge is a filter and never drops columns)
-        preserveRowIds = meta.formatVersion >= 3 &&
-          meta.schema.nonEmpty && meta.schema.forall(_.isTyped),
-        rowTransform = transform)
+      // v3: COW edits must not re-identify surviving rows — the rewrite
+      // reads them WITH their lineage and materializes it (updateWhere's
+      // projection passes the lineage columns through; purge is a filter
+      // and never drops columns)
+      val req = RewriteRequest(group = g, table = meta, rowTransform = transform)
       val res = SparkExecutor.rewriteFiles(spark, req)
       if (countPreserving) {
         // metadataAggregates=false: the in==out guard must re-scan the

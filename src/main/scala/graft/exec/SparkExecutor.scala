@@ -5,8 +5,8 @@ import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.meta.{FileContent, FileEntry, PartitionField, SchemaField, SortField}
-import graft.selection.FileGroup
+import graft.meta.{FileContent, FileEntry, IceWrite, MetaIO, PartitionField, SortField, TableMetadata}
+import graft.selection.{Defaults, FileGroup}
 
 /** Parquet writer tunables for the rolling sink — the reference's
   * `write_parquet_properties` knob (core/src/config/mod.rs:403; its
@@ -32,7 +32,8 @@ object ParquetWriteConfig {
   /** Public Iceberg table-property names (Iceberg table-configuration
     * docs: write properties). A table that carries them keeps its write
     * tuning through export/import, and EVERY writer — ingest, upsert,
-    * partition overwrite, compaction — honors them. */
+    * merge, partition overwrite, compaction, maintenance — honors them,
+    * through [[SparkExecutor.writeTableFiles]]. */
   val CompressionKey = "write.parquet.compression-codec"
   val RowGroupKey = "write.parquet.row-group-size-bytes"
   val PageSizeKey = "write.parquet.page-size-bytes"
@@ -53,18 +54,14 @@ object ParquetWriteConfig {
       }).distinct.sorted)
 }
 
-/** One rewrite job: inputs (a planned file group) -> new data files. */
+/** One rewrite job: inputs (a planned file group) -> new data files of
+  * `table`. Everything the table decides — output directory, layout,
+  * field ids, row lineage, distribution mode and its `write.parquet.*`
+  * properties — is derived from it by [[SparkExecutor.writeTableFiles]]. */
 final case class RewriteRequest(
     group: FileGroup,
-    schemaColumns: Seq[String],
-    outputDir: String,
-    targetFileSizeBytes: Long,
-    partitionSpec: Seq[PartitionField] = Nil,
-    sortOrder: Seq[SortField] = Nil,
-    formatVersion: Int = 2,
-    /** typed field-id schema; threads id-matched reads through the rewrite
-      * so rewritten files keep their field ids (rename-safe round trip). */
-    tableSchema: Seq[SchemaField] = Nil,
+    table: TableMetadata,
+    targetFileSizeBytes: Long = Defaults.TargetFileSize,
     /** smoothed OUTPUT bytes/record from earlier plans in this run
       * (dynamic size estimation, config/mod.rs:37-38); <= 0 means none —
       * fall back to the input-derived ratio. */
@@ -74,20 +71,9 @@ final case class RewriteRequest(
       * inject their row edits here so the scan -> write machinery,
       * size targeting, and commit path stay one implementation. */
     rowTransform: DataFrame => DataFrame = identity,
-    /** range-distribute rows across write tasks by the sort key (Iceberg's
-      * `write.distribution-mode=range`): output files get GLOBALLY ordered,
-      * non-overlapping zone maps, so range reads prune to the few files
-      * that intersect instead of every file overlapping every query. */
-    rangeDistribute: Boolean = false,
-    /** v3 row lineage: read surviving rows WITH their row ids and
-      * MATERIALIZE `_row_id` into the rewritten files — compaction must
-      * not re-identify rows. Set by Compaction on v3 tables. */
-    preserveRowIds: Boolean = false,
-    /** parquet writer tunables for the rewritten files. */
-    parquet: ParquetWriteConfig = ParquetWriteConfig(),
-    /** retired stats names ([[graft.meta.TableMetadata.statsRetiredNames]]):
-      * pruning/zorder domains must not consult them. */
-    statsRetired: Set[String] = Set.empty
+    /** parquet writer tunables for the rewritten files; the table's own
+      * `write.parquet.*` properties override them per field. */
+    parquet: ParquetWriteConfig = ParquetWriteConfig()
 )
 
 final case class RewriteStats(
@@ -105,12 +91,6 @@ final case class RewriteResult(addedFiles: Seq[FileEntry], stats: RewriteStats)
   * (core/src/executor/mod.rs:36-38). */
 trait CompactionExecutor {
   def rewriteFiles(spark: SparkSession, req: RewriteRequest): RewriteResult
-}
-
-/** Test seam, like core/src/executor/mock.rs:22-29. */
-object MockExecutor extends CompactionExecutor {
-  override def rewriteFiles(spark: SparkSession, req: RewriteRequest): RewriteResult =
-    RewriteResult(Nil, RewriteStats(0, 0L, 0, 0L, 0L, 0L))
 }
 
 /** The Spark executor: MOR scan -> anti joins -> repartition -> sort ->
@@ -166,9 +146,10 @@ object SparkExecutor extends CompactionExecutor {
   private[exec] def partDirCol(p: PartitionField): String = s"__part_${p.column}"
 
   /** Shared rolling parquet sink: optional partition fan-out + per-
-    * partition sort + size-targeted zstd files under a fresh uuid dir;
-    * returns the written entries (with footer stats). Used by both the
-    * compaction rewrite and the append/ingest write paths. */
+    * partition sort + size-targeted files under a fresh uuid dir; returns
+    * the written entries (with footer stats). The raw sink: engine writes
+    * go through [[writeTableFiles]], which derives its arguments from the
+    * table. */
   def writeDataFiles(
       spark: SparkSession,
       input: DataFrame,
@@ -248,7 +229,7 @@ object SparkExecutor extends CompactionExecutor {
         else df.repartition(repartitionTo)
     }
     if (sortCols.nonEmpty) df = df.sortWithinPartitions(sortCols: _*)
-    val outDir = graft.meta.MetaIO.join(outputDir, UUID.randomUUID().toString)
+    val outDir = MetaIO.join(outputDir, UUID.randomUUID().toString)
     var writer = df.write
       .mode("overwrite")
       .option("compression", parquet.compression)         // default config/mod.rs:297
@@ -264,40 +245,66 @@ object SparkExecutor extends CompactionExecutor {
     listWrittenFiles(spark, outDir, partitionSpec)
   }
 
+  /** Iceberg's `write.distribution-mode`; `range` range-distributes
+    * rewrites by the sort key, so their files carry globally ordered,
+    * non-overlapping zone maps that range reads prune to. */
+  private val DistributionModeKey = "write.distribution-mode"
+
+  /** The engine's one table writer: every file an engine write adds to
+    * `table` is written here, with what the table decides derived from it
+    * in this one place —
+    *  - the directory, `location/data`;
+    *  - the field ids: schema ids (and the reserved lineage ids) for data
+    *    and equality-delete files on typed tables
+    *    ([[IceWrite.withFieldIds]]), the spec's reserved ids for position
+    *    deletes ([[IceWrite.withPosDeleteFieldIds]]);
+    *  - the layout: partition spec and sort order for data files, neither
+    *    for delete files, and [[DistributionModeKey]] for writes that
+    *    repartition;
+    *  - the parquet settings: the table's `write.parquet.*` properties
+    *    over `parquetBase`.
+    * Rows per file are `targetFileSizeBytes / bytesPerRecord`; 256 B/row
+    * is the pre-stats guess. */
+  def writeTableFiles(
+      spark: SparkSession,
+      table: TableMetadata,
+      df: DataFrame,
+      content: FileContent.Value = FileContent.Data,
+      targetFileSizeBytes: Long = Defaults.TargetFileSize,
+      bytesPerRecord: Double = 256.0,
+      repartitionTo: Int = 0,
+      zorderDomains: Map[String, (BigDecimal, BigDecimal)] = Map.empty,
+      parquetBase: ParquetWriteConfig = ParquetWriteConfig()): Seq[FileEntry] = {
+    val isData = content == FileContent.Data
+    val stamped =
+      if (content == FileContent.PositionDeletes) IceWrite.withPosDeleteFieldIds(df)
+      else if (table.isTyped) IceWrite.withFieldIds(df, table.schema)
+      else df
+    writeDataFiles(spark, stamped, MetaIO.join(table.location, "data"),
+      if (isData) table.partitionSpec else Nil,
+      if (isData) table.sortOrder else Nil,
+      maxRecordsPerFile = math.max(1L, (targetFileSizeBytes / bytesPerRecord).toLong),
+      repartitionTo = repartitionTo, zorderDomains = zorderDomains,
+      rangeDistribute = table.properties.get(DistributionModeKey).contains("range"),
+      parquet = ParquetWriteConfig.fromProperties(table.properties, parquetBase))
+  }
+
   override def rewriteFiles(spark: SparkSession, req: RewriteRequest): RewriteResult = {
     val t0 = System.nanoTime()
     val g = req.group
-    val morDf = req.rowTransform(
-      Mor.dataFrame(spark, g, req.schemaColumns, req.formatVersion, req.tableSchema,
-        keepRowIds = req.preserveRowIds,
+    val table = req.table
+    // v3: surviving rows keep their identity — the rewrite reads row ids
+    // and the writer materializes `_row_id` into the new files. The
+    // writer also re-stamps field ids: the MOR frame's id metadata is
+    // stripped on the name-matched branch (add_files-imported inputs),
+    // and rewritten files must ALWAYS carry footer ids, because their
+    // entries graduate to id-addressed reads (nameMatched=false)
+    val df = req.rowTransform(
+      Mor.dataFrame(spark, g, table.schemaColumns, table.formatVersion, table.schema,
+        keepRowIds = table.tracksRowLineage,
         // lets rowTransform filters (COW deleteWhere/update discovery)
         // prune files by identity partition values at plan time
-        pruneSpec = req.partitionSpec, statsRetired = req.statsRetired))
-    // re-stamp field ids explicitly: the MOR frame's id metadata is
-    // stripped on the name-matched branch (add_files-imported inputs), and
-    // a union drops it when such files dominate — rewritten files must
-    // ALWAYS carry footer ids, because their entries graduate to
-    // id-addressed reads (nameMatched=false)
-    val df =
-      if (req.tableSchema.nonEmpty && req.tableSchema.forall(_.isTyped)) {
-        val byName = req.tableSchema.map(f => f.name -> f).toMap
-        morDf.select(morDf.columns.toSeq.map { c =>
-          byName.get(c) match {
-            case Some(f) =>
-              val md = new org.apache.spark.sql.types.MetadataBuilder()
-                .putLong(SchemaField.ParquetFieldIdKey, f.id.toLong).build()
-              col(c).as(c, md)
-            // the materialized lineage columns get their reserved ids so
-            // id-matched reads resolve them in rewritten files
-            case None if c == Mor.RowIdCol || c == Mor.LastUpdatedSeqCol =>
-              val id = if (c == Mor.RowIdCol) Mor.RowIdFieldId else Mor.LastUpdatedSeqFieldId
-              val md = new org.apache.spark.sql.types.MetadataBuilder()
-                .putLong(SchemaField.ParquetFieldIdKey, id.toLong).build()
-              col(c).as(c, md)
-            case None => col(c)
-          }
-        }: _*)
-      } else morDf
+        pruneSpec = table.partitionSpec, statsRetired = table.statsRetiredNames))
 
     // target-file-size enforcement: records per target file from the
     // observed-output hint when dynamic estimation supplies one (the
@@ -308,16 +315,16 @@ object SparkExecutor extends CompactionExecutor {
     val bytesPerRecord =
       if (req.bytesPerRecordHint > 0) math.max(1.0, req.bytesPerRecordHint)
       else math.max(1L, inBytes / inRecords).toDouble
-    val maxRecordsPerFile = math.max(1L, (req.targetFileSizeBytes / bytesPerRecord).toLong)
 
     // zorder domains come free from the input files' manifest zone maps
     // when every data file carries stats for the column; otherwise
     // writeDataFiles falls back to one agg pass
+    val retired = table.statsRetiredNames
     val zorderDomains: Map[String, (BigDecimal, BigDecimal)] =
-      req.sortOrder.flatMap(s => SparkExecutor.multiColsOf(s.column)).flatten.distinct
+      table.sortOrder.flatMap(s => multiColsOf(s.column)).flatten.distinct
         .flatMap { c =>
           val perFile = g.dataFiles.map(_.columnStats.get(c))
-          if (!req.statsRetired.contains(c) && perFile.nonEmpty && perFile.forall(_.isDefined)) {
+          if (!retired.contains(c) && perFile.nonEmpty && perFile.forall(_.isDefined)) {
             // STRING zone maps don't parse: fall to the agg-pass path
             scala.util.Try {
               val mins = perFile.flatten.map(v => BigDecimal(v._1))
@@ -332,10 +339,10 @@ object SparkExecutor extends CompactionExecutor {
     // RecordBatchPartitionSplitter fan-out, executor/datafusion/mod.rs:163-223);
     // per-partition sort by table sort order (SortExec with
     // preserve_partitioning, datafusion_processor.rs:193-213)
-    val added = writeDataFiles(spark, df, req.outputDir, req.partitionSpec,
-      req.sortOrder, maxRecordsPerFile, repartitionTo = g.outputParallelism,
-      zorderDomains = zorderDomains, rangeDistribute = req.rangeDistribute,
-      parquet = req.parquet)
+    val added = writeTableFiles(spark, table, df,
+      targetFileSizeBytes = req.targetFileSizeBytes, bytesPerRecord = bytesPerRecord,
+      repartitionTo = g.outputParallelism, zorderDomains = zorderDomains,
+      parquetBase = req.parquet)
     val stats = RewriteStats(
       inputFiles = g.inputFilesCount,
       inputBytes = g.inputTotalBytes,
@@ -418,9 +425,6 @@ object SparkExecutor extends CompactionExecutor {
       )
     }
   }
-
-  def parquetRecordCount(conf: org.apache.hadoop.conf.Configuration, p: String): Long =
-    parquetFooterInfo(conf, p).rows
 
   /** Everything the manifest keeps from one parquet footer read: record
     * count, numeric zone maps, and per-column null counts (the latter for

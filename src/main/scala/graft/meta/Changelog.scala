@@ -52,8 +52,7 @@ object Changelog {
         * on two distinct ids. Requires a v3, typed table. */
       withRowIds: Boolean = false): DataFrame = {
     val meta = catalog.loadTable(name)
-    require(!withRowIds || (meta.formatVersion >= 3 &&
-      meta.schema.nonEmpty && meta.schema.forall(_.isTyped)),
+    require(!withRowIds || meta.tracksRowLineage,
       s"withRowIds requires a typed v3 table (table $name is v${meta.formatVersion})")
     val to = meta.snapshotById(toSnapshotId).getOrElse(
       throw new IllegalArgumentException(s"table $name has no snapshot $toSnapshotId"))

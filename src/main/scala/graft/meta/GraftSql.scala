@@ -1226,7 +1226,7 @@ object GraftSql {
       if (Views.isView(meta))
         return Seq(Row(s"CREATE VIEW $catalogName.$table AS\n" +
           meta.properties(Views.SqlKey)))
-      require(meta.schema.nonEmpty && meta.schema.forall(_.isTyped),
+      require(meta.isTyped,
         s"SHOW CREATE TABLE $catalogName.$table: untyped legacy table has no DDL form")
       val cols = meta.schema.map { f =>
         val nn = if (f.nullable) "" else " NOT NULL"

@@ -45,7 +45,7 @@ object IceRead {
         // an attached empty foreign table) reads as EMPTY with its
         // declared schema — the same contract every engine gives a fresh
         // table — rather than throwing "no snapshot"
-        require(meta.schema.nonEmpty && meta.schema.forall(_.isTyped),
+        require(meta.isTyped,
           s"table $name has no snapshot and no typed schema to shape an empty read")
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -534,10 +534,10 @@ object IceRead {
         // stores plain paths — normalize the scheme off before matching
         val seqOf = posFiles.map(f => (MetaIO.normalize(f.path), f.path, f.sequenceNumber))
           .toDF("__k", "delete_file", "sequence_number")
-        spark.read.parquet(posFiles.map(_.path): _*)
-          .select(col("file_path"), col("pos"),
-            org.apache.spark.sql.functions.regexp_replace(
-              col("_metadata.file_path"), "^file:/+", "/").as("__k"))
+        Mor.readPositionDeletes(spark, posFiles,
+            Mor.normalizePath(col("_metadata.file_path")).as("__k"))
+          .withColumnRenamed(Mor.FilePathCol, "file_path")
+          .withColumnRenamed(Mor.PosCol, "pos")
           // tiny dimension (one row per delete file): broadcast by size
           .join(org.apache.spark.sql.functions.broadcast(seqOf), Seq("__k"))
           .select(cols.map(col): _*)

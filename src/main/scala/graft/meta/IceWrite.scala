@@ -36,19 +36,15 @@ object IceWrite {
       extraProperties: Map[String, String] = Map.empty): TableMetadata = {
     require(!catalog.tableExists(name), s"table $name already exists")
     val schema = SchemaField.fromStruct(df.schema)
-    val typed = schema.nonEmpty && schema.forall(_.isTyped)
-    val out = if (typed) withFieldIds(df, schema) else df
-    val rowsEstimate = math.max(1L, targetFileSizeBytes / 256L)
-    val written = SparkExecutor.writeDataFiles(
-      spark, out, MetaIO.join(catalog.tableLocation(name), "data"),
-      partitionSpec, sortOrder, maxRecordsPerFile = rowsEstimate,
-      parquet = graft.exec.ParquetWriteConfig.fromProperties(extraProperties))
-    require(written.nonEmpty || df.isEmpty, s"create of $name wrote no files")
-    catalog.createTable(TableMetadata(
-      name = name, location = "", formatVersion = formatVersion,
+    val table = TableMetadata(
+      name = name, location = catalog.tableLocation(name), formatVersion = formatVersion,
       schema = schema, lastColumnId = schema.map(_.id).foldLeft(0)(math.max),
       partitionSpec = partitionSpec, sortOrder = sortOrder,
       properties = extraProperties)
+    val written = SparkExecutor.writeTableFiles(spark, table, df,
+      targetFileSizeBytes = targetFileSizeBytes)
+    require(written.nonEmpty || df.isEmpty, s"create of $name wrote no files")
+    catalog.createTable(table
       .withSnapshot(None,
         written.map(_.copy(content = FileContent.Data, sequenceNumber = 1L)),
         "append", 1L))
@@ -131,8 +127,7 @@ object IceWrite {
       "addFiles supports identity-partitioned or unpartitioned tables only " +
         s"(spec: ${meta.partitionSpec.map(_.transform).mkString(", ")})")
 
-    val typed = typedOf(meta)
-    if (typed) {
+    if (meta.isTyped) {
       // footer schemas of EVERY file merged (mergeSchema — without it
       // Spark infers from one footer and a per-file type conflict slips
       // through to fail at read time) vs declared types
@@ -278,23 +273,30 @@ object IceWrite {
         upsert(batch.sparkSession, catalog, name, latest, keys): Unit
       }
 
+  /** Column `name` carrying field id `id` as `parquet.field.id` metadata. */
+  private def fieldIdCol(name: String, id: Int): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.col(name).as(name,
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong(SchemaField.ParquetFieldIdKey, id.toLong).build())
+
   /** Stamps each column with its stable field id so the parquet writer puts
     * ids in the file footer (Spark's `parquet.field.id` metadata +
     * `spark.sql.parquet.fieldId.write.enabled`) — the write half of rename-
     * safe id-addressed reads. Columns are emitted in table-schema order;
     * absent (newly added, nullable) columns are simply not written and read
-    * back as NULL by id. */
+    * back as NULL by id. The v3 lineage columns a rewrite materializes
+    * ([[graft.exec.Mor.RowIdCol]], [[graft.exec.Mor.LastUpdatedSeqCol]])
+    * follow with their reserved ids, so id-matched readers (ours and
+    * external v3 engines) resolve them in rewritten files. */
   def withFieldIds(df: DataFrame, schema: Seq[SchemaField]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val names = schema.map(_.name).toSet
-    val unknown = df.columns.filterNot(names.contains)
+    import graft.exec.Mor
+    val ids = schema.map(f => f.name -> f.id) ++ Seq(
+      Mor.RowIdCol -> Mor.RowIdFieldId, Mor.LastUpdatedSeqCol -> Mor.LastUpdatedSeqFieldId)
+    val known = ids.map(_._1).toSet
+    val unknown = df.columns.filterNot(known.contains)
     require(unknown.isEmpty, s"columns not in table schema: ${unknown.mkString(",")}")
     val present = df.columns.toSet
-    df.select(schema.filter(f => present.contains(f.name)).map { f =>
-      val md = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(SchemaField.ParquetFieldIdKey, f.id.toLong).build()
-      col(f.name).as(f.name, md)
-    }: _*)
+    df.select(ids.collect { case (n, id) if present.contains(n) => fieldIdCol(n, id) }: _*)
   }
 
   /** Iceberg's RESERVED field ids for position-delete files (table spec
@@ -310,14 +312,10 @@ object IceWrite {
     * (ids are additive); external id-addressed readers need them. Every
     * pos-delete parquet writer must route through this. */
   def withPosDeleteFieldIds(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
     require(df.columns.toSet == Set("file_path", "pos"),
       s"position-delete frame must be exactly (file_path, pos), got ${df.columns.mkString(",")}")
-    def md(id: Int) = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(SchemaField.ParquetFieldIdKey, id.toLong).build()
-    df.select(
-      col("file_path").as("file_path", md(PosDeleteFilePathFieldId)),
-      col("pos").as("pos", md(PosDeletePosFieldId)))
+    df.select(fieldIdCol("file_path", PosDeleteFilePathFieldId),
+      fieldIdCol("pos", PosDeletePosFieldId))
   }
 
   /** One batch of files to stamp into a snapshot (an upsert commits an
@@ -362,11 +360,8 @@ object IceWrite {
         .copy(properties = meta.properties ++ extraProperties)
     }
 
-  private def typedOf(meta: TableMetadata): Boolean =
-    meta.schema.nonEmpty && meta.schema.forall(_.isTyped)
-
   private def eqIdsOf(meta: TableMetadata, equalityIds: Seq[String]): Seq[Int] =
-    if (typedOf(meta)) equalityIds.map(n => meta.fieldByName(n).getOrElse(
+    if (meta.isTyped) equalityIds.map(n => meta.fieldByName(n).getOrElse(
       throw new IllegalArgumentException(s"equality column $n not in schema")).id)
     else Nil
 
@@ -383,22 +378,8 @@ object IceWrite {
       afterWrite: Seq[FileEntry] => Unit = _ => (),
       stageWapId: Option[String] = None): TableMetadata = {
     val table0 = catalog.loadTable(name)
-    val typed = typedOf(table0)
-    // data and equality-delete files carry table-schema columns -> stamp
-    // field ids; position deletes get the spec's RESERVED ids (external
-    // readers project tombstones by id — see withPosDeleteFieldIds)
-    val out =
-      if (content == FileContent.PositionDeletes) withPosDeleteFieldIds(df)
-      else if (typed) withFieldIds(df, table0.schema)
-      else df
     // write the files once; only the metadata commit retries on conflict
-    val rowsEstimate = math.max(1L, targetFileSizeBytes / 256L) // ~256 B/row guess pre-stats
-    val written = SparkExecutor.writeDataFiles(
-      spark, out, MetaIO.join(table0.location, "data"),
-      if (content == FileContent.Data) table0.partitionSpec else Nil,
-      if (content == FileContent.Data) table0.sortOrder else Nil,
-      maxRecordsPerFile = rowsEstimate,
-      parquet = graft.exec.ParquetWriteConfig.fromProperties(table0.properties))
+    val written = SparkExecutor.writeTableFiles(spark, table0, df, content, targetFileSizeBytes)
     require(written.nonEmpty || df.isEmpty, s"append to $name wrote no files")
     afterWrite(written) // may throw (e.g. constraint violations) -> no commit
     commitSnapshot(catalog, name,
@@ -475,13 +456,7 @@ object IceWrite {
     * working because the dropped files stay on disk until expiry. */
   def replaceAll(spark: SparkSession, catalog: Catalog, name: String,
       df: DataFrame): TableMetadata = {
-    val meta0 = catalog.loadTable(name)
-    val out = if (typedOf(meta0)) withFieldIds(df, meta0.schema) else df
-    val written = SparkExecutor.writeDataFiles(
-      spark, out, MetaIO.join(meta0.location, "data"),
-      meta0.partitionSpec, meta0.sortOrder,
-      maxRecordsPerFile = math.max(1L, Defaults.TargetFileSize / 256L),
-      parquet = graft.exec.ParquetWriteConfig.fromProperties(meta0.properties))
+    val written = SparkExecutor.writeTableFiles(spark, catalog.loadTable(name), df)
     commitSnapshot(catalog, name,
       Seq(StampSet(written, FileContent.Data, Nil, Nil)),
       operation = "overwrite", branch = "main", pruneParent = _ => Nil)
@@ -505,12 +480,7 @@ object IceWrite {
       "overwritePartitions replaces partitions by VALUE; bucket " +
         "transforms have no faithful literal to match on")
     if (df.isEmpty) return meta0
-    val out = if (typedOf(meta0)) withFieldIds(df, meta0.schema) else df
-    val written = SparkExecutor.writeDataFiles(
-      spark, out, MetaIO.join(meta0.location, "data"),
-      meta0.partitionSpec, meta0.sortOrder,
-      maxRecordsPerFile = math.max(1L, Defaults.TargetFileSize / 256L),
-      parquet = graft.exec.ParquetWriteConfig.fromProperties(meta0.properties))
+    val written = SparkExecutor.writeTableFiles(spark, meta0, df)
     val touched = written.map(_.partitionValues).distinct
     commitSnapshot(catalog, name,
       Seq(StampSet(written, FileContent.Data, Nil, Nil)),
@@ -531,26 +501,21 @@ object IceWrite {
       branch: String = "main"): TableMetadata = {
     require(keys.nonEmpty, "upsert needs at least one key column")
     val table0 = catalog.loadTable(name)
-    val typed = typedOf(table0)
     import org.apache.spark.sql.functions.col
-    val dataDir = MetaIO.join(table0.location, "data")
-    val rowsEstimate = math.max(1L, targetFileSizeBytes / 256L)
     // ONE pass over the caller's plan: write the data files first, then
     // derive the equality-delete keys by reading the key columns BACK from
     // the files just written (column-pruned, tiny) — the old
     // keys-then-data order ran the whole input plan twice, which doubles
     // an expensive upsert source (e.g. the text-index postings aggregate)
     // at any scale. The distinct key set is identical by construction.
-    val dataFiles = SparkExecutor.writeDataFiles(spark,
-      if (typed) withFieldIds(df, table0.schema) else df,
-      dataDir, table0.partitionSpec, table0.sortOrder, rowsEstimate)
+    val dataFiles = SparkExecutor.writeTableFiles(spark, table0, df,
+      targetFileSizeBytes = targetFileSizeBytes)
     val keyDf =
       if (dataFiles.isEmpty) df.select(keys.map(col): _*).distinct() // empty source
       else spark.read.parquet(dataFiles.map(_.path): _*)
         .select(keys.map(col): _*).distinct()
-    val delFiles = SparkExecutor.writeDataFiles(spark,
-      if (typed) withFieldIds(keyDf, table0.schema) else keyDf,
-      dataDir, Nil, Nil, rowsEstimate)
+    val delFiles = SparkExecutor.writeTableFiles(spark, table0, keyDf,
+      FileContent.EqualityDeletes, targetFileSizeBytes)
     commitSnapshot(catalog, name, Seq(
       StampSet(delFiles, FileContent.EqualityDeletes, keys, eqIdsOf(table0, keys)),
       StampSet(dataFiles, FileContent.Data)),
@@ -667,16 +632,11 @@ object IceWrite {
     val touchedKeys = bySourceTouchedKeys
       .map(b => matchedTouched.unionAll(b).distinct())
       .getOrElse(matchedTouched)
-    val typed = typedOf(table0)
-    val dataDir = MetaIO.join(table0.location, "data")
-    val rowsEstimate = math.max(1L, targetFileSizeBytes / 256L)
-    val delFiles = SparkExecutor.writeDataFiles(spark,
-      if (typed) withFieldIds(touchedKeys, table0.schema) else touchedKeys,
-      dataDir, Nil, Nil, rowsEstimate)
+    val delFiles = SparkExecutor.writeTableFiles(spark, table0, touchedKeys,
+      FileContent.EqualityDeletes, targetFileSizeBytes)
     val newRows = bySourceUpdated.foldLeft(updated.unionAll(inserted))(_ unionAll _)
-    val dataFiles = SparkExecutor.writeDataFiles(spark,
-      if (typed) withFieldIds(newRows, table0.schema) else newRows,
-      dataDir, table0.partitionSpec, table0.sortOrder, rowsEstimate)
+    val dataFiles = SparkExecutor.writeTableFiles(spark, table0, newRows,
+      targetFileSizeBytes = targetFileSizeBytes)
     commitSnapshot(catalog, name, Seq(
       StampSet(delFiles, FileContent.EqualityDeletes, keys, eqIdsOf(table0, keys)),
       StampSet(dataFiles, FileContent.Data)),
@@ -689,7 +649,6 @@ object IceWrite {
     * an already-tombstoned row is a harmless duplicate. */
   def deleteWhere(spark: SparkSession, catalog: Catalog, name: String,
       condition: org.apache.spark.sql.Column, branch: String = "main"): TableMetadata = {
-    import org.apache.spark.sql.functions.col
     val meta = catalog.loadTable(name)
     // format v3 replaces position-delete FILES with deletion vectors
     // (spec: writers must not add new position-delete files to v3
@@ -697,22 +656,32 @@ object IceWrite {
     // tables stay export-faithful without a conversion pass
     if (meta.formatVersion >= 3)
       return deleteWhereDv(spark, catalog, name, condition, branch)
-    val snap = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
-    val dataFiles = snap.manifest.filter(_.content == FileContent.Data)
-    require(dataFiles.nonEmpty, s"table $name has no data files")
-    // per-file addressing (field-id vs imported name-matched) via readDataWith
-    val positions = graft.exec.Mor.readDataWith(spark, dataFiles, meta.typedStruct,
-      meta.partitionSpec, meta.statsRetiredNames)(
-      _.withColumn("__fp", graft.exec.Mor.normalizePath(col("_metadata.file_path")))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .filter(condition)
-        .select(col("__fp").as("file_path"), col("__pos").as("pos")))
+    val positions = matchingPositions(spark, meta, condition, branch)
     // REBALANCE: the tombstone projection inherits the scan's partitioning
     // (one partition per scanned file) and would otherwise land one tiny
     // pos-delete file per scanned data file; AQE sizes the output instead
     appendInternal(spark, catalog, name, positions.hint("rebalance"),
       FileContent.PositionDeletes, Nil, Defaults.TargetFileSize, branch)
+  }
+
+  /** `(file_path, pos)` of every row of `branch`'s data files that
+    * matches `condition` — the tombstone set of a row-level DELETE.
+    * Per-file addressing (field-id vs imported name-matched) comes from
+    * [[graft.exec.Mor.readDataWith]]. */
+  private def matchingPositions(spark: SparkSession, meta: TableMetadata,
+      condition: org.apache.spark.sql.Column, branch: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val snap = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
+      .getOrElse(throw new IllegalStateException(
+        s"table ${meta.name} has no snapshot on branch $branch"))
+    val dataFiles = snap.manifest.filter(_.content == FileContent.Data)
+    require(dataFiles.nonEmpty, s"table ${meta.name} has no data files")
+    graft.exec.Mor.readDataWith(spark, dataFiles, meta.typedStruct,
+      meta.partitionSpec, meta.statsRetiredNames)(
+      _.withColumn("__fp", graft.exec.Mor.normalizePath(col("_metadata.file_path")))
+        .withColumn("__pos", col("_metadata.row_index"))
+        .filter(condition)
+        .select(col("__fp").as("file_path"), col("__pos").as("pos")))
   }
 
   /** Row-level UPDATE ... SET ... WHERE: ONE atomic snapshot carries
@@ -748,7 +717,7 @@ object IceWrite {
     // UPDATE preserves row identity — the updated row is the SAME row,
     // its _last_updated_seq moving to the new snapshot's sequence via the
     // file's sequence number (nothing to materialize for that)
-    val carryRowIds = table0.formatVersion >= 3 && typedOf(table0)
+    val carryRowIds = table0.tracksRowLineage
     val live = IceRead.ofSnapshot(spark, table0, snap, keepHidden = true,
       keepRowIds = carryRowIds)
     val hiddenCols = Set(graft.exec.Mor.FilePathCol, graft.exec.Mor.PosCol,
@@ -766,33 +735,10 @@ object IceWrite {
       val v = set.getOrElse(c, col(c))
       table0.fieldByName(c).filter(_.isTyped).fold(v)(f => v.cast(f.sparkType)).as(c)
     } ++ (if (carryRowIds) Seq(col(graft.exec.Mor.RowIdCol)) else Nil): _*)
-    val typed = typedOf(table0)
-    val dataDir = MetaIO.join(table0.location, "data")
-    val rowsEstimate = math.max(1L, targetFileSizeBytes / 256L)
-    val parquetCfg = graft.exec.ParquetWriteConfig.fromProperties(table0.properties)
-    def writeUpdatedCopies(): Seq[FileEntry] = {
-      // schema columns get their field ids; the materialized _row_id gets
-      // the spec's reserved lineage id so id-matched readers (ours and
-      // external v3 engines) resolve it in the rewritten files
-      val stamped =
-        if (!typed) updated
-        else {
-          val byName = table0.schema.map(f => f.name -> f).toMap
-          updated.select(updated.columns.toSeq.map { c =>
-            val id = byName.get(c).map(_.id)
-              .orElse(if (c == graft.exec.Mor.RowIdCol)
-                Some(graft.exec.Mor.RowIdFieldId) else None)
-            id.fold(col(c)) { i =>
-              val md = new org.apache.spark.sql.types.MetadataBuilder()
-                .putLong(SchemaField.ParquetFieldIdKey, i.toLong).build()
-              col(c).as(c, md)
-            }
-          }: _*)
-        }
-      SparkExecutor.writeDataFiles(spark, stamped,
-        dataDir, table0.partitionSpec, table0.sortOrder, rowsEstimate,
-        parquet = parquetCfg)
-    }
+    // the materialized _row_id gets its reserved lineage id from the writer
+    def writeUpdatedCopies(): Seq[FileEntry] =
+      SparkExecutor.writeTableFiles(spark, table0, updated,
+        targetFileSizeBytes = targetFileSizeBytes)
     if (table0.formatVersion >= 3)
       // v3 forbids new position-delete FILES: the tombstones become
       // deletion vectors committed in the SAME snapshot as the rewritten
@@ -801,9 +747,8 @@ object IceWrite {
       return commitDvSnapshot(spark, catalog, name, positions, branch,
         DeletionVectors.MaxDriverBlobBytes,
         newDataFiles = () => writeUpdatedCopies(), operation = "overwrite")
-    val posFiles = SparkExecutor.writeDataFiles(spark,
-      withPosDeleteFieldIds(positions), dataDir, Nil, Nil, rowsEstimate,
-      parquet = parquetCfg)
+    val posFiles = SparkExecutor.writeTableFiles(spark, table0, positions,
+      FileContent.PositionDeletes, targetFileSizeBytes)
     if (posFiles.isEmpty) return table0 // nothing matched: no-op, no commit
     val dataFiles = writeUpdatedCopies()
     commitSnapshot(catalog, name, Seq(
@@ -824,18 +769,7 @@ object IceWrite {
   def deleteWhereDv(spark: SparkSession, catalog: Catalog, name: String,
       condition: org.apache.spark.sql.Column, branch: String = "main",
       maxDriverBlobBytes: Long = DeletionVectors.MaxDriverBlobBytes): TableMetadata = {
-    import org.apache.spark.sql.functions.col
-    val meta0 = catalog.loadTable(name)
-    val snap0 = meta0.snapshotForRef(branch).orElse(meta0.currentSnapshot)
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
-    val dataFiles = snap0.manifest.filter(_.content == FileContent.Data)
-    require(dataFiles.nonEmpty, s"table $name has no data files")
-    val positions = graft.exec.Mor.readDataWith(spark, dataFiles, meta0.typedStruct,
-      meta0.partitionSpec, meta0.statsRetiredNames)(
-      _.withColumn("__fp", graft.exec.Mor.normalizePath(col("_metadata.file_path")))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .filter(condition)
-        .select(col("__fp").as("file_path"), col("__pos").as("pos")))
+    val positions = matchingPositions(spark, catalog.loadTable(name), condition, branch)
     commitDvSnapshot(spark, catalog, name, positions, branch, maxDriverBlobBytes)
   }
 

@@ -73,7 +73,7 @@ object IcebergExport {
     * field id, or a later ADD COLUMN by another engine would mint a
     * colliding id. */
   private def schemaJsonWithMax(meta: TableMetadata, fv: Int = 2): (JValue, Int) = {
-    require(meta.schema.nonEmpty && meta.schema.forall(_.isTyped),
+    require(meta.isTyped,
       "exportIcebergMetadata requires a typed (field-id) schema")
     var next = math.max(meta.lastColumnId, meta.schema.map(_.id).max)
     val fresh = () => { next += 1; next }

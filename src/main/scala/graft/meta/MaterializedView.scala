@@ -120,7 +120,6 @@ object MaterializedView {
       survivors: DataFrame, deadKeys: DataFrame, keys: Seq[String],
       expectedWatermark: Long, newWatermark: Long): TableMetadata = {
     val table0 = catalog.loadTable(name)
-    val dataDir = MetaIO.join(table0.location, "data")
     val touchedKeys = survivors.select(keys.map(col): _*).unionAll(deadKeys).distinct()
     // the touched-key delete file and the survivor data file both derive
     // from the SAME checkpointed merge blocks and write to disjoint UUID
@@ -128,10 +127,10 @@ object MaterializedView {
     // (guide §2.6) instead of serializing two commands per refresh; the
     // CAS commit below still sees both complete or neither
     val (delFiles, dataFiles) = JobScope.both(spark.sparkContext)(
-      SparkExecutor.writeDataFiles(spark,
-        IceWrite.withFieldIds(touchedKeys, table0.schema), dataDir, Nil, Nil, Long.MaxValue),
-      SparkExecutor.writeDataFiles(spark,
-        IceWrite.withFieldIds(survivors, table0.schema), dataDir, Nil, Nil, Long.MaxValue))
+      SparkExecutor.writeTableFiles(spark, table0, touchedKeys,
+        FileContent.EqualityDeletes, targetFileSizeBytes = Long.MaxValue),
+      SparkExecutor.writeTableFiles(spark, table0, survivors,
+        targetFileSizeBytes = Long.MaxValue))
     val eqFieldIds = keys.map(k => table0.fieldByName(k).getOrElse(
       throw new IllegalArgumentException(s"key column $k not in view schema")).id)
 

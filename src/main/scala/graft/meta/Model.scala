@@ -378,10 +378,15 @@ final case class TableMetadata(
   def schemaColumns: Seq[String] = schema.map(_.name)
   def fieldById(id: Int): Option[SchemaField] = schema.find(_.id == id)
   def fieldByName(name: String): Option[SchemaField] = schema.find(_.name == name)
+  /** Every column is typed: files carry field ids and reads address
+    * columns by id. False for legacy name-addressed tables. */
+  def isTyped: Boolean = schema.nonEmpty && schema.forall(_.isTyped)
+  /** v3 row lineage applies: rewrites read and materialize `_row_id`. */
+  def tracksRowLineage: Boolean = formatVersion >= 3 && isTyped
   /** The id-bearing Spark read schema when every field is typed; None for
     * legacy name-addressed tables. */
   def typedStruct: Option[org.apache.spark.sql.types.StructType] =
-    if (schema.nonEmpty && schema.forall(_.isTyped))
+    if (isTyped)
       Some(org.apache.spark.sql.types.StructType(schema.map(_.toStructField)))
     else None
   def snapshotById(id: Long): Option[Snapshot] = snapshots.find(_.snapshotId == id)

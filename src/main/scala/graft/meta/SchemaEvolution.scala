@@ -140,7 +140,7 @@ object SchemaEvolution {
   def applyForeignSchema(meta: TableMetadata, proposed: Seq[SchemaField],
       lastColumnIdHint: Option[Int]): TableMetadata = {
     require(proposed.nonEmpty, "add-schema: empty schema")
-    require(meta.schema.nonEmpty && meta.schema.forall(_.isTyped),
+    require(meta.isTyped,
       "add-schema: the table has no typed (field-id) schema to evolve")
     require(proposed.forall(_.isTyped), "add-schema: untyped field in schema")
     require(proposed.map(_.id).distinct.size == proposed.size,

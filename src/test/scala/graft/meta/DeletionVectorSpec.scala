@@ -287,35 +287,53 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(got == viaDriver)
   }
 
-  test("a second position-delete file without `pos` fails the conversion, deleting nothing") {
+  /** A table `name` whose head holds two position-delete files: a
+    * nullable `pos` in the first, none in the second — a schema inferred
+    * from the first footer reads the second's `pos` as null. */
+  private def tableWithPosLessDeleteFile(name: String): LocalCatalog = {
     val s = spark
     import s.implicits._
-    val catalog = LocalCatalog(Files.createTempDirectory("graft-dv-nopos").toString)
-    IceWrite.create(spark, catalog, "t_nopos", spark.range(0, 100, 1, 2).toDF("id"))
-    val data = catalog.loadTable("t_nopos").currentSnapshot.get.manifest
+    val catalog = LocalCatalog(Files.createTempDirectory(s"graft-dv-$name").toString)
+    IceWrite.create(spark, catalog, name, spark.range(0, 100, 1, 2).toDF("id"))
+    val data = catalog.loadTable(name).currentSnapshot.get.manifest
     assert(data.size == 2)
-    // a nullable `pos` in the first file, none in the second: a schema
-    // inferred from the first footer reads the second's `pos` as null
     def deleteFile(rows: org.apache.spark.sql.DataFrame, file: String): FileEntry = {
       val (path, size, n, _) = graft.testkit.FileGenerator.writeSingleParquet(spark, rows,
-        java.nio.file.Paths.get(catalog.dataDir("t_nopos"), file))
+        java.nio.file.Paths.get(catalog.dataDir(name), file))
       FileEntry(path, size, FileContent.PositionDeletes, n, sequenceNumber = 0L)
     }
     val deletes = Seq(
       deleteFile(Seq((data.head.path, Option(5L))).toDF("file_path", "pos"), "pos-delete-a.parquet"),
       deleteFile(Seq(data(1).path).toDF("file_path"), "pos-delete-b.parquet"))
-    catalog.transact("t_nopos") { meta =>
+    catalog.transact(name) { meta =>
       val seq = meta.lastSequenceNumber + 1
       val parent = meta.currentSnapshot
       meta.withSnapshot(parent, parent.get.manifest ++ deletes.map(_.copy(sequenceNumber = seq)),
         "delete", seq)
     }
+    catalog
+  }
+
+  private def failsOnMissingPos(e: Throwable): Boolean =
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("position-delete file has no `pos` value"))
+
+  test("a second position-delete file without `pos` fails the conversion, deleting nothing") {
+    val catalog = tableWithPosLessDeleteFile("t_nopos")
     val head = catalog.loadTable("t_nopos").currentSnapshotId
     val e = intercept[Exception](Maintenance.convertPositionDeletesToDVs(spark, catalog, "t_nopos"))
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("position-delete file has no `pos` value")),
-      e.toString)
+    assert(failsOnMissingPos(e), e.toString)
     // no deletion vector committed: row 0 of the second file is not tombstoned
     assert(catalog.loadTable("t_nopos").currentSnapshotId == head)
+  }
+
+  test("a second position-delete file without `pos` fails the tombstone merge, committing nothing") {
+    val catalog = tableWithPosLessDeleteFile("t_nopos_merge")
+    val head = catalog.loadTable("t_nopos_merge").currentSnapshotId
+    val e = intercept[Exception](
+      Maintenance.rewritePositionDeletes(spark, catalog, "t_nopos_merge"))
+    assert(failsOnMissingPos(e), e.toString)
+    // no merged tombstone file holding a null `pos` was committed
+    assert(catalog.loadTable("t_nopos_merge").currentSnapshotId == head)
   }
 }
