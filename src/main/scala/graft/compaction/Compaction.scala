@@ -203,8 +203,7 @@ final class Compaction(
         scope.fork(workers) {
           val table = catalog.loadTable(tableName)
           val inputRows = Option.when(validate)(scope.fork(counters)(
-            Validator.inputRows(spark, plan.fileGroup, table.schemaColumns,
-              table.formatVersion, table.schema)))
+            Validator.inputRows(spark, plan.fileGroup, table)))
           val outcome = journaled(plan).fold {
             val o = rewritePlan(table, plan)
             onRewritten(o)

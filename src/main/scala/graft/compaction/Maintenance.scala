@@ -199,16 +199,6 @@ object Maintenance {
           written.map(_.copy(content = FileContent.PositionDeletes, sequenceNumber = seq)))
     }
 
-  /** `(file_path, pos)` rows of position-delete `files`, read with the
-    * spec schema and null check of [[graft.exec.Mor.readPositionDeletes]]. */
-  private def positionDeleteRows(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[FileEntry]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import graft.exec.Mor
-    Mor.readPositionDeletes(spark, files)
-      .select(col(Mor.FilePathCol).as("file_path"), col(Mor.PosCol).as("pos"))
-  }
-
   /** Writes `positions` as ONE position-delete file of `meta`. */
   private def writeOneTombstoneFile(spark: org.apache.spark.sql.SparkSession,
       meta: TableMetadata, positions: org.apache.spark.sql.DataFrame): Seq[FileEntry] =
@@ -225,6 +215,8 @@ object Maintenance {
     * cannot make it match anything new. */
   def rewritePositionDeletes(spark: org.apache.spark.sql.SparkSession,
       catalog: Catalog, tableName: String): TableMetadata = {
+    import org.apache.spark.sql.functions.col
+    import graft.exec.Mor
     val meta0 = catalog.loadTable(tableName)
     val snap0 = meta0.currentSnapshot.getOrElse(return meta0)
     // DVs are excluded: they are already one compact blob per data file;
@@ -237,7 +229,8 @@ object Maintenance {
     // survivors: tombstones whose target data file is still live
     val live = spark.createDataset(dataPaths)(
       org.apache.spark.sql.Encoders.STRING).toDF("file_path")
-    val survivors = positionDeleteRows(spark, posFiles)
+    val survivors = Mor.readPositionDeletes(spark, posFiles)
+      .select(col(Mor.FilePathCol).as("file_path"), col(Mor.PosCol).as("pos"))
       .join(org.apache.spark.sql.functions.broadcast(live), Seq("file_path"), "left_semi")
     val written =
       if (survivors.isEmpty) Nil
@@ -253,9 +246,11 @@ object Maintenance {
     * materializes the kill set ONCE so every read afterwards stops
     * paying it. Tombstone-only: no data file is rewritten.
     *
-    * The kill set is computed relationally, per partition group:
-    * raw rows minus the live MOR view minus already-pos-tombstoned rows
-    * == exactly the rows the eq deletes kill today. Rows appended AFTER
+    * The kill set is computed relationally, per partition group, from
+    * two MOR views of the group: its live rows WITHOUT its equality
+    * deletes minus its live rows WITH them == exactly the rows the eq
+    * deletes kill today (rows a position delete already removes are in
+    * neither view, so they never duplicate). Rows appended AFTER
     * the conversion snapshot can never be affected (an equality delete
     * only kills strictly-older sequence numbers, and future appends get
     * newer ones), so the materialization is stable; a concurrent
@@ -263,14 +258,19 @@ object Maintenance {
     * tombstones pointing at its replaced paths go dangling-but-harmless
     * (removeDanglingDeletes folds them out).
     *
-    * Reads the data once (this is a maintenance pass, priced like
+    * Reads the data twice (this is a maintenance pass, priced like
     * compaction's scan — but writes only tombstones). Returns unchanged
-    * metadata when the table carries no equality deletes. */
+    * metadata when the table carries no equality deletes. A v3 table is
+    * refused before any write: its position deletes may only be deletion
+    * vectors, and this conversion writes parquet tombstones. */
   def convertEqualityDeletes(spark: org.apache.spark.sql.SparkSession,
       catalog: Catalog, tableName: String): TableMetadata = {
     import org.apache.spark.sql.functions.col
     import graft.exec.Mor
     val meta0 = catalog.loadTable(tableName)
+    require(meta0.formatVersion < 3,
+      s"convertEqualityDeletes: $tableName is a v${meta0.formatVersion} table, whose position " +
+        "deletes may only be deletion vectors; the conversion writes parquet position-delete files")
     val snap0 = meta0.currentSnapshot.getOrElse(return meta0)
     val eqFiles = snap0.manifest.filter(_.content == FileContent.EqualityDeletes)
     if (eqFiles.isEmpty) return meta0
@@ -280,19 +280,11 @@ object Maintenance {
       .sortBy(_._1.toSeq.sorted.mkString(","))
       .map { case (_, fs) => graft.selection.FileGroup.fromDataFiles(fs, byPath.get) }
 
-    val killed = groups.map { g =>
-      val raw = Mor.readDataWith(spark, g.dataFiles, meta0.typedStruct,
-        meta0.partitionSpec, meta0.statsRetiredNames)(
-        _.select(Mor.normalizePath(col("_metadata.file_path")).as("file_path"),
-          col("_metadata.row_index").as("pos")))
-      val live = Mor.dataFrame(spark, g, meta0.schemaColumns,
-          meta0.formatVersion, meta0.schema, keepHidden = true)
+    def live(g: graft.selection.FileGroup) =
+      Mor.dataFrame(spark, meta0, g, keepHidden = true)
         .select(col(Mor.FilePathCol).as("file_path"), col(Mor.PosCol).as("pos"))
-      val dead = raw.join(live, Seq("file_path", "pos"), "left_anti")
-      // rows already pos-tombstoned must not duplicate into the new file
-      if (g.positionDeleteFiles.isEmpty) dead
-      else dead.join(positionDeleteRows(spark, g.positionDeleteFiles),
-        Seq("file_path", "pos"), "left_anti")
+    val killed = groups.map { g =>
+      live(g.copy(equalityDeleteFiles = Nil)).join(live(g), Seq("file_path", "pos"), "left_anti")
     }.reduce(_ unionAll _)
 
     val written =

@@ -99,8 +99,7 @@ object RowRewrite {
     // metadata-column projection. A file whose only matching rows are
     // already tombstoned still qualifies — it is rewritten identically
     // (wasted work, never wrong).
-    val affectedPaths = Mor.readDataWith(spark, tasks, meta.typedStruct,
-        meta.partitionSpec, meta.statsRetiredNames)(
+    val affectedPaths = Mor.readDataWith(spark, meta, tasks)(
         _.filter(condition)
           .select(Mor.normalizePath(col("_metadata.file_path")).as("p")))
       .distinct().collect().map(_.getString(0)).toSet
@@ -125,8 +124,7 @@ object RowRewrite {
       if (countPreserving) {
         // metadataAggregates=false: the in==out guard must re-scan the
         // inputs, not fold manifest recordCounts (see Validator)
-        val in = Mor.dataFrame(spark, g, meta.schemaColumns,
-          meta.formatVersion, meta.schema, metadataAggregates = false).count()
+        val in = Mor.dataFrame(spark, meta, g, metadataAggregates = false).count()
         val out = res.addedFiles.map(_.recordCount).sum
         require(in == out,
           s"COW update changed the row count ($in -> $out) — refusing to commit")

@@ -1,9 +1,10 @@
 package graft.compaction
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-import graft.meta.{FileEntry, SchemaField}
+import graft.meta.{FileEntry, TableMetadata}
 import graft.selection.FileGroup
 import graft.exec.{GraftScan, Mor}
 
@@ -28,27 +29,17 @@ object Validator {
       spark: SparkSession,
       inputGroup: FileGroup,
       outputFiles: Seq[FileEntry],
-      schemaColumns: Seq[String],
-      formatVersion: Int,
-      tableSchema: Seq[SchemaField] = Nil
+      table: TableMetadata
   ): Unit =
-    RowCounts(inputRows(spark, inputGroup, schemaColumns, formatVersion, tableSchema),
-      outputRows(spark, outputFiles)).check()
+    RowCounts(inputRows(spark, inputGroup, table), outputRows(spark, outputFiles)).check()
 
   /** Rows the MOR query over `inputGroup` yields. metadataAggregates=false:
     * the count must come from an actual scan — answering it from manifest
     * recordCounts would compare recorded statistics against output counts
     * instead of independently re-reading the data, which is the invariant
     * this validator exists to enforce. */
-  def inputRows(
-      spark: SparkSession,
-      inputGroup: FileGroup,
-      schemaColumns: Seq[String],
-      formatVersion: Int,
-      tableSchema: Seq[SchemaField] = Nil
-  ): Long =
-    Mor.dataFrame(spark, inputGroup, schemaColumns, formatVersion, tableSchema,
-      metadataAggregates = false).count()
+  def inputRows(spark: SparkSession, inputGroup: FileGroup, table: TableMetadata): Long =
+    Mor.dataFrame(spark, table, inputGroup, metadataAggregates = false).count()
 
   /** Rows in `outputFiles`, from a scan of the files themselves (never
     * their manifest record counts). A count reads no column, so the scan
@@ -72,15 +63,12 @@ object Validator {
       spark: SparkSession,
       inputGroup: FileGroup,
       outputFiles: Seq[FileEntry],
-      schemaColumns: Seq[String],
-      formatVersion: Int,
-      tableSchema: Seq[SchemaField] = Nil
+      table: TableMetadata
   ): Unit = {
-    val input = Mor.dataFrame(spark, inputGroup, schemaColumns, formatVersion, tableSchema)
+    val input = Mor.dataFrame(spark, table, inputGroup)
     val output =
       if (outputFiles.isEmpty) input.limit(0)
-      else spark.read.parquet(outputFiles.map(_.path): _*)
-        .select(schemaColumns.map(org.apache.spark.sql.functions.col): _*)
+      else Mor.readDataWith(spark, table, outputFiles)(_.select(table.schemaColumns.map(col): _*))
     val missing = input.exceptAll(output).count()
     val extra = output.exceptAll(input).count()
     if (missing != 0L || extra != 0L) throw ContentValidationFailure(missing, extra)

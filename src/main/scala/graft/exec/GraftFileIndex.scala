@@ -234,13 +234,23 @@ final class GraftFileIndex(
 object GraftScan {
   /** Parquet relation over manifest entries with [[GraftFileIndex]] file
     * skipping. Drop-in for `spark.read.schema(schema).parquet(paths)` —
-    * same vectorized parquet source, same session-conf resolution (pass a
-    * field-id-scoped clone for id-addressed reads), but the file listing
-    * consults zone maps instead of keeping everything. */
+    * same vectorized parquet source — but the file listing consults zone
+    * maps instead of keeping everything. `byFieldId` resolves columns by
+    * parquet field id instead of name.
+    *
+    * The frame belongs to `spark`. The parquet source reads its settings
+    * (field-id resolution, filter pushdown) from the conf of the
+    * relation's own session at scan planning; per-read options are
+    * ignored for them. So when a setting must differ from `spark`'s, only
+    * the relation gets a clone of `spark` that carries it: `spark` is
+    * never mutated, and the frame is analyzed and planned by `spark`
+    * itself, whose Catalyst state is already warm (a fresh session's
+    * first query costs tens of milliseconds more). */
   def relation(spark: SparkSession, files: Seq[FileEntry], schema: StructType,
       spec: Seq[graft.meta.PartitionField] = Nil,
       statsRetired: Set[String] = Set.empty,
-      metadataAggregates: Boolean = true): DataFrame = {
+      metadataAggregates: Boolean = true,
+      byFieldId: Boolean = false): DataFrame = {
     // file-source schemas are ALWAYS nullable (DataFrameReader.schema does
     // the same): a parquet file may hold nulls regardless of what the
     // table schema declares, and a non-nullable read schema makes the
@@ -254,12 +264,15 @@ object GraftScan {
     // groups whose projected (new-field) values match. Disable pushdown
     // for such relations — the Filter node above the scan still applies
     // exactly; only row-group skipping inside those files is lost.
-    val reusedRetired = statsRetired.intersect(schema.fieldNames.toSet)
+    val scanConf =
+      (if (byFieldId) Map("spark.sql.parquet.fieldId.read.enabled" -> "true") else Map.empty) ++
+      (if (statsRetired.intersect(schema.fieldNames.toSet).isEmpty) Map.empty
+       else Map("spark.sql.parquet.filterPushdown" -> "false"))
     val session =
-      if (reusedRetired.isEmpty) spark
+      if (scanConf.isEmpty) spark
       else {
         val s2 = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
-        s2.conf.set("spark.sql.parquet.filterPushdown", "false")
+        scanConf.foreach { case (k, v) => s2.conf.set(k, v) }
         s2
       }
     val zone = session.sessionState.conf.sessionLocalTimeZone
@@ -283,7 +296,7 @@ object GraftScan {
     // appends partition columns last); every consumer goes through
     // readDataWith and projects by NAME, and cross-branch unions are
     // unionByName — no positional access exists on the raw relation
-    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session, LogicalRelation(rel))
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark, LogicalRelation(rel))
   }
 
   /** Partition-column types whose directory-string round trip is exact —

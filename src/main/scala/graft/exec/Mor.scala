@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.functions.{DvExpressions, FileLookup}
-import graft.meta.{FileEntry, Puffin, SchemaField}
+import graft.meta.{FileEntry, Puffin, SchemaField, TableMetadata}
 import graft.selection.FileGroup
 
 /** Merge-on-read DataFrame construction.
@@ -112,47 +112,40 @@ object Mor {
     normalizePath(try new org.apache.hadoop.fs.Path(p).toString
                   catch { case _: IllegalArgumentException => p })
 
-  /** Reader with parquet field-id resolution enabled, SCOPED to the
-    * relations it builds: the parquet source consults the session conf of
-    * the relation's own session at scan planning (per-read options are
-    * ignored for `spark.sql.parquet.fieldId.read.enabled` — verified
-    * empirically), so the flag is set on a cloned session and the caller's
-    * session is never mutated. The relation keeps the clone alive; frames
-    * built here compose freely with the caller's frames. */
-  def fieldIdReader(spark: SparkSession, schema: StructType): org.apache.spark.sql.DataFrameReader =
-    fieldIdSession(spark).read.schema(schema)
-
-  /** The field-id-scoped session clone [[fieldIdReader]] reads under,
-    * exposed for relation builders that attach a session directly
-    * ([[GraftScan.relation]]). */
-  def fieldIdSession(spark: SparkSession): SparkSession = {
-    val scoped = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
-    scoped.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    scoped
-  }
-
-  /** Reads DATA files with correct per-file column addressing: engine-
-    * written files by parquet FIELD ID (rename-safe), add_files-imported
-    * (`nameMatched`) files by NAME — their footers carry no ids, and
-    * Spark's id reader resolves id-less files to all-NULL columns, so
+  /** The engine's one table reader, the read-side twin of
+    * [[SparkExecutor.writeTableFiles]]: reads `table`'s DATA files with
+    * correct per-file column addressing. On a typed table, engine-written
+    * files are read by parquet FIELD ID (rename-safe) and add_files-
+    * imported (`nameMatched`) files by NAME — their footers carry no ids,
+    * and Spark's id reader resolves id-less files to all-NULL columns, so
     * they get their own relation with the id metadata stripped (initial-
-    * defaults kept). `f` is applied to EACH underlying relation before
-    * the union, so `_metadata.file_path`/`row_index` references inside it
-    * still bind to their own scan; filters inside `f` push down per
-    * branch. Every data-file read in the engine (MOR, deleteWhere, COW
-    * discovery, bloom build, eq->pos conversion) goes through here.
+    * defaults kept). A legacy name-addressed table is read by name with the
+    * footers' schema. Frames belong to `spark` ([[GraftScan.relation]]
+    * scopes field-id resolution to the relation). `f` is applied to EACH
+    * underlying relation before the union, so `_metadata.file_path`/
+    * `row_index` references inside it still bind to their own scan;
+    * filters inside `f` push down per branch. Every data-file read in the
+    * engine (MOR, deleteWhere, COW discovery, bloom build, upsert's key
+    * read-back, content validation) goes through here.
     *
     * Typed reads are backed by [[GraftFileIndex]], so any filter Catalyst
     * pushes to the scan — from `f`, from SQL, from frames composed on
     * top — skips files by manifest zone maps / null counts / identity-
-    * partition values before tasks launch. `pruneSpec` is the table's
-    * CURRENT partition spec (identity fields give exact per-file
-    * constants, bucket fields prune equality predicates; empty = zone
-    * maps only). */
-  def readDataWith(spark: SparkSession, files: Seq[FileEntry],
-      typed: Option[StructType], pruneSpec: Seq[graft.meta.PartitionField] = Nil,
-      statsRetired: Set[String] = Set.empty,
-      metadataAggregates: Boolean = true)(
+    * partition values before tasks launch. The table's CURRENT partition
+    * spec drives the pruning (identity fields give exact per-file
+    * constants, bucket fields prune equality predicates), and its retired
+    * stats names ([[graft.meta.TableMetadata.statsRetiredNames]]) are
+    * never consulted. `metadataAggregates = false` makes the frame's
+    * aggregates come from a real scan, never from manifest statistics
+    * (validation counts — see [[GraftFileIndex.metadataAggregates]]). */
+  def readDataWith(spark: SparkSession, table: TableMetadata, files: Seq[FileEntry],
+      metadataAggregates: Boolean = true)(f: DataFrame => DataFrame): DataFrame =
+    readFiles(spark, table, files, table.typedStruct, metadataAggregates)(f)
+
+  /** [[readDataWith]] with the typed read schema `typed` (the table's,
+    * widened by the lineage fields for row-id reads). */
+  private def readFiles(spark: SparkSession, table: TableMetadata, files: Seq[FileEntry],
+      typed: Option[StructType], metadataAggregates: Boolean)(
       f: DataFrame => DataFrame): DataFrame = {
     require(files.nonEmpty, "readDataWith: empty file list")
     def strippedIds(st: StructType): StructType = StructType(st.fields.map { fd =>
@@ -160,22 +153,26 @@ object Mor {
         .withMetadata(fd.metadata).remove(SchemaField.ParquetFieldIdKey)
       fd.copy(metadata = mb.build())
     })
+    def relation(fs: Seq[FileEntry], st: StructType, byFieldId: Boolean): DataFrame =
+      GraftScan.relation(spark, fs, st, table.partitionSpec, table.statsRetiredNames,
+        metadataAggregates, byFieldId)
     val frames = typed match {
       case None => Seq(spark.read.parquet(files.map(_.path): _*))
       case Some(st) =>
         val (byName, byId) = files.partition(_.nameMatched)
         Seq(
-          if (byId.nonEmpty)
-            Some(GraftScan.relation(fieldIdSession(spark), byId, st, pruneSpec, statsRetired,
-              metadataAggregates))
-          else None,
-          if (byName.nonEmpty)
-            Some(GraftScan.relation(spark, byName, strippedIds(st), pruneSpec, statsRetired,
-              metadataAggregates))
-          else None).flatten
+          Option.when(byId.nonEmpty)(relation(byId, st, byFieldId = true)),
+          Option.when(byName.nonEmpty)(relation(byName, strippedIds(st), byFieldId = false))).flatten
     }
     frames.map(f).reduce(_ unionByName _)
   }
+
+  /** `table`'s read schema: [[TableMetadata.typedStruct]], or for a legacy
+    * name-addressed table the table's columns as `dataFile`'s footer types
+    * them (evaluated only then). */
+  def readSchema(spark: SparkSession, table: TableMetadata, dataFile: => FileEntry): StructType =
+    table.typedStruct.getOrElse(
+      spark.read.parquet(dataFile.path).select(table.schemaColumns.map(col): _*).schema)
 
   /** The per-file lookup over `files`, keyed by canonical path;
     * `bitmaps` are keyed the same way. */
@@ -305,6 +302,39 @@ object Mor {
     out.map { case (ids, fs) => (ids, fs.toSeq) }.toSeq
   }
 
+  /** The column of [[equalityDeleteKeys]] frames holding the deleting
+    * file's sequence number. */
+  val DelSeqCol = "__del_seq__"
+
+  /** The equality-delete `files` of `table`, one entry per run of
+    * [[equalityDeleteGroups]]: the run's key columns by their CURRENT
+    * names, its files, and its key rows under those names plus
+    * [[DelSeqCol]]. On a typed table the authoritative key is the
+    * `equalityFieldIds` list and the files are read by field id, so the
+    * keys match across renames. Both the MOR anti join and the
+    * changelog's delete attribution read keys here. */
+  def equalityDeleteKeys(spark: SparkSession, table: TableMetadata,
+      files: Seq[FileEntry]): Seq[(Seq[String], Seq[FileEntry], DataFrame)] = {
+    val resolved =
+      if (!table.isTyped) files
+      else files.map { f =>
+        if (f.equalityFieldIds.isEmpty) f
+        else f.copy(equalityIds = f.equalityFieldIds.map(id => table.fieldById(id)
+          .getOrElse(sys.error(s"equality-delete field id $id not in table schema")).name))
+      }
+    equalityDeleteGroups(resolved).map { case (eqIds, run) =>
+      val keys =
+        if (!table.isTyped) spark.read.parquet(run.map(_.path): _*)
+        else GraftScan.relation(spark, run, StructType(eqIds.map(n => table.fieldByName(n)
+            .getOrElse(sys.error(s"equality-delete column $n not in table schema")).toStructField)),
+          statsRetired = table.statsRetiredNames, metadataAggregates = false, byFieldId = true)
+      val rows = keys.select(eqIds.map(col) :+
+        DvExpressions.fileConstant(col("_metadata.file_path"), fileLookup(run),
+          FileLookup.DataSeq).as(DelSeqCol): _*)
+      (eqIds, run, rows)
+    }
+  }
+
   /** Position-delete anti join: drop data rows whose (file_path, pos) has a
     * tombstone (datafusion_processor.rs:489-522; reference RIGHT ANTI ==
     * our LEFT ANTI).
@@ -344,19 +374,19 @@ object Mor {
     data.join(broadcast(del), cond, "left_anti")
   }
 
-  /** Builds the MOR DataFrame for a file group.
+  /** The MOR DataFrame of `group`, a file group of `table`: the rows of
+    * its data files that no position delete, deletion vector or newer
+    * equality delete of the group removes, with the table's columns
+    * ([[TableMetadata.schemaColumns]]; hidden columns are dropped, matching
+    * the final SELECT at datafusion_processor.rs:573-581). The table also
+    * decides how files are read: a typed table's data and equality-delete
+    * files by FIELD ID (rename-safe), with equality keys resolved through
+    * `equalityFieldIds` to their current names, and its partition spec and
+    * retired stats names drive file pruning ([[readDataWith]]). Every
+    * format version applies every delete kind: v3 keeps equality deletes
+    * (foreign engines add them), and deletion vectors are position deletes
+    * applied by the scan.
     *
-    * @param projectCols the table schema columns to produce (hidden columns
-    *                    are dropped from the final result, matching the
-    *                    final SELECT at datafusion_processor.rs:573-581)
-    * @param formatVersion >=3 drops equality deletes from the task, as the
-    *                    reference does (datafusion_processor.rs:632-648);
-    *                    position deletes are always applied by our scan
-    *                    layer (equivalent to V3's reader-applied deletes).
-    * @param tableSchema typed field-id schema; when fully typed, data and
-    *                    equality-delete files are read BY FIELD ID (rename-
-    *                    safe) and equality keys resolve through
-    *                    `equalityFieldIds` to their current names.
     * @param broadcastDeleteBytesMax manifest-bytes gate per delete side:
     *                    under it, position deletes and deletion vectors
     *                    are bitmaps probed in the scan and equality
@@ -365,35 +395,27 @@ object Mor {
     *                    row lineage for consumers that must address
     *                    surviving rows physically (changelog delete
     *                    attribution, position-delete writers).
+    * @param keepRowIds  emit [[RowIdCol]] and [[LastUpdatedSeqCol]] (v3 row
+    *                    lineage): the materialized values when the file
+    *                    carries them, else the inherited `firstRowId + row
+    *                    position` and the file's sequence number. Requires
+    *                    a typed table.
+    * @param metadataAggregates false = this frame's aggregates must come
+    *                    from a real scan, never from manifest statistics
+    *                    (validation counts — see
+    *                    [[GraftFileIndex.metadataAggregates]]).
     */
   def dataFrame(
       spark: SparkSession,
+      table: TableMetadata,
       group: FileGroup,
-      projectCols: Seq[String],
-      formatVersion: Int = 2,
-      tableSchema: Seq[SchemaField] = Nil,
       broadcastDeleteBytesMax: Long = BroadcastDeleteBytesMax,
       keepHidden: Boolean = false,
-      /** emit [[RowIdCol]] (v3 row lineage): the materialized `_row_id`
-        * when the file carries one, else the inherited
-        * `firstRowId + row position`. Requires a typed schema. */
       keepRowIds: Boolean = false,
-      /** the table's CURRENT partition spec — lets [[GraftFileIndex]]
-        * prune by exact identity-partition values and bucket-transform
-        * equality, beyond the zone maps. */
-      pruneSpec: Seq[graft.meta.PartitionField] = Nil,
-      /** retired stats names ([[graft.meta.TableMetadata.statsRetiredNames]]). */
-      statsRetired: Set[String] = Set.empty,
-      /** false = this frame's aggregates must come from a real scan, never
-        * from manifest statistics (validation counts — see
-        * [[GraftFileIndex.metadataAggregates]]). */
       metadataAggregates: Boolean = true
   ): DataFrame = {
     require(group.dataFiles.nonEmpty, "empty file group")
-    val typed: Option[StructType] =
-      if (tableSchema.nonEmpty && tableSchema.forall(_.isTyped))
-        Some(StructType(tableSchema.map(_.toStructField)))
-      else None
+    val typed = table.typedStruct
     require(!keepRowIds || typed.isDefined,
       "row-lineage reads require a fully typed table schema")
     // the data read schema gains the optional materialized lineage
@@ -403,22 +425,8 @@ object Mor {
       if (keepRowIds)
         typed.map(st => StructType(st.fields :+ rowIdField :+ lastUpdatedSeqField))
       else typed
-
-    // id-matched parquet reads go through the field-id-scoped reader
-    // (harmless for requested schemas without ids — those match by name);
-    // untyped reads use the caller's session untouched
-    def readParquet(files: Seq[FileEntry], schema: Option[StructType]): DataFrame = {
-      val r = schema.fold(spark.read)(fieldIdReader(spark, _))
-      r.parquet(files.map(_.path): _*)
-    }
-    // with a typed schema, the authoritative eq key is the field-id list;
-    // resolve to CURRENT names so the join condition survives renames
-    def resolveEq(f: FileEntry): FileEntry =
-      if (typed.isDefined && f.equalityFieldIds.nonEmpty)
-        f.copy(equalityIds = f.equalityFieldIds.map(id =>
-          tableSchema.find(_.id == id).getOrElse(sys.error(
-            s"equality-delete field id $id not in table schema")).name))
-      else f
+    def readData(f: DataFrame => DataFrame): DataFrame =
+      readFiles(spark, table, group.dataFiles, dataTyped, metadataAggregates)(f)
 
     // EVERY format version applies equality deletes: the v3 spec replaces
     // position-delete PARQUET with deletion vectors but keeps equality
@@ -426,7 +434,7 @@ object Mor {
     // emit DVs, but foreign engines (REST row-delta commits, attached
     // tables) legitimately add eq-deletes to v3 tables, and skipping them
     // silently resurrects rows (caught by the v3 REST fuzz)
-    val eqDeletes = group.equalityDeleteFiles.map(resolveEq)
+    val eqDeletes = group.equalityDeleteFiles
     // v3 deletion vectors ride the position-delete content type but carry a
     // Puffin bitmap blob, not a parquet file
     val (dvEntries, posDeletes) = group.positionDeleteFiles.partition(_.isDeletionVector)
@@ -450,21 +458,19 @@ object Mor {
     val needSeq = eqDeletes.nonEmpty
     val needFilePos = posJoin || dvJoin || keepHidden
 
-    val projected = projectCols.map(col)
+    val projected = table.schemaColumns.map(col)
     val hidden = if (keepHidden) Seq(col(FilePathCol), col(PosCol)) else Nil
     val lineage = if (keepRowIds) Seq(col(RowIdCol), col(LastUpdatedSeqCol)) else Nil
 
     // no deletes: plain projected scan (datafusion_processor.rs:447-458)
     if (!needSeq && bitmaps.isEmpty && !needFilePos && !keepRowIds)
-      return readDataWith(spark, group.dataFiles, dataTyped, pruneSpec, statsRetired,
-        metadataAggregates)(_.select(projected: _*))
+      return readData(_.select(projected: _*))
 
     val lookup = fileLookup(group.dataFiles, bitmaps)
     val file = col("_metadata.file_path")
     val rowIndex = col("_metadata.row_index")
     def dataSeq = DvExpressions.fileConstant(file, lookup, FileLookup.DataSeq)
-    var df = readDataWith(spark, group.dataFiles, dataTyped, pruneSpec, statsRetired,
-        metadataAggregates) { rel =>
+    var df = readData { rel =>
       val live =
         if (bitmaps.isEmpty) rel
         else rel.filter(!DvExpressions.dvContains(file, rowIndex, lookup))
@@ -498,16 +504,10 @@ object Mor {
 
     // one anti join per equality-ids run, in manifest order
     // (datafusion_processor.rs:524-571)
-    for ((eqIds, files) <- equalityDeleteGroups(eqDeletes)) {
-      val delSchema = typed.map(_ => StructType(eqIds.map(n =>
-        tableSchema.find(_.name == n).getOrElse(sys.error(
-          s"equality-delete column $n not in table schema")).toStructField)))
-      val del = readParquet(files, delSchema).select(
-        eqIds.map(c => col(c).as(s"__del_$c")) :+
-          DvExpressions.fileConstant(col("_metadata.file_path"),
-            fileLookup(files), FileLookup.DataSeq).as("__del_seq__"): _*)
+    for ((eqIds, files, keys) <- equalityDeleteKeys(spark, table, eqDeletes)) {
+      val del = keys.select(eqIds.map(c => col(c).as(s"__del_$c")) :+ col(DelSeqCol): _*)
       val eqCond = eqIds.map(c => df(c) === col(s"__del_$c")).reduceOption(_ && _)
-      val seqCond = df(SeqNumCol) < col("__del_seq__")
+      val seqCond = df(SeqNumCol) < col(DelSeqCol)
       val cond = eqCond.map(_ && seqCond).getOrElse(seqCond)
       // empty-keys theta join stays broadcast regardless: a non-broadcast
       // nested-loop over two big sides has no good plan anyway, and the

@@ -298,13 +298,10 @@ object SparkExecutor extends CompactionExecutor {
     // writer also re-stamps field ids: the MOR frame's id metadata is
     // stripped on the name-matched branch (add_files-imported inputs),
     // and rewritten files must ALWAYS carry footer ids, because their
-    // entries graduate to id-addressed reads (nameMatched=false)
-    val df = req.rowTransform(
-      Mor.dataFrame(spark, g, table.schemaColumns, table.formatVersion, table.schema,
-        keepRowIds = table.tracksRowLineage,
-        // lets rowTransform filters (COW deleteWhere/update discovery)
-        // prune files by identity partition values at plan time
-        pruneSpec = table.partitionSpec, statsRetired = table.statsRetiredNames))
+    // entries graduate to id-addressed reads (nameMatched=false). The
+    // table's partition spec lets rowTransform filters (COW deleteWhere/
+    // update discovery) prune files by identity partition values
+    val df = req.rowTransform(Mor.dataFrame(spark, table, g, keepRowIds = table.tracksRowLineage))
 
     // target-file-size enforcement: records per target file from the
     // observed-output hint when dynamic estimation supplies one (the

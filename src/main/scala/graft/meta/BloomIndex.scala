@@ -90,8 +90,7 @@ object BloomIndex {
 
     // rename-safe read for typed tables (field-id addressed, like Mor);
     // imported name-matched files read by name through readDataWith
-    val rows = graft.exec.Mor.readDataWith(spark, dataFiles, meta.typedStruct,
-        meta.partitionSpec, meta.statsRetiredNames)(
+    val rows = graft.exec.Mor.readDataWith(spark, meta, dataFiles)(
         _.select(col(column),
           graft.exec.Mor.normalizePath(col("_metadata.file_path")).as("__file")))
       .filter(col(column).isNotNull)

@@ -89,14 +89,10 @@ object Changelog {
     // schema for a changeless range: the typed schema, else inferred from
     // ANY data file in history (a fully empty untyped table has no source
     // of truth for column types)
-    val base = meta.typedStruct.getOrElse {
-      val anyData = meta.snapshots.flatMap(_.manifest)
-        .find(_.content == FileContent.Data)
-        .getOrElse(throw new IllegalStateException(
-          s"table ${meta.name} has no typed schema and no data file to derive the changelog schema from"))
-      spark.read.parquet(anyData.path).select(
-        meta.schemaColumns.map(col): _*).schema
-    }
+    val base = Mor.readSchema(spark, meta, meta.snapshots.flatMap(_.manifest)
+      .find(_.content == FileContent.Data)
+      .getOrElse(throw new IllegalStateException(
+        s"table ${meta.name} has no typed schema and no data file to derive the changelog schema from")))
     val lineage =
       if (!withRowIds) Nil
       else Seq(
@@ -141,11 +137,9 @@ object Changelog {
     val removedData = parentManifest.filter(f =>
       f.content == FileContent.Data && !snapPaths.contains(f.path))
 
-    val cols = meta.schemaColumns
     // the per-row OUTPUT columns: lineage rides along when requested
-    val outCols =
-      if (withRowIds) cols ++ Seq(Mor.RowIdCol, Mor.LastUpdatedSeqCol) else cols
-    val typed = meta.typedStruct
+    val outCols = meta.schemaColumns ++
+      (if (withRowIds) Seq(Mor.RowIdCol, Mor.LastUpdatedSeqCol) else Nil)
 
     // ---- inserts: rows of the added data files, minus same-snapshot
     // position tombstones aimed at them (pos deletes apply at seq >=; a
@@ -158,13 +152,8 @@ object Changelog {
             p.partitionValues.isEmpty || p.partitionValues == d.partitionValues).map(_.path))
         }
         val byPath = addedPos.map(f => f.path -> f).toMap
-        // pruneSpec/statsRetired must ride along like every other typed
-        // read: after a rename/drop + name reuse, the OLD field's
-        // name-keyed zone maps / null counts must not prune (or push
-        // parquet filters for) the NEW field of the same name
-        Some(Mor.dataFrame(spark, FileGroup.fromDataFiles(tasks, byPath.get),
-          cols, meta.formatVersion, meta.schema, keepRowIds = withRowIds,
-          pruneSpec = meta.partitionSpec, statsRetired = meta.statsRetiredNames))
+        Some(Mor.dataFrame(spark, meta, FileGroup.fromDataFiles(tasks, byPath.get),
+          keepRowIds = withRowIds))
       }
 
     // ---- deletes: parent-live rows this snapshot kills. A parent with
@@ -204,21 +193,11 @@ object Changelog {
             live.join(tomb, Seq(Mor.FilePathCol, Mor.PosCol), "left_semi")
           }
 
-        // one semi join per equality-ids group; field-id resolution as in
-        // the MOR read so renamed key columns still match
-        val byEq: Seq[DataFrame] = Mor.equalityDeleteGroups(addedEq.map { f =>
-          if (typed.isDefined && f.equalityFieldIds.nonEmpty)
-            f.copy(equalityIds = f.equalityFieldIds.map(id =>
-              meta.fieldById(id).getOrElse(sys.error(
-                s"equality-delete field id $id not in table schema")).name))
-          else f
-        }).map { case (eqIds, files) =>
-          val delSchema = typed.map(_ => org.apache.spark.sql.types.StructType(
-            eqIds.map(n => meta.fieldByName(n).getOrElse(sys.error(
-              s"equality-delete column $n not in table schema")).toStructField)))
-          val keys = delSchema.fold(spark.read)(Mor.fieldIdReader(spark, _))
-            .parquet(files.map(_.path): _*).select(eqIds.map(col): _*).distinct()
-          live.join(broadcast(keys), eqIds, "left_semi")
+        // one semi join per equality-ids run, keys read as the MOR read
+        // reads them, so renamed key columns still match
+        val byEq: Seq[DataFrame] = Mor.equalityDeleteKeys(spark, meta, addedEq).map {
+          case (eqIds, _, keys) =>
+            live.join(broadcast(keys.select(eqIds.map(col): _*).distinct()), eqIds, "left_semi")
         }
 
         val byRemoval: Option[DataFrame] =

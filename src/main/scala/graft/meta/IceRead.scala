@@ -196,9 +196,7 @@ object IceRead {
     if (tasks.isEmpty) {
       // pruned to nothing: an empty frame with the table schema, not an
       // error — a filter that matches no partition/zone is a valid query
-      val base = meta.typedStruct.getOrElse(
-        spark.read.parquet(all.head.path).select(meta.schemaColumns.map(
-          org.apache.spark.sql.functions.col): _*).schema)
+      val base = Mor.readSchema(spark, meta, all.head)
       val schema =
         if (keepHidden) org.apache.spark.sql.types.StructType(base.fields ++ Seq(
           org.apache.spark.sql.types.StructField(Mor.FilePathCol, org.apache.spark.sql.types.StringType),
@@ -221,13 +219,9 @@ object IceRead {
           .sortBy { case ((sid, pv), _) => (sid, pv.toSeq.sorted.mkString(",")) }
           .map(_._2)
       else Seq(tasks)
-    // the CURRENT spec rides into the file index: identity fields give
-    // exact per-file constants, bucket fields prune equality predicates
     taskGroups.map { ts =>
-      val group = FileGroup.fromDataFiles(ts, byPath.get)
-      Mor.dataFrame(spark, group, meta.schemaColumns, meta.formatVersion, meta.schema,
-        keepHidden = keepHidden, keepRowIds = keepRowIds, pruneSpec = meta.partitionSpec,
-        statsRetired = meta.statsRetiredNames)
+      Mor.dataFrame(spark, meta, FileGroup.fromDataFiles(ts, byPath.get),
+        keepHidden = keepHidden, keepRowIds = keepRowIds)
     }.reduce(_ unionAll _)
   }
 

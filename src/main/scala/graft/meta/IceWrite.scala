@@ -512,8 +512,8 @@ object IceWrite {
       targetFileSizeBytes = targetFileSizeBytes)
     val keyDf =
       if (dataFiles.isEmpty) df.select(keys.map(col): _*).distinct() // empty source
-      else spark.read.parquet(dataFiles.map(_.path): _*)
-        .select(keys.map(col): _*).distinct()
+      else graft.exec.Mor.readDataWith(spark, table0, dataFiles)(_.select(keys.map(col): _*))
+        .distinct()
     val delFiles = SparkExecutor.writeTableFiles(spark, table0, keyDf,
       FileContent.EqualityDeletes, targetFileSizeBytes)
     commitSnapshot(catalog, name, Seq(
@@ -676,8 +676,7 @@ object IceWrite {
         s"table ${meta.name} has no snapshot on branch $branch"))
     val dataFiles = snap.manifest.filter(_.content == FileContent.Data)
     require(dataFiles.nonEmpty, s"table ${meta.name} has no data files")
-    graft.exec.Mor.readDataWith(spark, dataFiles, meta.typedStruct,
-      meta.partitionSpec, meta.statsRetiredNames)(
+    graft.exec.Mor.readDataWith(spark, meta, dataFiles)(
       _.withColumn("__fp", graft.exec.Mor.normalizePath(col("_metadata.file_path")))
         .withColumn("__pos", col("_metadata.row_index"))
         .filter(condition)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.exec.Mor
 import graft.functions.ThetaSketchAgg
 
 /** Distinct-value statistics for Iceberg interop: ONE vectorized
@@ -134,19 +135,17 @@ object NdvStats {
             val prev = readSketches(meta, p)
             if (target.forall(prev.contains)) {
               val oldKeys = old.manifest.map(_.resolutionKey).toSet
-              val newFiles = cur.manifest
-                .filter(f => f.content == FileContent.Data &&
-                  !oldKeys.contains(f.resolutionKey))
-                .map(_.path)
+              val newFiles = cur.manifest.filter(f => f.content == FileContent.Data &&
+                !oldKeys.contains(f.resolutionKey))
               if (newFiles.isEmpty)
                 (target.map(c => c -> prev(c)).toMap, Nil, true)
               else {
                 // the appended files carry no deletes (their sequence is
-                // the newest), so a raw parquet pass over exactly them is
-                // the MOR view of the delta
+                // the newest), so a plain pass over exactly them is the
+                // MOR view of the delta
                 val fresh = sketchOver(
-                  spark.read.parquet(newFiles: _*).select(target.map(col): _*), target)
-                (target.map(c => c -> prev(c).merge(fresh(c))).toMap, newFiles, true)
+                  Mor.readDataWith(spark, meta, newFiles)(_.select(target.map(col): _*)), target)
+                (target.map(c => c -> prev(c).merge(fresh(c))).toMap, newFiles.map(_.path), true)
               }
             } else fullPass()
           } catch { case scala.util.control.NonFatal(_) => fullPass() }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.{Bench, SparkEntry}
 
@@ -63,45 +63,35 @@ object Profile {
     def driverMs: Long = wallMs - stageMs - catalystMs
   }
 
-  /** Runs `body` and reports the Spark work it started: jobs run by the
-    * calling thread or by threads it creates (a [[JobScope]] pool, say),
-    * which inherit the call's job tag; other threads' jobs are left out.
-    * The bus is drained before and after, so the report is complete when
-    * this returns. */
+  /** Runs `body` and reports the Spark work it started: jobs and SQL
+    * actions run by the calling thread or by threads it creates (a
+    * [[JobScope]] pool, say), which inherit the call's job tag, on any
+    * session of the context (the field-id-scoped clones the table reader
+    * builds included); other threads' work is left out. The bus is drained
+    * before and after, so the report is complete when this returns. */
   def record[A](spark: SparkSession)(body: => A): (A, Report) = {
     val sc = spark.sparkContext
     val tag = s"graft-profile-${UUID.randomUUID}"
     val jobStarts = new ConcurrentLinkedQueue[Long]
     val stages = new ConcurrentLinkedQueue[Stage]
     val actions = new ConcurrentLinkedQueue[Action]
-    // touched only on the bus thread, which delivers to both listeners
+    // touched only on the bus thread
     val stageIds = mutable.Set.empty[Int]
     val spills = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val executionStarts = mutable.Map.empty[Long, Long]
-    var ended: Option[(String, String, Seq[(Long, Long)])] = None
 
-    // The session's execution listener bus sits on the bus's shared queue
-    // ahead of `jobs` (registering `queries` first creates it if needed),
-    // and a queue hands each event to its listeners in order. So an
-    // action's callback is followed directly by `jobs` seeing the same
-    // SQLExecutionEnd, whose execution id says whether it was tagged.
-    val queries = new QueryExecutionListener {
-      private def action(name: String, qe: QueryExecution): Unit = {
-        val plan = scala.util.Try {
-          val p = qe.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.executedPlan
-            case p => p
-          }
-          p.toString.linesIterator.filter(_.trim.nonEmpty).take(2).map(_.trim)
-            .mkString(" | ").take(150)
-        }.getOrElse("?")
-        ended = Some((name, plan,
-          qe.tracker.phases.values.map(p => (p.startTimeMs, p.endTimeMs)).toSeq))
-      }
-      override def onSuccess(name: String, qe: QueryExecution, durationNs: Long): Unit =
-        action(name, qe)
-      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
-        action(name, qe)
+    // an action's end event carries its QueryExecution, whatever session
+    // ran it; its start event says whether it was tagged
+    def action(name: String, ms: Long, qe: QueryExecution): Action = {
+      val plan = scala.util.Try {
+        val p = qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        p.toString.linesIterator.filter(_.trim.nonEmpty).take(2).map(_.trim)
+          .mkString(" | ").take(150)
+      }.getOrElse("?")
+      Action(name, ms, plan, qe.tracker.phases.values.map(p => (p.startTimeMs, p.endTimeMs)).toSeq)
     }
     val jobs = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -121,9 +111,9 @@ object Profile {
         case s: SparkListenerSQLExecutionStart if s.jobTags(tag) =>
           executionStarts(s.executionId) = s.time
         case end: SparkListenerSQLExecutionEnd =>
-          for (start <- executionStarts.remove(end.executionId); (name, plan, phases) <- ended)
-            actions.add(Action(name, end.time - start, plan, phases))
-          ended = None
+          for (start <- executionStarts.remove(end.executionId);
+               (name, qe) <- ColumnBridge.executionEnd(end))
+            actions.add(action(name, end.time - start, qe))
         case _ => ()
       }
     }
@@ -131,7 +121,6 @@ object Profile {
     ListenerBusBridge.drain(sc)
     sc.addJobTag(tag)
     try {
-      spark.listenerManager.register(queries)
       sc.addSparkListener(jobs)
       val startMs = System.currentTimeMillis()
       val result = body
@@ -142,7 +131,6 @@ object Profile {
     } finally {
       sc.removeJobTag(tag)
       sc.removeSparkListener(jobs)
-      spark.listenerManager.unregister(queries)
     }
   }
 

@@ -71,6 +71,13 @@ object ColumnBridge {
     }
   }
 
+  /** The action name and `QueryExecution` a SQL execution's end event
+    * carries (`private[sql]` fields, set for named Dataset actions of
+    * every session, clones included); None for other executions. */
+  def executionEnd(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[(String, org.apache.spark.sql.execution.QueryExecution)] =
+    for (name <- e.executionName; qe <- Option(e.qe)) yield (name, qe)
+
   /** DataFrame over a logical plan (`Dataset.ofRows` went `private[sql]`
     * with the classic/connect split). The SQL front door's INSERT command
     * needs it to execute the parsed source query. */

@@ -332,8 +332,7 @@ class CompactionE2ESpec extends AnyFunSuite {
       meta.currentSnapshot.get.manifest.filter(_.content == FileContent.Data), Nil, Nil)
     // wrong outputs: only the first input file
     intercept[Validator.ValidationFailure] {
-      Validator.validate(spark, group, group.dataFiles.take(1),
-        meta.schemaColumns, meta.formatVersion)
+      Validator.validate(spark, group, group.dataFiles.take(1), meta)
     }
   }
 
@@ -345,17 +344,15 @@ class CompactionE2ESpec extends AnyFunSuite {
     val group = FileGroup(
       meta.currentSnapshot.get.manifest.filter(_.content == FileContent.Data), Nil, Nil)
     // the inputs ARE a correct "rewrite" of themselves
-    Validator.validateContent(spark, group, group.dataFiles,
-      meta.schemaColumns, meta.formatVersion)
+    Validator.validateContent(spark, group, group.dataFiles, meta)
     // same COUNT, different content: count validation passes, content fails
     val otherMeta = FileGenerator.writeTable(spark, catalog, "t_cval2",
       src.withColumn("r_regionkey", col("r_regionkey") + 50),
       FileGenerator.Config(dataFileCount = 2, orderCol = "r_regionkey"))
     val swapped = otherMeta.currentSnapshot.get.manifest.filter(_.content == FileContent.Data)
-    Validator.validate(spark, group, swapped, meta.schemaColumns, meta.formatVersion)
+    Validator.validate(spark, group, swapped, meta)
     intercept[Validator.ContentValidationFailure] {
-      Validator.validateContent(spark, group, swapped,
-        meta.schemaColumns, meta.formatVersion)
+      Validator.validateContent(spark, group, swapped, meta)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.compaction
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -310,6 +311,33 @@ class MaintenanceSpec extends AnyFunSuite {
     Maintenance.convertEqualityDeletes(spark, catalog, "t")
     assert(catalog.loadTable("t").version == v)
   }
+  test("convertEqualityDeletes refuses a v3 table before writing anything") {
+    import graft.meta.{FileContent, IceRead, IceWrite, LocalCatalog}
+    import org.apache.spark.sql.functions.{col, upper}
+    import spark.implicits._
+    val root = Files.createTempDirectory("conv-v3-wh")
+    val catalog = LocalCatalog(root.toString)
+    val src = (1L to 60L).map(i => (i, s"name$i")).toDF("id", "name")
+    IceWrite.create(spark, catalog, "t", src.repartition(3), formatVersion = 3)
+    // a deletion vector, then equality deletes
+    IceWrite.deleteWhere(spark, catalog, "t", col("id") % 10 === 0)
+    IceWrite.upsert(spark, catalog, "t",
+      src.filter(col("id") % 3 === 0).withColumn("name", upper(col("name"))),
+      keys = Seq("id"))
+    val manifest = catalog.loadTable("t").currentSnapshot.get.manifest
+    assert(manifest.exists(_.isDeletionVector) &&
+      manifest.exists(_.content == FileContent.EqualityDeletes))
+    def files() = Files.walk(root).iterator.asScala.filter(Files.isRegularFile(_)).toSet
+    val (version, before, rows) = (catalog.loadTable("t").version, files(),
+      IceRead.table(spark, catalog, "t").collect().toSet)
+    val e = intercept[IllegalArgumentException](
+      Maintenance.convertEqualityDeletes(spark, catalog, "t"))
+    assert(e.getMessage.contains("deletion vectors"), e.getMessage)
+    assert(catalog.loadTable("t").version == version)
+    assert(files() == before)
+    assert(IceRead.table(spark, catalog, "t").collect().toSet == rows)
+  }
+
   test("sweep: catalog-wide auto-compaction + expiry + orphan report; SQL attach") {
     val catalog = LocalCatalog(Files.createTempDirectory("sweep-wh").toString)
     val src = spark.read.parquet(s"$sf/nation.parquet")

@@ -37,8 +37,7 @@ class MorBroadcastGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("deletes broadcast under the gate, shuffle above it, same result") {
     val (meta, group) = morGroup()
 
-    val below = Mor.dataFrame(spark, group, meta.schemaColumns, 2,
-      broadcastDeleteBytesMax = Long.MaxValue)
+    val below = Mor.dataFrame(spark, meta, group, broadcastDeleteBytesMax = Long.MaxValue)
     assertUnderGatePlan(below)
 
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -46,8 +45,7 @@ class MorBroadcastGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       // keep Catalyst from auto-broadcasting the (tiny) test deletes, so
       // the gate's fallback path is what actually plans
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val above = Mor.dataFrame(spark, group, meta.schemaColumns, 2,
-        broadcastDeleteBytesMax = 0L)
+      val above = Mor.dataFrame(spark, meta, group, broadcastDeleteBytesMax = 0L)
       val abovePlan = above.queryExecution.executedPlan.toString
       assert(abovePlan.contains("SortMergeJoin") || abovePlan.contains("ShuffledHashJoin"),
         s"expected shuffled anti joins above the gate:\n$abovePlan")
@@ -86,7 +84,7 @@ class MorBroadcastGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("default gate keeps small delete sides on the broadcast path") {
     val (meta, group) = morGroup()
-    assertUnderGatePlan(Mor.dataFrame(spark, group, meta.schemaColumns, 2))
+    assertUnderGatePlan(Mor.dataFrame(spark, meta, group))
   }
 
   /** Under the gate: no join keyed on the file path, position deletes

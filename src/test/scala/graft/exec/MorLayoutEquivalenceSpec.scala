@@ -103,9 +103,8 @@ class MorLayoutEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def assertPlansAgree(f: Fixture, group: FileGroup, expected: Long,
       keepHidden: Boolean = false, keepRowIds: Boolean = false): Seq[Row] = {
     val meta = f.meta
-    def frame(gate: Long): DataFrame = Mor.dataFrame(spark, group, meta.schemaColumns,
-      meta.formatVersion, meta.schema, broadcastDeleteBytesMax = gate,
-      keepHidden = keepHidden, keepRowIds = keepRowIds)
+    def frame(gate: Long): DataFrame = Mor.dataFrame(spark, meta, group,
+      broadcastDeleteBytesMax = gate, keepHidden = keepHidden, keepRowIds = keepRowIds)
     def multiset(df: DataFrame): Map[Row, Int] =
       df.collect().toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
     val under = frame(Long.MaxValue)

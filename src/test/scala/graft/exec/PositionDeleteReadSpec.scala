@@ -37,7 +37,7 @@ class PositionDeleteReadSpec extends AnyFunSuite {
     val group = FileGroup(data, Seq(good, bad), Nil)
 
     def morRows(g: FileGroup): Long =
-      Mor.dataFrame(spark, g, meta.schemaColumns, meta.formatVersion, meta.schema).count()
+      Mor.dataFrame(spark, meta, g).count()
     assert(morRows(FileGroup(data, Seq(good), Nil)) == 99)
     val e = intercept[Exception](morRows(group))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)

@@ -96,15 +96,14 @@ class StatsIndependenceSpec extends AnyFunSuite {
     }
 
     // the normal read path stays metadata-answerable (deleteless count)
-    val normal = Mor.dataFrame(spark, group, meta.schemaColumns,
-      meta.formatVersion, meta.schema).groupBy().count()
+    val normal = Mor.dataFrame(spark, meta, group).groupBy().count()
     assert(normal.as[Long].head() == 50L)
     assert(!hasScan(normal), "deleteless count should be metadata-only by default")
 
     // the validation read path must SCAN — counting the manifest against
     // itself would make the rows-preserved invariant circular
-    val validating = Mor.dataFrame(spark, group, meta.schemaColumns,
-      meta.formatVersion, meta.schema, metadataAggregates = false).groupBy().count()
+    val validating = Mor.dataFrame(spark, meta, group, metadataAggregates = false)
+      .groupBy().count()
     assert(validating.as[Long].head() == 50L)
     assert(hasScan(validating), "validation count must not fold manifest recordCounts:\n" +
       validating.queryExecution.executedPlan)

@@ -124,16 +124,14 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(group.positionDeleteFiles.nonEmpty &&
       group.positionDeleteFiles.forall(_.isDeletionVector))
 
-    val below = Mor.dataFrame(spark, group, meta.schemaColumns, 2, meta.schema,
-      broadcastDeleteBytesMax = Long.MaxValue)
+    val below = Mor.dataFrame(spark, meta, group, broadcastDeleteBytesMax = Long.MaxValue)
     val belowPlan = below.queryExecution.executedPlan.toString
     assert(!belowPlan.contains("Join"),
       s"DV shade under the gate must be a scalar filter, not a join:\n$belowPlan")
     assert(belowPlan.contains("dvcontains"),
       s"expected the DV probe in the plan:\n$belowPlan")
 
-    val above = Mor.dataFrame(spark, group, meta.schemaColumns, 2, meta.schema,
-      broadcastDeleteBytesMax = 0L)
+    val above = Mor.dataFrame(spark, meta, group, broadcastDeleteBytesMax = 0L)
     val abovePlan = above.queryExecution.executedPlan.toString
     assert(abovePlan.contains("LeftAnti"),
       s"expected the anti-join fallback above the gate:\n$abovePlan")

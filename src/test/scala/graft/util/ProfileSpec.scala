@@ -1,12 +1,15 @@
 package graft.util
 
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.meta.{IceRead, IceWrite, LocalCatalog}
 
 /** [[Profile.record]] keeps exactly the body's Spark work, splits its
   * wall time exactly, and leaves no listener behind. */
@@ -51,10 +54,23 @@ class ProfileSpec extends AnyFunSuite {
     assert(r.jobStarts.isEmpty && r.stages.isEmpty && r.actions.isEmpty, r.toString)
   }
 
+  test("actions on any session of the context are reported with their Catalyst time") {
+    val catalog = LocalCatalog(Files.createTempDirectory("graft-profile").toString)
+    IceWrite.create(spark, catalog, "t", spark.range(0, 300, 1, 2).toDF("id"))
+    IceWrite.deleteWhere(spark, catalog, "t", col("id") < 10)
+    val (n, r) = Profile.record(spark)(IceRead.table(spark, catalog, "t").count())
+    assert(n == 290)
+    assert(r.actions.map(_.name) == Seq("count"), r.toString)
+    assert(r.catalystMs > 0, r.toString)
+    val clone = ColumnBridge.cloneSession(spark)
+    val (_, c) = Profile.record(spark)(clone.range(0, 100, 1, 2).count())
+    assert(c.actions.map(_.name) == Seq("count"), c.toString)
+  }
+
   test("a throwing body propagates and leaves the bus's listener count unchanged") {
-    // the session's execution listener bus joins the Spark bus on the
-    // first registration and stays; make sure it exists before counting
-    Profile.record(spark)(())
+    // bus members created on first use (a session's execution listener
+    // bus) stay; make sure they exist before counting
+    Profile.record(spark)(spark.range(1).count())
     ListenerBusBridge.drain(sc)
     val before = ListenerBusBridge.listenerCount(sc)
     val e = intercept[IllegalStateException] {
