@@ -82,7 +82,6 @@ final class AutoCompactionPlanner(config: AutoCompactionConfig = AutoCompactionC
     val tasks = table.scanTasks(snap)
     val totalDataBytes = tasks.map(_.length).sum
     val stats = computeStats(tasks)
-    val byPath = snap.manifest.map(f => f.resolutionKey -> f).toMap
 
     val deleteCandidate = filesWithDeletesCandidate(stats)
     val smallCandidate = smallFilesCandidate(stats)
@@ -91,7 +90,7 @@ final class AutoCompactionPlanner(config: AutoCompactionConfig = AutoCompactionC
 
     def build(pc: PlanningConfig, label: String): AutoPlanReport = {
       val strategy = PlanStrategy.fromConfig(pc)
-      val groups = strategy.execute(tasks, pc.params, byPath.get)
+      val groups = strategy.execute(tasks, pc.params, snap.entriesByKey.get)
       val plans = groups.filterNot(_.isEmpty).map(g => CompactionPlan(g, toBranch, snap.snapshotId))
       reportFromPlans(Some(label), plans, totalDataBytes, AutoPlanReason.Recommended)
     }

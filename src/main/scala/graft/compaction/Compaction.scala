@@ -124,16 +124,12 @@ final class Compaction(
     * that doesn't exist must not silently plan against main's data). */
   def planCompaction(): Seq[CompactionPlan] = {
     val table = catalog.loadTable(tableName)
-    val snapshot =
-      if (toBranch == "main") table.snapshotForRef(toBranch).orElse(table.currentSnapshot)
-      else table.snapshotForRef(toBranch)
-    snapshot match {
+    table.branchHead(toBranch) match {
       case None => Nil
       case Some(snap) =>
         val tasks = table.scanTasks(snap) // op 1: data files w/ deletes attached
-        val byPath = snap.manifest.map(f => f.resolutionKey -> f).toMap
         val strategy = PlanStrategy.fromConfig(config)
-        val groups = strategy.execute(tasks, config.params, byPath.get)
+        val groups = strategy.execute(tasks, config.params, snap.entriesByKey.get)
         groups.filterNot(_.isEmpty).map(g => CompactionPlan(g, toBranch, snap.snapshotId))
     }
   }
@@ -377,7 +373,7 @@ final class CommitManager(
         attempts += 1
         val starting = table.snapshotById(startingSnapshotId).getOrElse(
           throw new IllegalStateException(s"No snapshot found with id $startingSnapshotId"))
-        val current = table.snapshotForRef(toBranch).orElse(table.currentSnapshot).getOrElse(starting)
+        val current = table.commitBase(toBranch).getOrElse(starting)
 
         // file-existence check (set_check_file_existence(true))
         val currentPaths = current.manifest.map(_.path).toSet

@@ -275,10 +275,7 @@ object Maintenance {
     val eqFiles = snap0.manifest.filter(_.content == FileContent.EqualityDeletes)
     if (eqFiles.isEmpty) return meta0
     val tasks = meta0.scanTasks(snap0)
-    val byPath = snap0.manifest.map(f => f.resolutionKey -> f).toMap
-    val groups = tasks.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sorted.mkString(","))
-      .map { case (_, fs) => graft.selection.FileGroup.fromDataFiles(fs, byPath.get) }
+    val groups = graft.selection.FileGroup.ofTasks(snap0, tasks)
 
     def live(g: graft.selection.FileGroup) =
       Mor.dataFrame(spark, meta0, g, keepHidden = true)

@@ -88,10 +88,7 @@ object RowRewrite {
       meta: TableMetadata, condition: Column,
       transform: DataFrame => DataFrame, branch: String,
       countPreserving: Boolean): TableMetadata = {
-    val snap = (if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-                else meta.snapshotForRef(branch))
-      .getOrElse(throw new IllegalStateException(
-        s"table ${meta.name} has no snapshot on branch $branch"))
+    val snap = meta.requireBranchHead(branch)
     val tasks = meta.scanTasks(snap)
     if (tasks.isEmpty) return meta
 
@@ -107,12 +104,7 @@ object RowRewrite {
       affectedPaths.contains(Mor.normalizePath(t.path)))
     if (affected.isEmpty) return meta
 
-    // one group per partition (scoped equality deletes refuse
-    // cross-partition flattening, same as compaction planning)
-    val byPath = snap.manifest.map(f => f.resolutionKey -> f).toMap
-    val groups = affected.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sorted.mkString(","))
-      .map { case (_, fs) => FileGroup.fromDataFiles(fs, byPath.get) }
+    val groups = FileGroup.ofTasks(snap, affected)
 
     val outcomes = groups.map { g =>
       // v3: COW edits must not re-identify surviving rows — the rewrite

@@ -80,9 +80,7 @@ object BloomIndex {
     val meta = catalog.loadTable(name)
     require(meta.fieldByName(column).nonEmpty || meta.schema.isEmpty,
       s"column $column not in schema of $name")
-    val snap = (if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-                else meta.snapshotForRef(branch))
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
+    val snap = meta.requireBranchHead(branch)
     val dataFiles = snap.manifest.filter(_.content == FileContent.Data)
     require(dataFiles.nonEmpty, s"table $name has no data files")
     val statsDir = MetaIO.join(meta.location, "stats")
@@ -193,9 +191,7 @@ object BloomIndex {
       column: String, value: String, branch: String = "main"): DataFrame = {
     require(value != null, "bloom point lookup value must be non-null (nulls are not indexed)")
     val meta = catalog.loadTable(name)
-    val snap = (if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-                else meta.snapshotForRef(branch))
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
+    val snap = meta.requireBranchHead(branch)
     val keep = mayContainFiles(meta, snap, column, value)
     IceRead.ofSnapshot(spark, meta, snap, t => keep.forall(_.contains(t.path)))
       .filter(col(column).cast("string") === value)

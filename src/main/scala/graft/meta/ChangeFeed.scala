@@ -62,11 +62,9 @@ final class ChangeFeed(
     // strict on explicit branches (IceRead.table's rule): tailing a
     // missing/typo'd branch must not silently tail main instead. Only a
     // not-yet-committed table (no snapshot anywhere) means "nothing yet".
-    val head = (if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-                else Some(meta.snapshotForRef(branch).getOrElse(
-                  throw new IllegalStateException(
-                    s"table $name has no snapshot on branch $branch"))))
-      .getOrElse(return Nil)
+    val head =
+      (if (branch == "main") meta.branchHead(branch) else Some(meta.requireBranchHead(branch)))
+        .getOrElse(return Nil)
     var chain = List.empty[Snapshot]
     var cur: Option[Snapshot] = Some(head)
     while (cur.nonEmpty && cur.get.snapshotId != sinceId) {

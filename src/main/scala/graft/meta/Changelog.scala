@@ -75,11 +75,7 @@ object Changelog {
   def changesOfLatest(spark: SparkSession, catalog: Catalog, name: String,
       branch: String = "main", withRowIds: Boolean = false): DataFrame = {
     val meta = catalog.loadTable(name)
-    // strict on explicit branches (IceRead.table's rule): a subscriber of
-    // a missing branch must not silently read main's commits
-    val snap = (if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-                else meta.snapshotForRef(branch))
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
+    val snap = meta.requireBranchHead(branch)
     changesBetween(spark, catalog, name, snap.parentId.getOrElse(0L), snap.snapshotId,
       withRowIds)
   }

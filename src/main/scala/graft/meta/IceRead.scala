@@ -18,16 +18,6 @@ import graft.selection.FileGroup
   */
 object IceRead {
 
-  /** Resolve the snapshot a read targets — strict on explicit branches
-    * (silently reading another branch's data would be surprising); only
-    * "main" may fall back to the current snapshot (pre-refs tables).
-    * The single definition every read/metadata/fast-stats entry point
-    * shares. */
-  private def resolveSnapshot(meta: TableMetadata, name: String, branch: String): Snapshot =
-    (if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-     else meta.snapshotForRef(branch))
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
-
   def table(spark: SparkSession, catalog: Catalog, name: String, branch: String = "main"): DataFrame = {
     val meta = catalog.loadTable(name)
     // a VIEW entry has no files: reading it as a table would silently
@@ -35,9 +25,9 @@ object IceRead {
     require(!Views.isView(meta),
       s"$name is a VIEW — query it through GraftSql (SELECT FROM <cat>.$name) " +
         "or substitute Views.plan")
+    // only main may be missing: an explicit branch stays strict
     val snapOpt =
-      if (branch == "main") meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-      else Some(resolveSnapshot(meta, name, branch)) // explicit branch stays strict
+      if (branch == "main") meta.branchHead(branch) else Some(meta.requireBranchHead(branch))
     snapOpt match {
       case Some(snap) => ofSnapshot(spark, meta, snap)
       case None =>
@@ -105,7 +95,7 @@ object IceRead {
         s"partition filter key $k is not in the current partition spec of $name " +
           s"(${meta.partitionSpec.map(_.column).mkString(", ")}); " +
           "filter the plain read instead")
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     val pruned = ofSnapshot(spark, meta, snap, t =>
       // non-current-spec files (imported historical specs, or re-marked by
       // a transform evolution) record values in ANOTHER transform's
@@ -135,7 +125,7 @@ object IceRead {
   def tableRange(spark: SparkSession, catalog: Catalog, name: String,
       colName: String, lo: BigDecimal, hi: BigDecimal, branch: String = "main"): DataFrame = {
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     import org.apache.spark.sql.functions.col
     // retired stats names (renamed-away/dropped then possibly reused):
     // the recorded bounds may describe ANOTHER field — keep every file.
@@ -167,9 +157,6 @@ object IceRead {
       colName: String, lo: BigDecimal, hi: BigDecimal): Seq[FileEntry] =
     meta.scanTasks(snap).filter(_.mayContainRange(colName, lo, hi))
 
-  /** The MOR view of one snapshot; `keepHidden` retains
-    * [[Mor.FilePathCol]]/[[Mor.PosCol]] row lineage (changelog delete
-    * attribution needs to address live rows physically). */
   /** MOR view of the current snapshot PLUS the v3 `_row_id` lineage
     * column: a row's id is stable across deletes, upserts of OTHER keys,
     * and compaction (rewrites materialize it) — the identity downstream
@@ -179,9 +166,12 @@ object IceRead {
     val meta = catalog.loadTable(name)
     require(meta.formatVersion >= 3,
       s"row lineage requires format version >= 3 (table $name is v${meta.formatVersion})")
-    ofSnapshot(spark, meta, resolveSnapshot(meta, name, branch), keepRowIds = true)
+    ofSnapshot(spark, meta, meta.requireBranchHead(branch), keepRowIds = true)
   }
 
+  /** The MOR view of one snapshot; `keepHidden` retains
+    * [[Mor.FilePathCol]]/[[Mor.PosCol]] row lineage (changelog delete
+    * attribution needs to address live rows physically). */
   private[meta] def ofSnapshot(spark: SparkSession, meta: TableMetadata, snap: Snapshot,
       keep: FileEntry => Boolean = _ => true, keepHidden: Boolean = false,
       keepRowIds: Boolean = false): DataFrame = {
@@ -204,24 +194,12 @@ object IceRead {
         else base
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    val byPath = snap.manifest.map(f => f.resolutionKey -> f).toMap
-    // partition-scoped equality deletes must not be flattened into one
-    // table-wide group (they'd erase rows in other partitions): split into
-    // one MOR plan per partition and union — each branch keeps the same
-    // shuffle-free scan -> broadcast-anti-join shape, so the union is just
-    // more parallel scan partitions, not a different plan at scale
-    val hasScopedEq = tasks.exists(_.deletes.exists(p => byPath.get(p).exists(e =>
-      e.content == FileContent.EqualityDeletes && e.partitionValues.nonEmpty)))
-    val taskGroups =
-      if (hasScopedEq)
-        // (specId, values) is the partition identity — see FileEntry.specId
-        tasks.groupBy(t => (t.specId, t.partitionValues)).toSeq
-          .sortBy { case ((sid, pv), _) => (sid, pv.toSeq.sorted.mkString(",")) }
-          .map(_._2)
-      else Seq(tasks)
-    taskGroups.map { ts =>
-      Mor.dataFrame(spark, meta, FileGroup.fromDataFiles(ts, byPath.get),
-        keepHidden = keepHidden, keepRowIds = keepRowIds)
+    // partition-scoped equality deletes split the read into one MOR plan
+    // per partition, unioned: each keeps the shuffle-free scan ->
+    // broadcast-anti-join shape, so the union is just more parallel scan
+    // partitions, not a different plan at scale
+    FileGroup.ofTasks(snap, tasks).map { g =>
+      Mor.dataFrame(spark, meta, g, keepHidden = keepHidden, keepRowIds = keepRowIds)
     }.reduce(_ unionAll _)
   }
 
@@ -248,7 +226,7 @@ object IceRead {
       branch: String = "main"): DataFrame = {
     import spark.implicits._
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     snap.manifest.map { f =>
       (f.path, f.content.toString, f.length, f.recordCount, f.sequenceNumber,
         f.partitionValues, f.equalityIds, f.equalityFieldIds)
@@ -260,22 +238,22 @@ object IceRead {
     * row per partition of the branch head with file/record/byte totals and
     * delete-file counts — the planning input for partition-scoped
     * compaction and the first thing an operator inspects on a skewed
-    * table. Metadata-only (driver-side manifest aggregation, no scan);
-    * record counts are manifest counts, i.e. PRE-merge-on-read totals. */
+    * table. A partition is `(spec_id, partition)`, the [[FileEntry.specId]]
+    * marker and its values, as in Iceberg's own `partitions` table.
+    * Metadata-only (driver-side manifest aggregation, no scan); record
+    * counts are manifest counts, i.e. PRE-merge-on-read totals. */
   def partitions(spark: SparkSession, catalog: Catalog, name: String,
       branch: String = "main"): DataFrame = {
     import spark.implicits._
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
-    snap.manifest.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sorted.mkString(","))
-      .map { case (pv, files) =>
-        val (data, del) = files.partition(_.content == FileContent.Data)
-        (pv, data.size.toLong, data.map(_.recordCount).sum, data.map(_.length).sum,
-          del.count(_.content == FileContent.PositionDeletes).toLong,
-          del.count(_.content == FileContent.EqualityDeletes).toLong)
-      }.toDF("partition", "data_files", "record_count", "total_bytes",
-        "position_delete_files", "equality_delete_files")
+    val snap = meta.requireBranchHead(branch)
+    FileGroup.byPartition(snap.manifest).map { files =>
+      val (data, del) = files.partition(_.content == FileContent.Data)
+      (files.head.partitionValues, data.size.toLong, data.map(_.recordCount).sum,
+        data.map(_.length).sum, del.count(_.content == FileContent.PositionDeletes).toLong,
+        del.count(_.content == FileContent.EqualityDeletes).toLong, files.head.specId)
+    }.toDF("partition", "data_files", "record_count", "total_bytes",
+        "position_delete_files", "equality_delete_files", "spec_id")
   }
 
   /** `count(*)` answered from manifest record counts alone — zero data
@@ -289,7 +267,7 @@ object IceRead {
     * `table(...).count()`. */
   def fastCount(catalog: Catalog, name: String, branch: String = "main"): Option[Long] = {
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     val (data, deletes) = snap.manifest.partition(_.content == FileContent.Data)
     if (deletes.nonEmpty) None else Some(data.map(_.recordCount).sum)
   }
@@ -304,7 +282,7 @@ object IceRead {
   def fastMinMax(catalog: Catalog, name: String, column: String,
       branch: String = "main"): Option[(BigDecimal, BigDecimal)] = {
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     val (data, deletes) = snap.manifest.partition(_.content == FileContent.Data)
     val live = data.filter(_.recordCount > 0)
     if (deletes.nonEmpty || live.isEmpty) return None
@@ -445,7 +423,7 @@ object IceRead {
       branch: String = "main"): DataFrame = {
     import spark.implicits._
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     val addedBy = addedBySnapshot(meta)
     snap.manifest.map { f =>
       (if (f.sequenceNumber == snap.sequenceNumber) 1 else 0,
@@ -466,7 +444,7 @@ object IceRead {
       branch: String = "main"): DataFrame = {
     import spark.implicits._
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     snap.manifest.groupBy(f =>
       (if (f.content == FileContent.Data) 0 else 1, f.specId)).toSeq.sortBy(_._1)
       .map { case ((content, specId), files) =>
@@ -515,7 +493,7 @@ object IceRead {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val meta = catalog.loadTable(name)
-    val snap = resolveSnapshot(meta, name, branch)
+    val snap = meta.requireBranchHead(branch)
     val (dvs, posFiles) = snap.manifest
       .filter(_.content == FileContent.PositionDeletes)
       .partition(_.isDeletionVector)

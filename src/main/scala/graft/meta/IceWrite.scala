@@ -349,7 +349,7 @@ object IceWrite {
         * [[cherrypickSnapshot]] publishes it. */
       stageWapId: Option[String] = None): TableMetadata =
     catalog.transact(name) { meta =>
-      val base = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
+      val base = meta.commitBase(branch)
       val newSeq = meta.lastSequenceNumber + 1
       val stamped = sets.flatMap(s => s.files.map(_.copy(
         content = s.content, sequenceNumber = newSeq,
@@ -671,9 +671,8 @@ object IceWrite {
   private def matchingPositions(spark: SparkSession, meta: TableMetadata,
       condition: org.apache.spark.sql.Column, branch: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
-      .getOrElse(throw new IllegalStateException(
-        s"table ${meta.name} has no snapshot on branch $branch"))
+    val snap = meta.commitBase(branch).getOrElse(throw new IllegalStateException(
+      s"table ${meta.name} has no snapshot on branch $branch"))
     val dataFiles = snap.manifest.filter(_.content == FileContent.Data)
     require(dataFiles.nonEmpty, s"table ${meta.name} has no data files")
     graft.exec.Mor.readDataWith(spark, meta, dataFiles)(
@@ -708,9 +707,7 @@ object IceWrite {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     val table0 = catalog.loadTable(name)
-    val snap = table0.snapshotForRef(branch)
-      .orElse(if (branch == "main") table0.currentSnapshot else None)
-      .getOrElse(throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
+    val snap = table0.requireBranchHead(branch)
     // v3 row lineage: the rewritten copies MATERIALIZE the survivor's
     // _row_id (reserved field id, same convention as compaction) so an
     // UPDATE preserves row identity — the updated row is the SAME row,
@@ -804,7 +801,7 @@ object IceWrite {
     val dataEntries = newDataFiles()
 
     catalog.transact(name) { meta =>
-      val base = meta.snapshotForRef(branch).orElse(meta.currentSnapshot)
+      val base = meta.commitBase(branch)
         .getOrElse(throw new IllegalStateException(s"table $name lost its snapshot"))
       // merge against the CURRENT head's DVs (a concurrent DV delete may
       // have landed since the scan; re-merging per attempt keeps the union)
@@ -841,7 +838,7 @@ object IceWrite {
   def createBranch(catalog: Catalog, name: String, branch: String,
       fromBranch: String = "main"): TableMetadata =
     catalog.transact(name) { meta =>
-      val head = meta.refs.get(fromBranch).orElse(meta.currentSnapshotId)
+      val head = meta.commitBase(fromBranch).map(_.snapshotId)
         .getOrElse(throw new IllegalStateException(s"branch $fromBranch has no snapshot"))
       meta.copy(refs = meta.refs + (branch -> head))
     }
@@ -875,9 +872,7 @@ object IceWrite {
   def rollbackTo(catalog: Catalog, name: String, snapshotId: Long,
       branch: String = "main"): TableMetadata =
     catalog.transact(name) { meta =>
-      val head = meta.snapshotForRef(branch)
-        .orElse(if (branch == "main") meta.currentSnapshot else None)
-        .getOrElse(throw new IllegalStateException(s"branch $branch has no snapshot"))
+      val head = meta.requireBranchHead(branch)
       var cur: Option[Snapshot] = Some(head)
       while (cur.nonEmpty && cur.get.snapshotId != snapshotId)
         cur = cur.get.parentId.flatMap(meta.snapshotById)

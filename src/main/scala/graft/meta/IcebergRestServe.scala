@@ -1319,8 +1319,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
     if (isAdHoc && tasks.size > IcebergRestServe.AsyncPlanThreshold)
       return submitAsyncPlan(table, meta, snap, tasks, filterJ)
     val kept = pruneTasks(meta, tasks, filterJ)
-    val byKey = snap.manifest.filter(_.content != FileContent.Data)
-      .map(e => e.resolutionKey -> e).toMap
+    val byKey = snap.entriesByKey
     200 -> JsonMethods.compact(JsonMethods.render(
       (("plan-status" -> "completed"): JObject) ~
         renderScanTasks(kept, byKey, filterJ)))
@@ -1426,8 +1425,7 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
       def run(): Unit =
         try {
           val kept = pruneTasks(meta, tasks, filterJ)
-          val byKey = snap.manifest.filter(_.content != FileContent.Data)
-            .map(e => e.resolutionKey -> e).toMap
+          val byKey = snap.entriesByKey
           // publish ONLY while still submitted: a cancel that already
           // cleared the plan must not have its kept list repopulated —
           // that would pin a cancelled 10^6-file list in memory and
@@ -1991,10 +1989,9 @@ final class IcebergRestServe(catalog: Catalog, namespace: String = "graft",
           try IcebergImport.decodeManifestListForTable(meta, listPath)
           catch { case e: Exception =>
             return refuse(s"cannot decode manifest list $listPath: ${e.getMessage}", 400) }
-        val parent = u.setRefs
+        val parent = meta.commitBase(u.setRefs
           .collectFirst { case (name, typ, id) if typ != "tag" && id == snapId => name }
-          .filter(_ != "main").flatMap(meta.snapshotForRef)
-          .orElse(meta.currentSnapshot)
+          .getOrElse("main"))
         val headManifest = parent.map(_.manifest).getOrElse(Nil)
         val headKeys = headManifest.map(_.resolutionKey).toSet
         val newKeys = entries.map(_.resolutionKey).toSet

@@ -116,7 +116,6 @@ object MetaIO {
   def isFile(s: String): Boolean = { val (fs, p) = fp(s); fs.isFile(p) }
   def isDirectory(s: String): Boolean = { val (fs, p) = fp(s); fs.getFileStatus(p).isDirectory }
   def size(s: String): Long = { val (fs, p) = fp(s); fs.getFileStatus(p).getLen }
-  def modifiedMs(s: String): Long = { val (fs, p) = fp(s); fs.getFileStatus(p).getModificationTime }
   def mkdirs(s: String): Unit = { val (fs, p) = fp(s); fs.mkdirs(p); () }
 
   def delete(s: String): Boolean = { val (fs, p) = fp(s); fs.delete(p, false) }

@@ -178,6 +178,8 @@ final case class FileEntry(
     * FileGroup resolution, manifest deltas — keys by this instead. */
   def resolutionKey: String =
     if (isDeletionVector) s"$path#${contentOffset.getOrElse(0L)}" else path
+  /** The partition identity, `(specId, partitionValues)`: see [[specId]]. */
+  def partitionKey: (Int, Map[String, String]) = (specId, partitionValues)
   /** true when the file may contain rows with `col` in [lo, hi]; files
     * without stats for the column are conservatively kept. */
   def mayContainRange(colName: String, lo: BigDecimal, hi: BigDecimal): Boolean =
@@ -289,7 +291,11 @@ final case class Snapshot(
     timestampMs: Long,
     manifest: Seq[FileEntry],
     summary: Map[String, String] = Map.empty
-)
+) {
+  /** The manifest keyed by [[FileEntry.resolutionKey]], built once per
+    * snapshot: resolves a scan task's `deletes` to their entries. */
+  lazy val entriesByKey: Map[String, FileEntry] = manifest.map(f => f.resolutionKey -> f).toMap
+}
 
 /** Versioned table metadata; the unit the catalog CASes on commit. */
 final case class TableMetadata(
@@ -392,6 +398,23 @@ final case class TableMetadata(
   def snapshotById(id: Long): Option[Snapshot] = snapshots.find(_.snapshotId == id)
   def snapshotForRef(branch: String): Option[Snapshot] =
     refs.get(branch).flatMap(snapshotById)
+
+  /** The snapshot a read of `branch` means: the ref's snapshot, and for
+    * "main" alone the current snapshot (tables written before refs).
+    * An explicit branch never falls back: reading another branch's data
+    * would be silently wrong. */
+  def branchHead(branch: String): Option[Snapshot] =
+    snapshotForRef(branch).orElse(if (branch == "main") currentSnapshot else None)
+
+  /** [[branchHead]], or an error naming the table and branch. */
+  def requireBranchHead(branch: String): Snapshot =
+    branchHead(branch).getOrElse(
+      throw new IllegalStateException(s"table $name has no snapshot on branch $branch"))
+
+  /** The snapshot a write to `branch` parents on: its [[branchHead]], and
+    * for a branch that does not exist yet the current snapshot it forks
+    * from. */
+  def commitBase(branch: String): Option[Snapshot] = branchHead(branch).orElse(currentSnapshot)
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.flatMap(snapshotById)
 
   /** The id [[withSnapshot]] gives the next snapshot: max existing + 1.
@@ -471,13 +494,12 @@ final case class TableMetadata(
     val (dvs, plain) = deletes.partition(_._1.isDeletionVector)
     val dvByReferenced = dvs.groupBy(_._1.referencedDataFile.get)
     val (global, scoped) = plain.partition(_._1.partitionValues.isEmpty)
-    // partition identity = (specId, values): see FileEntry.specId — a
-    // scoped delete written under one spec must not attach to a data file
-    // of another spec whose value map happens to coincide
-    val scopedByPartition = scoped.groupBy(e => (e._1.specId, e._1.partitionValues))
+    // a scoped delete written under one spec must not attach to a data
+    // file of another spec whose value map happens to coincide
+    val scopedByPartition = scoped.groupBy(_._1.partitionKey)
     snapshot.manifest.filter(_.content == FileContent.Data).map { d =>
       val candidates = global ++
-        scopedByPartition.getOrElse((d.specId, d.partitionValues), Nil) ++
+        scopedByPartition.getOrElse(d.partitionKey, Nil) ++
         dvByReferenced.getOrElse(d.path, Nil)
       val applicable = candidates.filter { case (del, _) =>
         del.content match {

@@ -1,6 +1,6 @@
 package graft.selection
 
-import graft.meta.{FileContent, FileEntry}
+import graft.meta.{FileContent, FileEntry, Snapshot}
 
 /** A unit of compaction work: data files plus their (deduplicated) delete
   * files, with computed executor/output parallelism. Mirrors the reference
@@ -40,7 +40,8 @@ object FileGroup {
     * rows in other partitions. Callers that mix partitions in one group
     * (table scope, whole-table reads) must split per partition first;
     * this require makes the latent cross-partition leak loud instead of
-    * silently wrong. Position deletes key on (file_path, pos) — file
+    * silently wrong. The partition is [[FileEntry.partitionKey]], the
+    * spec included. Position deletes key on (file_path, pos) — file
     * paths are partition-unique, so flattening cannot mis-apply them. */
   def fromDataFiles(dataFiles: Seq[FileEntry], resolveDelete: String => Option[FileEntry]): FileGroup = {
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, FileEntry]
@@ -48,12 +49,30 @@ object FileGroup {
     val (pos, eq) = seen.values.toSeq.partition(_.content == FileContent.PositionDeletes)
     val eqOnly = eq.filter(_.content == FileContent.EqualityDeletes)
     for (e <- eqOnly if e.partitionValues.nonEmpty)
-      require(dataFiles.forall(_.partitionValues == e.partitionValues),
-        s"partition-scoped equality delete ${e.path} (partition ${e.partitionValues}) " +
-          "cannot be flattened into a group spanning other partitions; " +
-          "build one group per partition")
+      require(dataFiles.forall(_.partitionKey == e.partitionKey),
+        s"partition-scoped equality delete ${e.path} (spec ${e.specId}, partition " +
+          s"${e.partitionValues}) cannot be flattened into a group spanning other " +
+          "partitions; build one group per partition")
     FileGroup(dataFiles, pos, eqOnly)
   }
+
+  /** The MOR groups of a snapshot's scan `tasks`: one group, unless a
+    * partition-scoped equality delete is attached, which the MOR anti
+    * join would apply table-wide; then one group per partition
+    * ([[byPartition]]). A table without scoped equality deletes keeps
+    * one plan, however many partitions it has. */
+  def ofTasks(snapshot: Snapshot, tasks: Seq[FileEntry]): Seq[FileGroup] = {
+    val resolve = snapshot.entriesByKey.get _
+    val hasScopedEq = tasks.exists(_.deletes.exists(k => resolve(k).exists(e =>
+      e.content == FileContent.EqualityDeletes && e.partitionValues.nonEmpty)))
+    (if (hasScopedEq) byPartition(tasks) else Seq(tasks)).map(fromDataFiles(_, resolve))
+  }
+
+  /** `files` split by [[FileEntry.partitionKey]], in a stable order. */
+  def byPartition(files: Seq[FileEntry]): Seq[Seq[FileEntry]] =
+    files.groupBy(_.partitionKey).toSeq
+      .sortBy { case ((sid, pv), _) => (sid, pv.toSeq.sorted.mkString(",")) }
+      .map(_._2)
 
   def empty: FileGroup = FileGroup(Nil, Nil, Nil)
 

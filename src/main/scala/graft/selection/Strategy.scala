@@ -69,13 +69,9 @@ final class PlanStrategy(
     fileGroupScope match {
       case FileGroupScope.Table => groupWithoutPartitioning(files, resolveDelete)
       case FileGroupScope.Partition =>
-        // hash-group by partition values; files with no partition all share
-        // the empty map (strategy.rs:943-971). Deterministic order: sort
-        // group keys so plan output is stable across runs.
-        // (specId, values) is the partition identity — see FileEntry.specId
-        files.groupBy(f => (f.specId, f.partitionValues)).toSeq
-          .sortBy { case ((sid, pv), _) => (sid, pv.toSeq.sorted.mkString(",")) }
-          .flatMap { case (_, fs) => groupWithoutPartitioning(fs, resolveDelete) }
+        // hash-group by partition; files with no partition all share
+        // the empty map (strategy.rs:943-971), in a stable order
+        FileGroup.byPartition(files).flatMap(groupWithoutPartitioning(_, resolveDelete))
     }
 
   private def groupWithoutPartitioning(

@@ -9,7 +9,7 @@ import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
@@ -26,7 +26,9 @@ import graft.{Bench, SparkEntry}
 object Profile {
 
   /** A stage of a recorded job: its run interval (epoch ms), task count,
-    * call-site name and the bytes its tasks spilled (memory + disk). */
+    * call-site name and the bytes its tasks spilled (memory + disk). An
+    * adaptive query stage, submitted from Spark's own thread pool, is
+    * named by its SQL execution's description (the action's call site). */
   final case class Stage(startMs: Long, endMs: Long, tasks: Int, name: String, spillBytes: Long) {
     def ms: Long = endMs - startMs
   }
@@ -76,9 +78,9 @@ object Profile {
     val stages = new ConcurrentLinkedQueue[Stage]
     val actions = new ConcurrentLinkedQueue[Action]
     // touched only on the bus thread
-    val stageIds = mutable.Set.empty[Int]
+    val stageExecutions = mutable.Map.empty[Int, Option[Long]]
     val spills = mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    val executionStarts = mutable.Map.empty[Long, Long]
+    val executionStarts = mutable.Map.empty[Long, SparkListenerSQLExecutionStart]
 
     // an action's end event carries its QueryExecution, whatever session
     // ran it; its start event says whether it was tagged
@@ -97,23 +99,30 @@ object Profile {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (ListenerBusBridge.jobTags(e.properties)(tag)) {
           jobStarts.add(e.time)
-          stageIds ++= e.stageIds
+          val execution =
+            Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY)).map(_.toLong)
+          e.stageIds.foreach(stageExecutions(_) = execution)
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stageIds(e.stageId) && e.taskMetrics != null)
+        if (stageExecutions.contains(e.stageId) && e.taskMetrics != null)
           spills(e.stageId) += e.taskMetrics.memoryBytesSpilled + e.taskMetrics.diskBytesSpilled
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
-        if (stageIds(i.stageId)) for (start <- i.submissionTime; end <- i.completionTime)
-          stages.add(Stage(start, end, i.numTasks, i.name, spills(i.stageId)))
+        for (execution <- stageExecutions.get(i.stageId);
+             start <- i.submissionTime; end <- i.completionTime) {
+          val name =
+            if (!i.name.startsWith(PooledStageName)) i.name
+            else execution.flatMap(executionStarts.get).fold(i.name)(_.description)
+          stages.add(Stage(start, end, i.numTasks, name, spills(i.stageId)))
+        }
       }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart if s.jobTags(tag) =>
-          executionStarts(s.executionId) = s.time
+          executionStarts(s.executionId) = s
         case end: SparkListenerSQLExecutionEnd =>
           for (start <- executionStarts.remove(end.executionId);
                (name, qe) <- ColumnBridge.executionEnd(end))
-            actions.add(action(name, end.time - start, qe))
+            actions.add(action(name, end.time - start.time, qe))
         case _ => ()
       }
     }
@@ -133,6 +142,10 @@ object Profile {
       sc.removeSparkListener(jobs)
     }
   }
+
+  /** The call-site name Spark gives a stage that an adaptive query
+    * stage's pooled thread submits. */
+  private val PooledStageName = "$anonfun$withThreadLocalCaptured"
 
   /** The 1-, 5- and 15-minute load averages as a JSON array, or `null`
     * where `/proc/loadavg` is missing: a timing taken on a loaded box

@@ -100,6 +100,15 @@ class IceReadSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.selection.FileGroup.fromDataFiles(meta2.scanTasks(snapNow), byPath.get)
     }
+    // so is a table-scope plan over two specs whose value maps coincide:
+    // the delete's partition is (spec 0, part=1), not part=1 of any spec
+    val inPart1 = meta2.scanTasks(snapNow).filter(_.partitionValues == Map("part" -> "1"))
+    val otherSpec =
+      inPart1.head.copy(path = inPart1.head.path + "-spec1", specId = 1, deletes = Nil)
+    val tableScope = new PlanStrategy(Nil, GroupingStrategy.Single, FileGroupScope.Table, Nil)
+    intercept[IllegalArgumentException] {
+      tableScope.execute(inPart1 :+ otherSpec, PlanningParams(), byPath.get)
+    }
   }
 
   test("zone-map range read skips non-intersecting files, result is exact") {

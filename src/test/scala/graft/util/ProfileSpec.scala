@@ -67,6 +67,20 @@ class ProfileSpec extends AnyFunSuite {
     assert(c.actions.map(_.name) == Seq("count"), c.toString)
   }
 
+  test("adaptive query stages are named by their action's call site") {
+    // a clone, so the shared session keeps its broadcast threshold
+    val session = ColumnBridge.cloneSession(spark)
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val left = session.range(0, 20000, 1, 4).withColumn("k", col("id") % 100)
+    val right = session.range(0, 100, 1, 2).withColumnRenamed("id", "k")
+    val (n, r) = Profile.record(spark)(left.join(right, "k").count())
+    assert(n == 20000)
+    val names = r.stages.map(_.name)
+    assert(names.size >= 2, r.toString)
+    assert(!names.exists(_.startsWith("$anonfun$withThreadLocalCaptured")), names.mkString("\n"))
+    assert(names.forall(_.contains("ProfileSpec.scala")), names.mkString("\n"))
+  }
+
   test("a throwing body propagates and leaves the bus's listener count unchanged") {
     // bus members created on first use (a session's execution listener
     // bus) stay; make sure they exist before counting
