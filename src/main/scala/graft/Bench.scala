@@ -14,8 +14,8 @@ import graft.util.{Profile, Sessions}
   * plus the compaction workload mirroring the reference's bench harness
   * (integration-tests/src/bin/bench.rs:87-92): fragment lineitem into small
   * data files + pos/eq delete files, run the full MOR compaction, report
-  * wall-clock. Prints ONE JSON line ([[record]]); the per-query times go
-  * to `bench_out.json`. */
+  * wall-clock. Prints ONE JSON line ([[record]]); the per-query times and
+  * Spark job counts go to `bench_out.json`. */
 object Bench {
   /** A bench line's family, for the record's per-family totals. */
   private[graft] def family(line: String): String =
@@ -113,6 +113,21 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
+    // each timed run also counts the Spark jobs it started: the recording
+    // wraps the timed region, so its bus drains are not timed
+    val firstJobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val bestJobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def timeJobs(line: String)(f: => Unit): (Double, Int) = {
+      val (t, report) = Profile.record(spark)(time(line)(f))
+      (t, report.jobStarts.size)
+    }
+    // a single-sample line: its one run is its first and its best
+    def timeOnce(line: String)(f: => Unit): Double = {
+      val (t, jobs) = timeJobs(line)(f)
+      firstJobs(line) = jobs
+      bestJobs(line) = jobs
+      t
+    }
 
     // SELF-ADJUDICATING capture conditions: a bench taken minutes after a
     // full test sweep on the same box reads 1.5-7x slower per line than an
@@ -147,7 +162,7 @@ object Bench {
     var compactionDetail: Option[String] = None
     SparkEntry.queries.foreach { case (name, fn) =>
       val samples = (1 to 2).map { _ =>
-        val t = time(name) { fn(spark, sfDir).count(): Unit }
+        val t = timeJobs(name) { fn(spark, sfDir).count(): Unit }
         // real pipelines run queries as separate jobs: free the
         // localCheckpoint blocks the LSH/CC/index queries pin in the block
         // manager, or 150 queries of accumulated blocks squeeze execution
@@ -155,8 +170,10 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         t
       }
-      firstRun(name) = samples.head
-      bestRun(name) = samples.min
+      firstRun(name) = samples.head._1
+      bestRun(name) = samples.map(_._1).min
+      firstJobs(name) = samples.head._2
+      bestJobs(name) = samples.minBy(_._1)._2
     }
     val results = firstRun
 
@@ -176,7 +193,7 @@ object Bench {
       // output file counts and bytes alongside the wall clock
       val before = catalog.loadTable("bench_li").currentSnapshot.get.manifest
       var added: Seq[graft.meta.FileEntry] = Nil
-      results("compaction_mor") = time("compaction_mor") {
+      results("compaction_mor") = timeOnce("compaction_mor") {
         val c = new Compaction(catalog, "bench_li", spark,
           config = FullCompactionConfig(PlanningParams(
             targetFileSizeBytes = 512L * 1024 * 1024,
@@ -207,7 +224,7 @@ object Bench {
       val keepIds = spark.sparkContext.getPersistentRDDs.keySet
       val counts = SkewLines.map { line =>
         var n = 0L
-        results(line) = time(line) { n = skewLine(spark, planted, line) }
+        results(line) = timeOnce(line) { n = skewLine(spark, planted, line) }
         spark.sparkContext.getPersistentRDDs.foreach {
           case (id, r) => if (!keepIds.contains(id)) r.unpersist(false)
         }
@@ -227,8 +244,10 @@ object Bench {
         System.err.println(s"[bench] skew fixture failed: ${e.getMessage}")
     }
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qb = bestRun.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def obj(m: collection.Map[String, Any]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results)
+    val qb = obj(bestRun)
     val load = s""""load":{"start":$loadStart,"end":${Profile.loadavg()},""" +
       s""""test_sweep_min_ago":$sweepAge}"""
     val detail = compactionDetail.map("," + _).getOrElse("") +
@@ -240,7 +259,8 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
         (s"""{"metric":"total","value":${results.values.sum},"unit":"sec",""" +
           s""""value_best":${bestRun.values.sum},"queries":$qs,""" +
-          s""""queries_best":$qb$detail,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
+          s""""queries_best":$qb,"jobs":${obj(firstJobs)},"jobs_best":${obj(bestJobs)}""" +
+          s"""$detail,"sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
     }
     println(record(results, bestRun, detail, sfDir, failed.toSeq))
     spark.stop()

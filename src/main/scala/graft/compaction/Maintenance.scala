@@ -298,7 +298,8 @@ object Maintenance {
     * deletion vectors: one [[Puffin]] bitmap blob per referenced data
     * file, all blobs in a single Puffin container, committed in place of
     * the parquet tombstones. Reads apply the result as a codegen'd bitmap
-    * probe instead of an anti join ([[graft.exec.Mor.dataFrame]]).
+    * probe in the scan, decoded on the driver with no Spark job; above the
+    * byte gate, as an anti join ([[graft.exec.Mor.dataFrame]]).
     *
     * Exactness: a tombstone row is folded into a DV only when its delete
     * FILE is attached to the row's target data file by [[TableMetadata.scanTasks]]

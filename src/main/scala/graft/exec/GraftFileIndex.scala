@@ -264,17 +264,11 @@ object GraftScan {
     // groups whose projected (new-field) values match. Disable pushdown
     // for such relations — the Filter node above the scan still applies
     // exactly; only row-group skipping inside those files is lost.
-    val scanConf =
-      (if (byFieldId) Map("spark.sql.parquet.fieldId.read.enabled" -> "true") else Map.empty) ++
-      (if (statsRetired.intersect(schema.fieldNames.toSet).isEmpty) Map.empty
+    val scanConf: Map[String, String] =
+      (if (byFieldId) FieldIdRead else Map.empty[String, String]) ++
+      (if (statsRetired.intersect(schema.fieldNames.toSet).isEmpty) Map.empty[String, String]
        else Map("spark.sql.parquet.filterPushdown" -> "false"))
-    val session =
-      if (scanConf.isEmpty) spark
-      else {
-        val s2 = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
-        scanConf.foreach { case (k, v) => s2.conf.set(k, v) }
-        s2
-      }
+    val session = sessionWith(spark, scanConf)
     val zone = session.sessionState.conf.sessionLocalTimeZone
     val identityCols = spec.filter(_.isIdentity).map(_.column).toSet
     val (idx, partSchema, dataSchema) = partitionGroups(files, readSchema, identityCols, zone) match {
@@ -335,9 +329,22 @@ object GraftScan {
     Some((fields.map(_.copy(nullable = true)), rows))
   }
 
+  /** `spark` itself when `conf` is empty, else a clone of it that carries
+    * `conf`: `spark` is never mutated. */
+  private[exec] def sessionWith(spark: SparkSession, conf: Map[String, String]): SparkSession =
+    if (conf.isEmpty) spark
+    else {
+      val s2 = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
+      conf.foreach { case (k, v) => s2.conf.set(k, v) }
+      s2
+    }
+
+  /** The setting that makes a parquet scan resolve columns by field id. */
+  private[exec] val FieldIdRead: Map[String, String] = Map("spark.sql.parquet.fieldId.read.enabled" -> "true")
+
   /** Recursively nullable copy (StructType.asNullable is private[spark]);
     * field metadata — parquet field ids, defaults — is preserved. */
-  private def asNullable(st: StructType): StructType =
+  private[exec] def asNullable(st: StructType): StructType =
     StructType(st.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
   private def nullableType(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
     dt match {

@@ -1,9 +1,17 @@
 package graft.exec
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.functions.{DvExpressions, FileLookup}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{DvExpressions, EqualityDeletes, FileLookup}
 import graft.meta.{FileEntry, Puffin, SchemaField, TableMetadata}
 import graft.selection.FileGroup
 
@@ -26,16 +34,22 @@ import graft.selection.FileGroup
   *    resolved once per file, and no row joins on a path string;
   *  - while a delete side's manifest byte sum stays under
   *    [[Mor.BroadcastDeleteBytesMax]] (delete files are small relative to
-  *    data by construction), position deletes and deletion vectors are
-  *    read once when the frame is built and folded into one position
-  *    bitmap per data file, which the same lookup probes as a
-  *    `dv_contains` filter, and equality deletes are a broadcast anti join
-  *    on their key: the data side never shuffles (the plan you want at
-  *    100 TB);
+  *    data by construction), every delete kind is decoded on the driver
+  *    when the frame is built, with Spark's own parquet reader and no
+  *    Spark job: position deletes and deletion vectors fold into one
+  *    position bitmap per data file, which the same lookup probes as a
+  *    `dv_contains` filter, and each equality-ids run becomes a table of
+  *    each key's largest delete sequence number, shipped as one broadcast
+  *    and probed by an [[graft.functions.EqualityDeleted]] filter (the
+  *    reference's `seq <` rule). The plan is scan -> filter -> project,
+  *    with no join and no exchange (the plan you want at 100 TB); a run
+  *    whose key types differ from the data columns' stays a broadcast
+  *    anti join;
   *  - above the gate (a delete-heavy table: the FilesWithDeletes strategy
   *    exists precisely for those) nothing large is held on the driver:
   *    position deletes and deletion vectors become `(path, pos)` anti
-  *    joins and Catalyst picks shuffled joins;
+  *    joins, equality deletes anti joins on their key, and Catalyst picks
+  *    shuffled joins;
   *  - with a typed field-id schema ([[SchemaField]]), files are read by
   *    parquet field id instead of name, making the read correct across
   *    renames (the reference's `field_by_id` addressing,
@@ -88,8 +102,10 @@ object Mor {
     * silently match nothing and resurrect the rows it deletes. */
   private def requiredDeleteCol(c: String): Column =
     when(col(c).isNull, raise_error(concat(
-      lit(s"position-delete file has no `$c` value: "), col("_metadata.file_path"))))
+      lit(missingDeleteValue(c)), col("_metadata.file_path"))))
       .otherwise(col(c))
+
+  private def missingDeleteValue(c: String): String = s"position-delete file has no `$c` value: "
 
   private val FileSchemePrefix = "^file:/+"
 
@@ -157,7 +173,8 @@ object Mor {
       GraftScan.relation(spark, fs, st, table.partitionSpec, table.statsRetiredNames,
         metadataAggregates, byFieldId)
     val frames = typed match {
-      case None => Seq(spark.read.parquet(files.map(_.path): _*))
+      case None => Seq(spark.read.schema(footerSchema(spark, files.head.path))
+        .parquet(files.map(_.path): _*))
       case Some(st) =>
         val (byName, byId) = files.partition(_.nameMatched)
         Seq(
@@ -171,8 +188,57 @@ object Mor {
     * name-addressed table the table's columns as `dataFile`'s footer types
     * them (evaluated only then). */
   def readSchema(spark: SparkSession, table: TableMetadata, dataFile: => FileEntry): StructType =
-    table.typedStruct.getOrElse(
-      spark.read.parquet(dataFile.path).select(table.schemaColumns.map(col): _*).schema)
+    table.typedStruct.getOrElse {
+      val footer = footerSchema(spark, dataFile.path)
+      StructType(table.schemaColumns.map(fieldOf(footer, _)))
+    }
+
+  /** The schema `spark.read.parquet(path)` infers from the file's footer,
+    * read on the driver without the inference job. A legacy name-addressed
+    * table's files are read with the schema of their first file, as that
+    * inference does. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+      spark.sessionState.newHadoopConf())
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val footer = try r.getFooter finally r.close()
+    GraftScan.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
+
+  /** The field of `schema` named `name`, as Catalyst resolves a column
+    * (case-insensitively). */
+  private def fieldOf(schema: StructType, name: String): StructField =
+    schema.find(_.name == name).orElse(schema.find(_.name.equalsIgnoreCase(name)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"column $name not in ${schema.fieldNames.mkString("[", ", ", "]")}"))
+
+  /** Reads the rows of parquet `files` with `schema` on the driver, with no
+    * Spark job: Spark's own parquet reader, built once and applied to each
+    * file in turn, returning rows. `byFieldId` resolves columns by parquet
+    * field id. The row passed to `f` is reused between calls. */
+  private def readOnDriver(spark: SparkSession, files: Seq[FileEntry], schema: StructType,
+      byFieldId: Boolean)(f: (FileEntry, InternalRow) => Unit): Unit = {
+    val session = GraftScan.sessionWith(spark, if (byFieldId) GraftScan.FieldIdRead else Map.empty)
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val readSchema = GraftScan.asNullable(schema)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(session, readSchema,
+      new StructType(), readSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      hadoopConf)
+    files.foreach { e =>
+      val path = new Path(e.path)
+      val status = path.getFileSystem(hadoopConf).getFileStatus(path)
+      val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0L,
+        status.getLen, Array.empty, status.getModificationTime, status.getLen))
+      try rows.foreach(f(e, _))
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+  }
 
   /** The per-file lookup over `files`, keyed by canonical path;
     * `bitmaps` are keyed the same way. */
@@ -235,46 +301,29 @@ object Mor {
   }
 
   /** Position deletes of `files` folded into one bitmap per data file of
-    * `dataFiles` (canonical path -> bitmap) in one Spark job, without a
-    * shuffle: each scan task folds its own rows, and the driver unions the
-    * serialized partial bitmaps and maps the spellings. Rows naming other
-    * files are dropped; a negative `pos` names no row and is skipped.
-    *
-    * The input is the delete files' own scan, so there is at most one
-    * partial per (task, named file) and never more than one per delete
-    * row; each costs about what that row cost in the broadcast relation
-    * the byte gate already admits. */
+    * `dataFiles` (canonical path -> bitmap), decoded on the driver with no
+    * Spark job. Rows naming other files are dropped; a negative `pos`
+    * names no row and is skipped; a null value fails the read, as
+    * [[readPositionDeletes]] does. Rows of one data file arrive together,
+    * so a path is mapped once per run of equal values. */
   private def positionBitmaps(spark: SparkSession, files: Seq[FileEntry],
       dataFiles: Seq[FileEntry]): Map[String, Puffin.PositionBitmap] = {
-    val rows = readPositionDeletes(spark, files).filter(col(PosCol) >= 0)
-    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
-      val byFile = new java.util.HashMap[String, Puffin.PositionBitmap]()
-      var lastFile: org.apache.spark.unsafe.types.UTF8String = null
-      var bitmap: Puffin.PositionBitmap = null
-      it.foreach { r =>
-        // readPositionDeletes already fails on a null; a second guard here
-        // keeps an UnsafeRow's null long (read back as 0) out of the bitmap
-        if (r.isNullAt(0) || r.isNullAt(1))
-          throw new IllegalStateException("position-delete row with a null file_path or pos")
-        val file = r.getUTF8String(0)
-        if (lastFile == null || lastFile != file) {
-          lastFile = file.copy()
-          bitmap = byFile.computeIfAbsent(file.toString, _ => Puffin.PositionBitmap.empty)
-        }
-        bitmap.add(r.getLong(1))
-      }
-      import scala.jdk.CollectionConverters._
-      byFile.asScala.iterator.map { case (f, b) => (f, b.serializePortable) }
-    }.collect()
     val remap = pathSpellings(dataFiles)
     val canon = dataFiles.map(f => canonicalManifestPath(f.path)).toSet
     val out = scala.collection.mutable.HashMap.empty[String, Puffin.PositionBitmap]
-    for ((file, bytes) <- parts) {
-      val c = remap.getOrElse(file, file)
-      if (canon.contains(c)) {
-        val b = Puffin.PositionBitmap.deserializePortable(bytes)
-        out.get(c).fold(out(c) = b)(_.addAll(b))
+    var lastFile: UTF8String = null
+    var bitmap: Puffin.PositionBitmap = null // null: the file is not in the group
+    readOnDriver(spark, files, PositionDeleteSchema, byFieldId = false) { (f, r) =>
+      if (r.isNullAt(0)) throw new IllegalStateException(missingDeleteValue("file_path") + f.path)
+      if (r.isNullAt(1)) throw new IllegalStateException(missingDeleteValue("pos") + f.path)
+      val file = r.getUTF8String(0)
+      if (lastFile == null || lastFile != file) {
+        lastFile = file.copy()
+        val c = remap.getOrElse(lastFile.toString, lastFile.toString)
+        bitmap = if (canon.contains(c)) out.getOrElseUpdate(c, Puffin.PositionBitmap.empty) else null
       }
+      val pos = r.getLong(1)
+      if (bitmap != null && pos >= 0) bitmap.add(pos)
     }
     out.toMap
   }
@@ -306,15 +355,18 @@ object Mor {
     * file's sequence number. */
   val DelSeqCol = "__del_seq__"
 
-  /** The equality-delete `files` of `table`, one entry per run of
-    * [[equalityDeleteGroups]]: the run's key columns by their CURRENT
-    * names, its files, and its key rows under those names plus
-    * [[DelSeqCol]]. On a typed table the authoritative key is the
-    * `equalityFieldIds` list and the files are read by field id, so the
-    * keys match across renames. Both the MOR anti join and the
-    * changelog's delete attribution read keys here. */
-  def equalityDeleteKeys(spark: SparkSession, table: TableMetadata,
-      files: Seq[FileEntry]): Seq[(Seq[String], Seq[FileEntry], DataFrame)] = {
+  /** One run of [[equalityDeleteGroups]]: its key columns by their
+    * CURRENT names, its files, and the schema its keys are read with. */
+  private final case class EqualityRun(ids: Seq[String], files: Seq[FileEntry],
+      keySchema: StructType)
+
+  /** The equality-delete `files` of `table` as runs. On a typed table the
+    * authoritative key is the `equalityFieldIds` list and the keys are
+    * typed by the table and read by field id, so they match across
+    * renames; on a legacy name-addressed table they are read by name,
+    * typed by the run's first footer. */
+  private def equalityRuns(spark: SparkSession, table: TableMetadata,
+      files: Seq[FileEntry]): Seq[EqualityRun] = {
     val resolved =
       if (!table.isTyped) files
       else files.map { f =>
@@ -323,16 +375,53 @@ object Mor {
           .getOrElse(sys.error(s"equality-delete field id $id not in table schema")).name))
       }
     equalityDeleteGroups(resolved).map { case (eqIds, run) =>
-      val keys =
-        if (!table.isTyped) spark.read.parquet(run.map(_.path): _*)
-        else GraftScan.relation(spark, run, StructType(eqIds.map(n => table.fieldByName(n)
-            .getOrElse(sys.error(s"equality-delete column $n not in table schema")).toStructField)),
-          statsRetired = table.statsRetiredNames, metadataAggregates = false, byFieldId = true)
-      val rows = keys.select(eqIds.map(col) :+
-        DvExpressions.fileConstant(col("_metadata.file_path"), fileLookup(run),
-          FileLookup.DataSeq).as(DelSeqCol): _*)
-      (eqIds, run, rows)
+      val keySchema =
+        if (!table.isTyped) {
+          val footer = footerSchema(spark, run.head.path)
+          StructType(eqIds.map(fieldOf(footer, _)))
+        } else StructType(eqIds.map(n => table.fieldByName(n)
+          .getOrElse(sys.error(s"equality-delete column $n not in table schema")).toStructField))
+      EqualityRun(eqIds, run, keySchema)
     }
+  }
+
+  /** The key rows of `run` under its key names plus [[DelSeqCol]]. */
+  private def equalityKeyRows(spark: SparkSession, table: TableMetadata,
+      run: EqualityRun): DataFrame = {
+    val keys =
+      if (!table.isTyped) spark.read.schema(run.keySchema).parquet(run.files.map(_.path): _*)
+      else GraftScan.relation(spark, run.files, run.keySchema,
+        statsRetired = table.statsRetiredNames, metadataAggregates = false, byFieldId = true)
+    keys.select(run.ids.map(col) :+
+      DvExpressions.fileConstant(col("_metadata.file_path"), fileLookup(run.files),
+        FileLookup.DataSeq).as(DelSeqCol): _*)
+  }
+
+  /** The equality-delete `files` of `table`, one entry per run of
+    * [[equalityDeleteGroups]]: the run's key columns by their CURRENT
+    * names, its files, and its key rows under those names plus
+    * [[DelSeqCol]] (see [[equalityRuns]] for how keys are addressed), for
+    * the changelog's delete attribution. [[dataFrame]]'s anti joins read
+    * the same rows. */
+  def equalityDeleteKeys(spark: SparkSession, table: TableMetadata,
+      files: Seq[FileEntry]): Seq[(Seq[String], Seq[FileEntry], DataFrame)] =
+    equalityRuns(spark, table, files).map(r => (r.ids, r.files, equalityKeyRows(spark, table, r)))
+
+  /** The keys of `run` decoded on the driver with no Spark job, each with
+    * its largest delete sequence number, and shipped as one broadcast;
+    * None when they pass [[EqualityDeletes.MaxKeyBytes]]. Keys with a null
+    * column match nothing and are skipped. */
+  private def equalityDeletes(spark: SparkSession, table: TableMetadata,
+      run: EqualityRun): Option[EqualityDeletes] = {
+    val key = UnsafeProjection.create(EqualityDeletes.keyExprs(run.keySchema.fields.toSeq
+      .zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, nullable = true) }))
+    val keys = new EqualityDeletes.KeyTable
+    var fits = true
+    readOnDriver(spark, run.files, run.keySchema, byFieldId = table.isTyped) { (f, r) =>
+      val k = key(r)
+      if (fits && !k.anyNull) fits = keys.add(k, f.sequenceNumber)
+    }
+    Option.when(fits)(new EqualityDeletes(spark.sparkContext.broadcast(keys.trim())))
   }
 
   /** Position-delete anti join: drop data rows whose (file_path, pos) has a
@@ -388,9 +477,9 @@ object Mor {
     * applied by the scan.
     *
     * @param broadcastDeleteBytesMax manifest-bytes gate per delete side:
-    *                    under it, position deletes and deletion vectors
-    *                    are bitmaps probed in the scan and equality
-    *                    deletes broadcast; past it, Catalyst's joins.
+    *                    under it, every delete kind is decoded on the
+    *                    driver and probed in the scan; past it,
+    *                    Catalyst's joins.
     * @param keepHidden  keep [[FilePathCol]]/[[PosCol]] in the output —
     *                    row lineage for consumers that must address
     *                    surviving rows physically (changelog delete
@@ -455,7 +544,24 @@ object Mor {
     }
     val posJoin = posDeletes.nonEmpty && !posUnderGate
     val dvJoin = dvEntries.nonEmpty && !dvUnderGate
-    val needSeq = eqDeletes.nonEmpty
+    // each equality-ids run is probed in the scan when it is under the gate
+    // (a run without key columns always is: its probe is one number) and
+    // its key types are the data columns' own, else it is an anti join
+    // whose strategy Catalyst picks
+    lazy val dataSchema = dataTyped.getOrElse(footerSchema(spark, group.dataFiles.head.path))
+    def probed(run: EqualityRun): Boolean =
+      (run.ids.isEmpty || run.files.map(_.length).sum <= broadcastDeleteBytesMax) &&
+        run.keySchema.forall { k =>
+          EqualityDeletes.supports(k.dataType) &&
+            dataSchema.find(_.name.equalsIgnoreCase(k.name)).exists(_.dataType == k.dataType)
+        }
+    val (probes, eqJoins) = equalityRuns(spark, table, eqDeletes)
+      .map(run => (run, Option.when(probed(run))(equalityDeletes(spark, table, run)).flatten))
+      .partitionMap {
+        case (run, Some(deletes)) => Left((run.ids, deletes))
+        case (run, None) => Right(run)
+      }
+    val needSeq = eqJoins.nonEmpty
     val needFilePos = posJoin || dvJoin || keepHidden
 
     val projected = table.schemaColumns.map(col)
@@ -463,17 +569,21 @@ object Mor {
     val lineage = if (keepRowIds) Seq(col(RowIdCol), col(LastUpdatedSeqCol)) else Nil
 
     // no deletes: plain projected scan (datafusion_processor.rs:447-458)
-    if (!needSeq && bitmaps.isEmpty && !needFilePos && !keepRowIds)
+    if (!needSeq && bitmaps.isEmpty && probes.isEmpty && !needFilePos && !keepRowIds)
       return readData(_.select(projected: _*))
 
     val lookup = fileLookup(group.dataFiles, bitmaps)
     val file = col("_metadata.file_path")
     val rowIndex = col("_metadata.row_index")
     def dataSeq = DvExpressions.fileConstant(file, lookup, FileLookup.DataSeq)
+    // what the scan drops: positions of the per-file bitmaps, then the
+    // rows each probed equality-ids run deletes
+    val deleted = Option.when(bitmaps.nonEmpty)(DvExpressions.dvContains(file, rowIndex, lookup)) ++
+      probes.map { case (ids, deletes) =>
+        DvExpressions.equalityDeleted(ids.map(col), dataSeq, deletes)
+      }
     var df = readData { rel =>
-      val live =
-        if (bitmaps.isEmpty) rel
-        else rel.filter(!DvExpressions.dvContains(file, rowIndex, lookup))
+      val live = deleted.reduceOption(_ || _).fold(rel)(d => rel.filter(!d))
       live.select(projected ++
         (if (needFilePos) Seq(normalizePath(file).as(FilePathCol), rowIndex.as(PosCol))
          else Nil) ++
@@ -502,20 +612,19 @@ object Mor {
         Seq(FilePathCol, PosCol), "left_anti")
     }
 
-    // one anti join per equality-ids run, in manifest order
-    // (datafusion_processor.rs:524-571)
-    for ((eqIds, files, keys) <- equalityDeleteKeys(spark, table, eqDeletes)) {
-      val del = keys.select(eqIds.map(c => col(c).as(s"__del_$c")) :+ col(DelSeqCol): _*)
+    // one anti join per remaining equality-ids run, in manifest order
+    // (datafusion_processor.rs:524-571); broadcast when under the gate
+    // (key types differ from the data's, which the join's coercion
+    // handles), else Catalyst's choice
+    for (run <- eqJoins) {
+      val eqIds = run.ids
+      val del = equalityKeyRows(spark, table, run)
+        .select(eqIds.map(c => col(c).as(s"__del_$c")) :+ col(DelSeqCol): _*)
       val eqCond = eqIds.map(c => df(c) === col(s"__del_$c")).reduceOption(_ && _)
       val seqCond = df(SeqNumCol) < col(DelSeqCol)
       val cond = eqCond.map(_ && seqCond).getOrElse(seqCond)
-      // empty-keys theta join stays broadcast regardless: a non-broadcast
-      // nested-loop over two big sides has no good plan anyway, and the
-      // reference emits the same degenerate shape
-      val gatedDel =
-        if (eqIds.isEmpty) broadcast(del)
-        else gated(del, files.map(_.length).sum, broadcastDeleteBytesMax)
-      df = df.join(gatedDel, cond, "left_anti")
+      df = df.join(gated(del, run.files.map(_.length).sum, broadcastDeleteBytesMax), cond,
+        "left_anti")
     }
 
     df.select(projected ++ hidden ++ lineage: _*)

@@ -29,7 +29,7 @@ import graft.selection.FileGroup
   * subscribers.
   *
   * Scale shape: inserts are plain scans of exactly the added files; deletes
-  * are the parent MOR view (scan, bitmap probe, broadcast anti joins — [[Mor.dataFrame]])
+  * are the parent MOR view (scan, bitmap and equality-key probes — [[Mor.dataFrame]])
   * semi-joined against the (small) new tombstone/key sets, restricted to
   * the data files the tombstones actually target where that is knowable
   * from the manifest. No shuffle of the data side anywhere.

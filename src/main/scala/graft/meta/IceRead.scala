@@ -11,8 +11,8 @@ import graft.selection.FileGroup
   *
   * Builds one [[FileGroup]] from the branch snapshot's scan tasks and
   * returns [[Mor.dataFrame]] over it: data parquet scan, live position
-  * deletes probed as per-file bitmaps inside it, broadcast anti joins
-  * against live equality deletes, hidden columns dropped.
+  * deletes probed as per-file bitmaps and live equality deletes as key
+  * tables inside it, hidden columns dropped.
   * The plan is the same shape the compaction rewrite executes, so reads
   * scale identically (no shuffle on the data path).
   */
@@ -195,8 +195,8 @@ object IceRead {
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
     // partition-scoped equality deletes split the read into one MOR plan
-    // per partition, unioned: each keeps the shuffle-free scan ->
-    // broadcast-anti-join shape, so the union is just more parallel scan
+    // per partition, unioned: each keeps the shuffle-free scan -> filter
+    // -> project shape, so the union is just more parallel scan
     // partitions, not a different plan at scale
     FileGroup.ofTasks(snap, tasks).map { g =>
       Mor.dataFrame(spark, meta, g, keepHidden = keepHidden, keepRowIds = keepRowIds)

@@ -150,10 +150,9 @@ class ValidationPipelineSpec extends AnyFunSuite {
     assert(IceRead.table(spark, catalog, "t").count() == rows)
   }
 
-  /** Per plan: 4 jobs each for the rewrite and for the input MOR count
-    * (the position-delete read that builds the per-file bitmaps, the
-    * equality-delete broadcast, one shuffle-map stage and the result job),
-    * and 2 for the output count. No sequence-number join, no
-    * schema-inference job, none after the commit. */
-  private val ExpectedJobs = 20
+  /** Per plan: 2 jobs each for the input MOR count (its scan's
+    * shuffle-map stage and the result job), for the rewrite's write and
+    * for the output count. The delete files are decoded on the driver with
+    * no job; no join, no schema-inference job, none after the commit. */
+  private val ExpectedJobs = 12
 }

@@ -3,6 +3,8 @@ package graft.exec
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,12 +16,14 @@ import graft.selection.{FileGroup, FullCompactionConfig, PlanningParams}
 import graft.testkit.FileGenerator
 
 /** The two MOR plans agree on every delete layout: under the broadcast
-  * gate (per-file bitmaps and lookups probed in the scan, broadcast
-  * equality anti joins) and above it (anti joins on `(path, pos)`). Each
+  * gate (per-file bitmaps, lookups and equality-key tables probed in the
+  * scan, with no join) and above it (anti joins on `(path, pos)` and on
+  * the equality keys). Each
   * layout also checks the row count against a model of the data files.
   * [[MorLayoutEquivalenceInterpretedSpec]] runs the same layouts with code
   * generation off, so the expressions' `eval` paths run too. */
-class MorLayoutEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MorLayoutEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   protected lazy val spark = SparkTestBase.spark
   /** Session settings the layouts run under. */
@@ -88,22 +92,24 @@ class MorLayoutEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.range(from, until, 1, 4).select(col("id"), (col("id") % 7).as("k"),
       concat(lit("n"), col("id").cast("string")).as("name"))
 
-  /** 200 rows in 4 data files. */
-  private def fixture(formatVersion: Int = 2): Fixture = {
+  /** `data` (200 rows by default) in 4 data files. */
+  private def fixture(formatVersion: Int = 2, data: DataFrame = rows(0, 200)): Fixture = {
     val catalog = LocalCatalog(Files.createTempDirectory("mor-layout").toString)
-    IceWrite.create(spark, catalog, "t", rows(0, 200), formatVersion = formatVersion)
+    IceWrite.create(spark, catalog, "t", data, formatVersion = formatVersion)
     val f = Fixture(catalog, "t")
     assert(f.data.size == 4)
     f
   }
 
-  /** Both plans over `group` return the same multiset of rows, `expected`
-    * of them; under the gate no join carries position deletes. Returns
-    * the rows. */
+  /** Both plans over `group` of `meta` return the same multiset of rows,
+    * `expected` of them; under the gate the plan has `underJoins` joins
+    * (none unless an equality run's key types differ from the data's).
+    * Returns the rows. */
   private def assertPlansAgree(f: Fixture, group: FileGroup, expected: Long,
-      keepHidden: Boolean = false, keepRowIds: Boolean = false): Seq[Row] = {
-    val meta = f.meta
-    def frame(gate: Long): DataFrame = Mor.dataFrame(spark, meta, group,
+      keepHidden: Boolean = false, keepRowIds: Boolean = false, underJoins: Int = 0,
+      meta: Option[TableMetadata] = None): Seq[Row] = {
+    val m = meta.getOrElse(f.meta)
+    def frame(gate: Long): DataFrame = Mor.dataFrame(spark, m, group,
       broadcastDeleteBytesMax = gate, keepHidden = keepHidden, keepRowIds = keepRowIds)
     def multiset(df: DataFrame): Map[Row, Int] =
       df.collect().toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
@@ -114,6 +120,8 @@ class MorLayoutEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(underPlan.contains("dvcontains"), underPlan)
       assert(!over.queryExecution.executedPlan.toString.contains("dvcontains"))
     }
+    assert(collect(under.queryExecution.executedPlan) { case j: BaseJoinExec => j }.size ==
+      underJoins, underPlan)
     val u = multiset(under)
     assert(u == multiset(over))
     assert(u.values.sum == expected)
@@ -239,6 +247,75 @@ class MorLayoutEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val posFile = f.positionDeleteFile(Seq(d(0).path -> -1L, d(0).path -> 4L),
       seq = f.meta.lastSequenceNumber + 1)
     assertPlansAgree(f, FileGroup(d, Seq(posFile), Nil), 199)
+  }
+
+  test("a null key matches nothing, in the data or in a delete file") {
+    val f = fixture(data = rows(0, 200).withColumn("k",
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("k"))))
+    val s = spark
+    import s.implicits._
+    IceWrite.appendEqualityDeletes(spark, f.catalog, f.name,
+      Seq(Option.empty[Long], Some(3L)).toDF("k"), Seq("k"))
+    assertPlansAgree(f, f.group, (0L until 200L).count(id => id % 5 == 0 || id % 7 != 3).toLong)
+  }
+
+  test("double keys: NaN matches NaN, -0.0 matches 0.0") {
+    val f = fixture(data = rows(0, 200).withColumn("d",
+      when(col("id") % 10 === 0, lit(Double.NaN))
+        .when(col("id") % 10 === 1, lit(-0.0))
+        .when(col("id") % 10 === 2, lit(0.0))
+        .otherwise(col("id").cast("double"))))
+    val s = spark
+    import s.implicits._
+    IceWrite.appendEqualityDeletes(spark, f.catalog, f.name, Seq(Double.NaN, 0.0).toDF("d"),
+      Seq("d"))
+    assertPlansAgree(f, f.group, (0L until 200L).count(id => id % 10 > 2).toLong)
+  }
+
+  test("a two-column key with a string column") {
+    val f = fixture()
+    val s = spark
+    import s.implicits._
+    IceWrite.appendEqualityDeletes(spark, f.catalog, f.name,
+      Seq((3L, "n10"), (3L, "n11"), (5L, "n5")).toDF("k", "name"), Seq("k", "name"))
+    assertPlansAgree(f, f.group, survivors(f.model(), ids = Set(10L, 5L)))
+  }
+
+  test("an equality delete at the data files' own sequence number deletes nothing") {
+    val f = fixture()
+    f.deleteKeys("k", 3L)
+    f.deleteKeys("id", 40L)
+    val g = f.group
+    val dataSeq = g.dataFiles.map(_.sequenceNumber).distinct
+    assert(dataSeq.size == 1)
+    val (same, newer) = g.equalityDeleteFiles.partition(_.equalityIds == Seq("k"))
+    assertPlansAgree(f, g.copy(equalityDeleteFiles =
+      same.map(_.copy(sequenceNumber = dataSeq.head)) ++ newer),
+      survivors(f.model(), ids = Set(40L)))
+  }
+
+  test("an equality delete without key columns deletes every row of an older file") {
+    val f = fixture()
+    f.deleteKeys("k", 3L)
+    val g = f.group
+    val eq = g.equalityDeleteFiles.head.copy(equalityIds = Nil, equalityFieldIds = Nil)
+    val (older, same) = g.dataFiles.splitAt(2)
+    assertPlansAgree(f, FileGroup(older ++ same.map(_.copy(sequenceNumber = eq.sequenceNumber)),
+      Nil, Seq(eq)), same.map(_.recordCount).sum)
+  }
+
+  test("a legacy table's delete key typed unlike its data column stays on the join") {
+    val f = fixture()
+    val s = spark
+    import s.implicits._
+    val typed = f.meta
+    val untyped = typed.copy(schema = typed.schema.map(c => SchemaField(c.id, c.name)))
+    val (path, size, n, _) = FileGenerator.writeSingleParquet(spark, Seq(3, 5).toDF("k"),
+      Paths.get(f.catalog.dataDir(f.name), s"eq-${java.util.UUID.randomUUID}.parquet"))
+    val eq = FileEntry(path, size, FileContent.EqualityDeletes, n,
+      sequenceNumber = typed.lastSequenceNumber + 1, equalityIds = Seq("k"))
+    assertPlansAgree(f, FileGroup(f.data, Nil, Seq(eq)), survivors(f.model(), ks = Set(3L, 5L)),
+      underJoins = 1, meta = Some(untyped))
   }
 
   test("delete rows naming files outside the group") {
